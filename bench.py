@@ -76,6 +76,19 @@ EXTRAS = [
 ]
 
 
+def contract_line(out: dict) -> str:
+    """``out`` as one JSON line of at most 1900 chars (tail-capture guard).
+    Optional keys are shed in order, error names last, so a red bench
+    stays visible from the tail; the contract core is never shed."""
+    line = json.dumps(out)
+    for k in ("master", "detail_file", "error_queries"):
+        if len(line) <= 1900:
+            break
+        out.pop(k, None)
+        line = json.dumps(out)
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -360,15 +373,7 @@ def main() -> None:
     except Exception:  # noqa: BLE001 — the side file must never fail the bench
         pass
     print(json.dumps({"bench_detail": detail}))
-    contract_line = json.dumps(out)
-    if len(contract_line) > 1900:
-        # tail-capture guard: shed optional keys, never the contract core
-        for k in ("error_queries", "detail_file", "master"):
-            out.pop(k, None)
-            contract_line = json.dumps(out)
-            if len(contract_line) <= 1900:
-                break
-    print(contract_line)
+    print(contract_line(out))
     # round-close freshness: the driver records this bench every round, so
     # regenerating docs/FRESHNESS.md here keeps the committed evidence-age
     # table current with the newest CORRECTNESS_r*.json on disk (VERDICT

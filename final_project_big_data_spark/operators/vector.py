@@ -54,8 +54,7 @@ def table_bytes(sf_dir: str, table: str) -> int:
     recursive, so Hive-partitioned/nested layouts count their leaf files
     rather than ~4 KB directory inodes). Unstat-able paths (hdfs://,
     s3:// — i.e. cluster volumes) return -1, which size-switched kernels
-    read as "assume big". The ONE size helper shared by ``pair_kernel``
-    and similarity's ``_assign_kernel``."""
+    read as "assume big". The size helper behind ``pair_kernel``."""
     p = os.path.join(sf_dir, f"{table}.parquet")
     try:
         if os.path.isdir(p):
@@ -179,155 +178,33 @@ def block_pair_cosine(
     )
 
 
-def probe_corpus_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    n_buckets: int,
-) -> DataFrame:
-    """Brute-force probe×corpus cosine scoring, Arrow-batched (round 11) —
-    the probe-side twin of ``block_pair_cosine``, closing s01's last
-    interpreted-fold hot path (VERDICT r10 #3).
-
-    ``corpus`` and ``probes`` each carry ``(vec_id, embedding)`` with the
-    embedding in its RAW storage type (array<float>): the kernel casts
-    float32→float64 per element (exact — same doubles as Spark's
-    ``cast``) and computes norms itself, so the np path shuffles HALF the
-    bytes of a pre-cast double column and pays zero interpreted-HOF
-    evaluation anywhere. The corpus is hash-bucketed into ``n_buckets``
-    groups; the (tiny) probe set is replicated to every bucket via an
-    ``explode(sequence(...))`` — no join, no driver side-input, fully
-    lazy. Each bucket's ``groupBy().applyInPandas`` kernel accumulates
-    norms and probe×chunk dot products dim-by-dim
-    (``S += Q[:, i:i+1] * V[None, :, i]``) — the exact left-to-right
-    per-pair summation order of ``dot_fold`` / DuckDB's
-    ``list_dot_product``, so oracle bit parity with the join +
-    ``sqrt(dot_fold)`` shape holds BY CONSTRUCTION — and emits only its
-    local per-probe top-k (cs DESC, neighbor_id ASC, self excluded).
-    Every corpus vector lives in exactly one bucket, so the union of
-    per-bucket top-k lists is a superset of the global top-k; the
-    caller's existing window does the final cut. Only
-    ``n_buckets × |probes| × k`` candidate rows ever cross Arrow back.
-
-    Scale posture: bucket width tracks ``spark.sql.shuffle.partitions``
-    (the caller passes it), so per-task memory is corpus_bytes /
-    n_buckets regardless of volume; the probe replication is
-    ``|probes| × n_buckets`` rows of 64 floats — noise.
-    """
-
-    def topk(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "cs": pd.Series([], dtype="float64"),
-            }
-        )
-        is_p = pdf["is_probe"].to_numpy()
-        cp, pp = pdf[~is_p], pdf[is_p]
-        if not len(cp) or not len(pp):
-            return empty
-
-        def mat(part):
-            # float32 storage → float64 per element: exact, same doubles
-            # as Spark's cast; dim-by-dim self-dot == dot_fold order
-            M = np.stack(part["emb"].to_numpy()).astype(np.float64)
-            acc = np.zeros(len(M))
-            for i in range(M.shape[1]):
-                acc += M[:, i] * M[:, i]
-            return M, np.sqrt(acc)
-
-        order = np.argsort(cp["id"].to_numpy(), kind="stable")
-        ids = cp["id"].to_numpy()[order]
-        cp = cp.iloc[order]
-        V, nv = mat(cp)  # m × dim
-        qids = pp["id"].to_numpy()
-        Q, nq = mat(pp)  # t × dim
-        t, dim = Q.shape
-        S = np.zeros((t, len(ids)))
-        for i in range(dim):  # left fold over dims == dot_fold order
-            S += Q[:, i : i + 1] * V[None, :, i]
-        cs = S / (nq[:, None] * nv[None, :])
-        out_q, out_n, out_cs = [], [], []
-        for r in range(t):
-            row = cs[r]
-            sel = np.lexsort((ids, -row))
-            sel = sel[ids[sel] != qids[r]][:k]
-            out_q.append(np.full(len(sel), qids[r]))
-            out_n.append(ids[sel])
-            out_cs.append(row[sel])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cs": np.concatenate(out_cs),
-            }
-        )
-
-    b = F.lit(int(n_buckets)).cast("bigint")
-    cp = corpus.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("emb"),
-        F.lit(False).alias("is_probe"),
-        F.pmod(F.xxhash64("vec_id"), b).alias("bucket"),
-    )
-    pp = probes.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("emb"),
-        F.lit(True).alias("is_probe"),
-        F.explode(
-            F.sequence(F.lit(0).cast("bigint"), b - F.lit(1).cast("bigint"))
-        ).alias("bucket"),
-    )
-    return (
-        cp.unionByName(pp)
-        .groupBy("bucket")
-        .applyInPandas(topk, schema="query_id bigint, neighbor_id bigint, cs double")
-    )
-
-
 def probe_corpus_topk_scan(
     spark,
     corpus_path: str,
     probe_max_id: int,
     k: int,
 ) -> DataFrame:
-    """Scan-side brute-force probe×corpus cosine scoring (round 12,
-    VERDICT r11 #7) — ``probe_corpus_topk`` with the corpus SHUFFLE
-    designed out AND kernel-owned parallelism.
+    """Brute-force probe×corpus cosine top-k, scored task-side in NumPy
+    with no corpus shuffle.
 
-    The bucketed kernel's residual vs DuckDB at volume was the hash
-    exchange moving every corpus byte into ``groupBy(bucket)`` kernels.
-    A first cut ran ``mapInArrow`` over the FileSourceScan itself (zero
-    exchange), but its parallelism inherited
-    ``spark.sql.files.maxPartitionBytes`` — sized for the DOMINANT
-    table, which gave the 500 MB 1000× embeddings file 4 splits on 32
-    cores (6.12 s; 2.11 s the moment splits were right-sized). So the
-    unit of work here is the parquet ROW GROUP, enumerated at build time
+    The unit of work is the parquet ROW GROUP, enumerated at build time
     from the footers (driver file IO — the same listing Spark's own
     planning does; no Spark job, lazy contract intact): a tiny
     descriptor frame (file, row_group) fans out one task per row group,
-    and each task pyarrow-reads its row group directly and scores it
-    in NumPy — zero exchange, parallelism = row-group count regardless
-    of session scan sizing. The tiny probe set is a task-side filtered
-    read of the same corpus (``vec_id < probe_max_id``), sorted by
-    vec_id.
+    and each task pyarrow-reads its row group and scores it, so
+    parallelism is the row-group count regardless of session scan
+    sizing. The probe set is a task-side filtered read of the same
+    corpus (``vec_id < probe_max_id``), sorted by vec_id.
 
-    Math parity with ``dot_fold``/DuckDB by the same construction as the
-    bucketed kernel: float32→float64 per element, dim-by-dim left-fold
-    accumulation, ties broken by neighbor_id, self excluded. Each row
-    group emits its local per-probe top-k — a superset of the global
-    top-k; the caller's window does the final cut
-    (``#row_groups × |probes| × k`` candidate rows).
+    Math parity with ``dot_fold``/DuckDB by construction: float32→float64
+    per element, dim-by-dim left-fold accumulation, ties broken by
+    neighbor_id, self excluded. Each row group emits its local per-probe
+    top-k — a superset of the global top-k; the caller's window does the
+    final cut (``#row_groups × |probes| × k`` candidate rows).
 
-    Scale posture: per-task memory is one row group (the writer's
-    128 MB default) plus the probe block; on a real cluster the
-    task-side reads assume shared storage — the same assumption the
-    scan itself makes. Build-time footer reads are O(#files) driver IO,
-    identical to FileSourceScan's own planning listing.
+    Scale posture: per-task memory is one row group plus the probe
+    block; on a real cluster the task-side reads assume shared storage —
+    the same assumption the scan itself makes.
     """
     import glob as _glob
 
@@ -428,20 +305,17 @@ def probe_corpus_topk_scan(
     )
 
 
-# measured crossover (tools/pair_vec_probe.py, round 8): the kernel's
-# fixed Python-worker/Arrow stage loses at tiny volume and wins from
-# ~the 10× probe volume up — same data-sized posture as the IVF assign
-# kernel's 4 MiB switch
+# measured crossover (round 8): the NumPy kernels' fixed Python-worker/
+# Arrow stage loses at tiny volume and wins from ~the 10× probe volume up
+# (SCALE.md rounds 7-8; IVF assign: sf0.1 0.9 → 1.6 s, 100× 22.2 → 2.0 s)
 _NP_PAIR_MIN_BYTES = 4 * 1024 * 1024
 
 
 def pair_kernel(sf_dir: str, table: str = "embeddings") -> str:
-    """Pick the within-block pair kernel from input metadata (no job,
-    lazy-safe): "np" = ``block_pair_cosine``, "join" = the equi-join +
-    interpreted ``dot_fold`` shape. ``SPARK_GRAFT_PAIR_KERNEL`` in
-    {join, np} overrides for A/B probes."""
-    forced = os.environ.get("SPARK_GRAFT_PAIR_KERNEL", "")
-    if forced in ("join", "np"):
-        return forced
+    """Pick a vector kernel from input metadata (no job, lazy-safe):
+    "np" (Arrow-batched NumPy — ``block_pair_cosine``, s01's
+    ``probe_corpus_topk_scan``, the IVF assign/refine) when ``table`` is
+    unstat-able or at least ``_NP_PAIR_MIN_BYTES`` on disk, else "join"
+    (the equi-join / interpreted ``dot_fold`` shapes)."""
     size = table_bytes(sf_dir, table)
     return "np" if (size < 0 or size >= _NP_PAIR_MIN_BYTES) else "join"

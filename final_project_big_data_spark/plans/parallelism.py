@@ -17,28 +17,23 @@ import os
 
 from pyspark.sql import DataFrame
 
+from final_project_big_data_spark.session import is_local_master
+
 
 def widen(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to default parallelism iff the plan is
     currently narrower. No-op (returns ``df``) when already wide enough.
 
-    On a non-local master this returns ``df`` untouched without ANY plan
-    inspection: a cluster scan of real data already yields many splits,
-    and the ``df.rdd`` narrowness probe would force physical planning at
-    build time for a rewrite that is a no-op there anyway. The probe runs
-    only under ``local[...]`` (bare-scan planning, cheap, no job), where
-    single-file fixtures genuinely collapse to one task. Override with
-    ``spark.finalproject.widen=off|force``.
+    On a non-local master (``local-cluster`` included) this returns ``df``
+    untouched without ANY plan inspection: a cluster scan of real data
+    already yields many splits. The narrowness estimate runs only under
+    a single-JVM master, where single-file fixtures genuinely collapse to
+    one task.
     """
-    spark = df.sparkSession
-    mode = str(spark.conf.get("spark.finalproject.widen", "auto"))
-    if mode == "off":
+    sc = df.sparkSession.sparkContext
+    if not is_local_master(sc.master):
         return df
-    if mode == "auto" and not spark.sparkContext.master.startswith("local"):
-        return df
-    target = spark.sparkContext.defaultParallelism
-    if mode == "force":
-        return df.repartition(target)
+    target = sc.defaultParallelism
     if _estimated_scan_tasks(df) >= target:
         return df
     return df.repartition(target)

@@ -1,18 +1,11 @@
 """Shuffle-medium sniffing — what does a shuffled byte actually cost here?
 
-Round 12 (VERDICT r11 #1): q14's join-first-vs-pre-agg decision was
-deferred to "a network-shuffle submitter" because tmpfs shuffle makes
-byte counts free. The full shape × medium × codec matrix
-(tools/q14_bytes.py, SCALE.md round 12) showed the decision hinges on
-whether a shuffled byte costs more than a RAM copy — codec CPU, disk
-I/O, or a wire — AND on there being enough bytes for that per-byte cost
-to outweigh a fixed extra aggregation. This module answers the first
-half; callers combine it with their own volume estimate.
-
-Local-mode resolution order mirrors Spark's own: ``SPARK_LOCAL_DIRS``
-env overrides ``spark.local.dir`` conf overrides ``/tmp``. The mount's
-filesystem type comes from ``/proc/mounts`` by longest-prefix match —
-the same answer ``df`` gives, no syscalls beyond one file read.
+q14's semi-prefilter gate fires only where a shuffled byte crosses a
+network (OPTIMIZATION_r12.md §q14). Local-mode resolution order mirrors
+Spark's own: ``SPARK_LOCAL_DIRS`` env overrides ``spark.local.dir`` conf
+overrides ``/tmp``. The mount's filesystem type comes from
+``/proc/mounts`` by longest-prefix match — the same answer ``df`` gives,
+no syscalls beyond one file read.
 """
 
 from __future__ import annotations
@@ -21,20 +14,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+from final_project_big_data_spark.session import is_local_master
+
 
 def shuffle_medium(spark: SparkSession) -> str:
     """``"network"`` (non-local master — shuffle crosses executors),
     ``"ram"`` (local dir on tmpfs/ramfs), or ``"disk"``.
 
-    ``local-cluster[n,c,m]`` counts as network (round 13, VERDICT r12
-    #4): its executors are real separate JVMs whose shuffle blocks are
-    written per-executor and fetched through the netty transport —
-    per-byte serialization + transport cost like any cluster, just over
-    loopback. The old prefix test lumped it in with ``local[*]``, so the
-    one master available for end-to-end validation of the network-gated
-    branches could never fire them on its own sniff."""
-    master = spark.sparkContext.master
-    if not master.startswith("local") or master.startswith("local-cluster"):
+    ``local-cluster[n,c,m]`` counts as network (see ``is_local_master``):
+    its shuffle pays serialization + transport cost like any cluster,
+    just over loopback."""
+    if not is_local_master(spark.sparkContext.master):
         return "network"
     d = (
         os.environ.get("SPARK_LOCAL_DIRS")
@@ -55,21 +45,3 @@ def shuffle_medium(spark: SparkSession) -> str:
     except OSError:
         return "disk"  # can't tell → assume bytes cost something
     return "ram" if fstype in ("tmpfs", "ramfs", "devtmpfs") else "disk"
-
-
-def per_byte_cost_high(spark: SparkSession, compress: bool | None = None) -> bool:
-    """True when each shuffled byte carries a real cost: the shuffle
-    crosses a network, lands on a non-RAM local dir, or pays codec CPU
-    (``spark.shuffle.compress`` — cost proportional to bytes on BOTH
-    ends). False only for the uncompressed-tmpfs case, where shuffle is
-    a RAM copy and byte counts are near-free (the measured regime where
-    q14's join-first shape wins at every volume). ``compress`` overrides
-    the conf read — it is a STATIC core conf, so tests cannot flip it on
-    a live session."""
-    if shuffle_medium(spark) != "ram":
-        return True
-    if compress is None:
-        compress = (
-            str(spark.conf.get("spark.shuffle.compress", "true")).lower() == "true"
-        )
-    return compress

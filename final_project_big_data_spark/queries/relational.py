@@ -14,8 +14,6 @@ The reference exercises only scan/project/JSON of this surface
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -325,72 +323,25 @@ def q13(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-#: pre-agg pays a fixed extra aggregation to move fewer shuffle bytes;
-#: below this much filtered-fact input the byte saving can't win even
-#: when bytes are expensive. Measured bracket (tools/q14_bytes.py,
-#: round 12, disk+codec): 1.37 GB lineitem → join-first still faster
-#: (3.47 vs 4.32 s); 13.7 GB → pre-agg faster (29.8 vs 32.8 s).
-_Q14_PREAGG_MIN_BYTES = 4 * 1024**3
-
-
-def _q14_preagg(spark: SparkSession, sf: str) -> bool:
-    """Pre-agg shape switch. Round 12 (VERDICT r11 #1) gated it on
-    per-byte cost (disk or codec) × big fact; the round-12 OPTIMIZATION
-    pass re-measured both local media against the new reordered shape
-    and the pre-agg lost every local cell (reorder 15.2 s vs old
-    join-first 23.7 / old pre-agg 29.8 on disk+codec at 1000× —
-    tools/q14_semi.py, OPTIMIZATION_r12.md §q14), so the gate narrowed
-    to NETWORK masters only — the one medium where its byte cut is
-    un-measurable here but arithmetically certain (guide §1.3) — with a
-    big-enough fact (``_Q14_PREAGG_MIN_BYTES``; unstat-able cluster
-    paths count as big), and only when the stronger ``_q14_semi``
-    reduction (10× bytes vs 1.26×) does not already apply.
-    ``SPARK_GRAFT_Q14_PREAGG=1|0`` still forces either shape for A/B."""
-    knob = os.environ.get("SPARK_GRAFT_Q14_PREAGG", "")
-    if knob in ("0", "1"):
-        return knob == "1"
-    from final_project_big_data_spark.operators.vector import table_bytes
-    from final_project_big_data_spark.plans.shuffle_medium import (
-        shuffle_medium,
-    )
-
-    li = table_bytes(sf, "lineitem")
-    big = li < 0 or li >= _Q14_PREAGG_MIN_BYTES
-    return big and shuffle_medium(spark) == "network" and not _q14_semi(spark, sf)
-
-
 #: semi-prefilter bracket on orders' on-disk bytes. Below the floor the
 #: planner broadcasts the (orders⋈customer) build side by itself, so a
 #: key prefilter would be a redundant second broadcast+probe of the same
-#: relation; above the cap the surviving-orderkey set (≈ rows × dim-join
-#: selectivity) no longer fits a sane broadcast budget — a ~30M-key
-#: LongHashedRelation is >1 GB on driver AND every executor (the
-#: 100 TB regime: prune with runtime Bloom injection / CBO instead).
+#: relation; above the cap the surviving-orderkey set no longer fits a
+#: sane broadcast budget (a ~30M-key hashed relation is >1 GB on the
+#: driver AND every executor).
 _Q14_SEMI_MIN_BYTES = 64 * 1024**2
 _Q14_SEMI_MAX_BYTES = 8 * 1024**3
 
-#: flat-shape cap on orders' on-disk bytes — same floor as the semi
-#: bracket, and for the same reason: below it the whole (o⋈c) relation
-#: broadcasts. In that regime the round-12 reorder buys nothing (no
-#: exchange exists to shrink) but still PAYS: broadcasting (o⋈c)
-#: SERIALIZES two build jobs (collect customer → run o⋈BHJ(c) as its own
-#: job → probe), while the flat (li⋈o)⋈c shape builds both tiny
-#: broadcasts concurrently and probes both in ONE codegen stage.
-#: Measured fresh-process min-of-8 at sf0.1 (round 12, interleaved ×2):
-#: flat 0.398/0.409 s vs reorder 0.531/0.464 s. Above the cap the dim
-#: side stops broadcasting and the round-12 matrix applies (reorder wins
-#: every 100×/1000× cell on both media).
+#: flat-shape cap on orders' on-disk bytes: below it the whole (o⋈c)
+#: relation broadcasts, the reorder has no exchange to shrink, and it
+#: would serialize two dependent broadcast builds.
 _Q14_FLAT_MAX_BYTES = 64 * 1024**2
 
 
 def _q14_flat(sf: str) -> bool:
-    """Small-volume shape switch: keep the flat (li⋈o)⋈c join order while
-    orders' on-disk bytes are inside the everything-broadcasts regime
-    (``_Q14_FLAT_MAX_BYTES``); unstat-able paths read as big → reorder.
-    ``SPARK_GRAFT_Q14_FLAT=1|0`` forces either way for A/B."""
-    knob = os.environ.get("SPARK_GRAFT_Q14_FLAT", "")
-    if knob in ("0", "1"):
-        return knob == "1"
+    """Flat (li⋈o)⋈c join order while orders' on-disk bytes are inside
+    the everything-broadcasts regime; unstat-able paths read as big →
+    reorder. Measurements: OPTIMIZATION_r12.md §q14."""
     from final_project_big_data_spark.operators.vector import table_bytes
 
     ob = table_bytes(sf, "orders")
@@ -398,22 +349,11 @@ def _q14_flat(sf: str) -> bool:
 
 
 def _q14_semi(spark: SparkSession, sf: str) -> bool:
-    """Fact semi-reduction switch (round-12 optimization, guide §3.2):
-    broadcast LEFT SEMI the filtered fact against the (orders⋈customer)
-    orderkey set BEFORE the fact's exchange — 2.5× fewer shuffled bytes
-    than plain reorder (6.9 vs 17.7 GB at 1000×, tools/q14_semi.py), at
-    the price of a second dim scan and 107M broadcast-hash probes.
-    Measured on every LOCAL medium (tmpfs AND disk+codec) the byte
-    saving never repays that price (reorder 15.2–15.5 s vs semi
-    18.4–19.0 s at 1000×), so the prefilter fires only where a shuffled
-    byte crosses a NIC — a non-local master — and the surviving keyset
-    is broadcastable: orders' on-disk bytes inside the bracket.
-    Unstat-able orders (``table_bytes`` = -1) skip the prefilter —
-    unknown keyset size must not gamble executor memory.
-    ``SPARK_GRAFT_Q14_SEMI=1|0`` forces either way for A/B."""
-    knob = os.environ.get("SPARK_GRAFT_Q14_SEMI", "")
-    if knob in ("0", "1"):
-        return knob == "1"
+    """Broadcast LEFT SEMI the fact against the (o⋈c) orderkey set before
+    its exchange: only on a non-local master (locally the byte saving
+    never repaid the second dim scan) and only while orders' on-disk
+    bytes keep the keyset broadcastable. Unstat-able orders skip it.
+    Measurements: OPTIMIZATION_r12.md §q14, SCALE.md round 13."""
     from final_project_big_data_spark.operators.vector import table_bytes
     from final_project_big_data_spark.plans.shuffle_medium import (
         shuffle_medium,
@@ -423,7 +363,6 @@ def _q14_semi(spark: SparkSession, sf: str) -> bool:
         return False
     ob = table_bytes(sf, "orders")
     return _Q14_SEMI_MIN_BYTES <= ob <= _Q14_SEMI_MAX_BYTES
-
 
 
 @query(
@@ -447,73 +386,15 @@ def _q14_semi(spark: SparkSession, sf: str) -> bool:
 def q14(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q3 shape: filter → 3-way join → agg → top-k.
 
-    Round 11 re-litigated the round-6 eager pre-agg and flipped the
-    default to join-first (the 1000× decomposition located q14's whole
-    gap in the ~45M-group pre-agg; the scan runs 0.51× — FASTER than
-    DuckDB — at 600M rows; join-first won at every volume on tmpfs:
-    sf0.1 0.385→0.327 s, 100× 3.60→2.82 s, 1000× 32.4→22.6 s). The
-    groupBy after the join needs NO extra exchange: the join leaves rows
-    hash-partitioned by l_orderkey, which already clusters
-    (l_orderkey, o_orderdate) — o_orderdate is functionally dependent
-    through the n:1 join.
-
-    Round 12 settled the deferred medium question with the full shape ×
-    medium × codec matrix (tools/q14_bytes.py; best wall, min-of-N):
-
-    ========================  ==========  =========  ============
-    lineitem / medium          tmpfs       disk       disk+codec
-    ========================  ==========  =========  ============
-    1.37 GB (100×) join-first  2.66 s      3.32 s     3.47 s
-    1.37 GB (100×) pre-agg     2.94 s      3.93 s     4.32 s
-    13.7 GB (1000×) join-first 22.6 s (r11) —         32.8 s
-    13.7 GB (1000×) pre-agg    32.4 s (r11) —         29.8 s
-    ========================  ==========  =========  ============
-
-    Join-first wins everywhere EXCEPT big-volume × costly-bytes, where
-    pre-agg's smaller shuffle (6.6 vs 8.9 GB compressed; the old 2.9×
-    byte claim is now a measured 1.26-1.35× — near-unique l_orderkey
-    leaves little map-side combining) outweighs its fixed extra
-    aggregation. Per-byte cost is sniffed from master/local-dir-fstype/
-    codec (``_q14_preagg``); the env knobs only force A/B shapes.
-
-    Round-12 OPTIMIZATION pass (OPTIMIZATION_r12.md, guide §3.2) — two
-    further measured changes:
-
-    - **Dim join always first**: ``li ⋈ (o ⋈ c)`` instead of
-      ``(li ⋈ o) ⋈ c``. customer's BUILDING filter is 5× selective but
-      used to apply at the LAST join — after every filtered fact row had
-      already crossed the exchange; worse, at volumes where customer
-      stops broadcasting, the fact-sized join output re-exchanges by
-      o_custkey. Reordered, the dim⋈dim runs map-side (customer
-      broadcast onto orders) and the orderkey side the fact meets is
-      already 1/5 the size. Inner-join associativity: identical rows,
-      oracle hash unchanged (sweep-verified).
-    - **Fact semi-reduction** (``_q14_semi``): on NETWORK masters with a
-      broadcastable surviving-orderkey set, the fact is
-      broadcast-LEFT-SEMI filtered against the (o⋈c) orderkey set
-      BEFORE its exchange — measured shuffle drops ~10× vs the old
-      shape (1389 → 142 MB/run at 100×; 5.7 vs 22 GB/run at 1000×) and
-      2.5× vs plain reorder. On every LOCAL medium the byte saving does
-      not repay the second dim scan + probe pass (1000×: reorder 15.2 s
-      vs semi 18.4–19.0 s on tmpfs AND disk+codec), so locally the
-      default stays plain reorder and semi/pre-agg are A/B knobs.
-
-    1000× matrix (tools/q14_semi.py, min-of-3, this round's host):
-    tmpfs — old join-first 38.96 / reorder 15.48 / semi 18.43 s;
-    disk+codec — 23.65 / 15.16 / 18.96 s. Shuffle written per run:
-    22 / 14.3 / 5.7 GB (tmpfs), 8.8 / 5.9 / 2.3 GB (codec).
-
-    No broadcast hint on customer: a 1/5-filtered customer is
-    broadcastable locally (the planner auto-hints it) but NOT at 100 TB
-    — the shape must survive both regimes.
-
-    Round-12 follow-up (same pass): in the everything-broadcasts regime
-    (orders' on-disk bytes ≤ ``_Q14_FLAT_MAX_BYTES``) the reorder has no
-    exchange to shrink but still serializes two dependent broadcast
-    builds, so the FLAT (li⋈o)⋈c order is kept there — measured
-    fresh-process min-of-8 at sf0.1: flat 0.398/0.409 s vs reorder
-    0.531/0.464 s (``_q14_flat``). Above the cap the reorder applies
-    unchanged.
+    Three join orders, each picked by a gate from input metadata:
+    semi-prefiltered reorder (``_q14_semi``), flat (li⋈o)⋈c
+    (``_q14_flat``), otherwise li⋈(o⋈c) with the dim join first. Inner-
+    join associativity: every shape returns the same rows. The groupBy
+    after the join needs no extra exchange: the join leaves rows
+    hash-partitioned by l_orderkey, and o_orderdate is functionally
+    dependent on it. No broadcast hint on customer: the shape must also
+    hold where a filtered customer is too big to broadcast. Shape
+    measurements: OPTIMIZATION_r12.md §q14 and SCALE.md.
     """
     c = load_table(spark, sf, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -524,39 +405,16 @@ def q14(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem").filter(
         F.col("l_shipdate").cast("date") > F.lit("1998-01-01").cast("date")
     )
-    # round-12 optimization: the dim⋈dim join always runs FIRST —
-    # customer's 5× selectivity reduces the orderkey side before any
-    # fact byte moves, and the fact's join output never re-exchanges by
-    # o_custkey (which it must at volumes where customer stops
-    # broadcasting). Inner-join associativity: same rows out.
+    # dim⋈dim first: customer's 5× selectivity shrinks the orderkey side
+    # before any fact byte moves, and the fact's join output never
+    # re-exchanges by o_custkey.
     oc = o.join(c, F.col("o_custkey") == F.col("c_custkey")).select(
         "o_orderkey", "o_orderdate"
     )
-    if _q14_preagg(spark, sf):
-        rev = li.groupBy("l_orderkey").agg(
-            F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("_preagg_rev")
-        )
-        return (
-            rev.join(oc, F.col("l_orderkey") == F.col("o_orderkey"))
-            .select(
-                "l_orderkey",
-                F.round(F.col("_preagg_rev"), 4).alias("revenue"),
-                F.col("o_orderdate").cast("date").alias("orderdate"),
-            )
-            .orderBy(F.desc("revenue"), "l_orderkey")
-            .limit(20)
-        )
-    # round-13 optimization (guide §2.3 "shuffle fewer bytes", VERDICT r12
-    # #5): fold the two revenue factors into ONE double BEFORE the fact's
-    # exchange. The 1000× plan's residual is the 107M-row exchange + sort
-    # whose rows carried [l_orderkey, l_extendedprice, l_discount] — 32
-    # UnsafeRow bytes; [l_orderkey, _rev] is 24 (−25%). The per-row
-    # multiply is the identical double op either side of the exchange and
-    # the aggregate sums the same addends in the same grouped pipeline, so
-    # the result is bit-unchanged (oracle-verified at sf0.001/0.01/0.1 and
-    # value-diffed at the 1000× probe).
+    # fold the two revenue factors into ONE double before the fact's
+    # exchange: 24 instead of 32 UnsafeRow bytes per shuffled row. The
+    # per-row multiply is the same double op either side of the exchange,
+    # so the result is bit-unchanged.
     li = li.select(
         "l_orderkey",
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("_rev"),
@@ -568,9 +426,7 @@ def q14(spark: SparkSession, sf: str) -> DataFrame:
         )
         j = li.join(oc, F.col("l_orderkey") == F.col("o_orderkey"))
     elif _q14_flat(sf):
-        # everything-broadcasts regime: flat (li⋈o)⋈c — both dim
-        # broadcasts build concurrently, one probe stage (see
-        # _Q14_FLAT_MAX_BYTES). Inner-join associativity: same rows.
+        # both dim broadcasts build concurrently, one probe stage
         j = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).join(
             c, F.col("o_custkey") == F.col("c_custkey")
         )

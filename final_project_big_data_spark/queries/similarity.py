@@ -58,62 +58,35 @@ _N_QUERIES = 10  # probe set: vec_id < 10
     category="similarity",
 )
 def s01(spark: SparkSession, sf: str) -> DataFrame:
-    """Brute-force cosine top-k — two-kernel (round 11, VERDICT r10 #3).
+    """Brute-force cosine top-k, two kernels picked by ``pair_kernel``.
 
     Norms are computed once per side BEFORE the pair scoring — the pair
-    expression is a single dot product. Kernel choice follows the same
-    input-bytes switch as d06/s04/d10 (``pair_kernel``):
+    expression is a single dot product.
 
     - **join** (tiny inputs): broadcast probes × corpus equi-join with the
-      interpreted HOF fold — zero Python-worker setup, wins below ~4 MiB.
-    - **np** (at scale): ``operators.vector.probe_corpus_topk`` — the
-      corpus is hash-bucketed, probes replicated per bucket, and each
-      bucket scores probe×chunk as NumPy dim-by-dim column sweeps in the
-      exact ``dot_fold`` accumulation order (bit parity by construction,
-      pinned by tests/test_similarity.py::test_s01_probe_kernels_bit_parity);
-      only per-bucket top-k survivors cross Arrow back.
+      interpreted HOF fold — zero Python-worker setup.
+    - **np**: ``operators.vector.probe_corpus_topk_scan`` scores parquet
+      row groups task-side in the exact ``dot_fold`` accumulation order
+      (bit parity pinned by
+      tests/test_similarity.py::test_s01_probe_kernels_bit_parity); no
+      corpus shuffle, only per-row-group top-k survivors come back.
 
     Both kernels feed the same global window top-k tail, so the oracle
     hash-matches either way (``sqrt(dot(x,x))`` per row == per pair).
-    See operators/vector.py for the benchmarked-and-rejected third
-    alternatives (unrolled expression, corpus-broadcast GEMM).
+    See operators/vector.py for the benchmarked-and-rejected alternatives.
     """
     from final_project_big_data_spark.io import table_path
     from final_project_big_data_spark.operators.vector import (
         pair_kernel,
-        probe_corpus_topk,
         probe_corpus_topk_scan,
     )
 
     raw = widen(load_table(spark, sf, "embeddings")).select(
         "vec_id", "embedding"
     )
-    np_variant = os.environ.get("SPARK_GRAFT_S01_KERNEL", "scan")
-    if pair_kernel(sf) == "np" and np_variant == "scan":
-        # round 12 (VERDICT r11 #7): the bucketed np kernel's residual at
-        # volume was the hash exchange moving every corpus byte into
-        # groupBy(bucket) kernels; the scan-side kernel scores parquet
-        # ROW GROUPS read task-side (one task per row group, probe set
-        # read task-side too) — zero exchange, parallelism owned by the
-        # kernel instead of the dominant-table-sized maxPartitionBytes
-        # (which starved a first mapInArrow cut to 4 splits / 6.12 s;
-        # row-group tasks: 2.11 s ≈ 0.9× DuckDB at the 1000× corpus).
+    if pair_kernel(sf) == "np":
         scored = probe_corpus_topk_scan(
             spark, table_path(sf, "embeddings"), _N_QUERIES, _TOP_K
-        )
-    elif pair_kernel(sf) == "np":
-        # bucketed np kernel (SPARK_GRAFT_S01_KERNEL=bucket, kept for
-        # A/B): 2× the shuffle width halves each bucket's kernel group so
-        # the Python-worker scoring overlaps the shuffle fetch — measured
-        # at the 1000× probe (2M vectors, min-of-3): 5.39 s at 1×, 4.14 s
-        # at 2×, 4.35 s at 4× (probe replication + per-group stack costs
-        # take over past 2×). Any width is correct (parity pinned at
-        # 1/7/4096 buckets).
-        n_buckets = 2 * int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        scored = probe_corpus_topk(
-            raw, raw.filter(F.col("vec_id") < _N_QUERIES), _TOP_K, n_buckets
         )
     else:
         e = raw.select(
@@ -372,36 +345,10 @@ def _centroid_argmax(cents: DataFrame):
     return carr, F.array_max(affs).getField("centroid_id")
 
 
-def _assign_kernel(sf: str) -> str:
-    """Pick the argmax-assign kernel from INPUT METADATA (no job, lazy-
-    safe): the NumPy kernel removes an O(n·k·dim) interpreted constant
-    but pays two fixed Python-worker/Arrow stage costs, so it loses at
-    tiny volume (sf0.1: 0.9 → 1.6 s) and wins from the 10× probe volume
-    up (100×: assign 22.2 → 2.0 s; tools/ivf_vec_probe.py). The switch
-    reads the embeddings table's on-disk bytes — same data-sized posture
-    as the session's sized_* rules. Unstat-able paths (hdfs://, s3:// —
-    i.e. cluster volumes) choose NumPy, the at-scale default.
-    ``SPARK_GRAFT_IVF_ASSIGN`` in {hof, np} overrides for A/B."""
-    forced = os.environ.get("SPARK_GRAFT_IVF_ASSIGN", "")
-    if forced in ("hof", "np"):
-        return forced
-    from final_project_big_data_spark.operators.vector import table_bytes
-
-    size = table_bytes(sf, "embeddings")
-    return "np" if (size < 0 or size >= _NP_ASSIGN_MIN_BYTES) else "hof"
-
-
-# measured crossover (tools/ivf_vec_probe.py + ab_query, round 7): the
-# NumPy kernel's fixed two-stage Python cost breaks even between the
-# sf0.1 corpus (0.8 MiB, HOF wins by ~0.7 s) and the 10× probe (8 MiB,
-# NumPy wins); 4 MiB splits the measured gap
-_NP_ASSIGN_MIN_BYTES = 4 * 1024 * 1024
-
-
 def _hof_assign(en: DataFrame, cents: DataFrame) -> DataFrame:
     """The pre-round-7 interpreted shape: per-row ``array_max(transform)``
     over the broadcast collected-centroid row (``_centroid_argmax``).
-    Kept as the small-input kernel — see ``_assign_kernel``."""
+    Kept as the small-input kernel — see ``operators.vector.pair_kernel``."""
     carr, best_cid = _centroid_argmax(cents)
     return en.crossJoin(F.broadcast(carr)).select(
         "vec_id", "v", "nv", best_cid.alias("centroid_id")
@@ -489,7 +436,7 @@ def _numpy_assign(en: DataFrame, cents: DataFrame) -> DataFrame:
 
 
 def _lloyd_refine(
-    en: DataFrame, cents: DataFrame, kernel: str = "hof"
+    en: DataFrame, cents: DataFrame, kernel: str
 ) -> DataFrame:
     """One Lloyd (k-means) pass, expressed lazily in DataFrame ops.
 
@@ -719,7 +666,9 @@ def _ivf_assigned(spark: SparkSession, sf: str, where=None):
             F.col("nv").alias("nc"),
         )
     )
-    kernel = _assign_kernel(sf)
+    from final_project_big_data_spark.operators.vector import pair_kernel
+
+    kernel = pair_kernel(sf)
     cents = _lloyd_refine(en, init, kernel)
     # final per-vector argmax centroid: no n×k rows either way; the
     # kernel (interpreted HOF vs Arrow/NumPy fold) is sized to the input

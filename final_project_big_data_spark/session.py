@@ -45,6 +45,13 @@ def ship_package(spark: SparkSession) -> None:
     sc._fpbd_pkg_shipped = True
 
 
+def is_local_master(master: str) -> bool:
+    """True for single-JVM masters (``local``, ``local[N]``, ``local[*]``).
+    ``local-cluster[n,c,m]`` is NOT local: its executors are separate
+    JVMs that fetch shuffle blocks over netty, like any cluster."""
+    return master.startswith("local") and not master.startswith("local-cluster")
+
+
 def _local_cores() -> int:
     """Executor-thread count for this host: SPARK_GRAFT_CPUS, else the
     scheduler-visible CPU set (sees cgroup/taskset limits), else
@@ -340,7 +347,7 @@ def get_spark(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             os.environ.get(
                 "SPARK_GRAFT_ADVISORY_BYTES",
-                str(1024 * 1024) if master.startswith("local") else str(64 * 1024 * 1024),
+                str(1024 * 1024) if is_local_master(master) else str(64 * 1024 * 1024),
             ),
         )
         # whole-stage-codegen class cache (STATIC conf, default 100
@@ -362,8 +369,9 @@ def get_spark(
         # heap can defer that full GC for hours. Measured in the round-10
         # single-pass 1000× sweep: 180 queries in one session accumulated
         # 45 GB of dead shuffle files before q95's own spill hit "No space
-        # left on device". Locally the hazard is worse than disk: the
-        # local dir above is tmpfs, so dead shuffle blocks occupy RAM.
+        # left on device". Where the local dir is tmpfs (the /dev/shm
+        # default below, unless SPARK_LOCAL_DIRS points elsewhere), dead
+        # shuffle blocks occupy RAM.
         # 5min (default 30min) bounds retention to the GC cadence for any
         # long-lived multi-query session; a forced full GC costs ~100 ms,
         # invisible next to any real query and outside the bench's
@@ -378,17 +386,11 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if master.startswith("local") and not master.startswith("local-cluster"):
-        # Single-machine posture: shuffle blocks live in page cache/tmpfs,
-        # so codec CPU is pure overhead — skip it. On a cluster, shuffle
-        # crosses the network: keep the default lz4 (these confs are only
-        # set for local masters, so a cluster submitter inherits defaults).
-        # local-cluster[n,c,m] takes the CLUSTER path (round 13): its
-        # executors are separate JVMs fetching shuffle through netty, so
-        # compression, SMJ preference and local-dir defaults should match
-        # what a real cluster submitter would inherit — this is also what
-        # lets the network-gated plan branches be validated end-to-end on
-        # one host (VERDICT r12 #3/#4).
+    if is_local_master(master):
+        # Single-machine posture: shuffle blocks live in page cache or
+        # tmpfs, so codec CPU is pure overhead — skip it. On a cluster
+        # (local-cluster included), shuffle crosses the network: keep the
+        # default lz4; a cluster submitter inherits Spark's defaults.
         builder = (
             builder.config("spark.shuffle.compress", "false")
             .config("spark.shuffle.spill.compress", "false")
@@ -422,6 +424,8 @@ def get_spark(
             # defaults; only knobs that survive fresh-process A/B at
             # more than noise belong here.
         )
+        # Spark lets an exported SPARK_LOCAL_DIRS override this conf, and
+        # then shuffles land wherever that points, usually on disk.
         if os.path.isdir("/dev/shm"):
             shm = os.path.join("/dev/shm", f"spark-local-{os.getuid()}")
             os.makedirs(shm, exist_ok=True)

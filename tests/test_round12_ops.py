@@ -1,18 +1,18 @@
-"""Round-12 operator/infrastructure pins: q14 automatic shape choice and
-the shuffle-medium sniff behind it (VERDICT r11 #1)."""
+"""Round-12 operator/infrastructure pins: q14's shape gates and the
+shuffle-medium sniff behind them (VERDICT r11 #1)."""
 
 from __future__ import annotations
 
-from final_project_big_data_spark.plans.shuffle_medium import (
-    per_byte_cost_high,
-    shuffle_medium,
-)
-from final_project_big_data_spark.queries.relational import _q14_preagg
+import pytest
+
+from final_project_big_data_spark.plans.shuffle_medium import shuffle_medium
+from final_project_big_data_spark.queries import relational as R
 
 
-def test_shuffle_medium_ram_on_engine_session(spark):
+def test_shuffle_medium_ram_on_engine_session(spark, monkeypatch):
     """The engine's local session puts spark.local.dir on /dev/shm —
-    medium must read as ram."""
+    medium must read as ram when no SPARK_LOCAL_DIRS overrides it."""
+    monkeypatch.delenv("SPARK_LOCAL_DIRS", raising=False)
     assert shuffle_medium(spark) == "ram"
 
 
@@ -21,74 +21,25 @@ def test_shuffle_medium_disk_via_env(spark, monkeypatch):
     pointing it at a real-disk path flips the medium."""
     monkeypatch.setenv("SPARK_LOCAL_DIRS", "/root")
     assert shuffle_medium(spark) == "disk"
-    assert per_byte_cost_high(spark)
 
 
 def test_shuffle_medium_local_cluster_is_network():
     """``local-cluster[n,c,m]`` executors are separate JVMs — shuffle
-    crosses the netty transport, so the sniff must read network (round
-    13, VERDICT r12 #4: the old ``startswith("local")`` test lumped the
-    only validatable multi-JVM master in with ``local[*]``, so the
-    network-gated q14 branches could never fire on their own sniff).
-    String-level stub: a second master cannot share the suite's
-    SparkContext (see tests/test_local_cluster.py)."""
+    crosses the netty transport, so the sniff must read network, and the
+    one master classifier must call it non-local. String-level stub: a
+    second master cannot share the suite's SparkContext (see
+    tests/test_local_cluster.py)."""
     from types import SimpleNamespace
+
+    from final_project_big_data_spark.session import is_local_master
 
     fake = SimpleNamespace(
         sparkContext=SimpleNamespace(master="local-cluster[2,8,2048]")
     )
     assert shuffle_medium(fake) == "network"
-    assert per_byte_cost_high(fake)
-
-
-def test_per_byte_cost_tracks_codec(spark, monkeypatch):
-    """On RAM-shuffle, cost is high iff the codec is on (compression CPU
-    is proportional to bytes on both ends; spark.shuffle.compress is a
-    static conf, so the explicit override is the testable path)."""
-    monkeypatch.delenv("SPARK_LOCAL_DIRS", raising=False)
-    assert not per_byte_cost_high(spark, compress=False)
-    assert per_byte_cost_high(spark, compress=True)
-    # engine local session pins the codec OFF → conf-read path agrees
-    assert per_byte_cost_high(spark) == (
-        str(spark.conf.get("spark.shuffle.compress", "true")).lower() == "true"
-    )
-
-
-def test_q14_shape_choice(spark, sf_dir, monkeypatch):
-    """Env knob forces either shape; the automatic pre-agg rule narrowed
-    in the round-12 OPTIMIZATION pass (OPTIMIZATION_r12.md §q14): the
-    reordered join-first shape measured faster on EVERY local medium
-    (tmpfs and disk+codec, 100× and 1000×), so pre-agg now needs a
-    NETWORK master (where its byte cut must pay by §1.3 arithmetic) plus
-    a big fact — and yields to the stronger semi reduction when the
-    keyset bracket fits."""
-    monkeypatch.setenv("SPARK_GRAFT_Q14_PREAGG", "1")
-    assert _q14_preagg(spark, sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_Q14_PREAGG", "0")
-    assert not _q14_preagg(spark, sf_dir)
-    monkeypatch.delenv("SPARK_GRAFT_Q14_PREAGG")
-    # local master: never pre-agg, whatever the local medium/codec —
-    # measured, not argued (disk+codec 1000×: reorder 15.16 s vs the two
-    # r12-matrix shapes 23.65 / 29.8 s)
-    monkeypatch.setenv("SPARK_LOCAL_DIRS", "/root")
-    assert not _q14_preagg(spark, sf_dir)
-    assert not _q14_preagg(spark, "hdfs://nowhere/sf100")
-    monkeypatch.delenv("SPARK_LOCAL_DIRS")
-    # network master (mocked medium): big unstat-able fact → pre-agg,
-    # unless the semi bracket takes precedence (stat-able orders inside
-    # the broadcastable bracket)
-    import final_project_big_data_spark.queries.relational as R
-
-    monkeypatch.setattr(
-        "final_project_big_data_spark.plans.shuffle_medium.shuffle_medium",
-        lambda s: "network",
-    )
-    assert R._q14_preagg(spark, "hdfs://nowhere/sf100")
-    assert R._q14_semi(spark, sf_dir) is False  # orders below bracket floor
-    monkeypatch.setattr(
-        R, "_q14_semi", lambda s, sf: True
-    )
-    assert not R._q14_preagg(spark, "hdfs://nowhere/sf100")
+    assert not is_local_master("local-cluster[2,8,2048]")
+    assert not is_local_master("spark://host:7077")
+    assert is_local_master("local[4]") and is_local_master("local")
 
 
 def _plan(df) -> str:
@@ -98,38 +49,36 @@ def _plan(df) -> str:
 
 
 def test_q14_semi_bracket(spark, sf_dir, monkeypatch):
-    """Round-12 optimization: the semi prefilter needs a NETWORK master
-    (local media measured it a loss) AND orders' on-disk bytes inside
-    the broadcastable-keyset bracket — unstat-able cluster paths must
-    NOT gamble executor memory; the env knob forces both ways."""
-    from final_project_big_data_spark.queries.relational import _q14_semi
-
-    monkeypatch.setenv("SPARK_GRAFT_Q14_SEMI", "1")
-    assert _q14_semi(spark, sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_Q14_SEMI", "0")
-    assert not _q14_semi(spark, sf_dir)
-    monkeypatch.delenv("SPARK_GRAFT_Q14_SEMI")
-    assert not _q14_semi(spark, sf_dir)  # local master: reorder measured faster
+    """The semi prefilter needs a NETWORK master (local media measured it
+    a loss) AND orders' on-disk bytes inside the broadcastable-keyset
+    bracket — unstat-able cluster paths must NOT gamble executor memory."""
+    assert not R._q14_semi(spark, sf_dir)  # local master: reorder measured faster
     monkeypatch.setattr(
         "final_project_big_data_spark.plans.shuffle_medium.shuffle_medium",
         lambda s: "network",
     )
-    assert not _q14_semi(spark, sf_dir)  # 2.6 MB orders: below bracket floor
-    assert not _q14_semi(spark, "hdfs://nowhere/sf100")  # unknown: no gamble
+    assert not R._q14_semi(spark, sf_dir)  # 2.6 MB orders: below bracket floor
+    assert not R._q14_semi(spark, "hdfs://nowhere/sf100")  # unknown: no gamble
+    monkeypatch.setattr(
+        "final_project_big_data_spark.operators.vector.table_bytes",
+        lambda sf, table: R._Q14_SEMI_MIN_BYTES,
+    )
+    assert R._q14_semi(spark, sf_dir)  # inside the bracket
 
 
-def test_q14_flat_gate(sf_dir, monkeypatch):
+def test_q14_flat_gate(sf_dir):
     """Flat shape fires exactly in the everything-broadcasts regime:
     fixture orders (KBs) → flat; unstat-able cluster path → reorder
-    (assume big); env knob forces both ways."""
-    from final_project_big_data_spark.queries.relational import _q14_flat
+    (assume big)."""
+    assert R._q14_flat(sf_dir)
+    assert not R._q14_flat("hdfs://nowhere/sf100")
 
-    assert _q14_flat(sf_dir)
-    assert not _q14_flat("hdfs://nowhere/sf100")
-    monkeypatch.setenv("SPARK_GRAFT_Q14_FLAT", "0")
-    assert not _q14_flat(sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_Q14_FLAT", "1")
-    assert _q14_flat("hdfs://nowhere/sf100")
+
+def _join_lines(plan: str) -> tuple[int, int]:
+    lines = plan.splitlines()
+    [i_fact] = [i for i, l in enumerate(lines) if "Join [l_orderkey" in l]
+    [i_dim] = [i for i, l in enumerate(lines) if "Join [o_custkey" in l]
+    return i_fact, i_dim
 
 
 def test_q14_reorder_and_semi_plan(spark, sf_dir, monkeypatch):
@@ -137,8 +86,7 @@ def test_q14_reorder_and_semi_plan(spark, sf_dir, monkeypatch):
     o_custkey) sits BELOW the fact join (on l_orderkey) — the round-12
     reorder; at fixture volume the flat shape applies (both dims
     broadcast concurrently, no nested build) and the customer join sits
-    ABOVE; the LeftSemi prefilter appears exactly when the bracket/knob
-    says."""
+    ABOVE; the LeftSemi prefilter appears exactly when its gate says."""
     from final_project_big_data_spark.queries import all_specs
 
     build = all_specs()["q14_multiway_join"].builder
@@ -146,32 +94,33 @@ def test_q14_reorder_and_semi_plan(spark, sf_dir, monkeypatch):
     # fixture volume: orders ≪ _Q14_FLAT_MAX_BYTES → flat (li⋈o)⋈c
     plan = _plan(build(spark, sf_dir))
     assert "LeftSemi" not in plan  # below the bracket: no redundant pass
-    lines = plan.splitlines()
-    [i_fact] = [
-        i for i, l in enumerate(lines) if "Join [l_orderkey" in l
-    ]
-    [i_dim] = [i for i, l in enumerate(lines) if "Join [o_custkey" in l]
+    i_fact, i_dim = _join_lines(plan)
     assert i_dim < i_fact, "flat shape: customer join above the fact join"
 
     # past the cap (forced): the reorder — customer nested under the fact
-    monkeypatch.setenv("SPARK_GRAFT_Q14_FLAT", "0")
-    lines = _plan(build(spark, sf_dir)).splitlines()
-    [i_fact] = [
-        i for i, l in enumerate(lines) if "Join [l_orderkey" in l
-    ]
-    [i_dim] = [i for i, l in enumerate(lines) if "Join [o_custkey" in l]
+    monkeypatch.setattr(R, "_q14_flat", lambda sf: False)
+    i_fact, i_dim = _join_lines(_plan(build(spark, sf_dir)))
     assert i_dim > i_fact, "customer join must be nested under the fact join"
-    monkeypatch.delenv("SPARK_GRAFT_Q14_FLAT")
 
-    monkeypatch.setenv("SPARK_GRAFT_Q14_SEMI", "1")
+    monkeypatch.setattr(R, "_q14_semi", lambda spark, sf: True)
     assert "LeftSemi" in _plan(build(spark, sf_dir))
-    monkeypatch.delenv("SPARK_GRAFT_Q14_SEMI")
 
-    # pre-agg branch keeps the reordered dim side too
-    monkeypatch.setenv("SPARK_GRAFT_Q14_PREAGG", "1")
-    pre = _plan(build(spark, sf_dir))
-    assert "Join [o_custkey" in pre or "Join [c_custkey" in pre
-    monkeypatch.delenv("SPARK_GRAFT_Q14_PREAGG")
+
+@pytest.mark.parametrize("shape", ["reorder", "semi"])
+def test_q14_forced_shape_matches_oracle(spark, sf_dir, duck, monkeypatch, shape):
+    """Every q14 shape the gates can pick must hash-match the DuckDB
+    oracle, not only the one this session's sniff picks (flat, checked
+    by the registry sweep)."""
+    from final_project_big_data_spark.queries import all_specs
+    from tests.oracle import compare
+
+    monkeypatch.setattr(R, "_q14_flat", lambda sf: False)
+    monkeypatch.setattr(R, "_q14_semi", lambda spark, sf: shape == "semi")
+    spec = all_specs()["q14_multiway_join"]
+    df = spec.builder(spark, sf_dir)
+    assert ("LeftSemi" in _plan(df)) == (shape == "semi")
+    rep = compare(df, duck, spec.oracle)
+    assert rep["ok"], rep
 
 
 def test_iterative_graph_plans_grow_linearly_with_rounds(spark):
@@ -207,11 +156,10 @@ def test_q14_fact_exchange_is_narrow(spark, sf_dir, monkeypatch):
     project."""
     from final_project_big_data_spark.queries import all_specs
 
-    monkeypatch.setenv("SPARK_GRAFT_Q14_FLAT", "0")
+    monkeypatch.setattr(R, "_q14_flat", lambda sf: False)
     plan = _plan(
         all_specs()["q14_multiway_join"].builder(spark, sf_dir)
     )
-    monkeypatch.delenv("SPARK_GRAFT_Q14_FLAT")
     assert "_rev" in plan
     # the product is computed in the scan-side project; nothing above it
     # (exchange, sort, join, agg) references the two raw columns

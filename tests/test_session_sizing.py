@@ -47,10 +47,16 @@ def test_largest_table_bytes_missing_dir_is_zero():
 
 def test_shuffle_partitions_scales_with_data(tmp_path):
     _mkparquet(tmp_path, "t", 20 * 1024 * 1024)
-    got = sized_shuffle_partitions(str(tmp_path), advisory_bytes=1024 * 1024)
+    # cores pinned: the ceiling (cores × 4) must sit above 20 on any host
+    got = sized_shuffle_partitions(
+        str(tmp_path), advisory_bytes=1024 * 1024, cores=8
+    )
     assert got == 20
     # floor clamp
-    assert sized_shuffle_partitions(str(tmp_path), advisory_bytes=1 << 40) == 8
+    assert (
+        sized_shuffle_partitions(str(tmp_path), advisory_bytes=1 << 40, cores=8)
+        == 8
+    )
     # ceiling is tasks-per-core waves, not a large constant: the round-4
     # 4096 cap planned 1841 one-MiB sort tasks at the 100x probe (q06
     # 21.9 s of mostly scheduling; see session.py docstring)

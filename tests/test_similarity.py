@@ -126,46 +126,47 @@ def test_ivf_knobs_identical_across_engines(spark, sf_dir, duck):
     assert n_clusters <= want_k
 
 
-def test_assign_kernels_bit_parity(spark, sf_dir):
+def _force_kernel(monkeypatch, kern: str) -> None:
+    """Patch the one vector-kernel gate; every caller imports it at call
+    time, so the builders pick ``kern`` regardless of input size."""
+    from final_project_big_data_spark.operators import vector as V
+
+    monkeypatch.setattr(V, "pair_kernel", lambda sf_dir, table="embeddings": kern)
+
+
+def test_assign_kernels_bit_parity(spark, sf_dir, monkeypatch):
     """The two IVF argmax-assign kernels (interpreted HOF vs Arrow/NumPy
-    dim-fold) must agree on EVERY assignment: the NumPy kernel
-    accumulates dim-by-dim, reproducing the aggregate(zip_with) fold's
-    left-to-right summation order exactly (also measured 0 diffs at
-    200k x 400 — tools/ivf_vec_probe.py)."""
-    from pyspark.sql import functions as F
+    dim-fold) must agree on EVERY assignment, through the Lloyd pass and
+    the final assign: the NumPy kernel accumulates dim-by-dim,
+    reproducing the aggregate(zip_with) fold's left-to-right summation
+    order exactly (also measured 0 diffs at 200k x 400 —
+    tools/ivf_vec_probe.py)."""
+    from final_project_big_data_spark.queries.similarity import _ivf_assigned
 
-    from final_project_big_data_spark.queries.similarity import (
-        _hof_assign,
-        _ivf_assigned,
-        _numpy_assign,
-    )
+    outs = []
+    for kern in ("join", "np"):
+        _force_kernel(monkeypatch, kern)
+        _, _, assigned, _ = _ivf_assigned(spark, sf_dir)
+        outs.append(sorted(assigned.select("vec_id", "centroid_id").collect()))
+    assert outs[0] == outs[1]
 
-    en, cents, _, _ = _ivf_assigned(spark, sf_dir)
-    a = _hof_assign(en, cents).select("vec_id", "centroid_id")
-    b = _numpy_assign(en, cents).select("vec_id", "centroid_id")
-    diffs = (
-        a.alias("a")
-        .join(b.alias("b"), "vec_id", "full")
-        .filter(
-            (F.col("a.centroid_id") != F.col("b.centroid_id"))
-            | F.col("a.centroid_id").isNull()
-            | F.col("b.centroid_id").isNull()
+
+def test_assign_kernel_sized_to_input(spark, sf_dir, monkeypatch):
+    """The IVF assign kernel follows ``pair_kernel``: the sf0.001/sf0.01
+    embeddings are far below the 4 MiB crossover, so the plan stays on
+    the interpreted HOF; forcing the gate to "np" brings in the
+    Arrow/NumPy kernel."""
+    from final_project_big_data_spark.queries.similarity import _ivf_assigned
+
+    def np_kernel_in_plan() -> bool:
+        assigned = _ivf_assigned(spark, sf_dir)[2]
+        return "FlatMapCoGroupsInPandas" in (
+            assigned._jdf.queryExecution().logical().toString()
         )
-        .count()
-    )
-    assert diffs == 0
 
-
-def test_assign_kernel_sized_to_input(monkeypatch, sf_dir):
-    from final_project_big_data_spark.queries import similarity as S
-
-    # sf0.001/sf0.01 embeddings are far below the 4 MiB crossover
-    assert S._assign_kernel(sf_dir) == "hof"
-    # unstat-able (cluster) paths choose the at-scale kernel
-    assert S._assign_kernel("hdfs://nn/warehouse/tables") == "np"
-    # env override wins for A/B probes
-    monkeypatch.setenv("SPARK_GRAFT_IVF_ASSIGN", "np")
-    assert S._assign_kernel(sf_dir) == "np"
+    assert not np_kernel_in_plan()
+    _force_kernel(monkeypatch, "np")
+    assert np_kernel_in_plan()
 
 
 def test_quantized_ann_recall_at_k(spark, sf_dir):
@@ -198,41 +199,23 @@ def test_pair_kernels_bit_parity(spark, sf_dir, monkeypatch):
     ):
         outs = []
         for kern in ("join", "np"):
-            monkeypatch.setenv("SPARK_GRAFT_PAIR_KERNEL", kern)
+            _force_kernel(monkeypatch, kern)
             outs.append(all_specs()[name].builder(spark, sf_dir).collect())
         assert outs[0] == outs[1], name
 
 
 def test_s01_probe_kernels_bit_parity(spark, sf_dir, monkeypatch):
-    """s01's round-11 probe×corpus NumPy kernel (operators/vector.
-    probe_corpus_topk) must be BIT-IDENTICAL to the broadcast-join +
+    """s01's row-group NumPy kernel (operators/vector.
+    probe_corpus_topk_scan) must be BIT-IDENTICAL to the broadcast-join +
     interpreted dot_fold shape: same floats (dim-by-dim left fold ==
-    zip_with/aggregate order), same survivors, same ranks. Also pins the
-    superset argument — per-bucket top-k union → global window ≡ global
-    top-k over all pairs — at several bucket widths, including buckets
-    ≫ rows (empty/probe-only groups) and 1 bucket (whole corpus in one
-    group)."""
+    zip_with/aggregate order), same survivors, same ranks — also under a
+    tiny Arrow batch size (many per-batch top-k unions → global window
+    superset cut)."""
     outs = []
     for kern in ("join", "np"):
-        monkeypatch.setenv("SPARK_GRAFT_PAIR_KERNEL", kern)
+        _force_kernel(monkeypatch, kern)
         outs.append(all_specs()["s01_cosine_topk"].builder(spark, sf_dir).collect())
     assert outs[0] == outs[1]
-    monkeypatch.setenv("SPARK_GRAFT_PAIR_KERNEL", "np")
-    monkeypatch.setenv("SPARK_GRAFT_S01_KERNEL", "bucket")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for b in ("1", "7", "4096"):
-            spark.conf.set("spark.sql.shuffle.partitions", b)
-            got = all_specs()["s01_cosine_topk"].builder(spark, sf_dir).collect()
-            assert got == outs[0], f"buckets={b}"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    # round-12 scan-side kernel (mapInArrow over scan batches, task-side
-    # probe read): same bit parity, including under a tiny Arrow batch
-    # size (many per-batch top-k unions → global window superset cut)
-    monkeypatch.setenv("SPARK_GRAFT_S01_KERNEL", "scan")
-    got = all_specs()["s01_cosine_topk"].builder(spark, sf_dir).collect()
-    assert got == outs[0], "scan kernel diverged"
     old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "37")
@@ -244,17 +227,13 @@ def test_s01_probe_kernels_bit_parity(spark, sf_dir, monkeypatch):
         )
 
 
-def test_pair_kernel_sized_to_input(monkeypatch, sf_dir):
+def test_pair_kernel_sized_to_input(sf_dir):
     """Kernel choice is metadata-only (lazy-safe): tiny fixtures take the
-    join shape, at-scale (or unstat-able cluster) paths take NumPy; the
-    env override wins for A/B probes."""
+    join shape, at-scale (or unstat-able cluster) paths take NumPy."""
     from final_project_big_data_spark.operators import vector as V
 
-    monkeypatch.delenv("SPARK_GRAFT_PAIR_KERNEL", raising=False)
     assert V.pair_kernel(sf_dir) == "join"  # sf0.001 embeddings ≪ 4 MiB
     assert V.pair_kernel("hdfs://nowhere/sf100") == "np"
-    monkeypatch.setenv("SPARK_GRAFT_PAIR_KERNEL", "np")
-    assert V.pair_kernel(sf_dir) == "np"
 
 
 def test_pair_kernel_chunked_path_and_edges(spark, sf_dir, monkeypatch):

@@ -2,31 +2,27 @@
 """Network-gated branch validation on a REAL multi-JVM master (round 13,
 VERDICT r12 #3).
 
-The q14 semi/pre-agg branches fire only when ``shuffle_medium`` reads
-"network"; through round 12 they had been exercised solely via
-monkeypatched unit tests — the gated wiring had never run end-to-end
-where the gate fires on its OWN sniff. ``local-cluster[n,c,m]`` launches
-real separate executor JVMs whose shuffle crosses the netty transport
-(loopback wire + serialization + codec), which the round-13
-``shuffle_medium`` correctly classifies as network; combined with
+The q14 semi branch fires only when ``shuffle_medium`` reads "network".
+``local-cluster[n,c,m]`` launches real separate executor JVMs whose
+shuffle crosses the netty transport (loopback wire + serialization +
+codec), which ``shuffle_medium`` classifies as network; combined with
 ``SPARK_LOCAL_DIRS`` on a real disk this is the closest one host gets to
-the cluster regime the gates were written for.
+the cluster regime the gate was written for.
 
 One (query, mode) per process (round-6 lesson). Prints ONE JSON line:
-wall samples, whether the semi/pre-agg markers appear in the plan, the
-sniffed medium, total shuffle bytes written during the final (warmed)
-run, and a full oracle value-diff of the result under the SAME
-local-cluster session (driver-mimic harness).
+wall samples, whether the semi marker appears in the plan, the sniffed
+medium, total shuffle bytes written during the final (warmed) run, and a
+full oracle value-diff of the result under the SAME local-cluster
+session (driver-mimic harness).
 
 Usage::
 
     python tools/cluster_gate_ab.py QUERY MODE [runs] [sf_dir] [master]
 
     QUERY: q14_multiway_join | q96_tpch_q2_min_cost (any registry name)
-    MODE:  auto    — no knobs; the gate decides (THE validation cell)
-           reorder — q14 knobs force semi/pre-agg off (plain reorder)
-           semi    — force the semi prefilter
-           preagg  — force the pre-agg shape
+    MODE:  auto    — the gate decides (THE validation cell)
+           reorder — q14's semi gate patched off (plain reorder)
+           semi    — q14's semi gate patched on
 """
 
 from __future__ import annotations
@@ -38,12 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_KNOBS = {
-    "auto": {},
-    "reorder": {"SPARK_GRAFT_Q14_SEMI": "0", "SPARK_GRAFT_Q14_PREAGG": "0"},
-    "semi": {"SPARK_GRAFT_Q14_SEMI": "1"},
-    "preagg": {"SPARK_GRAFT_Q14_SEMI": "0", "SPARK_GRAFT_Q14_PREAGG": "1"},
-}
+_MODES = ("auto", "reorder", "semi")
 
 
 def _stages(spark):
@@ -59,6 +50,8 @@ def _stages(spark):
 def main() -> None:
     query = sys.argv[1]
     mode = sys.argv[2]
+    if mode not in _MODES:
+        sys.exit(f"MODE must be one of {_MODES}")
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     sf_dir = (
         sys.argv[4] if len(sys.argv) > 4 else "/tmp/spark_graft_scale_probe_x100"
@@ -71,9 +64,8 @@ def main() -> None:
         "SPARK_LOCAL_DIRS", "/tmp/cluster_gate_shuffle"
     )
     os.makedirs(shuffle_dir, exist_ok=True)
-    os.environ.update(_KNOBS[mode])
 
-    from final_project_big_data_spark.queries import all_specs
+    from final_project_big_data_spark.queries import all_specs, relational
     from final_project_big_data_spark.plans.shuffle_medium import shuffle_medium
     from final_project_big_data_spark.session import (
         get_spark,
@@ -100,6 +92,8 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     ship_package(spark)
+    if mode != "auto":
+        relational._q14_semi = lambda spark, sf: mode == "semi"
     spark.range(1000).selectExpr("sum(id)").collect()
 
     spec = all_specs()[query]
@@ -154,7 +148,6 @@ def main() -> None:
                 "min": min(samples),
                 "samples": samples,
                 "semi_in_plan": "LeftSemi" in plan,
-                "preagg_in_plan": "_preagg_rev" in plan,
                 "shuffle_write_mb_last_run": shuffle_mb,
                 "oracle_ok": bool(rep["ok"]),
                 "oracle_err": rep.get("error"),

@@ -32,19 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-HEADLINE = [
-    "q01_scan_project",
-    "q06_join_inner",
-    "q14_multiway_join",
-    "q15_hash_aggregate",
-    "q22_window_rank",
-    "q26_topk",
-    "q33_math_fns",
-    "q37_json_fns",
-    "t01_token_count",
-    "d03_minhash_lsh_pairs",
-    "s01_cosine_topk",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
@@ -68,7 +56,9 @@ def main() -> None:
 
     # the Arrow/applyInPandas boundary: force the NumPy pair kernel so a
     # grouped-map UDF actually runs on a remote executor python worker
-    os.environ["SPARK_GRAFT_PAIR_KERNEL"] = "np"
+    from final_project_big_data_spark.operators import vector
+
+    vector.pair_kernel = lambda sf_dir, table="embeddings": "np"
     rows["s04_knn_self_join[np]"] = len(
         specs["s04_knn_self_join"].builder(spark, SF).collect()
     )

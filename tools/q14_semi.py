@@ -121,8 +121,8 @@ def main() -> None:
         "spark.driver.memory": sized_driver_memory(sf),
         "spark.ui.enabled": "true",
     }
-    # shuffle-medium matrix knob, same contract as tools/q14_bytes.py:
-    # SPARK_LOCAL_DIRS picks tmpfs vs disk, this turns the wire-like codec on
+    # shuffle-medium matrix knob: SPARK_LOCAL_DIRS picks tmpfs vs disk,
+    # this turns the wire-like codec on
     if os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS") == "1":
         extra.update(
             {
