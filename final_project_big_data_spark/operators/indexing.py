@@ -68,7 +68,7 @@ def index_pin_scope():
     query's pin can yank the cache out from under a concurrent identical
     query mid-action. Lazy registry builders therefore keep the
     periodic-GC bound (measured flat at steady state —
-    tools/idx_session_probe.py, SCALE.md round 12); eager internal call
+    SCALE.md round 12, "Indexing operator"); eager internal call
     sites use this scope and hold zero blocks after returning.
     """
     pins: list[DataFrame] = []

@@ -361,11 +361,12 @@ def _numpy_assign(en: DataFrame, cents: DataFrame) -> DataFrame:
     Same semantics as ``_centroid_argmax`` (per-row argmax, ties → larger
     centroid_id, affinity = fold-dot/(nv·nc)), but the n×k×dim multiply-
     adds run as NumPy column sweeps instead of the JVM higher-order-
-    function interpreter. Measured (tools/ivf_vec_probe.py, 100× probe,
-    200k vectors × k=400): HOF 22.2 s → 2.0 s (11×) with ZERO assignment
-    diffs — the kernel accumulates dim-by-dim (``S += V[:,i:i+1] *
-    C[None,:,i]``), which reproduces the ``aggregate(zip_with(...))``
-    fold's left-to-right per-(row, centroid) summation order exactly, so
+    function interpreter. Measured (SCALE.md "IVF argmax-assign
+    vectorization", 100× probe, 200k vectors × k=400): HOF 22.2 s →
+    2.0 s (11×) with ZERO assignment diffs — the kernel accumulates
+    dim-by-dim (``S += V[:,i:i+1] * C[None,:,i]``), which reproduces the
+    ``aggregate(zip_with(...))`` fold's left-to-right per-(row, centroid)
+    summation order exactly, so
     DuckDB-oracle bit parity is preserved by construction (a BLAS GEMM
     variant is another 2.5× faster but has a different summation order —
     kept probe-only).

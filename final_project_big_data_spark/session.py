@@ -240,9 +240,11 @@ def sized_max_partition_bytes(
     The rule therefore sizes splits to ``min(cores, row_groups)`` units:
     a one-row-group table gets ONE split (its real parallelism), a
     many-row-group probe/cluster table keeps the data-per-core sizing.
-    Requires ``spark.sql.files.minPartitionNum=1`` (set by ``get_spark``
-    for local masters) — otherwise ``defaultParallelism`` re-derives
-    small splits through ``bytesPerCore`` no matter what this returns.
+    Needs ``spark.sql.files.minPartitionNum=1``, which ``get_spark`` sets
+    on a local master exactly when the caller passes this value as
+    ``spark.sql.files.maxPartitionBytes`` in ``extra_conf`` — otherwise
+    ``defaultParallelism`` re-derives small splits through
+    ``bytesPerCore`` no matter what this returns.
     """
     if cores is None:
         # sized to the ACTUAL host, not a hardcoded literal (ADVICE r4)
@@ -283,6 +285,63 @@ def sized_driver_memory(
     """
     gb = (_largest_table_bytes(sf_dir) * bytes_per_input_byte) >> 30
     return f"{min(ceiling_gb, max(floor_gb, gb))}g"
+
+
+SIZED_SPLITS = "spark.sql.files.maxPartitionBytes"
+FILE_SYSTEM_CHECKPOINTS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def local_conf(
+    master: str, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """The confs ``get_spark`` adds for a single-JVM master, before the
+    caller's ``extra_conf`` (which still overrides each of them). Empty
+    for any other master, ``local-cluster`` included: a cluster submitter
+    inherits Spark's defaults."""
+    if not is_local_master(master):
+        return {}
+    conf = {
+        # Shuffle blocks live in page cache or tmpfs, so codec CPU is pure
+        # overhead. On a cluster shuffle crosses the network: keep lz4.
+        "spark.shuffle.compress": "false",
+        "spark.shuffle.spill.compress": "false",
+        # Prefer shuffled-hash over sort-merge locally: with data-sized
+        # shuffle partitions every build side fits task memory, and
+        # skipping both sorts is a measured win (10x probe: q14 -13%, q92
+        # -25%; sf0.1 q14 -23%). Left at the SMJ default off local
+        # masters: at cluster scale SMJ's graceful sort-spill beats an
+        # OOM-prone giant hash build, and AQE's skew-split serves both.
+        "spark.sql.join.preferSortMergeJoin": "false",
+        # Buffer-knob lesson (round 6, kept as a negative result): 1 MiB
+        # shuffle write buffers, 10M-row window/SMJ in-memory thresholds,
+        # and reduced range-sampling were each within run-to-run noise
+        # (±2%) once A/B'd in FRESH processes. The write buffers are also
+        # a scale hazard: the bypass-merge writer opens one buffer per
+        # reduce partition, so at the 100x probe (128 partitions x 32
+        # tasks x 1 MiB) they OOM'd an 8 GiB heap. Only knobs that survive
+        # fresh-process A/B at more than noise belong here.
+        # Streaming checkpoint logs (offsets, commits, source and sink
+        # metadata) through the Hadoop FileSystem API. Spark's default
+        # goes through FileContext, which without native libhadoop shells
+        # out to readlink and chmod on every atomic write: ~29 ms a write
+        # against ~7 ms on a 4-core host, four writes per micro-batch.
+        # Local-only because this manager's temp-file-then-rename commit
+        # is atomic on a local disk but not on an object store.
+        "spark.sql.streaming.checkpointFileManagerClass": FILE_SYSTEM_CHECKPOINTS,
+    }
+    if extra_conf and SIZED_SPLITS in extra_conf:
+        # A caller that sizes scan splits (sized_max_partition_bytes) lets
+        # them OWN the split count: the default minPartitionNum
+        # (= defaultParallelism) re-splits any scan into >= cores byte
+        # ranges, even a one-row-group file, whose extra splits are empty
+        # and trip RangePartitioner's resample guard. Unsized sessions
+        # keep the default, so a small scan (a stream's micro-batch, a
+        # training read) still spreads across every core.
+        conf["spark.sql.files.minPartitionNum"] = "1"
+    return conf
 
 
 def get_spark(
@@ -386,50 +445,14 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if is_local_master(master):
-        # Single-machine posture: shuffle blocks live in page cache or
-        # tmpfs, so codec CPU is pure overhead — skip it. On a cluster
-        # (local-cluster included), shuffle crosses the network: keep the
-        # default lz4; a cluster submitter inherits Spark's defaults.
-        builder = (
-            builder.config("spark.shuffle.compress", "false")
-            .config("spark.shuffle.spill.compress", "false")
-            # let maxPartitionBytes OWN scan-split sizing: the default
-            # minPartitionNum (= defaultParallelism = cores) re-splits any
-            # file into ≥cores byte ranges even when the file has one row
-            # group, creating empty splits that both waste scheduling and
-            # trip RangePartitioner's resample guard (see
-            # sized_max_partition_bytes "Row-group awareness"). Only
-            # consequential when maxPartitionBytes ≥ file bytes — i.e.
-            # exactly when sized_* decided one split is the real
-            # parallelism. Local-only: cluster submitters keep defaults.
-            .config("spark.sql.files.minPartitionNum", "1")
-            # Prefer shuffled-hash over sort-merge locally: with
-            # data-sized shuffle partitions every build side fits task
-            # memory, and skipping both sorts is a measured win (10x
-            # probe: q14 -13%, q92 -25%; sf0.1 q14 -23%). Left at the
-            # SMJ default off local masters: at cluster scale SMJ's
-            # graceful sort-spill beats an OOM-prone giant hash build,
-            # and AQE's skew-split serves both strategies.
-            .config("spark.sql.join.preferSortMergeJoin", "false")
-            # Buffer-knob lesson (round 6, kept as a negative result):
-            # 1 MiB shuffle write buffers, 10M-row window/SMJ in-memory
-            # thresholds, and reduced range-sampling were each measured
-            # within run-to-run noise (±2%) once A/B'd in FRESH processes
-            # — the apparent -0.35 s came from JIT warm-up contaminating
-            # same-JVM sequential configs. Worse, the write buffers are a
-            # scale hazard: the bypass-merge writer opens one buffer per
-            # reduce partition, so at the 100x probe (128 partitions x
-            # 32 tasks x 1 MiB) they OOM'd an 8 GiB heap. Reverted to
-            # defaults; only knobs that survive fresh-process A/B at
-            # more than noise belong here.
-        )
-        # Spark lets an exported SPARK_LOCAL_DIRS override this conf, and
-        # then shuffles land wherever that points, usually on disk.
-        if os.path.isdir("/dev/shm"):
-            shm = os.path.join("/dev/shm", f"spark-local-{os.getuid()}")
-            os.makedirs(shm, exist_ok=True)
-            builder = builder.config("spark.local.dir", shm)
+    for k, v in local_conf(master, extra_conf).items():
+        builder = builder.config(k, v)
+    # Spark lets an exported SPARK_LOCAL_DIRS override this conf, and then
+    # shuffles land wherever that points, usually on disk.
+    if is_local_master(master) and os.path.isdir("/dev/shm"):
+        shm = os.path.join("/dev/shm", f"spark-local-{os.getuid()}")
+        os.makedirs(shm, exist_ok=True)
+        builder = builder.config("spark.local.dir", shm)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -106,6 +106,65 @@ def test_reference_parity_streaming_score(spark, model, splits, tmp_path):
     assert sorted(map(tuple, result.collect())) == sorted(map(tuple, batch.collect()))
 
 
+def _sink_files_per_batch(sink: str) -> dict[int, int]:
+    """Batch id -> part files committed, from the parquet sink's log."""
+    import json
+    import os
+
+    log = os.path.join(sink, "_spark_metadata")
+    out = {}
+    for name in os.listdir(log):
+        if name.isdigit():
+            with open(os.path.join(log, name)) as fh:
+                out[int(name)] = sum(
+                    json.loads(line)["action"] == "add"
+                    for line in fh if line.startswith("{")
+                )
+    return out
+
+
+def test_stream_score_restart_is_exactly_once(spark, model, creditcard, tmp_path):
+    """predict.py's score leg into a checkpointed parquet sink: micro-
+    batches of several JSON files score on several tasks, and a restart
+    from the same checkpoint after more files arrive neither drops nor
+    repeats a row."""
+    in_dir, sink, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    rows = creditcard.limit(1200).toPandas()
+    (tmp_path / "in").mkdir()
+
+    def drop(first: int, last: int) -> None:
+        for i in range(first, last):
+            part = rows.iloc[i * 100:(i + 1) * 100]
+            tmp = tmp_path / f".part-{i:02d}.json"
+            tmp.write_text(part.to_json(orient="records", lines=True))
+            tmp.rename(tmp_path / "in" / f"part-{i:02d}.json")
+
+    def drain() -> None:
+        stream = (spark.readStream.schema(CREDIT_CARD)
+                  .option("maxFilesPerTrigger", 4).json(in_dir))
+        q = (M.prediction_envelope(M.score(model, stream))
+             .writeStream.format("parquet")
+             .option("path", sink)
+             .option("checkpointLocation", ckpt)
+             .start())
+        q.processAllAvailable()
+        q.stop()
+
+    drop(0, 8)
+    drain()
+    drop(8, 12)
+    drain()
+
+    out = spark.read.parquet(sink)
+    assert out.count() == out.select("Time").distinct().count() == 1200
+    batch = M.prediction_envelope(
+        M.score(model, spark.read.schema(CREDIT_CARD).json(in_dir)))
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
+    per_batch = _sink_files_per_batch(sink)
+    assert len(per_batch) == 3
+    assert max(per_batch.values()) > 1
+
+
 # ------------------------------------------------- C22: MLlib text features
 
 

@@ -1,4 +1,5 @@
-"""Unit tests for the data-sized session knobs (no SparkSession needed).
+"""Unit tests for the data-sized session knobs and get_spark's
+local-master confs.
 
 Both helpers apply the same submitter rule at every scale: size the work
 unit to the data, clamp to [floor, ceiling]. The scan-split helper exists
@@ -13,8 +14,11 @@ from __future__ import annotations
 import os
 
 from final_project_big_data_spark.session import (
+    FILE_SYSTEM_CHECKPOINTS,
+    SIZED_SPLITS,
     _largest_table_bytes,
     _local_cores,
+    local_conf,
     sized_max_partition_bytes,
     sized_shuffle_partitions,
 )
@@ -149,3 +153,48 @@ def test_codegen_cache_sized_for_multi_query_workloads(spark):
     eviction-order-dependent; SCALE.md round 9 measured the 11-query
     headline set 74% slower under the default)."""
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 1024
+
+
+def test_local_conf_pins_splits_only_for_sized_sessions():
+    assert "spark.sql.files.minPartitionNum" not in local_conf("local[4]")
+    sized = local_conf("local[4]", {SIZED_SPLITS: str(8 << 20)})
+    assert sized["spark.sql.files.minPartitionNum"] == "1"
+
+
+def test_local_conf_checkpoint_manager_is_local_only(spark):
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert local_conf("local[4]")[key] == FILE_SYSTEM_CHECKPOINTS
+    # rename is atomic on a local disk, not on an object store
+    assert local_conf("local-cluster[2,1,1024]", {SIZED_SPLITS: "1"}) == {}
+    assert spark.conf.get(key) == FILE_SYSTEM_CHECKPOINTS
+
+
+def test_unsized_session_spreads_small_files_across_cores(spark, tmp_path):
+    # a stream micro-batch's shape: a handful of small JSON files
+    for i in range(8):
+        (tmp_path / f"part-{i}.json").write_text(
+            "".join(f'{{"x": {i * 100 + j}}}\n' for j in range(100))
+        )
+    df = spark.read.schema("x long").json(str(tmp_path))
+    assert df.rdd.getNumPartitions() > 1
+    assert df.count() == 800
+
+
+def test_sized_session_reads_one_row_group_as_one_split(spark, tmp_path):
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # above the 4 MiB open cost, so cores alone would split it
+    path = str(tmp_path / "t.parquet")
+    x = np.random.default_rng(0).integers(0, 1 << 62, 700_000)
+    pq.write_table(pa.table({"x": x}), path, row_group_size=1 << 20,
+                   compression="none")
+    assert os.path.getsize(path) > 4 << 20
+    assert spark.read.parquet(path).rdd.getNumPartitions() > 1
+    extra = {SIZED_SPLITS: str(sized_max_partition_bytes(str(tmp_path), cores=4))}
+    sized = spark.newSession()
+    for k, v in (local_conf("local[4]", extra) | extra).items():
+        if k.startswith("spark.sql.files."):
+            sized.conf.set(k, v)
+    assert sized.read.parquet(path).rdd.getNumPartitions() == 1

@@ -140,7 +140,7 @@ def test_assign_kernels_bit_parity(spark, sf_dir, monkeypatch):
     the final assign: the NumPy kernel accumulates dim-by-dim,
     reproducing the aggregate(zip_with) fold's left-to-right summation
     order exactly (also measured 0 diffs at 200k x 400 —
-    tools/ivf_vec_probe.py)."""
+    SCALE.md "IVF argmax-assign vectorization")."""
     from final_project_big_data_spark.queries.similarity import _ivf_assigned
 
     outs = []

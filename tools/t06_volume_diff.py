@@ -21,6 +21,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 DIR = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft_docs_volume_x100"
 ENTRIES = sys.argv[2:] or ["t06_bigram_logprob"]
 
+# significant digits the float compare honours (rtol 1e-5)
+TOL_DIGITS = 5
+
+
+def _sorted_rows(df):
+    """Rows in a canonical order, so the compare does not depend on each
+    entry's ORDER BY yielding a unique total order. The key is the
+    non-float columns: near-equal floats could order differently across
+    engines and mis-pair rows the tolerance check would accept. When every
+    column is a float, the key is the floats rounded to the compare
+    tolerance instead."""
+    key = [c for c in df.columns if df[c].dtype.kind not in "fc"]
+    if key:
+        rows = df.sort_values(key, kind="mergesort")
+    else:
+        rounded = df.apply(
+            lambda col: col.map(lambda v: float(f"{v:.{TOL_DIGITS}g}"))
+            if col.dtype.kind == "f" else col
+        )
+        order = rounded.sort_values(list(df.columns), kind="mergesort").index
+        rows = df.loc[order]
+    return rows.reset_index(drop=True)
+
 
 def main() -> None:
     import duckdb
@@ -51,22 +74,10 @@ def main() -> None:
         if match:
             try:
                 du = du.astype(dict(sp.dtypes))
-                # sort rows by the non-float columns so the compare does
-                # not depend on each entry's ORDER BY yielding a unique
-                # total order (ADVICE r12); floats are excluded from the
-                # key because near-equal values could order differently
-                # across engines and mis-pair rows the tolerance check
-                # would otherwise accept
-                key = [
-                    c for c in sp.columns if sp[c].dtype.kind not in "fc"
-                ] or list(sp.columns)
-                sp = sp.sort_values(key, kind="mergesort").reset_index(
-                    drop=True
+                sp, du = _sorted_rows(sp), _sorted_rows(du)
+                pd.testing.assert_frame_equal(
+                    sp, du, check_exact=False, rtol=10.0**-TOL_DIGITS
                 )
-                du = du.sort_values(key, kind="mergesort").reset_index(
-                    drop=True
-                )
-                pd.testing.assert_frame_equal(sp, du, check_exact=False)
             except Exception:  # noqa: BLE001 — dtype coercion (ValueError/
                 # TypeError on nullable-int vs NaN) must report a mismatch,
                 # not crash the probe (ADVICE r12)
