@@ -95,36 +95,11 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     from final_project_big_data_spark.queries import all_specs
-    from final_project_big_data_spark.session import (
-        get_spark,
-        sized_adaptive_enabled,
-        sized_max_partition_bytes,
-        sized_shuffle_partitions,
-    )
+    from final_project_big_data_spark.session import get_spark, sized_conf
 
     specs = all_specs()
-    # shuffle partitions AND scan splits sized to the benchmark's data
-    # volume, not to core count — AQE merges but never splits, and at
-    # ~10 MiB/table a cores-sized initial count schedules mostly-empty
-    # tasks (~30% of headline wall-clock measured at sf0.1) while the
-    # 128 MiB scan-split default plans ONE task per table scan (see
-    # session.py docstrings for both rules)
-    # AQE follows the same data-sized rule (session.py): below the volume
-    # where static sizing already right-sizes every shuffle, each adaptive
-    # query-stage barrier is a paid scheduler job (4-7 jobs/query vs 1-4;
-    # measured -0.29 s on this headline set at sf0.1, round 6)
-    spark = get_spark(
-        app_name="bench",
-        shuffle_partitions=sized_shuffle_partitions(sf_dir),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(
-                sized_max_partition_bytes(sf_dir)
-            ),
-            "spark.sql.adaptive.enabled": str(
-                sized_adaptive_enabled(sf_dir)
-            ).lower(),
-        },
-    )
+    # partitions, scan splits and AQE sized to the data (session.sized_conf)
+    spark = get_spark(app_name="bench", extra_conf=sized_conf(sf_dir))
     # warm up JVM / codegen so per-query numbers measure the plan
     spark.range(1000).selectExpr("sum(id)").collect()
 

@@ -21,10 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 
-# A/B override for the cost-based presort decision (tools/ab_query.py):
-# None = cost-based (production), False = never presort, True = always.
-_FORCE_PRESORT: bool | None = None
-
 
 def sorted_project(
     df: DataFrame, keys: list[str], *cols: Column | str
@@ -100,8 +96,6 @@ def range_presorted_for_join(
     choice instead of guessing. Estimate unavailable (non-JVM session
     edge cases) → keep the presort, the small-data status quo.
     """
-    if _FORCE_PRESORT is not None:
-        return range_presorted(df, *keys) if _FORCE_PRESORT else df
     try:
         spark = df.sparkSession
         thresh = _parse_spark_bytes(

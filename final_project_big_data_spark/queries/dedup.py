@@ -28,7 +28,7 @@ bucket width w = max(1, ceil(32·range/n)) keeps expected blocks ~32
 docs at any volume (adjacent-bucket emission preserves boundary
 recall). Planted-duplicate recall is pinned at two volumes in
 tests/test_dedup.py; the r=4 regime is oracle-checked at 1.25M docs
-(tools/lsh_knob_probe.py).
+(SCALE.md, "Data-derived LSH banding").
 """
 
 from __future__ import annotations

@@ -247,7 +247,7 @@ def _lsh_probe(probes_signed: DataFrame, signed: DataFrame) -> DataFrame:
     cos = _dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv"))
     w = W.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
     # NO broadcast hint here, unlike _ivf_probe — measured both ways at
-    # the 100× serving probe (round 11, tools/index_serving_probe.py):
+    # the 100× serving probe (SCALE.md, "Persisted-index serving"):
     # with only 2^n_planes = 16 buckets, multiprobe covers essentially
     # every bucket, so partition pruning is structurally nil for LSH
     # (bytes_pruned_factor 1.0) AND forcing the probe side broadcast
@@ -754,8 +754,8 @@ def _ivf_probe(
     # persisted-index postings scan's dynamicpruningexpression silently
     # NO-OPS at runtime (DPP default reuseBroadcastOnly: nothing to
     # reuse → the filter degenerates to true). Found and verified by the
-    # round-11 serving probe's FS bytes-read metric
-    # (tools/index_serving_probe.py): with the hint, a 5-probe query
+    # round-11 serving probe's FS bytes-read metric (SCALE.md,
+    # "Persisted-index serving"): with the hint, a 5-probe query
     # reads 1.3 MB of the 1.9 MB postings — factor 1.46, exactly the
     # 400/280 probed-list arithmetic — and runs 1.6× faster; the bulk
     # 200-probe shape is unchanged-to-better (6.8 → 6.4 s).

@@ -17,6 +17,9 @@ import tempfile
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "final_project_big_data_spark"
+# AQE coalesce target on a local master, and the partition size the sized_*
+# rules divide the dominant input by.
+ADVISORY_BYTES = 1 << 20
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -67,7 +70,7 @@ def _local_cores() -> int:
 
 def sized_shuffle_partitions(
     sf_dir: str,
-    advisory_bytes: int | None = None,
+    advisory_bytes: int = ADVISORY_BYTES,
     floor: int = 8,
     tasks_per_core: int = 4,
     cores: int | None = None,
@@ -98,10 +101,6 @@ def sized_shuffle_partitions(
     Partitions still grow with executors, just never past the
     useful-wave bound.
     """
-    if advisory_bytes is None:
-        advisory_bytes = int(
-            os.environ.get("SPARK_GRAFT_ADVISORY_BYTES", str(1024 * 1024))
-        )
     biggest = _largest_table_bytes(sf_dir)
     if biggest == 0:
         return 32
@@ -115,7 +114,7 @@ def sized_adaptive_enabled(
     sf_dir: str,
     cores: int | None = None,
     tasks_per_core: int = 4,
-    advisory_bytes: int | None = None,
+    advisory_bytes: int = ADVISORY_BYTES,
 ) -> bool:
     """Data-sized AQE gate: adaptive execution ON iff the dominant input is
     big enough that runtime re-planning can still change anything.
@@ -132,16 +131,11 @@ def sized_adaptive_enabled(
     3.151) on identical results.
 
     The threshold is exactly the ceiling condition: largest-table bytes ≥
-    cores × tasks_per_core × advisory partition size (128 MiB at 32
-    cores × 4 × 1 MiB locally). The 10×/100×/1000× probes (184 MiB–14 GiB
-    facts) stay ON — skew handling at those volumes is load-bearing
-    (q72). A cluster submitter passes its total core count like the other
+    cores × tasks_per_core × ``ADVISORY_BYTES`` (64 MiB at 16 cores).
+    The 10×/100×/1000× probes (184 MiB–14 GiB facts) stay ON — skew
+    handling at those volumes is load-bearing (q72). A cluster submitter passes its total core count like the other
     sized_* rules and lands ON for any real multi-executor volume.
     """
-    if advisory_bytes is None:
-        advisory_bytes = int(
-            os.environ.get("SPARK_GRAFT_ADVISORY_BYTES", str(1024 * 1024))
-        )
     if cores is None:
         cores = _local_cores()
     return _largest_table_bytes(sf_dir) >= cores * tasks_per_core * advisory_bytes
@@ -241,10 +235,9 @@ def sized_max_partition_bytes(
     a one-row-group table gets ONE split (its real parallelism), a
     many-row-group probe/cluster table keeps the data-per-core sizing.
     Needs ``spark.sql.files.minPartitionNum=1``, which ``get_spark`` sets
-    on a local master exactly when the caller passes this value as
-    ``spark.sql.files.maxPartitionBytes`` in ``extra_conf`` — otherwise
-    ``defaultParallelism`` re-derives small splits through
-    ``bytesPerCore`` no matter what this returns.
+    on a local master exactly when ``extra_conf`` carries this value
+    (``sized_conf`` does) — otherwise ``defaultParallelism`` re-derives
+    small splits through ``bytesPerCore`` no matter what this returns.
     """
     if cores is None:
         # sized to the ACTUAL host, not a hardcoded literal (ADVICE r4)
@@ -288,6 +281,24 @@ def sized_driver_memory(
 
 
 SIZED_SPLITS = "spark.sql.files.maxPartitionBytes"
+
+
+def sized_conf(data_dir: str, cores: int | None = None) -> dict[str, str]:
+    """The data-sized half of a session, as ``get_spark`` ``extra_conf``:
+    shuffle partitions, scan splits and the AQE gate, each from its
+    ``sized_*`` rule. ``cores`` is the total executor core count; a
+    cluster submitter must pass it, the default sees only this host."""
+    return {
+        "spark.sql.shuffle.partitions": str(
+            sized_shuffle_partitions(data_dir, cores=cores)
+        ),
+        SIZED_SPLITS: str(sized_max_partition_bytes(data_dir, cores=cores)),
+        "spark.sql.adaptive.enabled": str(
+            sized_adaptive_enabled(data_dir, cores=cores)
+        ).lower(),
+    }
+
+
 FILE_SYSTEM_CHECKPOINTS = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
@@ -315,6 +326,10 @@ def local_conf(
         # masters: at cluster scale SMJ's graceful sort-spill beats an
         # OOM-prone giant hash build, and AQE's skew-split serves both.
         "spark.sql.join.preferSortMergeJoin": "false",
+        # AQE coalesce target. Spark's 64 MiB assumes cluster-scale inputs:
+        # at sf0.1 (~10 MiB tables) it coalesces every shuffle to 1-5
+        # partitions and idles the other cores.
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(ADVISORY_BYTES),
         # Buffer-knob lesson (round 6, kept as a negative result): 1 MiB
         # shuffle write buffers, 10M-row window/SMJ in-memory thresholds,
         # and reduced range-sampling were each within run-to-run noise
@@ -333,8 +348,8 @@ def local_conf(
         "spark.sql.streaming.checkpointFileManagerClass": FILE_SYSTEM_CHECKPOINTS,
     }
     if extra_conf and SIZED_SPLITS in extra_conf:
-        # A caller that sizes scan splits (sized_max_partition_bytes) lets
-        # them OWN the split count: the default minPartitionNum
+        # A caller that sizes scan splits (sized_conf) lets them OWN the
+        # split count: the default minPartitionNum
         # (= defaultParallelism) re-splits any scan into >= cores byte
         # ranges, even a one-row-group file, whose extra splits are empty
         # and trip RangePartitioner's resample guard. Unsized sessions
@@ -360,20 +375,18 @@ def get_spark(
       one row per Spark job (``tasks/scripts/producer.py:17``).
     - Arrow on for pandas interchange (vectorized pandas UDF path).
 
-    Sizing knobs come from the environment so the same code runs on
-    ``local[32]`` and a 1000-executor cluster:
-    - ``SPARK_GRAFT_CPUS``  — local core count (default ``*``).
-    - ``shuffle_partitions``  — default = cores in local mode; on a real
+    Data sizing is the caller's: ``extra_conf=sized_conf(data_dir)`` sizes
+    shuffle partitions, scan splits and AQE to the input, so the same code
+    runs on ``local[4]`` and a 1000-executor cluster.
+    - ``master``  — default ``local[$SPARK_GRAFT_CPUS]``, else ``local[*]``.
+    - ``shuffle_partitions``  — default = this host's cores; on a real
       cluster AQE coalesces from a higher initial number anyway.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        try:
-            shuffle_partitions = int(cpus)
-        except ValueError:
-            shuffle_partitions = 32
+        shuffle_partitions = _local_cores()
 
     builder = (
         SparkSession.builder.master(master)
@@ -382,10 +395,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # honor the advisory size below when coalescing instead of keeping
-        # partition count pinned at max parallelism: small shuffles collapse
-        # to few right-sized tasks (scheduling overhead off the critical
-        # path); large shuffles still fan out because bytes/advisory > cores
+        # honor the advisory size (local_conf) when coalescing instead of
+        # keeping partition count pinned at max parallelism: small shuffles
+        # collapse to few right-sized tasks (scheduling overhead off the
+        # critical path); large shuffles still fan out because
+        # bytes/advisory > cores
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -397,18 +411,6 @@ def get_spark(
         # -> 1.0 s on reverting; tools/scale_probe.py). Known-small dims use
         # explicit broadcast() hints (threshold-independent) and AQE still
         # upgrades shuffle joins whose RUNTIME size is small.
-        # AQE coalesce target. Default 64 MiB assumes cluster-scale inputs;
-        # at local bench scale (sf0.1 ≈ 10 MiB tables) it coalesces every
-        # shuffle to 1-5 partitions and idles the other cores. Size it to
-        # data-per-core, not a constant: ~1 MiB locally keeps all local
-        # cores sorting/joining; a cluster submitter overrides via env.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get(
-                "SPARK_GRAFT_ADVISORY_BYTES",
-                str(1024 * 1024) if is_local_master(master) else str(64 * 1024 * 1024),
-            ),
-        )
         # whole-stage-codegen class cache (STATIC conf, default 100
         # entries). A 100-entry LRU is sized for one query at a time; a
         # workload that cycles a dozen distinct queries — this engine's
@@ -435,14 +437,11 @@ def get_spark(
         # long-lived multi-query session; a forced full GC costs ~100 ms,
         # invisible next to any real query and outside the bench's
         # min-of-N readings.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "5min"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "5min")
         # testdata events.ts is parquet timestamp[ns]; Spark 4 rejects NANOS
         # unless read as raw long (io.load_table converts to micros).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in local_conf(master, extra_conf).items():

@@ -229,10 +229,8 @@ def main() -> int:
     from final_project_big_data_spark.queries import all_specs
     from final_project_big_data_spark.session import (
         get_spark,
-        sized_adaptive_enabled,
+        sized_conf,
         sized_driver_memory,
-        sized_max_partition_bytes,
-        sized_shuffle_partitions,
     )
     from tests.driver_mimic import compare_driver_style, hazards
     from tests.oracle import compare, duckdb_connect
@@ -251,14 +249,7 @@ def main() -> int:
     # behind to starve every later session (round-6 incident).
     spark = get_spark(
         app_name="sweep",
-        shuffle_partitions=sized_shuffle_partitions(sf),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(
-                sized_max_partition_bytes(sf)
-            ),
-            "spark.sql.adaptive.enabled": str(
-                sized_adaptive_enabled(sf)
-            ).lower(),
+        extra_conf=sized_conf(sf) | {
             "spark.shuffle.compress": "true",
             "spark.shuffle.spill.compress": "true",
             # zstd for sweep shuffle/spill (round 13): the r12 single-pass

@@ -123,6 +123,37 @@ def test_q14_forced_shape_matches_oracle(spark, sf_dir, duck, monkeypatch, shape
     assert rep["ok"], rep
 
 
+@pytest.mark.parametrize("presort", ["on", "off"])
+def test_q06_forced_presort_matches_oracle(spark, sf_dir, monkeypatch, presort):
+    """Both branches of q06's presort gate (range_presorted_for_join)
+    must hash-match the DuckDB oracle at sf0.01: presorted below the
+    join, or sorted only by the final orderBy above it."""
+    import os
+
+    from final_project_big_data_spark.plans import ordering
+    from final_project_big_data_spark.queries import all_specs
+    from tests.oracle import compare, duckdb_connect
+
+    monkeypatch.setattr(
+        ordering,
+        "range_presorted_for_join",
+        lambda df, build_side, *keys: (
+            ordering.range_presorted(df, *keys) if presort == "on" else df
+        ),
+    )
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    spec = all_specs()["q06_join_inner"]
+    df = spec.builder(spark, sf)
+    logical = df._jdf.queryExecution().logical().toString()
+    assert ("RepartitionByExpression" in logical) == (presort == "on")
+    con = duckdb_connect(sf)
+    try:
+        rep = compare(df, con, spec.oracle)
+    finally:
+        con.close()
+    assert rep["ok"], rep
+
+
 def test_iterative_graph_plans_grow_linearly_with_rounds(spark):
     """Round-12 linearization pin: the step-relation recurrence references
     the previous round's frame exactly ONCE, so the unrolled logical plan

@@ -19,6 +19,8 @@ from final_project_big_data_spark.session import (
     _largest_table_bytes,
     _local_cores,
     local_conf,
+    sized_adaptive_enabled,
+    sized_conf,
     sized_max_partition_bytes,
     sized_shuffle_partitions,
 )
@@ -146,6 +148,26 @@ def test_max_partition_bytes_row_groups_bound_split_count(tmp_path):
     assert got == max(4 * 1024 * 1024, size // 8)
 
 
+def test_sized_conf_is_the_three_sized_rules(tmp_path):
+    # 20 MiB: AQE gate ON at 4 cores (>= 16 MiB), OFF at 32 (< 128 MiB)
+    d = str(tmp_path)
+    _mkparquet(d, "t", 20 * 1024 * 1024)
+    for cores, aqe in ((4, "true"), (32, "false")):
+        assert sized_conf(d, cores=cores) == {
+            "spark.sql.shuffle.partitions": str(
+                sized_shuffle_partitions(d, cores=cores)
+            ),
+            SIZED_SPLITS: str(sized_max_partition_bytes(d, cores=cores)),
+            "spark.sql.adaptive.enabled": str(
+                sized_adaptive_enabled(d, cores=cores)
+            ).lower(),
+        }
+        assert sized_conf(d, cores=cores)["spark.sql.adaptive.enabled"] == aqe
+    assert local_conf("local[4]", sized_conf(d))[
+        "spark.sql.files.minPartitionNum"
+    ] == "1"
+
+
 def test_codegen_cache_sized_for_multi_query_workloads(spark):
     """Round-9 regression pin: the whole-stage-codegen class cache must
     stay raised (default 100 entries thrashes when a dozen distinct
@@ -192,7 +214,7 @@ def test_sized_session_reads_one_row_group_as_one_split(spark, tmp_path):
                    compression="none")
     assert os.path.getsize(path) > 4 << 20
     assert spark.read.parquet(path).rdd.getNumPartitions() > 1
-    extra = {SIZED_SPLITS: str(sized_max_partition_bytes(str(tmp_path), cores=4))}
+    extra = sized_conf(str(tmp_path), cores=4)
     sized = spark.newSession()
     for k, v in (local_conf("local[4]", extra) | extra).items():
         if k.startswith("spark.sql.files."):

@@ -12,11 +12,11 @@ Usage::
     python tools/ab_query.py QUERY [--aqe=on|off] [--mpb=BYTES]
         [--parts=N] [--runs=N] [--sf=DIR] [--no-presort]
 
-Defaults mirror bench.py's shipping session exactly (sized_* rules), so
-`python tools/ab_query.py q06_join_inner` reproduces the BENCH number
+Defaults mirror bench.py's shipping session exactly (``session.sized_conf``),
+so `python tools/ab_query.py q06_join_inner` reproduces the BENCH number
 for that query; each flag overrides exactly one knob for attribution.
-``--no-presort`` disables the cost-based range presort
-(plans.ordering.range_presorted_for_join) via its test hook, isolating
+``--no-presort`` patches the cost-based range presort
+(plans.ordering.range_presorted_for_join) to never presort, isolating
 the query-shape lever from the session levers.
 """
 
@@ -60,32 +60,29 @@ def main() -> None:
 
     from final_project_big_data_spark.queries import all_specs
     from final_project_big_data_spark.session import (
+        SIZED_SPLITS,
         get_spark,
-        sized_adaptive_enabled,
-        sized_max_partition_bytes,
-        sized_shuffle_partitions,
+        sized_conf,
     )
 
-    aqe = (
-        opts["aqe"] == "on"
-        if "aqe" in opts
-        else sized_adaptive_enabled(sf_dir)
-    )
-    mpb = int(opts.get("mpb", sized_max_partition_bytes(sf_dir)))
-    parts = int(opts.get("parts", sized_shuffle_partitions(sf_dir)))
+    conf = sized_conf(sf_dir)
+    if "aqe" in opts:
+        conf["spark.sql.adaptive.enabled"] = str(opts["aqe"] == "on").lower()
+    if "mpb" in opts:
+        conf[SIZED_SPLITS] = opts["mpb"]
+    if "parts" in opts:
+        conf["spark.sql.shuffle.partitions"] = opts["parts"]
+    aqe = conf["spark.sql.adaptive.enabled"] == "true"
+    mpb = int(conf[SIZED_SPLITS])
+    parts = int(conf["spark.sql.shuffle.partitions"])
 
     stages = "--stages" in args
 
     spark = get_spark(
         app_name="ab_query",
-        shuffle_partitions=parts,
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(mpb),
-            "spark.sql.adaptive.enabled": str(aqe).lower(),
-            # the REST stage table is how --stages reads per-stage wall
-            # time and shuffle bytes; off otherwise (bench parity)
-            "spark.ui.enabled": str(stages).lower(),
-        },
+        # the REST stage table is how --stages reads per-stage wall time
+        # and shuffle bytes; off otherwise (bench parity)
+        extra_conf=conf | {"spark.ui.enabled": str(stages).lower()},
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -93,7 +90,7 @@ def main() -> None:
     if no_presort:
         from final_project_big_data_spark.plans import ordering
 
-        ordering._FORCE_PRESORT = False  # test hook; see plans/ordering.py
+        ordering.range_presorted_for_join = lambda df, build_side, *keys: df
 
     spec = all_specs()[name]
     samples = []

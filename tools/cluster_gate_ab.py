@@ -70,25 +70,17 @@ def main() -> None:
     from final_project_big_data_spark.session import (
         get_spark,
         ship_package,
-        sized_max_partition_bytes,
-        sized_shuffle_partitions,
+        sized_conf,
     )
 
     # total executor cores, parsed from the master spec, drive the sized_*
     # rules exactly as a cluster submitter would pass them
     n_exec, cores_per = (int(x) for x in master.split("[")[1].split(",")[:2])
-    cores = n_exec * cores_per
     spark = get_spark(
         app_name=f"cluster_gate_{query}_{mode}",
         master=master,
-        shuffle_partitions=sized_shuffle_partitions(sf_dir, cores=cores),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(
-                sized_max_partition_bytes(sf_dir, cores=cores)
-            ),
-            "spark.sql.adaptive.enabled": "true",
-            "spark.ui.enabled": "true",  # REST stage table = shuffle bytes
-        },
+        extra_conf=sized_conf(sf_dir, cores=n_exec * cores_per)
+        | {"spark.ui.enabled": "true"},  # REST stage table = shuffle bytes
     )
     spark.sparkContext.setLogLevel("ERROR")
     ship_package(spark)

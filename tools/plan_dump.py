@@ -6,7 +6,7 @@ Usage::
     python tools/plan_dump.py --out=plans/r12 --suffix=_before [names...]
 
 With no names, dumps every registry entry. Uses the bench session confs
-(sized_* rules) so the captured plan is the one the bench executes.
+(``session.sized_conf``) so the captured plan is the one the bench executes.
 Plans are captured WITHOUT executing the query (analysis only), so this
 is cheap enough to run for all ~196 entries.
 """
@@ -30,27 +30,11 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
 
     from final_project_big_data_spark.queries import all_specs
-    from final_project_big_data_spark.session import (
-        get_spark,
-        sized_adaptive_enabled,
-        sized_max_partition_bytes,
-        sized_shuffle_partitions,
-    )
+    from final_project_big_data_spark.session import get_spark, sized_conf
 
     specs = all_specs()
     names = args or list(specs)
-    spark = get_spark(
-        app_name="plan_dump",
-        shuffle_partitions=sized_shuffle_partitions(sf_dir),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(
-                sized_max_partition_bytes(sf_dir)
-            ),
-            "spark.sql.adaptive.enabled": str(
-                sized_adaptive_enabled(sf_dir)
-            ).lower(),
-        },
-    )
+    spark = get_spark(app_name="plan_dump", extra_conf=sized_conf(sf_dir))
     failures = {}
     for name in names:
         if name not in specs:

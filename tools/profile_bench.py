@@ -21,19 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-DEFAULT = [
-    "q01_scan_project",
-    "q06_join_inner",
-    "q14_multiway_join",
-    "q15_hash_aggregate",
-    "q22_window_rank",
-    "q26_topk",
-    "q33_math_fns",
-    "q37_json_fns",
-    "t01_token_count",
-    "d03_minhash_lsh_pairs",
-    "s01_cosine_topk",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
@@ -41,31 +29,14 @@ def main() -> None:
     sf_dir = args[0] if args else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    names = args[1:] or DEFAULT
+    names = args[1:] or HEADLINE
 
     from final_project_big_data_spark.queries import all_specs
-    from final_project_big_data_spark.session import (
-        get_spark,
-        sized_adaptive_enabled,
-        sized_max_partition_bytes,
-        sized_shuffle_partitions,
-    )
+    from final_project_big_data_spark.session import get_spark, sized_conf
 
     specs = all_specs()
-    # bench-identical config (incl. the data-sized AQE gate) so the job
-    # counts decompose the same runs BENCH_r*.json records
-    spark = get_spark(
-        app_name="profile",
-        shuffle_partitions=sized_shuffle_partitions(sf_dir),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(
-                sized_max_partition_bytes(sf_dir)
-            ),
-            "spark.sql.adaptive.enabled": str(
-                sized_adaptive_enabled(sf_dir)
-            ).lower(),
-        },
-    )
+    # bench-identical session so the job counts decompose the same runs
+    spark = get_spark(app_name="profile", extra_conf=sized_conf(sf_dir))
     sc = spark.sparkContext
     spark.range(1000).selectExpr("sum(id)").collect()  # warm codegen path
 

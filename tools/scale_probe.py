@@ -363,24 +363,12 @@ def main() -> None:
     scaled = materialize(copies)
 
     from final_project_big_data_spark.queries import all_specs
-    from final_project_big_data_spark.session import (
-        get_spark,
-        sized_max_partition_bytes,
-        sized_shuffle_partitions,
-    )
+    from final_project_big_data_spark.session import get_spark, sized_conf
 
     specs = all_specs()
     dirs = (scaled,) if "--pruning-only" in sys.argv else (SRC, scaled)
     for sf_dir in dirs:
-        spark = get_spark(
-            app_name="scale_probe",
-            shuffle_partitions=sized_shuffle_partitions(sf_dir),
-            extra_conf={
-                "spark.sql.files.maxPartitionBytes": str(
-                    sized_max_partition_bytes(sf_dir)
-                ),
-            },
-        )
+        spark = get_spark(app_name="scale_probe", extra_conf=sized_conf(sf_dir))
         spark.range(1000).selectExpr("sum(id)").collect()
         if "--pruning-only" not in sys.argv:
             print(json.dumps(run_probe(spark, specs, sf_dir)))
