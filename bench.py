@@ -76,6 +76,10 @@ EXTRAS = [
 ]
 
 
+# per-query detail of the last run, relative to the repo root (git-ignored)
+DETAIL_FILE = ".bench_out/BENCH_DETAIL.json"
+
+
 def contract_line(out: dict) -> str:
     """``out`` as one JSON line of at most 1900 chars (tail-capture guard).
     Optional keys are shed in order, error names last, so a red bench
@@ -274,19 +278,12 @@ def main() -> None:
     except Exception:
         pass
 
-    # Output layout (round 13, VERDICT r12 #1): the driver captures a
-    # 2000-char TAIL of this process's output and parses the contract JSON
-    # from it. By round 11 the one-line JSON had grown past 2.5 KB (extras,
-    # spreads, per-query DuckDB dicts), so the tail cut off the FRONT of
-    # the line — "queries" was unparseable and the round-over-round
-    # headline comparison was lost (PERF_r12 prev_bench_ok=false). Fix:
-    # the LAST line printed is a compact contract line (metric / value /
-    # queries / sf first, plus scalar echoes — comfortably under 1.5 KB);
-    # every detail dict moves to an earlier printed line AND to the
-    # committed side file docs/BENCH_DETAIL.json. Nothing is measured
-    # differently and no query entry is removed — the same numbers are
-    # recorded, only the line layout changed (declared in
-    # OPTIMIZATION_r13.md).
+    # Output layout: callers parse the contract JSON from a 2000-char TAIL
+    # of this process's output, so bench prints exactly one JSON line, the
+    # compact contract line (metric / value / queries / sf first, plus
+    # scalar echoes; ``contract_line`` keeps it under 1900 chars). Every
+    # detail dict goes to the git-ignored side file named in ``detail_file``
+    # (.bench_out/BENCH_DETAIL.json), so a run leaves the tree clean.
     detail: dict = {
         "query_spread_sec": spreads,
         "extra_queries": extras,
@@ -336,29 +333,17 @@ def main() -> None:
         # full messages live in the detail file; the contract line carries
         # the names so a red bench is visible even from the tail alone
         out["error_queries"] = sorted(errors)
-    out["detail_file"] = "docs/BENCH_DETAIL.json"
+    out["detail_file"] = DETAIL_FILE
     try:
         detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "docs",
-            "BENCH_DETAIL.json",
+            os.path.dirname(os.path.abspath(__file__)), DETAIL_FILE
         )
+        os.makedirs(os.path.dirname(detail_path), exist_ok=True)
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
-    except Exception:  # noqa: BLE001 — the side file must never fail the bench
+    except OSError:  # the side file must never fail the bench
         pass
-    print(json.dumps({"bench_detail": detail}))
     print(contract_line(out))
-    # round-close freshness: the driver records this bench every round, so
-    # regenerating docs/FRESHNESS.md here keeps the committed evidence-age
-    # table current with the newest CORRECTNESS_r*.json on disk (VERDICT
-    # r11 #4 — the r11 file aged a round because nothing rewrote it).
-    try:
-        from tests.sweep_registry import write_freshness
-
-        write_freshness()
-    except Exception:  # noqa: BLE001 — freshness must never fail the bench
-        pass
     spark.stop()
 
 

@@ -8,9 +8,12 @@ pruning push into the scan and writes stay distributed.
 
 from __future__ import annotations
 
+import json
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from final_project_big_data_spark.schemas import TABLE_NAMES, TABLE_SCHEMAS
 
@@ -72,12 +75,80 @@ def _session_alive(spark: SparkSession) -> bool:
 _SESSION_REFS: dict[int, "object"] = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan for one fixture table (lazy; pushdown-friendly).
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
 
-    Schema comes from the Parquet footer; ``TABLE_SCHEMAS[name]`` documents
-    the contract and is asserted in tests rather than forced on the reader
-    (forcing a schema would disable some Parquet filter pushdown paths).
+    Given no schema, Spark infers one with a ``parallelize(...).collect()``
+    job over one data file's footer, even for a single file: 0.1-0.2 s of
+    fixed job cost per open on a 4-core local master. Here the driver reads
+    that footer itself and converts it with Spark's own converter
+    (``ParquetFileFormat.readSchema``, the code the inference task runs,
+    honouring the session's ``nanosAsLong`` and NTZ confs), then passes the
+    result to ``spark.read.schema(...)``. A supplied schema is planned
+    exactly like an inferred one: partition columns are still discovered
+    from the directory layout and filters still push into the scan (pinned
+    by ``tests/test_parquet_open.py``).
+
+    Falls back to the plain read, so any error is Spark's own, when
+    ``mergeSchema`` is on (every footer counts), when the path holds no data
+    file, or when the driver-side read fails (a glob, a missing path, a
+    corrupt footer).
+    """
+    schema = None
+    if spark.conf.get("spark.sql.parquet.mergeSchema") != "true":
+        schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """Spark's schema for the first data file under ``path``, read on the
+    driver; None when there is no such file or the read fails."""
+    jvm, jspark = spark._jvm, spark._jsparkSession
+    try:
+        hconf = jspark.sessionState().newHadoopConf()
+        root = jvm.org.apache.hadoop.fs.Path(path)
+        fs = root.getFileSystem(hconf)
+        first = _first_data_file(fs, fs.getFileStatus(root))
+        if first is None:
+            return None
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        fmt = getattr(getattr(parquet, "ParquetFileFormat$"), "MODULE$")
+        footers = fmt.readParquetFootersInParallel(
+            hconf, jvm.PythonUtils.toSeq([first]), False
+        )
+        schema = fmt.readSchema(footers, jspark)
+    except Py4JJavaError:
+        return None
+    if schema.isEmpty():
+        return None
+    return StructType.fromJson(json.loads(schema.get().json()))
+
+
+def _first_data_file(fs, status):
+    """The first data file at or under ``status``, or None. Names starting
+    with ``_`` or ``.`` are hidden unless they hold ``=``, as partition
+    directories do (Spark's listing rule); that also skips the parquet
+    summary files, which Spark does not write by default."""
+    if not status.isDirectory():
+        return status
+    for child in fs.listStatus(status.getPath()):
+        name = child.getPath().getName()
+        if (name.startswith("_") and "=" not in name) or name.startswith("."):
+            continue
+        found = _first_data_file(fs, child)
+        if found is not None:
+            return found
+    return None
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Parquet scan for one fixture table (lazy; pushdown-friendly; no job).
+
+    Schema comes from the Parquet footer (``read_parquet``);
+    ``TABLE_SCHEMAS[name]`` documents the contract and is checked against
+    what was scanned rather than forced on the reader, so fixture drift
+    raises instead of being cast away.
 
     ``events.ts`` has shipped in two fixture generations: parquet
     TIMESTAMP(NANOS) (scanned as a raw nanos long under ``nanosAsLong``,
@@ -90,10 +161,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     _pin_session_confs(spark)
-    # Per-(app, dir, table) DataFrame cache: Spark fires a footer/schema
-    # -inference metadata job on EVERY spark.read.parquet call, so without
-    # this an engine session re-reads the same footers once per builder
-    # (154× per registry sweep). DataFrames are immutable — handing every
+    # Per-(app, dir, table) DataFrame cache: an open costs ~35 ms of footer
+    # read and DataFrame construction, paid once per builder call without
+    # it (154× per registry sweep). DataFrames are immutable — handing every
     # caller the same logical scan node is safe, and lets Catalyst see
     # identical subplans for reuse. Bounded: |tables| × |sf dirs| × |apps|.
     # keyed on session *object* identity as well as applicationId: sibling
@@ -111,7 +181,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # py4j/JVM objects for the process lifetime
     for k in [k for k in _TABLE_CACHE if k[0] != app_id]:
         del _TABLE_CACHE[k]
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -332,7 +402,7 @@ def compact_files(
             if not f.startswith((".", "_")):
                 total += os.path.getsize(os.path.join(root, f))
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(src)
+    df = read_parquet(spark, src)
     if sort_cols:
         out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
             *sort_cols

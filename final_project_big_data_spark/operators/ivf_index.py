@@ -27,6 +27,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from final_project_big_data_spark.io import read_parquet
+
 
 def _quantized_postings(assigned: DataFrame) -> DataFrame:
     """The s05 int8 scalar-quantization codec as a STORAGE layout:
@@ -113,15 +115,15 @@ def load_ivf_index(
     prune to the probed centroid_id partitions. Quantized postings
     (int8 ``q`` column) dequantize lazily at load — downstream plans
     are identical either way."""
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    assigned = spark.read.parquet(os.path.join(path, "postings"))
+    cents = read_parquet(spark, os.path.join(path, "centroids"))
+    assigned = read_parquet(spark, os.path.join(path, "postings"))
     if "q" in assigned.columns:
         from final_project_big_data_spark.operators.vector import dot_fold
 
         assigned = assigned.select(
             "vec_id", dequantize_expr().alias("v"), "centroid_id"
         ).withColumn("nv", F.sqrt(dot_fold(F.col("v"), F.col("v"))))
-    kdf = spark.read.parquet(os.path.join(path, "meta"))
+    kdf = read_parquet(spark, os.path.join(path, "meta"))
     return cents, assigned, kdf
 
 
@@ -165,15 +167,15 @@ def append_to_ivf_index(
     of many appends.
 
     Quantization is auto-detected from the existing postings schema
-    (footer read, no data scan), so appends can't silently mix float
+    (a driver-side footer read, no job), so appends can't silently mix float
     and int8 postings in one index.
     """
     from final_project_big_data_spark.operators.vector import dot_fold
     from final_project_big_data_spark.queries.similarity import _hof_assign
 
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
+    cents = read_parquet(spark, os.path.join(path, "centroids"))
     postings_path = os.path.join(path, "postings")
-    quantized = "q" in spark.read.parquet(postings_path).columns
+    quantized = "q" in read_parquet(spark, postings_path).columns
     en = new_vectors.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -257,7 +259,7 @@ def compact_ivf_postings(
         return False
     tmp = src + ".compacting"
     (
-        spark.read.parquet(src)
+        read_parquet(spark, src)
         .repartition(part_col)
         .write.mode("overwrite")
         .partitionBy(part_col)
@@ -306,5 +308,5 @@ def lsh_topk_with_index(
     fresh build (pinned by tests/test_indexing.py)."""
     from final_project_big_data_spark.queries.similarity import _lsh_probe
 
-    signed = spark.read.parquet(os.path.join(path, "tables"))
+    signed = read_parquet(spark, os.path.join(path, "tables"))
     return _lsh_probe(signed.filter(F.col("vec_id") < n_queries), signed)

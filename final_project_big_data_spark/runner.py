@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from final_project_big_data_spark.io import read_parquet
 from final_project_big_data_spark.ml import pipeline as ml
 from final_project_big_data_spark.schemas import CREDIT_CARD
 
@@ -50,12 +51,12 @@ def run_reference_pipeline(
     test_df.write.mode("overwrite").parquet(test_path)
 
     # train (train_model.py)
-    model = ml.train(spark.read.parquet(train_path))
+    model = ml.train(read_parquet(spark, train_path))
     ml.save_model(model, model_path)
     model = ml.load_model(model_path)
 
     # score, batch leg (predict.py's transform on the held-out split)
-    scored = ml.score(model, spark.read.parquet(test_path))
+    scored = ml.score(model, read_parquet(spark, test_path))
     acc = ml.accuracy(scored)
     envelope_cols = ml.prediction_envelope(scored).columns
 
@@ -73,7 +74,7 @@ def run_reference_pipeline(
         # replay leg (producer.py ∥ predict.py): test split as JSON files →
         # file stream with the declared schema → score → parquet sink,
         # exactly-once via checkpoint. availableNow drains in micro-batches.
-        spark.read.parquet(test_path).write.mode("overwrite").json(stream_in)
+        read_parquet(spark, test_path).write.mode("overwrite").json(stream_in)
         stream = (
             spark.readStream.schema(CREDIT_CARD)
             .option("maxFilesPerTrigger", 4)
@@ -89,6 +90,6 @@ def run_reference_pipeline(
             .start()
         )
         q.awaitTermination()
-        out["n_streamed"] = spark.read.parquet(stream_out).count()
+        out["n_streamed"] = read_parquet(spark, stream_out).count()
         out["stream_out"] = stream_out
     return out

@@ -10,6 +10,7 @@ config-only, no code change.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import tempfile
@@ -31,21 +32,28 @@ def ship_package(spark: SparkSession) -> None:
     module reference*; workers must therefore be able to import
     ``final_project_big_data_spark``. On a cluster that's
     ``spark-submit --py-files engine.zip``; here the engine zips itself once
-    per session and registers it via ``sc.addPyFile``.
+    per process and registers that zip via ``sc.addPyFile`` once per
+    SparkContext.
     """
     sc = spark.sparkContext
     if getattr(sc, "_fpbd_pkg_shipped", False):
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    repo_root = os.path.dirname(pkg_dir)
-    zip_base = os.path.join(
-        tempfile.gettempdir(), f"fpbd_pkg_{os.getpid()}"
-    )
-    zip_path = shutil.make_archive(
-        zip_base, "zip", root_dir=repo_root, base_dir="final_project_big_data_spark"
-    )
-    sc.addPyFile(zip_path)
+    if not os.path.exists(_package_zip()):  # removed by a temp-dir cleaner
+        _package_zip.cache_clear()
+    sc.addPyFile(_package_zip())
     sc._fpbd_pkg_shipped = True
+
+
+@functools.cache
+def _package_zip() -> str:
+    """Zip of this package in the temp dir, built once per process."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    return shutil.make_archive(
+        os.path.join(tempfile.gettempdir(), f"fpbd_pkg_{os.getpid()}"),
+        "zip",
+        root_dir=os.path.dirname(pkg_dir),
+        base_dir="final_project_big_data_spark",
+    )
 
 
 def is_local_master(master: str) -> bool:

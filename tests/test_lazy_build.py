@@ -65,11 +65,8 @@ EAGER_BY_CONTRACT = {
 def test_building_every_spec_triggers_zero_jobs(spark, sf_dir):
     sc = spark.sparkContext
     specs = all_specs()
-    # pre-warm the table cache: the one metadata (footer/schema-inference)
-    # job per table is a scan property, not a builder action
-    from final_project_big_data_spark.io import load_tables
-
-    load_tables(spark, sf_dir)
+    # no table-cache pre-warm: opening a table launches no job either
+    # (io.read_parquet), so each builder's group also covers its opens
     offenders: dict[str, list[int]] = {}
     for name, spec in specs.items():
         if name in EAGER_BY_CONTRACT:

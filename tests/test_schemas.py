@@ -55,3 +55,27 @@ def test_fixture_drift_tripwire_names_extra_column(spark, sf_dir):
     )
     with pytest.raises(RuntimeError, match=r"fixture drift.*unexpected.*surprise"):
         _check_fixture_schema_fresh("events", drifted)
+
+
+def test_fixture_drift_in_file_raises_on_load(spark, sf_dir, tmp_path):
+    """End to end through a file: an sf0.01 copy whose ``events.ts`` was
+    rewritten as double must fail ``load_table`` with the named error."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    src = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    shutil.copytree(
+        src, tmp_path, dirs_exist_ok=True, copy_function=shutil.copyfile
+    )
+    path = os.path.join(tmp_path, "events.parquet")
+    events = pq.read_table(path)
+    i = events.schema.get_field_index("ts")
+    as_double = pc.cast(pc.cast(events["ts"], pa.int64()), pa.float64())
+    pq.write_table(events.set_column(i, "ts", as_double), path)
+    drift = r"fixture drift in table 'events'.*'ts'.*scanned double"
+    with pytest.raises(RuntimeError, match=drift):
+        load_table(spark, str(tmp_path), "events")
