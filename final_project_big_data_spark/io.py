@@ -24,6 +24,30 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def path_bytes(path: str) -> int:
+    """On-disk data bytes of a file or directory dataset: recursive, so
+    partitioned layouts count their leaf files rather than directory
+    inodes, and names starting ``.``/``_`` (``.crc`` sidecars,
+    ``_SUCCESS``) are not data. Unstat-able paths (hdfs://, s3:// —
+    cluster volumes) return -1, which size gates read as "assume big"."""
+    try:
+        if os.path.isdir(path):
+            return sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _dirs, files in os.walk(path)
+                for f in files
+                if not f.startswith((".", "_"))
+            )
+        return os.path.getsize(path)
+    except OSError:
+        return -1
+
+
+def table_bytes(sf_dir: str, name: str) -> int:
+    """``path_bytes`` of one fixture table."""
+    return path_bytes(table_path(sf_dir, name))
+
+
 def _pin_session_confs(spark: SparkSession) -> None:
     """Pin runtime-settable confs required for deterministic oracle parity,
     even when the engine runs under a session it did not build (e.g. the
@@ -390,18 +414,12 @@ def compact_files(
     # runs — a dst that IS src (or nests either way) would destroy the
     # input mid-job, so refuse up front
     s, d = os.path.abspath(src), os.path.abspath(dst)
-    assert (
-        d != s
-        and not d.startswith(s + os.sep)
-        and not s.startswith(d + os.sep)
-    ), f"compact_files: dst must be disjoint from src (src={s}, dst={d})"
+    if d == s or d.startswith(s + os.sep) or s.startswith(d + os.sep):
+        raise ValueError(
+            f"compact_files: dst must be disjoint from src (src={s}, dst={d})"
+        )
 
-    total = 0
-    for root, _dirs, files in os.walk(src):
-        for f in files:
-            if not f.startswith((".", "_")):
-                total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, math.ceil(total / target_file_bytes))
+    n_files = max(1, math.ceil(path_bytes(src) / target_file_bytes))
     df = read_parquet(spark, src)
     if sort_cols:
         out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(

@@ -49,26 +49,6 @@ def dot_fold(x: Column, y: Column) -> Column:
     )
 
 
-def table_bytes(sf_dir: str, table: str) -> int:
-    """On-disk bytes of one fixture table (file or directory dataset;
-    recursive, so Hive-partitioned/nested layouts count their leaf files
-    rather than ~4 KB directory inodes). Unstat-able paths (hdfs://,
-    s3:// — i.e. cluster volumes) return -1, which size-switched kernels
-    read as "assume big". The size helper behind ``pair_kernel``."""
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(p)
-                for f in files
-                if not f.startswith((".", "_"))
-            )
-        return os.path.getsize(p)
-    except OSError:
-        return -1
-
-
 # row-chunk cap for the pairwise kernel: chunk_rows × block_rows ≤ this
 # many doubles (32 MiB of partial-sum buffer per task)
 _PAIR_CHUNK_ELEMS = 4_000_000
@@ -317,5 +297,7 @@ def pair_kernel(sf_dir: str, table: str = "embeddings") -> str:
     ``probe_corpus_topk_scan``, the IVF assign/refine) when ``table`` is
     unstat-able or at least ``_NP_PAIR_MIN_BYTES`` on disk, else "join"
     (the equi-join / interpreted ``dot_fold`` shapes)."""
+    from final_project_big_data_spark.io import table_bytes
+
     size = table_bytes(sf_dir, table)
     return "np" if (size < 0 or size >= _NP_PAIR_MIN_BYTES) else "join"

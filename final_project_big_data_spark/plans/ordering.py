@@ -67,17 +67,6 @@ def range_presorted(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartitionByRange(*keys).sortWithinPartitions(*keys)
 
 
-def _parse_spark_bytes(s: str) -> int:
-    """Parse Spark byte-size conf strings ('10485760b', '10MB', '-1')."""
-    s = s.strip().lower()
-    units = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
-             "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30}
-    for suffix, mult in sorted(units.items(), key=lambda kv: -len(kv[0])):
-        if s.endswith(suffix):
-            return int(s[: -len(suffix)]) * mult
-    return int(s)
-
-
 def range_presorted_for_join(
     df: DataFrame, build_side: DataFrame, *keys: str
 ) -> DataFrame:
@@ -97,10 +86,8 @@ def range_presorted_for_join(
     edge cases) → keep the presort, the small-data status quo.
     """
     try:
-        spark = df.sparkSession
-        thresh = _parse_spark_bytes(
-            str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-        )
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        thresh = conf.autoBroadcastJoinThreshold()
         # py4j converts the BigInt to a Python int on current Spark;
         # str() round-trip also covers versions where it stays a JavaObject
         est = int(

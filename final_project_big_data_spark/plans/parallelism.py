@@ -56,13 +56,9 @@ def _estimated_scan_tasks(df: DataFrame) -> int:
     files = df.inputFiles()
     if not files:
         return 0
-    max_pb = int(
-        str(
-            df.sparkSession.conf.get(
-                "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
-            )
-        ).rstrip("b")
-    )
+    # SQLConf's typed getter parses unit strings ("8m", "64MB") as Spark does
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    max_pb = conf.filesMaxPartitionBytes()
     total = 0
     for uri in files:
         p = urlparse(uri)

@@ -24,7 +24,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from final_project_big_data_spark.io import compact_files, load_table
+from final_project_big_data_spark.io import (
+    compact_files,
+    load_table,
+    path_bytes,
+)
 from final_project_big_data_spark.operators.zorder import zvalue, zvalue_sql
 from final_project_big_data_spark.queries import query
 
@@ -276,15 +280,9 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
         .parquet(src)
     )
     n_before = _files(src)
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _d, files in os.walk(src)
-        for f in files
-        if not f.startswith((".", "_"))
-    )
     # target ≈ quarter of the slice → a handful of right-sized files
     planned = compact_files(
-        spark, src, dst, target_file_bytes=max(1, -(-total // 4))
+        spark, src, dst, target_file_bytes=max(1, -(-path_bytes(src) // 4))
     )
     n_after = _files(dst)
     return spark.read.parquet(dst).agg(

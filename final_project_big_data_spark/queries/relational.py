@@ -341,8 +341,9 @@ _Q14_FLAT_MAX_BYTES = 64 * 1024**2
 def _q14_flat(sf: str) -> bool:
     """Flat (li⋈o)⋈c join order while orders' on-disk bytes are inside
     the everything-broadcasts regime; unstat-able paths read as big →
-    reorder. Measurements: OPTIMIZATION_r12.md §q14."""
-    from final_project_big_data_spark.operators.vector import table_bytes
+    reorder. Measurements: OPTIMIZATION_r12.md §q14, SCALE.md "q14 flat
+    shape"."""
+    from final_project_big_data_spark.io import table_bytes
 
     ob = table_bytes(sf, "orders")
     return 0 <= ob <= _Q14_FLAT_MAX_BYTES
@@ -350,16 +351,15 @@ def _q14_flat(sf: str) -> bool:
 
 def _q14_semi(spark: SparkSession, sf: str) -> bool:
     """Broadcast LEFT SEMI the fact against the (o⋈c) orderkey set before
-    its exchange: only on a non-local master (locally the byte saving
-    never repaid the second dim scan) and only while orders' on-disk
-    bytes keep the keyset broadcastable. Unstat-able orders skip it.
-    Measurements: OPTIMIZATION_r12.md §q14, SCALE.md round 13."""
-    from final_project_big_data_spark.operators.vector import table_bytes
-    from final_project_big_data_spark.plans.shuffle_medium import (
-        shuffle_medium,
-    )
+    its exchange: only on a non-local master, where the shuffle crosses
+    the network (locally the byte saving never repaid the second dim
+    scan), and only while orders' on-disk bytes keep the keyset
+    broadcastable. Unstat-able orders skip it. Measurements:
+    OPTIMIZATION_r12.md §q14, SCALE.md round 13."""
+    from final_project_big_data_spark.io import table_bytes
+    from final_project_big_data_spark.session import is_local_master
 
-    if shuffle_medium(spark) != "network":
+    if is_local_master(spark.sparkContext.master):
         return False
     ob = table_bytes(sf, "orders")
     return _Q14_SEMI_MIN_BYTES <= ob <= _Q14_SEMI_MAX_BYTES

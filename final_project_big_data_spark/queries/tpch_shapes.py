@@ -728,7 +728,7 @@ def q96(spark: SparkSession, sf: str) -> DataFrame:
     p = load_table(spark, sf, "part").filter(
         (F.col("p_type") == "LARGE") & (F.col("p_size") <= 10)
     )
-    from final_project_big_data_spark.operators.vector import table_bytes
+    from final_project_big_data_spark.io import table_bytes
 
     if 0 <= table_bytes(sf, "part") <= _Q96_SEMI_MAX_PART_BYTES:
         li = li.join(

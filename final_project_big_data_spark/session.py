@@ -17,6 +17,8 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from final_project_big_data_spark.io import path_bytes
+
 DEFAULT_APP_NAME = "final_project_big_data_spark"
 # AQE coalesce target on a local master, and the partition size the sized_*
 # rules divide the dominant input by.
@@ -150,24 +152,19 @@ def sized_adaptive_enabled(
 
 
 def _largest_table(sf_dir: str) -> tuple[int, str | None]:
-    """(bytes, path) of the largest ``*.parquet`` table (file or dir)."""
-    biggest, biggest_path = 0, None
+    """(bytes, path) of the largest ``*.parquet`` table (file or dir),
+    sized by ``io.path_bytes``."""
     try:
-        for name in os.listdir(sf_dir):
-            if name.endswith(".parquet"):
-                p = os.path.join(sf_dir, name)
-                size = (
-                    sum(
-                        os.path.getsize(os.path.join(p, f))
-                        for f in os.listdir(p)
-                    )
-                    if os.path.isdir(p)
-                    else os.path.getsize(p)
-                )
-                if size > biggest:
-                    biggest, biggest_path = size, p
+        names = os.listdir(sf_dir)
     except OSError:
         return 0, None
+    biggest, biggest_path = 0, None
+    for name in names:
+        if name.endswith(".parquet"):
+            p = os.path.join(sf_dir, name)
+            size = path_bytes(p)
+            if size > biggest:
+                biggest, biggest_path = size, p
     return biggest, biggest_path
 
 

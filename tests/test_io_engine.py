@@ -406,6 +406,24 @@ def test_compact_files_right_sizes_and_preserves_rows(spark, sf_dir, tmp_path):
         assert a_hi <= b_lo  # range-partitioned: files don't interleave
 
 
+@pytest.mark.parametrize("dst", ["same", "inside", "outside"])
+def test_compact_files_refuses_overlapping_dst(spark, tmp_path, dst):
+    """An overwrite into src itself, or into a path nesting either way,
+    would delete the input mid-read: refused with ValueError (not an
+    assert, which ``python -O`` strips) before anything is read."""
+    from final_project_big_data_spark.io import compact_files
+
+    src = tmp_path / "data" / "src"
+    src.mkdir(parents=True)
+    target = {
+        "same": src,
+        "inside": src / "out",
+        "outside": tmp_path / "data",
+    }[dst]
+    with pytest.raises(ValueError, match="disjoint"):
+        compact_files(spark, str(src), str(target))
+
+
 def test_engine_index_and_compact_facade(spark, sf_dir, tmp_path):
     """The round-9 facade methods delegate to the real operators: a
     built-then-queried index returns the fresh-build rows, and compact

@@ -166,6 +166,43 @@ def test_presort_for_join_is_cost_based(spark, sf_dir):
         spark.conf.set(key, old)
 
 
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("spark.sql.files.maxPartitionBytes", "8m"),
+        ("spark.sql.files.maxPartitionBytes", "64MB"),
+        ("spark.sql.autoBroadcastJoinThreshold", "10m"),
+        ("spark.sql.autoBroadcastJoinThreshold", "64MB"),
+    ],
+)
+def test_byte_confs_with_units(spark, sf_dir, key, value):
+    """Spark accepts unit strings for both byte confs the plan helpers
+    read; ``widen`` and the presort gate read them through SQLConf's typed
+    getters, so neither raises and the small build side still presorts."""
+    from final_project_big_data_spark.io import load_table
+    from final_project_big_data_spark.plans.ordering import (
+        range_presorted_for_join,
+    )
+    from final_project_big_data_spark.plans.parallelism import widen
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber"
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice"
+    )
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        assert widen(li).columns == li.columns
+        presorted = range_presorted_for_join(li, o, "l_orderkey")
+        assert "RepartitionByExpression" in (
+            presorted._jdf.queryExecution().logical().toString()
+        )
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_salted_join_equivalence_and_distribution(spark, sf_dir):
     """salted_join == plain join, and the physical shuffle key includes the
     salt column (the whole point: hot keys scatter across n_salts tasks)."""

@@ -1,42 +1,18 @@
 """Round-12 operator/infrastructure pins: q14's shape gates and the
-shuffle-medium sniff behind them (VERDICT r11 #1)."""
+master classifier behind them (VERDICT r11 #1)."""
 
 from __future__ import annotations
 
 import pytest
 
-from final_project_big_data_spark.plans.shuffle_medium import shuffle_medium
 from final_project_big_data_spark.queries import relational as R
+from final_project_big_data_spark.session import is_local_master
 
 
-def test_shuffle_medium_ram_on_engine_session(spark, monkeypatch):
-    """The engine's local session puts spark.local.dir on /dev/shm —
-    medium must read as ram when no SPARK_LOCAL_DIRS overrides it."""
-    monkeypatch.delenv("SPARK_LOCAL_DIRS", raising=False)
-    assert shuffle_medium(spark) == "ram"
-
-
-def test_shuffle_medium_disk_via_env(spark, monkeypatch):
-    """SPARK_LOCAL_DIRS overrides the conf (Spark's own precedence) —
-    pointing it at a real-disk path flips the medium."""
-    monkeypatch.setenv("SPARK_LOCAL_DIRS", "/root")
-    assert shuffle_medium(spark) == "disk"
-
-
-def test_shuffle_medium_local_cluster_is_network():
+def test_is_local_master():
     """``local-cluster[n,c,m]`` executors are separate JVMs — shuffle
-    crosses the netty transport, so the sniff must read network, and the
-    one master classifier must call it non-local. String-level stub: a
-    second master cannot share the suite's SparkContext (see
-    tests/test_local_cluster.py)."""
-    from types import SimpleNamespace
-
-    from final_project_big_data_spark.session import is_local_master
-
-    fake = SimpleNamespace(
-        sparkContext=SimpleNamespace(master="local-cluster[2,8,2048]")
-    )
-    assert shuffle_medium(fake) == "network"
+    crosses the netty transport, so the one master classifier must call
+    it non-local."""
     assert not is_local_master("local-cluster[2,8,2048]")
     assert not is_local_master("spark://host:7077")
     assert is_local_master("local[4]") and is_local_master("local")
@@ -49,18 +25,18 @@ def _plan(df) -> str:
 
 
 def test_q14_semi_bracket(spark, sf_dir, monkeypatch):
-    """The semi prefilter needs a NETWORK master (local media measured it
-    a loss) AND orders' on-disk bytes inside the broadcastable-keyset
-    bracket — unstat-able cluster paths must NOT gamble executor memory."""
+    """The semi prefilter needs a non-local (network) master — local
+    media measured it a loss — AND orders' on-disk bytes inside the
+    broadcastable-keyset bracket; unstat-able cluster paths must NOT
+    gamble executor memory."""
+    from final_project_big_data_spark import session
+
     assert not R._q14_semi(spark, sf_dir)  # local master: reorder measured faster
-    monkeypatch.setattr(
-        "final_project_big_data_spark.plans.shuffle_medium.shuffle_medium",
-        lambda s: "network",
-    )
-    assert not R._q14_semi(spark, sf_dir)  # 2.6 MB orders: below bracket floor
+    monkeypatch.setattr(session, "is_local_master", lambda master: False)
+    assert not R._q14_semi(spark, sf_dir)  # KB orders: below bracket floor
     assert not R._q14_semi(spark, "hdfs://nowhere/sf100")  # unknown: no gamble
     monkeypatch.setattr(
-        "final_project_big_data_spark.operators.vector.table_bytes",
+        "final_project_big_data_spark.io.table_bytes",
         lambda sf, table: R._Q14_SEMI_MIN_BYTES,
     )
     assert R._q14_semi(spark, sf_dir)  # inside the bracket
@@ -93,7 +69,7 @@ def test_q14_reorder_and_semi_plan(spark, sf_dir, monkeypatch):
 
     # fixture volume: orders ≪ _Q14_FLAT_MAX_BYTES → flat (li⋈o)⋈c
     plan = _plan(build(spark, sf_dir))
-    assert "LeftSemi" not in plan  # below the bracket: no redundant pass
+    assert "LeftSemi" not in plan  # local master: no prefilter
     i_fact, i_dim = _join_lines(plan)
     assert i_dim < i_fact, "flat shape: customer join above the fact join"
 
@@ -109,7 +85,7 @@ def test_q14_reorder_and_semi_plan(spark, sf_dir, monkeypatch):
 @pytest.mark.parametrize("shape", ["reorder", "semi"])
 def test_q14_forced_shape_matches_oracle(spark, sf_dir, duck, monkeypatch, shape):
     """Every q14 shape the gates can pick must hash-match the DuckDB
-    oracle, not only the one this session's sniff picks (flat, checked
+    oracle, not only the one this session's gates pick (flat, checked
     by the registry sweep)."""
     from final_project_big_data_spark.queries import all_specs
     from tests.oracle import compare
@@ -146,6 +122,33 @@ def test_q06_forced_presort_matches_oracle(spark, sf_dir, monkeypatch, presort):
     df = spec.builder(spark, sf)
     logical = df._jdf.queryExecution().logical().toString()
     assert ("RepartitionByExpression" in logical) == (presort == "on")
+    con = duckdb_connect(sf)
+    try:
+        rep = compare(df, con, spec.oracle)
+    finally:
+        con.close()
+    assert rep["ok"], rep
+
+
+@pytest.mark.parametrize("prefilter", ["on", "off"])
+def test_q96_forced_prefilter_matches_oracle(spark, sf_dir, monkeypatch, prefilter):
+    """Both branches of q96's part-bytes gate must hash-match the DuckDB
+    oracle at sf0.01: the fact semi-prefiltered on the filtered part keys,
+    or (part unstat-able or over the cap) joined unfiltered."""
+    import os
+
+    from final_project_big_data_spark.queries import all_specs
+    from tests.oracle import compare, duckdb_connect
+
+    monkeypatch.setattr(
+        "final_project_big_data_spark.io.table_bytes",
+        lambda sf, table: 0 if prefilter == "on" else -1,
+    )
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    spec = all_specs()["q96_tpch_q2_min_cost"]
+    df = spec.builder(spark, sf)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert ("LeftSemi" in optimized) == (prefilter == "on")
     con = duckdb_connect(sf)
     try:
         rep = compare(df, con, spec.oracle)

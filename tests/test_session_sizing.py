@@ -40,11 +40,17 @@ def test_largest_table_bytes_picks_dominant(tmp_path):
 
 
 def test_largest_table_bytes_sums_directory_tables(tmp_path):
+    # the same bytes the plan gates see (io.path_bytes): data files only,
+    # nested partition directories counted by their leaf files
     d = tmp_path / "parts.parquet"
     d.mkdir()
     (d / "part-0").write_bytes(b"\0" * 3000)
     (d / "part-1").write_bytes(b"\0" * 4000)
-    assert _largest_table_bytes(str(tmp_path)) == 7000
+    (d / ".part-0.crc").write_bytes(b"\0" * 500)
+    (d / "_SUCCESS").write_bytes(b"\0" * 600)
+    (d / "k=v").mkdir()
+    (d / "k=v" / "part-2").write_bytes(b"\0" * 2000)
+    assert _largest_table_bytes(str(tmp_path)) == 9000
 
 
 def test_largest_table_bytes_missing_dir_is_zero():

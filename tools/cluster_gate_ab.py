@@ -2,18 +2,19 @@
 """Network-gated branch validation on a REAL multi-JVM master (round 13,
 VERDICT r12 #3).
 
-The q14 semi branch fires only when ``shuffle_medium`` reads "network".
-``local-cluster[n,c,m]`` launches real separate executor JVMs whose
-shuffle crosses the netty transport (loopback wire + serialization +
-codec), which ``shuffle_medium`` classifies as network; combined with
-``SPARK_LOCAL_DIRS`` on a real disk this is the closest one host gets to
-the cluster regime the gate was written for.
+The q14 semi branch fires only on a non-local master
+(``session.is_local_master``). ``local-cluster[n,c,m]`` launches real
+separate executor JVMs whose shuffle crosses the netty transport
+(loopback wire + serialization + codec), so it counts as non-local;
+combined with ``SPARK_LOCAL_DIRS`` on a real disk this is the closest
+one host gets to the cluster regime the gate was written for. q96's
+semi gate reads part's on-disk bytes only, not the master.
 
 One (query, mode) per process (round-6 lesson). Prints ONE JSON line:
-wall samples, whether the semi marker appears in the plan, the sniffed
-medium, total shuffle bytes written during the final (warmed) run, and a
-full oracle value-diff of the result under the SAME local-cluster
-session (driver-mimic harness).
+wall samples, whether the semi marker appears in the plan, whether the
+master counts as local, total shuffle bytes written during the final
+(warmed) run, and a full oracle value-diff of the result under the SAME
+local-cluster session (driver-mimic harness).
 
 Usage::
 
@@ -66,9 +67,9 @@ def main() -> None:
     os.makedirs(shuffle_dir, exist_ok=True)
 
     from final_project_big_data_spark.queries import all_specs, relational
-    from final_project_big_data_spark.plans.shuffle_medium import shuffle_medium
     from final_project_big_data_spark.session import (
         get_spark,
+        is_local_master,
         ship_package,
         sized_conf,
     )
@@ -136,7 +137,7 @@ def main() -> None:
                 "query": query,
                 "mode": mode,
                 "master": master,
-                "medium": shuffle_medium(spark),
+                "local_master": is_local_master(master),
                 "min": min(samples),
                 "samples": samples,
                 "semi_in_plan": "LeftSemi" in plan,
