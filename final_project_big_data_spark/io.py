@@ -24,21 +24,33 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _hidden(name: str) -> bool:
+    """Spark's listing rule: names starting ``_`` or ``.`` are not data
+    (``_SUCCESS``, ``_temporary``, ``.crc`` sidecars) unless they hold
+    ``=``, as partition directories do."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".")
+
+
+def data_files(path: str) -> list[str]:
+    """Sorted data files of a file or directory dataset, found the way
+    Spark's file index finds them: recursively, skipping ``_hidden``
+    names at every level. A path that is not a local directory is its
+    own only file."""
+    if not os.path.isdir(path):
+        return [path]
+    found = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        found.extend(os.path.join(root, f) for f in files if not _hidden(f))
+    return sorted(found)
+
+
 def path_bytes(path: str) -> int:
-    """On-disk data bytes of a file or directory dataset: recursive, so
-    partitioned layouts count their leaf files rather than directory
-    inodes, and names starting ``.``/``_`` (``.crc`` sidecars,
-    ``_SUCCESS``) are not data. Unstat-able paths (hdfs://, s3:// —
-    cluster volumes) return -1, which size gates read as "assume big"."""
+    """On-disk bytes of a dataset's ``data_files``. Unstat-able paths
+    (hdfs://, s3:// — cluster volumes) return -1, which size gates read
+    as "assume big"."""
     try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(path)
-                for f in files
-                if not f.startswith((".", "_"))
-            )
-        return os.path.getsize(path)
+        return sum(os.path.getsize(f) for f in data_files(path))
     except OSError:
         return -1
 
@@ -48,55 +60,25 @@ def table_bytes(sf_dir: str, name: str) -> int:
     return path_bytes(table_path(sf_dir, name))
 
 
-def _pin_session_confs(spark: SparkSession) -> None:
-    """Pin runtime-settable confs required for deterministic oracle parity,
-    even when the engine runs under a session it did not build (e.g. the
-    verification driver's): UTC rendering, and nanos-as-long so Spark 4 can
-    scan the ns-precision ``events.ts`` parquet column at all.
+def _session_tables(spark: SparkSession) -> dict[tuple[str, str], DataFrame]:
+    """The session's own table cache, ``(abs sf_dir, name) -> DataFrame``.
 
-    Once per session: each ``conf.set`` is a py4j round trip, and
-    ``load_table`` sits on every builder's path (hundreds of calls per
-    registry sweep) — re-pinning already-pinned confs is pure overhead.
+    It lives on the session object, so a sibling ``newSession()`` or a
+    restarted session starts empty, and a stopped session's frames go
+    with it. Creating it also readies a session the engine did not build
+    (the verification driver's): it pins UTC rendering and
+    ``nanosAsLong``, without which Spark 4 cannot scan the ns-precision
+    ``events.ts`` column, and ships the package to Python workers.
     """
-    if _session_alive(spark) and id(spark) in _CONFS_PINNED:
-        return
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # ship the engine package to Python workers (foreign-session safe)
-    from final_project_big_data_spark.session import ship_package
+    tables = getattr(spark, "_fpbd_tables", None)
+    if tables is None:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        from final_project_big_data_spark.session import ship_package
 
-    ship_package(spark)
-    _CONFS_PINNED.add(id(spark))
-
-
-_CONFS_PINNED: set[int] = set()
-
-
-def _session_alive(spark: SparkSession) -> bool:
-    """True iff per-session cached state for ``id(spark)`` belongs to THIS
-    object. CPython reuses ids after GC, and sibling sessions share an
-    applicationId, so (appId, id) alone could hand session B state pinned
-    by a dead session A. A weakref to the registrant makes the check
-    airtight: id reuse requires the old object to be dead, and then the
-    weakref no longer resolves to ``spark``. On mismatch, all state keyed
-    to the stale id is purged and the new session registered.
-    """
-    import weakref
-
-    ref = _SESSION_REFS.get(id(spark))
-    if ref is not None and ref() is spark:
-        return True
-    _CONFS_PINNED.discard(id(spark))
-    for k in [k for k in _TABLE_CACHE if k[1] == id(spark)]:
-        del _TABLE_CACHE[k]
-    try:
-        _SESSION_REFS[id(spark)] = weakref.ref(spark)
-    except TypeError:  # non-weakref-able session stand-in (mocks)
-        _SESSION_REFS.pop(id(spark), None)
-    return False
-
-
-_SESSION_REFS: dict[int, "object"] = {}
+        ship_package(spark)
+        tables = spark._fpbd_tables = {}
+    return tables
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -150,15 +132,14 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
 
 
 def _first_data_file(fs, status):
-    """The first data file at or under ``status``, or None. Names starting
-    with ``_`` or ``.`` are hidden unless they hold ``=``, as partition
-    directories do (Spark's listing rule); that also skips the parquet
-    summary files, which Spark does not write by default."""
+    """The first data file at or under ``status`` (a Hadoop FileStatus),
+    or None, skipping ``_hidden`` names as ``data_files`` does; that also
+    skips the parquet summary files, which Spark does not write by
+    default."""
     if not status.isDirectory():
         return status
     for child in fs.listStatus(status.getPath()):
-        name = child.getPath().getName()
-        if (name.startswith("_") and "=" not in name) or name.startswith("."):
+        if _hidden(child.getPath().getName()):
             continue
         found = _first_data_file(fs, child)
         if found is not None:
@@ -184,27 +165,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    _pin_session_confs(spark)
-    # Per-(app, dir, table) DataFrame cache: an open costs ~35 ms of footer
-    # read and DataFrame construction, paid once per builder call without
-    # it (154× per registry sweep). DataFrames are immutable — handing every
-    # caller the same logical scan node is safe, and lets Catalyst see
-    # identical subplans for reuse. Bounded: |tables| × |sf dirs| × |apps|.
-    # keyed on session *object* identity as well as applicationId: sibling
-    # sessions from spark.newSession() share one appId, but a DataFrame is
-    # bound to the session that created it (temp views, conf lookups), so
-    # handing session A's cached scan to sibling B would silently target A
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, id(spark), os.path.abspath(sf_dir), name)
-    cached = _TABLE_CACHE.get(key)
+    # An open costs a footer read and a DataFrame build; DataFrames are
+    # immutable, so every builder on this session shares one scan node.
+    tables = _session_tables(spark)
+    key = (os.path.abspath(sf_dir), name)
+    cached = tables.get(key)
     if cached is not None:
         return cached
-    # single-generation cache: entries keyed to OTHER applicationIds belong
-    # to stopped sessions (a restarted session gets a fresh appId) — evict
-    # them so a driver that restarts its session per round can't pin dead
-    # py4j/JVM objects for the process lifetime
-    for k in [k for k in _TABLE_CACHE if k[0] != app_id]:
-        del _TABLE_CACHE[k]
     df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
@@ -217,28 +184,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # contract every downstream query was written against.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _check_fixture_schema(name, df)
-    _TABLE_CACHE[key] = df
+    tables[key] = df
     return df
-
-
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _check_fixture_schema(name: str, df: DataFrame) -> None:
     """Fixture-drift tripwire: one loud, named error instead of N cryptic
-    downstream AnalysisExceptions when the driver regenerates testdata with
-    a changed column type (this exact failure cost round 2 its bench run —
-    ``events.ts`` moved ns-int64 → µs-timestamp under us).
-
-    Compares the scanned dtypes column-by-column against the documented
-    contract in ``TABLE_SCHEMAS``. Cheap (metadata only, no job) and cached
-    per (table, schema) so the check runs once per distinct shape.
+    downstream AnalysisExceptions when regenerated testdata changes a
+    column type. Compares the scanned dtypes column-by-column against the
+    documented contract in ``TABLE_SCHEMAS``: metadata only, no job, and
+    run once per table per session (``load_table`` caches the frame).
     """
     expected = {f.name: f.dataType.simpleString() for f in TABLE_SCHEMAS[name].fields}
     actual = dict(df.dtypes)
-    key = (name, tuple(sorted(actual.items())))
-    if key in _SCHEMA_OK:
-        return
     missing = [c for c in expected if c not in actual]
     extra = [c for c in actual if c not in expected]
     drifted = {
@@ -260,10 +218,6 @@ def _check_fixture_schema(name: str, df: DataFrame) -> None:
             "final_project_big_data_spark/schemas.py (and any dtype-dependent "
             "load branch in io.load_table) for the new fixture generation."
         )
-    _SCHEMA_OK.add(key)
-
-
-_SCHEMA_OK: set = set()
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -27,7 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from final_project_big_data_spark.io import read_parquet
+from final_project_big_data_spark.io import data_files, read_parquet
 
 
 def _quantized_postings(assigned: DataFrame) -> DataFrame:
@@ -253,8 +253,7 @@ def compact_ivf_postings(
         full = os.path.join(src, d)
         if "=" in d and os.path.isdir(full):
             part_col = d.split("=", 1)[0]
-            n = sum(1 for f in os.listdir(full) if f.endswith(".parquet"))
-            worst = max(worst, n)
+            worst = max(worst, len(data_files(full)))
     if part_col is None or worst <= max_files_per_list:
         return False
     tmp = src + ".compacting"

@@ -33,8 +33,6 @@ and (locally) fastest.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -186,22 +184,13 @@ def probe_corpus_topk_scan(
     block; on a real cluster the task-side reads assume shared storage —
     the same assumption the scan itself makes.
     """
-    import glob as _glob
-
     import pyarrow.parquet as _pq
 
-    if os.path.isdir(corpus_path):
-        files = sorted(
-            f
-            for f in _glob.glob(os.path.join(corpus_path, "*"))
-            if os.path.basename(f).startswith("part")
-            and not f.endswith((".crc", "_SUCCESS"))
-        )
-    else:
-        files = [corpus_path]
+    from final_project_big_data_spark.io import data_files
+
     descs = [
         (f, rg)
-        for f in files
+        for f in data_files(corpus_path)
         for rg in range(_pq.ParquetFile(f).metadata.num_row_groups)
     ]
 

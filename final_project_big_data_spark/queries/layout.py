@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import (
     compact_files,
+    data_files,
     load_table,
     path_bytes,
 )
@@ -253,13 +254,6 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
     ``io.compact_files`` itself.
     """
 
-    def _files(p: str) -> int:
-        return sum(
-            1
-            for f in os.listdir(p)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-
     # deterministic per-corpus path (NOT mkdtemp): both writes below are
     # mode("overwrite"), so repeated invocations reuse one directory
     # instead of accumulating litter
@@ -279,12 +273,12 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(src)
     )
-    n_before = _files(src)
+    n_before = len(data_files(src))
     # target ≈ quarter of the slice → a handful of right-sized files
     planned = compact_files(
         spark, src, dst, target_file_bytes=max(1, -(-path_bytes(src) // 4))
     )
-    n_after = _files(dst)
+    n_after = len(data_files(dst))
     return spark.read.parquet(dst).agg(
         F.count(F.lit(1)).alias("row_cnt"),
         F.sum("o_orderkey").alias("key_sum"),

@@ -17,12 +17,19 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-from final_project_big_data_spark.io import path_bytes
+from final_project_big_data_spark.io import data_files, path_bytes
 
 DEFAULT_APP_NAME = "final_project_big_data_spark"
-# AQE coalesce target on a local master, and the partition size the sized_*
-# rules divide the dominant input by.
-ADVISORY_BYTES = 1 << 20
+# The sized_* rules' constants. ADVISORY_BYTES is also the AQE coalesce
+# target on a local master.
+ADVISORY_BYTES = 1 << 20  # shuffle bytes per partition
+TASKS_PER_CORE = 4  # shuffle-partition ceiling, in task waves
+SHUFFLE_FLOOR = 8  # fewest shuffle partitions
+SPLIT_FLOOR = 4 * 1024 * 1024  # smallest scan split
+SPLIT_CEILING = 128 * 1024 * 1024  # largest scan split (Spark's default)
+HEAP_FLOOR_GB = 8
+HEAP_CEILING_GB = 64
+HEAP_PER_INPUT_BYTE = 3  # driver heap per byte of the largest table
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -78,77 +85,45 @@ def _local_cores() -> int:
             return os.cpu_count() or 32
 
 
-def sized_shuffle_partitions(
-    sf_dir: str,
-    advisory_bytes: int = ADVISORY_BYTES,
-    floor: int = 8,
-    tasks_per_core: int = 4,
-    cores: int | None = None,
-) -> int:
-    """Initial shuffle-partition count sized to the DOMINANT INPUT, with a
-    tasks-per-core ceiling.
+def sized_shuffle_partitions(sf_dir: str, cores: int | None = None) -> int:
+    """Initial shuffle-partition count: largest-table bytes /
+    ``ADVISORY_BYTES``, clamped to [``SHUFFLE_FLOOR``,
+    cores × ``TASKS_PER_CORE``].
 
-    AQE can only merge partitions, never split beyond the initial number —
-    and even merged-away tasks were still planned. At small data volumes a
-    cores-sized count (32 here) schedules dozens of near-empty sort/agg
-    tasks per exchange and pays a wide range-exchange sampling fan-in;
-    measured at sf0.1 that's ~30% of the whole headline bench. So:
-    partitions ≈ largest-table bytes / advisory partition size, floored so
-    every exchange still exercises multi-partition paths.
-
-    The ceiling is ``cores × tasks_per_core``, NOT a large constant: on a
-    single host, parallelism is capped by cores, and every partition past
-    ~4 waves is pure scheduling overhead. The round-4 rule (cap 4096) was
-    overfit to the volumes it was tuned at — at the 100× probe
-    (1.8 GiB fact) it planned 1841 one-MiB sort tasks and q06's
-    sort-heavy plan took 21.9 s; any capped count in the 32–256 range
-    lands it at 7–11 s (run-to-run noisy but the pathology is gone;
-    q22 4.1 → ~2.0 s; measured round 5, SCALE.md). A cluster submitter
-    applies the same rule with the cluster's total core count by passing
-    ``cores=`` explicitly (same contract as ``sized_max_partition_bytes``)
-    — ``_local_cores()`` only sees the driver host, so omitting it on a
-    cluster would silently undersize the ceiling to driver-cores×4.
-    Partitions still grow with executors, just never past the
-    useful-wave bound.
+    AQE can only merge partitions, never split beyond the initial number,
+    and even merged-away tasks were planned: a cores-sized count spends
+    ~30% of the sf0.1 headline scheduling near-empty tasks. The ceiling is
+    task waves, not a large constant: past ~4 waves every partition is
+    scheduling overhead (the 100× probe planned 1841 one-MiB sort tasks
+    under a 4096 cap; SCALE.md "Round-5 posture changes"). ``cores`` is
+    the total executor core count; a cluster submitter must pass it, the
+    default sees only this host.
     """
     biggest = _largest_table_bytes(sf_dir)
     if biggest == 0:
         return 32
     if cores is None:
         cores = _local_cores()
-    ceiling = max(floor, cores * tasks_per_core)
-    return max(floor, min(ceiling, biggest // advisory_bytes))
+    ceiling = max(SHUFFLE_FLOOR, cores * TASKS_PER_CORE)
+    return max(SHUFFLE_FLOOR, min(ceiling, biggest // ADVISORY_BYTES))
 
 
-def sized_adaptive_enabled(
-    sf_dir: str,
-    cores: int | None = None,
-    tasks_per_core: int = 4,
-    advisory_bytes: int = ADVISORY_BYTES,
-) -> bool:
-    """Data-sized AQE gate: adaptive execution ON iff the dominant input is
-    big enough that runtime re-planning can still change anything.
+def sized_adaptive_enabled(sf_dir: str, cores: int | None = None) -> bool:
+    """AQE on iff the largest table reaches cores × ``TASKS_PER_CORE`` ×
+    ``ADVISORY_BYTES``, where ``sized_shuffle_partitions`` hits its
+    ceiling.
 
-    AQE executes each exchange as a BLOCKING query stage — one scheduler
-    job per materialized shuffle. That is the right trade at scale (it
-    buys runtime coalescing, skew-join splitting, and shuffle→broadcast
-    upgrades), but below the volume where ``sized_shuffle_partitions``
-    hits its cores×tasks_per_core ceiling, the static sizing has already
-    planned every shuffle as ≤``tasks_per_core`` right-sized waves — AQE
-    has nothing left to decide and each barrier is a pure paid job.
-    Measured round 6 (profile_bench.py, sf0.1): the 11 headline queries
-    run 4–7 jobs each with AQE on vs 1–4 off, −0.29 s total (3.446 →
-    3.151) on identical results.
-
-    The threshold is exactly the ceiling condition: largest-table bytes ≥
-    cores × tasks_per_core × ``ADVISORY_BYTES`` (64 MiB at 16 cores).
-    The 10×/100×/1000× probes (184 MiB–14 GiB facts) stay ON — skew
-    handling at those volumes is load-bearing (q72). A cluster submitter passes its total core count like the other
-    sized_* rules and lands ON for any real multi-executor volume.
+    AQE runs each exchange as a blocking query stage, one scheduler job
+    per shuffle. Below the ceiling the static sizing has already planned
+    every shuffle as right-sized waves, so each barrier is a paid job with
+    nothing left to decide: the 11 headline queries ran 4-7 jobs each with
+    AQE on against 1-4 off, -0.29 s in total at sf0.1 (SCALE.md "Round-6
+    posture changes"). The 10× and larger probes stay on, where skew
+    handling is load-bearing.
     """
     if cores is None:
         cores = _local_cores()
-    return _largest_table_bytes(sf_dir) >= cores * tasks_per_core * advisory_bytes
+    return _largest_table_bytes(sf_dir) >= cores * TASKS_PER_CORE * ADVISORY_BYTES
 
 
 def _largest_table(sf_dir: str) -> tuple[int, str | None]:
@@ -174,24 +149,14 @@ def _largest_table_bytes(sf_dir: str) -> int:
 
 
 def _row_group_count(path: str, cap: int) -> int:
-    """Number of parquet row groups in a table (file or dir of files),
-    counted from footers only; stops early at ``cap`` because callers only
-    ever compare against the core count. Unreadable → ``cap`` (assume
-    fully splittable, the pre-round-7 behavior)."""
+    """Parquet row groups over a table's ``io.data_files``, from footers
+    only; stops at ``cap``, since callers only compare it with the core
+    count. Unreadable → ``cap`` (assume fully splittable)."""
     try:
         import pyarrow.parquet as pq
 
-        files = (
-            sorted(
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if not f.startswith((".", "_"))
-            )
-            if os.path.isdir(path)
-            else [path]
-        )
         total = 0
-        for f in files:
+        for f in data_files(path):
             total += pq.ParquetFile(f).num_row_groups
             if total >= cap:
                 return cap
@@ -200,89 +165,51 @@ def _row_group_count(path: str, cap: int) -> int:
         return cap
 
 
-def sized_max_partition_bytes(
-    sf_dir: str,
-    cores: int | None = None,
-    floor: int = 4 * 1024 * 1024,
-    ceiling: int = 128 * 1024 * 1024,
-) -> int:
-    """Scan-split size (``spark.sql.files.maxPartitionBytes``) targeting
-    data-per-core, same rule as the shuffle-partition sizing above.
+def sized_max_partition_bytes(sf_dir: str, cores: int | None = None) -> int:
+    """Scan-split size (``spark.sql.files.maxPartitionBytes``): the
+    largest table's bytes over ``min(cores, row groups)`` units, clamped
+    to [``SPLIT_FLOOR``, ``SPLIT_CEILING``].
 
-    The 128 MiB default assumes cluster-scale inputs: locally it plans ONE
-    scan task for an 18 MiB sf0.1 table and TWO for a 184 MiB 10x probe
-    file, serializing parquet decode + the fused filter/project/partial-agg
-    stage on a 32-core host (measured: -12% headline total at 10x volume,
-    s01 -41%, after sizing splits to data/cores). Parquet is range-
-    splittable, so smaller advisory splits cost only footer re-reads.
-    Floored at 4 MiB and capped at the cluster default, which stays right
-    once per-file bytes >> cores x 128 MiB. The floor is a measured
-    break-even, not taste: a scan task does ~3 ms of decode work per MiB
-    here while costing ~1-2 ms to launch, so 1 MiB splits spend more
-    scheduler than scanner (round-6 sweep at sf0.1: 1 MiB → 4 MiB cut the
-    five sort/agg-heavy headline queries 1.73 → 1.50 s, q01 -25%; ≥8 MiB
-    is flat). Only sub-128 MiB inputs ever see the floor — probe volumes
-    (10x and up) size to data/cores above it.
+    The 128 MiB default plans one scan task for an 18 MiB sf0.1 table,
+    serializing decode and the fused stage above it (SCALE.md "Round-4
+    posture changes"). The 4 MiB floor is a break-even: a scan task
+    decodes ~3 ms/MiB and costs ~1-2 ms to launch (SCALE.md "Round-6
+    posture changes").
 
-    Row-group awareness (round 7): byte-range splits are only REAL below
-    the row-group count — parquet assigns every row group to the single
-    split containing its midpoint, so a one-row-group file "split" 3 ways
-    yields one loaded task and two empty ones. Worse than wasted
-    scheduling: empty splits break ``RangePartitioner``'s imbalance
-    check. Its resample guard fires when one input partition is expected
-    to contribute > ceil(3·sampleSize/numSplits) samples; with all rows
-    in 1 of k splits that is sampleSize > 3·sampleSize/k — GUARANTEED
-    for k ≥ 4 and an exact FP-boundary coin-flip at k = 3 (measured: the
-    sf0.1 session's parts=10 loses the flip on every 600k/150k-row
-    table, paying a serial ~0.1 s 1-task resample job per range
-    exchange; q06 0.57 → 0.45 s, q01/q33 −0.1 s each once removed).
-    The rule therefore sizes splits to ``min(cores, row_groups)`` units:
-    a one-row-group table gets ONE split (its real parallelism), a
-    many-row-group probe/cluster table keeps the data-per-core sizing.
-    Needs ``spark.sql.files.minPartitionNum=1``, which ``get_spark`` sets
-    on a local master exactly when ``extra_conf`` carries this value
-    (``sized_conf`` does) — otherwise ``defaultParallelism`` re-derives
-    small splits through ``bytesPerCore`` no matter what this returns.
+    Splits are counted in row groups because parquet gives each row group
+    to the one split holding its midpoint: a one-row-group file split k
+    ways yields one loaded task and k-1 empty ones, and the empty ones
+    trip ``RangePartitioner``'s resample guard (always for k ≥ 4), a
+    serial 1-task job per range exchange. So a one-row-group table gets
+    one split. That needs ``spark.sql.files.minPartitionNum=1``, which
+    ``local_conf`` sets whenever ``extra_conf`` carries this value.
     """
     if cores is None:
-        # sized to the ACTUAL host, not a hardcoded literal (ADVICE r4)
         cores = _local_cores()
     biggest, path = _largest_table(sf_dir)
     if biggest == 0 or path is None:
-        return ceiling
+        return SPLIT_CEILING
     units = max(1, min(max(cores, 1), _row_group_count(path, max(cores, 1))))
     if units == 1:
         # one real row group: one split. +1 MiB so footer/padding bytes
         # never tip a second (empty) split; still capped at the ceiling.
-        return min(ceiling, biggest + (1 << 20))
-    return max(floor, min(ceiling, biggest // units))
+        return min(SPLIT_CEILING, biggest + (1 << 20))
+    return max(SPLIT_FLOOR, min(SPLIT_CEILING, biggest // units))
 
 
-def sized_driver_memory(
-    sf_dir: str,
-    floor_gb: int = 8,
-    ceiling_gb: int = 64,
-    bytes_per_input_byte: int = 3,
-) -> str:
-    """Local-mode JVM heap (``spark.driver.memory``) sized to the dominant
-    input — the third sized_* rule, completing the round-6 "size the
-    session to its data volume" posture (partitions and scan splits were
-    sized in commit 32fd0c3; the heap was left at 8g and the 1000× sweep
-    OOMed on exactly the shapes 8g can't hold: a 600M-row sort-merge
-    semi-join's per-task sort buffers × 32 threads).
+def sized_driver_memory(sf_dir: str) -> str:
+    """Local-mode JVM heap (``spark.driver.memory``):
+    ``HEAP_PER_INPUT_BYTE`` × largest-table bytes, clamped to
+    [``HEAP_FLOOR_GB``, ``HEAP_CEILING_GB``] GiB.
 
-    In local mode the driver JVM IS every executor, so the cluster rule of
-    thumb (executor memory ≈ a few × its data share) collapses to
-    heap ≈ ``bytes_per_input_byte`` × largest-table bytes, clamped to
-    [floor, ceiling]. 3× covers decompressed columns + shuffle/sort
-    buffers for the fact-vs-fact worst case while leaving the rest of RAM
-    to the OS page cache and tmpfs spill. Only callers that OWN the JVM
-    launch (sweeps, probes, bench) apply it — ``get_spark`` keeps the 8g
-    default because ``spark.driver.memory`` is inert after the JVM exists
-    (the verification driver's session is not ours to size).
+    In local mode the driver JVM is every executor, so 3× covers
+    decompressed columns plus shuffle and sort buffers for a fact-vs-fact
+    join; a fixed 8 GiB heap OOMed the 1000× sweep (SCALE.md "Round-6
+    posture changes", item 6). Only callers that launch the JVM (sweeps,
+    probes, bench) apply it: the setting is inert once the JVM exists.
     """
-    gb = (_largest_table_bytes(sf_dir) * bytes_per_input_byte) >> 30
-    return f"{min(ceiling_gb, max(floor_gb, gb))}g"
+    gb = (_largest_table_bytes(sf_dir) * HEAP_PER_INPUT_BYTE) >> 30
+    return f"{min(HEAP_CEILING_GB, max(HEAP_FLOOR_GB, gb))}g"
 
 
 SIZED_SPLITS = "spark.sql.files.maxPartitionBytes"

@@ -209,9 +209,9 @@ def test_json_quarantine_splits_bad_records(spark, sf_dir, tmp_path):
 
 
 def test_table_cache_survives_session_restart(sf_dir):
-    """The per-(app, dir, table) DataFrame cache must never hand a frame
-    from a STOPPED SparkContext to a new session — restarted sessions get
-    fresh applicationIds, so the key cannot collide. Pinned because the
+    """The table cache lives on the session object, so a session started
+    after another stopped begins with an empty cache and never receives a
+    frame bound to the stopped SparkContext. Pinned because the
     verification driver owns its own session lifecycle. Runs in a
     subprocess: the scenario must create and STOP real sessions, which
     would tear down the suite's shared session fixture if run in-process
@@ -221,24 +221,25 @@ def test_table_cache_survives_session_restart(sf_dir):
     import sys
 
     script = f"""
-import sys; sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
+import os, sys; sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
 from pyspark.sql import SparkSession
-from final_project_big_data_spark.io import _TABLE_CACHE, load_table
+from final_project_big_data_spark.io import load_table
 SF = {sf_dir!r}
 s1 = SparkSession.builder.master("local[2]").appName("cache-r1").getOrCreate()
 s1.sparkContext.setLogLevel("ERROR")
-app1 = s1.sparkContext.applicationId
 df1 = load_table(s1, SF, "region")
 assert df1.count() > 0
 s1.stop()
 s2 = SparkSession.builder.master("local[2]").appName("cache-r2").getOrCreate()
 s2.sparkContext.setLogLevel("ERROR")
-app2 = s2.sparkContext.applicationId
-assert app1 != app2, (app1, app2)
+assert s2 is not s1
+assert getattr(s2, "_fpbd_tables", None) is None
 df2 = load_table(s2, SF, "region")
 assert df2 is not df1
+assert df2.sparkSession is s2
 assert df2.count() > 0
-assert any(k[0] == app2 for k in _TABLE_CACHE)
+assert s2._fpbd_tables == {{(os.path.abspath(SF), "region"): df2}}
+assert load_table(s2, SF, "region") is df2
 s2.stop()
 print("RESTART_OK")
 """
@@ -246,6 +247,21 @@ print("RESTART_OK")
         [sys.executable, "-c", script], capture_output=True, text=True, timeout=300
     )
     assert "RESTART_OK" in out.stdout, out.stderr[-2000:]
+
+
+def test_table_cache_is_per_session(spark, sf_dir):
+    """A sibling ``newSession()`` shares the SparkContext but not the
+    table cache: a DataFrame is bound to the session that created it, and
+    the sibling's first ``load_table`` pins its own confs."""
+    sib = spark.newSession()
+    sib.conf.set("spark.sql.session.timeZone", "America/New_York")
+    df = eio.load_table(spark, sf_dir, "region")
+    df_sib = eio.load_table(sib, sf_dir, "region")
+    assert df_sib is not df
+    assert df.sparkSession is spark
+    assert df_sib.sparkSession is sib
+    assert eio.load_table(sib, sf_dir, "region") is df_sib
+    assert sib.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
 def test_zorder_layout_skips_both_dims(spark, sf_dir):

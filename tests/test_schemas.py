@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from final_project_big_data_spark.io import load_table
+from final_project_big_data_spark.io import _check_fixture_schema, load_table
 from final_project_big_data_spark.schemas import TABLE_NAMES, TABLE_SCHEMAS
 
 
@@ -23,8 +23,6 @@ def test_fixture_drift_tripwire_names_column(spark, sf_dir):
     """Simulated fixture drift must raise one loud error naming the drifted
     column — not N cryptic downstream AnalysisExceptions (the round-2
     failure mode when events.ts moved ns-int64 → µs-timestamp)."""
-    from final_project_big_data_spark.io import _check_fixture_schema
-
     from pyspark.sql import functions as F
 
     drifted = load_table(spark, sf_dir, "events").withColumn(
@@ -37,14 +35,7 @@ def test_fixture_drift_tripwire_names_column(spark, sf_dir):
 def test_fixture_drift_tripwire_names_missing_column(spark, sf_dir):
     drifted = load_table(spark, sf_dir, "events").drop("props")
     with pytest.raises(RuntimeError, match=r"fixture drift.*missing.*props"):
-        _check_fixture_schema_fresh("events", drifted)
-
-
-def _check_fixture_schema_fresh(name, df):
-    from final_project_big_data_spark import io
-
-    io._SCHEMA_OK.clear()
-    io._check_fixture_schema(name, df)
+        _check_fixture_schema("events", drifted)
 
 
 def test_fixture_drift_tripwire_names_extra_column(spark, sf_dir):
@@ -54,7 +45,7 @@ def test_fixture_drift_tripwire_names_extra_column(spark, sf_dir):
         "surprise", F.lit(1)
     )
     with pytest.raises(RuntimeError, match=r"fixture drift.*unexpected.*surprise"):
-        _check_fixture_schema_fresh("events", drifted)
+        _check_fixture_schema("events", drifted)
 
 
 def test_fixture_drift_in_file_raises_on_load(spark, sf_dir, tmp_path):

@@ -27,9 +27,9 @@ from final_project_big_data_spark.session import (
 
 
 def _mkparquet(d, name, nbytes):
-    p = os.path.join(d, f"{name}.parquet")
-    with open(p, "wb") as f:
-        f.write(b"\0" * nbytes)
+    # path_bytes reads st_size, so a sparse file sizes a table for free
+    with open(os.path.join(d, f"{name}.parquet"), "wb") as f:
+        f.truncate(nbytes)
 
 
 def test_largest_table_bytes_picks_dominant(tmp_path):
@@ -50,6 +50,9 @@ def test_largest_table_bytes_sums_directory_tables(tmp_path):
     (d / "_SUCCESS").write_bytes(b"\0" * 600)
     (d / "k=v").mkdir()
     (d / "k=v" / "part-2").write_bytes(b"\0" * 2000)
+    # an in-flight write's staging directory, which Spark's listing skips
+    (d / "_temporary").mkdir()
+    (d / "_temporary" / "part-9").write_bytes(b"\0" * 700)
     assert _largest_table_bytes(str(tmp_path)) == 9000
 
 
@@ -60,28 +63,16 @@ def test_largest_table_bytes_missing_dir_is_zero():
 def test_shuffle_partitions_scales_with_data(tmp_path):
     _mkparquet(tmp_path, "t", 20 * 1024 * 1024)
     # cores pinned: the ceiling (cores × 4) must sit above 20 on any host
-    got = sized_shuffle_partitions(
-        str(tmp_path), advisory_bytes=1024 * 1024, cores=8
-    )
-    assert got == 20
+    assert sized_shuffle_partitions(str(tmp_path), cores=8) == 20
     # floor clamp
-    assert (
-        sized_shuffle_partitions(str(tmp_path), advisory_bytes=1 << 40, cores=8)
-        == 8
-    )
+    _mkparquet(tmp_path, "t", 2 * 1024 * 1024)
+    assert sized_shuffle_partitions(str(tmp_path), cores=8) == 8
     # ceiling is tasks-per-core waves, not a large constant: the round-4
     # 4096 cap planned 1841 one-MiB sort tasks at the 100x probe (q06
     # 21.9 s of mostly scheduling; see session.py docstring)
-    assert (
-        sized_shuffle_partitions(str(tmp_path), advisory_bytes=1)
-        == _local_cores() * 4
-    )
-    assert (
-        sized_shuffle_partitions(
-            str(tmp_path), advisory_bytes=1, tasks_per_core=2
-        )
-        == _local_cores() * 2
-    )
+    _mkparquet(tmp_path, "t", 64 << 30)
+    assert sized_shuffle_partitions(str(tmp_path)) == _local_cores() * 4
+    assert sized_shuffle_partitions(str(tmp_path), cores=8) == 32
 
 
 def test_max_partition_bytes_targets_data_per_core(tmp_path):

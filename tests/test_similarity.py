@@ -227,6 +227,30 @@ def test_s01_probe_kernels_bit_parity(spark, sf_dir, monkeypatch):
         )
 
 
+def test_s01_scan_kernel_reads_any_data_file_name(spark, sf_dir, tmp_path, monkeypatch):
+    """The NumPy scan kernel enumerates row groups over ``io.data_files``,
+    so a corpus whose files are not named ``part*`` (pyarrow's
+    ``write_to_dataset`` writes ``<uuid>-0.parquet``) is scored in full,
+    not silently skipped."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    src = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    shutil.copytree(src, tmp_path, dirs_exist_ok=True, copy_function=shutil.copyfile)
+    emb = os.path.join(tmp_path, "embeddings.parquet")
+    table = pq.read_table(emb)
+    os.remove(emb)
+    pq.write_to_dataset(table, emb)
+    assert not any(f.startswith("part") for f in os.listdir(emb))
+    _force_kernel(monkeypatch, "np")
+    s01 = all_specs()["s01_cosine_topk"].builder
+    want = s01(spark, src).collect()
+    assert want
+    assert s01(spark, str(tmp_path)).collect() == want
+
+
 def test_pair_kernel_sized_to_input(sf_dir):
     """Kernel choice is metadata-only (lazy-safe): tiny fixtures take the
     join shape, at-scale (or unstat-able cluster) paths take NumPy."""

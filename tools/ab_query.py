@@ -10,42 +10,29 @@ it serially, one process per (config, repetition).
 Usage::
 
     python tools/ab_query.py QUERY [--aqe=on|off] [--mpb=BYTES]
-        [--parts=N] [--runs=N] [--sf=DIR] [--no-presort]
+        [--parts=N] [--runs=N] [--sf=DIR] [--no-presort] [--stages]
 
 Defaults mirror bench.py's shipping session exactly (``session.sized_conf``),
 so `python tools/ab_query.py q06_join_inner` reproduces the BENCH number
 for that query; each flag overrides exactly one knob for attribution.
 ``--no-presort`` patches the cost-based range presort
 (plans.ordering.range_presorted_for_join) to never presort, isolating
-the query-shape lever from the session levers.
+the query-shape lever from the session levers. ``--stages`` writes the
+session's event log and prints a second JSON line: the final (warmed)
+run's jobs, stages, tasks, operator seconds and shuffle/spill bytes
+(``perfbench/spark_log``), then its task-time table.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _rest_stages(spark):
-    """All stages from the live UI REST API (spark.ui.enabled=true)."""
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.load(r)
-
-
-def _max_stage_id(spark) -> int:
-    try:
-        return max((s["stageId"] for s in _rest_stages(spark)), default=-1)
-    except Exception:  # noqa: BLE001 — UI off or not ready
-        return -1
 
 
 def main() -> None:
@@ -77,12 +64,13 @@ def main() -> None:
     parts = int(conf["spark.sql.shuffle.partitions"])
 
     stages = "--stages" in args
+    log_dir = tempfile.mkdtemp(prefix="ab_query_log_") if stages else None
+
+    from perfbench import spark_log
 
     spark = get_spark(
         app_name="ab_query",
-        # the REST stage table is how --stages reads per-stage wall time
-        # and shuffle bytes; off otherwise (bench parity)
-        extra_conf=conf | {"spark.ui.enabled": str(stages).lower()},
+        extra_conf=conf | (spark_log.event_log_conf(log_dir) if stages else {}),
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -94,19 +82,14 @@ def main() -> None:
 
     spec = all_specs()[name]
     samples = []
-    stage_floor = 0
-    sc = spark.sparkContext
-    for i in range(runs):
-        if stages and i == runs - 1:
-            # stage-id watermark: the dump below covers EXACTLY the
-            # final (warmed) run
-            stage_floor = _max_stage_id(spark) + 1
+    last_start = 0.0
+    for _ in range(runs):
+        last_start = time.time()
         df = spec.builder(spark, sf_dir)
         t0 = time.perf_counter()
         df.write.mode("overwrite").format("noop").save()
         samples.append(round(time.perf_counter() - t0, 3))
-    tracker = sc.statusTracker()
-    n_jobs = len(tracker.getJobIdsForGroup(None) or [])
+    spark.stop()
     print(
         json.dumps(
             {
@@ -118,35 +101,26 @@ def main() -> None:
                 "runs": runs,
                 "min": min(samples),
                 "samples": samples,
-                "jobs_total": n_jobs,
             }
         )
     )
     if stages:
-        for s in sorted(_rest_stages(spark), key=lambda s: s["stageId"]):
-            if s["stageId"] < stage_floor:
-                continue
-            dur = (s.get("executorRunTime") or 0) / 1000.0
-            print(
-                json.dumps(
-                    {
-                        "stage": s["stageId"],
-                        "name": s.get("name", "")[:70],
-                        "tasks": s.get("numCompleteTasks"),
-                        "exec_run_s": round(dur, 3),
-                        "input_mb": round(
-                            (s.get("inputBytes") or 0) / 1048576, 2
-                        ),
-                        "sh_write_mb": round(
-                            (s.get("shuffleWriteBytes") or 0) / 1048576, 2
-                        ),
-                        "sh_read_mb": round(
-                            (s.get("shuffleReadBytes") or 0) / 1048576, 2
-                        ),
-                    }
-                )
+        # the log is complete once the session stops; keep the executions
+        # of the final (warmed) run only
+        execs = [
+            ex for ex in spark_log.read_event_log(log_dir) if ex["start"] >= last_start
+        ]
+        shutil.rmtree(log_dir, ignore_errors=True)
+        layers = spark_log.spark_layers(execs, per=1)
+        rounded = {k: round(v, 4) for k, v in layers.items()}
+        print(json.dumps({"query": name, "executions": len(execs)} | rounded))
+        print(
+            spark_log.format_table(
+                f"{name}: task time of the final run",
+                spark_log.task_time_table(layers),
+                layers["spark.task_s"],
             )
-    spark.stop()
+        )
 
 
 if __name__ == "__main__":

@@ -30,22 +30,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _MODES = ("auto", "reorder", "semi")
-
-
-def _stages(spark):
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.load(r)
 
 
 def main() -> None:
@@ -74,14 +66,17 @@ def main() -> None:
         sized_conf,
     )
 
+    from perfbench import spark_log
+
     # total executor cores, parsed from the master spec, drive the sized_*
     # rules exactly as a cluster submitter would pass them
     n_exec, cores_per = (int(x) for x in master.split("[")[1].split(",")[:2])
+    log_dir = tempfile.mkdtemp(prefix="cluster_gate_log_")
     spark = get_spark(
         app_name=f"cluster_gate_{query}_{mode}",
         master=master,
         extra_conf=sized_conf(sf_dir, cores=n_exec * cores_per)
-        | {"spark.ui.enabled": "true"},  # REST stage table = shuffle bytes
+        | spark_log.event_log_conf(log_dir),  # shuffle bytes per execution
     )
     spark.sparkContext.setLogLevel("ERROR")
     ship_package(spark)
@@ -96,31 +91,15 @@ def main() -> None:
     )
 
     samples = []
-    floor = -1
+    last_start = 0.0
     for i in range(runs + 1):  # pass 0 = untimed codegen warmup
-        if i == runs:
-            try:
-                floor = max((s["stageId"] for s in _stages(spark)), default=-1)
-            except Exception:  # noqa: BLE001
-                floor = -1
+        last_start = time.time()
         df = spec.builder(spark, sf_dir)
         t0 = time.perf_counter()
         df.write.mode("overwrite").format("noop").save()
         if i:
             samples.append(round(time.perf_counter() - t0, 3))
-    shuffle_mb = None
-    try:
-        shuffle_mb = round(
-            sum(
-                s.get("shuffleWriteBytes", 0)
-                for s in _stages(spark)
-                if s["stageId"] > floor
-            )
-            / 1024**2,
-            1,
-        )
-    except Exception:  # noqa: BLE001 — UI hiccup must not kill the cell
-        pass
+    last_end = time.time()
 
     # oracle parity under the SAME gated session (the whole point: the
     # branch that actually fired on this master computes the same rows)
@@ -131,6 +110,23 @@ def main() -> None:
         spec.builder(spark, sf_dir), duckdb_connect(sf_dir), spec.oracle
     )
 
+    plan_out = os.environ.get("SPARK_GRAFT_PLAN_OUT")
+    if plan_out:
+        with open(plan_out, "w") as f:
+            f.write(plan)
+    spark.stop()
+    # the log is complete once the session stops; the final run's window
+    # excludes the oracle comparison's executions
+    shuffle_mb = round(
+        sum(
+            ex["shuffle_bytes"]
+            for ex in spark_log.read_event_log(log_dir)
+            if last_start <= ex["start"] <= last_end
+        )
+        / 1024**2,
+        1,
+    )
+    shutil.rmtree(log_dir, ignore_errors=True)
     print(
         json.dumps(
             {
@@ -147,11 +143,6 @@ def main() -> None:
             }
         )
     )
-    plan_out = os.environ.get("SPARK_GRAFT_PLAN_OUT")
-    if plan_out:
-        with open(plan_out, "w") as f:
-            f.write(plan)
-    spark.stop()
 
 
 if __name__ == "__main__":
