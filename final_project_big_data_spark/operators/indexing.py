@@ -12,13 +12,14 @@ This operator composes the scalable two-pass idiom from built-in ops:
 1. range-repartition + local sort on the order key (the same exchange a
    global ``orderBy`` performs — partition *p* holds keys strictly below
    partition *p+1*);
-2. a tiny side job counts rows per physical partition (groupBy on
-   ``spark_partition_id()`` — #partitions rows, not data rows), folded
-   into exclusive prefix-sum offsets with a higher-order ``aggregate``
-   over one collected array (no unpartitioned window anywhere — even a
-   #partitions-row WindowExec logs the single-partition warning);
+2. a tiny side job sums the value per physical partition (groupBy on
+   ``spark_partition_id()`` — #partitions rows, not data rows; the value
+   is 1 for the row index), folded into exclusive prefix-sum offsets
+   with a higher-order ``aggregate`` over one collected array (no
+   unpartitioned window anywhere — even a #partitions-row WindowExec
+   logs the single-partition warning);
 3. a broadcast join maps each partition to its offset, and a window
-   partitioned BY PARTITION ID adds the local rank.
+   partitioned BY PARTITION ID adds the local running sum.
 
 No single-task stage ever sees more than one partition of data; the only
 full-data movements are the range exchange (pass 1) and the hash exchange
@@ -95,93 +96,57 @@ def with_global_index(
     index_col: str = "row_index",
 ) -> DataFrame:
     """Append a dense 0-based ``index_col`` numbering rows by ``order_cols``
-    (names or sort expressions like ``F.desc(...)``).
+    (names or sort expressions like ``F.desc(...)``): the exclusive
+    :func:`with_prefix_sum` of a constant 1.
 
     ``order_cols`` must be a total order (include a unique tiebreak) for the
     index to be deterministic.
-
-    The ``tagged`` frame is persisted (MEMORY_AND_DISK) before the
-    offsets branch: the plan references it from TWO subtrees (the
-    pid-count aggregate and the main join side) whose range exchanges
-    are planned independently — and a RangePartitioner SAMPLES its
-    boundaries with an RDD-id-derived seed, so the two subtrees can
-    land DIFFERENT boundaries once the sample is partial. At fixture
-    scale the sample covers every row and the hazard is invisible
-    (every test green for ten rounds); at the round-11 1000× replay
-    build (100M rows) the branches disagreed and the pid-keyed offsets
-    inner join silently dropped 65% of the rows. Persisting pins one
-    materialization of the partitioning for every consumer; the cache
-    is dropped by the ContextCleaner when the frame is GC'd (the
-    engine's 2–5 min periodic-GC keeps that bounded). Known residual:
-    an executor loss on a real cluster recomputes lost blocks with
-    fresh boundaries — checkpoint() the input instead where that
-    matters more than the extra write.
     """
-    from pyspark import StorageLevel
-
-    ranged = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    tagged = ranged.withColumn(_PID, F.spark_partition_id()).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _register_pin(tagged)
-
-    counts = tagged.groupBy(_PID).agg(F.count(F.lit(1)).alias("_n"))
-    # #partitions integers → one row → exclusive prefix sum via a
-    # higher-order aggregate (pid-sorted), exploded back to (pid, offset).
-    packed = counts.groupBy().agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col(_PID).alias("pid"), F.col("_n").alias("n")))
-        ).alias("cs")
-    )
-    prefix = F.expr(
-        "aggregate(cs,"
-        " struct(cast(0 as bigint) as acc,"
-        "        cast(array() as array<struct<pid:int, off:bigint>>) as out),"
-        " (st, x) -> struct(st.acc + x.n as acc,"
-        "                   concat(st.out, array(struct(x.pid as pid,"
-        "                                               st.acc as off))) as out),"
-        " st -> st.out)"
-    )
-    offsets = packed.select(F.explode(prefix).alias("po")).select(
-        F.col("po.pid").alias(_PID), F.col("po.off").alias(_OFFSET)
-    )
-    w_local = W.partitionBy(_PID).orderBy(*order_cols)
-    return (
-        tagged.join(F.broadcast(offsets), _PID)
-        .withColumn(
-            index_col,
-            (F.col(_OFFSET) + F.row_number().over(w_local) - 1).cast("long"),
-        )
-        .drop(_PID, _OFFSET)
-    )
+    return with_prefix_sum(df, order_cols, F.lit(1), index_col)
 
 
 def with_prefix_sum(
     df: DataFrame,
     order_cols: list[str | Column],
-    value_col: str,
+    value_col: str | Column,
     sum_col: str = "prefix_sum",
 ) -> DataFrame:
-    """Append the EXCLUSIVE prefix sum of integer ``value_col`` over a
-    global ordering — ``sum(value) over (order by ... rows unbounded
-    preceding to 1 preceding)`` semantics WITHOUT the unpartitioned window
-    (which collapses the table into one WindowExec task).
+    """Append the EXCLUSIVE prefix sum of integer ``value_col`` (a column
+    name or expression) over a global ordering — ``sum(value) over
+    (order by ... rows unbounded preceding to 1 preceding)`` semantics
+    WITHOUT the unpartitioned window (which collapses the table into one
+    WindowExec task).
 
-    Same two-pass shape as :func:`with_global_index`, summing values
-    instead of counting rows: range-exchange on the order key, a
-    #partitions-row side aggregate folded into per-partition exclusive
-    offsets, broadcast back, plus a partition-local running sum. Drives
-    t11's sequence packing (token offsets over a corpus); any
-    "cut a concatenated stream every L units" operator reduces to this.
+    Two passes: range-exchange on the order key, a #partitions-row side
+    aggregate folded into per-partition exclusive offsets, broadcast
+    back, plus a partition-local running sum. Drives t11's sequence
+    packing (token offsets over a corpus) and, over a constant 1,
+    :func:`with_global_index`; any "cut a concatenated stream every L
+    units" operator reduces to this.
 
     ``order_cols`` must be a total order (unique tiebreak) for
     determinism; ``value_col`` must be integral (offsets are exact longs).
 
-    Persisted for the same two-subtree range-boundary hazard documented
-    in :func:`with_global_index`.
+    The ``tagged`` frame is persisted (MEMORY_AND_DISK) before the
+    offsets branch: the plan references it from TWO subtrees (the
+    pid-sum aggregate and the main join side) whose range exchanges
+    are planned independently — and a RangePartitioner SAMPLES its
+    boundaries with an RDD-id-derived seed, so the two subtrees can
+    land DIFFERENT boundaries once the sample is partial. At fixture
+    scale the sample covers every row and the hazard is invisible; at
+    the 1000× replay build (100M rows) the branches disagreed and the
+    pid-keyed offsets inner join silently dropped 65% of the rows.
+    Persisting pins one materialization of the partitioning for every
+    consumer; the cache is dropped by the ContextCleaner when the frame
+    is GC'd (the engine's 2–5 min periodic-GC keeps that bounded), or on
+    leaving an :func:`index_pin_scope`. Known residual: an executor loss
+    on a real cluster recomputes lost blocks with fresh boundaries —
+    checkpoint() the input instead where that matters more than the
+    extra write.
     """
     from pyspark import StorageLevel
 
+    val = (F.col(value_col) if isinstance(value_col, str) else value_col).cast("long")
     ranged = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
     tagged = ranged.withColumn(_PID, F.spark_partition_id()).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -191,9 +156,9 @@ def with_prefix_sum(
     # coalesce the per-partition sum: SUM over an all-NULL partition is
     # NULL, and the fold's `st.acc + x.n` would poison every later
     # partition's offset — the window spelling this replaces skips NULLs
-    counts = tagged.groupBy(_PID).agg(
-        F.coalesce(F.sum(F.col(value_col).cast("long")), F.lit(0)).alias("_n")
-    )
+    counts = tagged.groupBy(_PID).agg(F.coalesce(F.sum(val), F.lit(0)).alias("_n"))
+    # #partitions integers → one row → exclusive prefix sum via a
+    # higher-order aggregate (pid-sorted), exploded back to (pid, offset)
     packed = counts.groupBy().agg(
         F.sort_array(
             F.collect_list(F.struct(F.col(_PID).alias("pid"), F.col("_n").alias("n")))
@@ -216,7 +181,7 @@ def with_prefix_sum(
         .orderBy(*order_cols)
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    local = F.coalesce(F.sum(F.col(value_col).cast("long")).over(w_local), F.lit(0))
+    local = F.coalesce(F.sum(val).over(w_local), F.lit(0))
     return (
         tagged.join(F.broadcast(offsets), _PID)
         .withColumn(sum_col, (F.col(_OFFSET) + local).cast("long"))

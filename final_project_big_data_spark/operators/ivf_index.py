@@ -154,10 +154,11 @@ def append_to_ivf_index(
     This is the FAISS train-once/add-forever serving shape: at 100 TB a
     nightly crawl delta is a few billion vectors — re-running Lloyd over
     the whole corpus for every delta is a full-corpus job, while this
-    append touches only the delta (map-only assign against the ≤k-row
-    broadcast centroid table, one shuffle to co-locate each inverted
-    list's additions, and a partitioned append that writes exactly one
-    new file per touched list). Identity contract (pinned by s09's
+    append touches only the delta (``vector.assign_centroids`` against
+    the ≤k-row centroid table, its kernel sized by ``pair_kernel`` on
+    the postings as at the index build, one shuffle to co-locate each
+    inverted list's additions, and a partitioned append that writes
+    exactly one new file per touched list). Identity contract (pinned by s09's
     cross-engine oracle and tests/test_round10_ops.py):
     ``append(A, B)`` produces row-identical postings to indexing A∪B in
     one shot against the SAME A-trained quantizer. Centroid drift — the
@@ -170,17 +171,18 @@ def append_to_ivf_index(
     (a driver-side footer read, no job), so appends can't silently mix float
     and int8 postings in one index.
     """
-    from final_project_big_data_spark.operators.vector import dot_fold
-    from final_project_big_data_spark.queries.similarity import _hof_assign
+    from final_project_big_data_spark.operators.vector import (
+        assign_centroids,
+        normed,
+        pair_kernel,
+    )
 
     cents = read_parquet(spark, os.path.join(path, "centroids"))
     postings_path = os.path.join(path, "postings")
     quantized = "q" in read_parquet(spark, postings_path).columns
-    en = new_vectors.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nv", F.sqrt(dot_fold(F.col("v"), F.col("v"))))
-    assigned = _hof_assign(en, cents)
+    assigned = assign_centroids(
+        normed(new_vectors, "vec_id"), cents, pair_kernel(postings_path)
+    )
     batch = (
         _quantized_postings(assigned)
         if quantized

@@ -1,34 +1,33 @@
-"""Embedding dot product — shared, measured, deliberately the HOF fold.
+"""Embedding vector kernels: the one home of each operator's two halves.
 
-``dot_fold`` is the engine's one dot-product implementation (s01/s02/s03
-similarity, d06/d10 embedding dedup):
+``dot_fold`` is the engine's one dot-product expression:
 
     aggregate(zip_with(x, y, (p, q) -> p*q), 0.0, (acc, z) -> acc + z)
 
 It adds strictly left-to-right from a 0.0 seed, which is the exact
 accumulation order of DuckDB's ``list_dot_product`` — the bit-equality
-the value-hash oracles rest on.
+the value-hash oracles rest on. (An unrolled 64-term expression was
+~3× slower: it falls out of codegen into a 260-node interpreted tree.)
 
-Two "faster" alternatives were built and benchmarked (round 4, sf0.1
-s01 brute-force scoring, min-of-5 noop-sink wall-clock) and REJECTED:
+Every vector operator has two kernels, picked by ``pair_kernel``:
 
-- **Unrolled expression** ``0.0 + x[0]*y[0] + ... + x[63]*y[63]``
-  (with either a pre-cast array or per-element casts): 0.91 s vs the
-  fold's 0.33 s — ~3× SLOWER. The 64-term ``GetArrayItem`` chain blows
-  past codegen's expression budget and falls back to interpreted eval
-  of a ~260-node tree per pair, which loses to the HOF evaluator's
-  tight per-element loop.
-- **Arrow-batched NumPy matmul** (``mapInArrow``, probes broadcast,
-  one BLAS GEMM per corpus batch): 0.335 s — a wash at local bench
-  scale, because Arrow serialization of the corpus vectors costs what
-  BLAS saves; it also needs an executor-side probe side-input, which
-  breaks the all-builders-are-lazy contract (tests/test_lazy_build.py).
+- **join**: a Spark join (broadcast or equi-join) scored with the
+  interpreted ``dot_fold`` — no Python-worker or Arrow fixed cost;
+- **np**: an Arrow-batched NumPy kernel that accumulates dim by dim
+  (``S += A[:, i:i+1] * B[None, :, i]``), the same per-pair
+  left-to-right order as ``dot_fold``, so both kernels return the same
+  doubles by construction (pinned by the ``*_bit_parity`` tests).
 
-At 100 TB the calculus changes — a corpus-scan ANN over billions of
-vectors wants the GEMM — but that is s02/s03's bucketed-candidate
-territory anyway; the brute-force s01 exists as the exact,
-oracle-anchored baseline, and for its role the fold is both correct
-and (locally) fastest.
+The kernels cross over at a measured volume (SCALE.md "IVF argmax-assign
+vectorization" and "Pair-stage vectorization": IVF assign 0.9 vs 1.6 s
+at sf0.1, 22.2 vs 2.0 s at the 100× probe), so both stay and one rule
+chooses. The operators:
+
+- ``block_pairs``: within-block pairwise cosine (s04, d06, d10);
+- ``assign_centroids``: per-vector argmax centroid (IVF train, build,
+  append);
+- ``probe_pairs`` / ``probe_corpus_topk_scan``: few probes against the
+  whole corpus (s01; s05 scores dequantized vectors, join half only).
 """
 
 from __future__ import annotations
@@ -47,60 +46,91 @@ def dot_fold(x: Column, y: Column) -> Column:
     )
 
 
-# row-chunk cap for the pairwise kernel: chunk_rows × block_rows ≤ this
+def normed(df: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` plus the ``embedding`` column as (``v`` array<double>,
+    ``nv`` its norm) — the input shape of every kernel here."""
+    return df.select(
+        *cols, F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    ).withColumn("nv", F.sqrt(dot_fold(F.col("v"), F.col("v"))))
+
+
+# measured crossover: the NumPy kernels' fixed Python-worker/Arrow stage
+# loses at tiny volume and wins from ~the 10× probe volume up
+_NP_PAIR_MIN_BYTES = 4 * 1024 * 1024
+
+
+def pair_kernel(path: str) -> str:
+    """Pick the vector kernel for the dataset at ``path`` from its
+    on-disk bytes (metadata only, lazy-safe): "np" when it is unstat-able
+    (a cluster volume) or at least ``_NP_PAIR_MIN_BYTES``, else "join"."""
+    from final_project_big_data_spark.io import path_bytes
+
+    size = path_bytes(path)
+    return "np" if (size < 0 or size >= _NP_PAIR_MIN_BYTES) else "join"
+
+
+# row-chunk cap for the NumPy pair kernel: chunk_rows × block_rows ≤ this
 # many doubles (32 MiB of partial-sum buffer per task)
 _PAIR_CHUNK_ELEMS = 4_000_000
 
 
-def block_pair_cosine(
+def block_pairs(
     df: DataFrame,
     block_col: str,
     mode: str,
+    *,
     tau: float | None = None,
     strict: bool = False,
     k: int | None = None,
-    id_col: str = "vec_id",
-    v_col: str = "v",
-    nv_col: str = "nv",
+    kernel: str,
 ) -> DataFrame:
-    """Within-block pairwise cosine, Arrow-batched (round 8) — the pair-
-    stage twin of similarity's round-7 ``_numpy_assign``.
+    """Pairwise cosine within each ``block_col`` block of ``df``
+    (vec_id, v, nv, block_col) -> (id_a bigint, id_b bigint, cs double).
 
-    Replaces the ``a JOIN b ON block AND id<id`` + interpreted-fold shape
-    of d06/d10/s04 with one ``groupBy(block).applyInPandas``: each block's
-    pair dots run as NumPy column sweeps accumulated dim-by-dim
-    (``S += V[chunk, i:i+1] * V[None, :, i]``) — the same left-to-right
-    per-pair summation order as ``dot_fold`` / DuckDB's
-    ``list_dot_product``, so oracle bit parity is preserved BY
-    CONSTRUCTION (same floats, same order; the norm product commutes
-    bit-exactly). Row-chunked so the partial-sum buffer stays ≤32 MiB per
-    task regardless of block skew. Pairs are filtered INSIDE the kernel
-    (threshold or per-row top-k), so only survivors cross Arrow back —
-    the n² pair relation never materializes as rows anywhere.
+    mode="lt":   pairs id_a < id_b passing ``cs > tau`` (strict) or
+                 ``cs >= tau``.
+    mode="topk": pairs id_a != id_b in both directions, holding each
+                 id_a's k best (cs DESC, id_b ASC). The join half emits
+                 every such pair, the np half only the k best; callers
+                 rank and cut at k either way.
 
-    mode="lt":   emit (id_a < id_b, cs) pairs passing ``cs > tau``
-                 (strict) / ``cs >= tau``; ids ascend within the block
-                 exactly like the join's ``a.id < b.id`` condition.
-    mode="topk": emit each row's k best neighbors (cs DESC, id ASC,
-                 self excluded) — both directions, like a != b.
+    NULL blocks and ``nv <= 0`` rows are dropped first, for both halves:
+    the join's equality never matches a NULL key (a pandas groupBy would
+    form a NULL group), and under ANSI mode a zero norm aborts the
+    divide, so degenerate vectors never pair — as in the DuckDB oracles
+    (``WHERE nv > 0``).
 
-    Output schema: ``id_a bigint, id_b bigint, cs double``. Lazy — a
-    plain grouped-map plan node, no driver action.
-
-    Edge parity with the join shape (pinned by
-    ``tests/test_similarity.py::test_pair_kernel_null_and_nan_edges``):
-    NULL block keys are dropped before grouping (the join's equality
-    predicate never matches them, but a pandas groupBy WOULD form a NULL
-    group), and zero-/null-norm vectors are dropped — under ANSI mode
-    the join shape's ``dot/(na*nb)`` ABORTS on a zero divisor
-    (DIVIDE_BY_ZERO), so "degenerate vectors never pair" is the engine
-    contract, enforced identically here, in the join branches, and in
-    the DuckDB oracles (``WHERE nv > 0``).
+    The join half is one equi-join on the block key (O(block²) pairs,
+    never corpus²). The np half is one ``groupBy(block).applyInPandas``,
+    row-chunked so the partial-sum buffer stays ≤32 MiB per task whatever
+    the block skew, with pairs filtered inside the kernel so the block²
+    relation never crosses Arrow.
     """
     assert mode in ("lt", "topk")
     assert mode != "lt" or tau is not None, "mode='lt' requires tau"
     assert mode != "topk" or k is not None, "mode='topk' requires k"
-    df = df.filter(F.col(block_col).isNotNull() & (F.col(nv_col) > 0))
+    df = df.filter(F.col(block_col).isNotNull() & (F.col("nv") > 0))
+    if kernel == "join":
+        a, b = (
+            df.select(
+                F.col("vec_id").alias(f"id_{s}"),
+                F.col(block_col).alias(f"_blk_{s}"),
+                F.col("v").alias(f"v_{s}"),
+                F.col("nv").alias(f"nv_{s}"),
+            )
+            for s in "ab"
+        )
+        cs = dot_fold(F.col("v_a"), F.col("v_b")) / (F.col("nv_a") * F.col("nv_b"))
+        if mode == "lt":
+            order = F.col("id_a") < F.col("id_b")
+        else:
+            order = F.col("id_a") != F.col("id_b")
+        pairs = a.join(b, (F.col("_blk_a") == F.col("_blk_b")) & order).select(
+            "id_a", "id_b", cs.alias("cs")
+        )
+        if mode == "lt":
+            pairs = pairs.filter(F.col("cs") > tau if strict else F.col("cs") >= tau)
+        return pairs
 
     def pairs(pdf):
         import numpy as np
@@ -114,10 +144,10 @@ def block_pair_cosine(
                     "cs": pd.Series([], dtype="float64"),
                 }
             )
-        order = np.argsort(pdf[id_col].to_numpy())
-        ids = pdf[id_col].to_numpy()[order]
-        V = np.stack(pdf[v_col].to_numpy()[order])  # m × dim
-        nv = pdf[nv_col].to_numpy()[order]
+        order = np.argsort(pdf["vec_id"].to_numpy())
+        ids = pdf["vec_id"].to_numpy()[order]
+        V = np.stack(pdf["v"].to_numpy()[order])  # m × dim
+        nv = pdf["nv"].to_numpy()[order]
         m, dim = V.shape
         chunk = max(1, _PAIR_CHUNK_ELEMS // m)
         out_a, out_b, out_cs = [], [], []
@@ -151,8 +181,133 @@ def block_pair_cosine(
             }
         )
 
-    return df.groupBy(block_col).applyInPandas(
-        pairs, schema="id_a bigint, id_b bigint, cs double"
+    return (
+        df.select("vec_id", block_col, "v", "nv")
+        .groupBy(block_col)
+        .applyInPandas(pairs, schema="id_a bigint, id_b bigint, cs double")
+    )
+
+
+def _centroid_argmax(cents: DataFrame):
+    """(1-row centroid-array frame, per-row argmax column): the ≤k
+    centroids ``collect_list``-ed into ONE broadcast row, and each
+    vector's argmax taken in-row with ``array_max`` over a ``transform``
+    of struct(aff, centroid_id) — the same lexicographic max as the
+    oracle's ``max(struct_pack(...))``. No join rows, no shuffle, no
+    aggregate: the n×k affinity relation never exists as rows (joining
+    and re-grouping it planned a SortAggregate over n×k rows, which ran
+    out of memory at the 1000× probe; SCALE.md round 6)."""
+    carr = cents.agg(
+        F.collect_list(F.struct("centroid_id", "cv", "nc")).alias("_carr")
+    )
+    affs = F.transform(
+        F.col("_carr"),
+        lambda c: F.struct(
+            (dot_fold(F.col("v"), c["cv"]) / (F.col("nv") * c["nc"])).alias("aff"),
+            c["centroid_id"].alias("centroid_id"),
+        ),
+    )
+    return carr, F.array_max(affs).getField("centroid_id")
+
+
+def _hof_assign(en: DataFrame, cents: DataFrame) -> DataFrame:
+    """Join half of ``assign_centroids``: per-row ``_centroid_argmax``
+    over the broadcast collected-centroid row."""
+    carr, best_cid = _centroid_argmax(cents)
+    return en.crossJoin(F.broadcast(carr)).select(
+        "vec_id", "v", "nv", best_cid.alias("centroid_id")
+    )
+
+
+def _numpy_assign(en: DataFrame, cents: DataFrame) -> DataFrame:
+    """NumPy half of ``assign_centroids``: the same per-row argmax (ties
+    to the larger centroid_id) with the n×k×dim multiply-adds as NumPy
+    column sweeps (SCALE.md "IVF argmax-assign vectorization"; a BLAS
+    GEMM is faster still but sums in another order, so it is not used).
+
+    Lazy — no driver-side centroid collect: the ≤k centroid rows are
+    replicated to each of P hash buckets of the corpus (a k×P-row
+    broadcast cross join) and meet their bucket's vectors in a cogrouped
+    ``applyInPandas``, at the cost of one hash shuffle of the corpus.
+    """
+    spark = en.sparkSession
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    keyed = en.withColumn(
+        "_b", F.pmod(F.hash("vec_id"), F.lit(n_buckets)).cast("int")
+    )
+    crep = cents.crossJoin(
+        F.broadcast(
+            spark.range(n_buckets).select(F.col("id").cast("int").alias("_b"))
+        )
+    )
+
+    def assign(vdf, cdf):
+        import numpy as np
+        import pandas as pd
+
+        if vdf.empty:
+            # dtypes matter on the empty path: a bare [] column comes out
+            # float64 and Arrow refuses ndarray->list<double> for "v"
+            return pd.DataFrame(
+                {
+                    "vec_id": pd.Series([], dtype="int64"),
+                    "v": pd.Series([], dtype="object"),
+                    "nv": pd.Series([], dtype="float64"),
+                    "centroid_id": pd.Series([], dtype="int64"),
+                }
+            )
+        order = np.argsort(cdf["centroid_id"].to_numpy())
+        ids = cdf["centroid_id"].to_numpy()[order]
+        C = np.stack(cdf["cv"].to_numpy()[order])  # k × dim
+        nc = cdf["nc"].to_numpy()[order]
+        V = np.stack(vdf["v"].to_numpy())  # n × dim
+        S = np.zeros((V.shape[0], C.shape[0]))
+        for i in range(C.shape[1]):  # left fold over dims == HOF order
+            S += V[:, i : i + 1] * C[None, :, i]
+        aff = S / (vdf["nv"].to_numpy()[:, None] * nc[None, :])
+        # ties → larger centroid_id: ids ascend, take the LAST max index
+        idx = aff.shape[1] - 1 - np.argmax(aff[:, ::-1], axis=1)
+        return pd.DataFrame(
+            {
+                "vec_id": vdf["vec_id"],
+                "v": vdf["v"],
+                "nv": vdf["nv"],
+                "centroid_id": ids[idx],
+            }
+        )
+
+    return (
+        keyed.groupBy("_b")
+        .cogroup(crep.groupBy("_b"))
+        .applyInPandas(
+            assign,
+            schema="vec_id bigint, v array<double>, nv double, centroid_id bigint",
+        )
+    )
+
+
+def assign_centroids(en: DataFrame, cents: DataFrame, kernel: str) -> DataFrame:
+    """Each vector of ``en`` (vec_id, v, nv) with its max-cosine centroid
+    of ``cents`` (centroid_id, cv, nc), ties to the larger centroid_id:
+    (vec_id, v, nv, centroid_id)."""
+    return (_hof_assign if kernel == "join" else _numpy_assign)(en, cents)
+
+
+def probe_pairs(en: DataFrame, n_probes: int) -> DataFrame:
+    """Join half of the probe×corpus scorer: the probes (``vec_id <
+    n_probes``) broadcast against every other vector of ``en`` (vec_id,
+    v, nv) -> (query_id, neighbor_id, cs); the corpus never shuffles."""
+    q = en.filter(F.col("vec_id") < n_probes).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nv").alias("nq"),
+    )
+    return en.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        (dot_fold(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv"))).alias(
+            "cs"
+        ),
     )
 
 
@@ -162,8 +317,9 @@ def probe_corpus_topk_scan(
     probe_max_id: int,
     k: int,
 ) -> DataFrame:
-    """Brute-force probe×corpus cosine top-k, scored task-side in NumPy
-    with no corpus shuffle.
+    """NumPy half of the probe×corpus scorer: cosine top-k of the probes
+    (``vec_id < probe_max_id``) against the parquet corpus at
+    ``corpus_path``, scored task-side with no corpus shuffle.
 
     The unit of work is the parquet ROW GROUP, enumerated at build time
     from the footers (driver file IO — the same listing Spark's own
@@ -172,13 +328,12 @@ def probe_corpus_topk_scan(
     and each task pyarrow-reads its row group and scores it, so
     parallelism is the row-group count regardless of session scan
     sizing. The probe set is a task-side filtered read of the same
-    corpus (``vec_id < probe_max_id``), sorted by vec_id.
+    corpus, sorted by vec_id.
 
-    Math parity with ``dot_fold``/DuckDB by construction: float32→float64
-    per element, dim-by-dim left-fold accumulation, ties broken by
-    neighbor_id, self excluded. Each row group emits its local per-probe
-    top-k — a superset of the global top-k; the caller's window does the
-    final cut (``#row_groups × |probes| × k`` candidate rows).
+    Ties break by neighbor_id, self excluded. Each row group emits its
+    local per-probe top-k — a superset of the global top-k; the caller's
+    window does the final cut (``#row_groups × |probes| × k`` candidate
+    rows).
 
     Scale posture: per-task memory is one row group plus the probe
     block; on a real cluster the task-side reads assume shared storage —
@@ -272,21 +427,3 @@ def probe_corpus_topk_scan(
         .repartition(max(1, len(descs)))
         .mapInPandas(score, "query_id bigint, neighbor_id bigint, cs double")
     )
-
-
-# measured crossover (round 8): the NumPy kernels' fixed Python-worker/
-# Arrow stage loses at tiny volume and wins from ~the 10× probe volume up
-# (SCALE.md rounds 7-8; IVF assign: sf0.1 0.9 → 1.6 s, 100× 22.2 → 2.0 s)
-_NP_PAIR_MIN_BYTES = 4 * 1024 * 1024
-
-
-def pair_kernel(sf_dir: str, table: str = "embeddings") -> str:
-    """Pick a vector kernel from input metadata (no job, lazy-safe):
-    "np" (Arrow-batched NumPy — ``block_pair_cosine``, s01's
-    ``probe_corpus_topk_scan``, the IVF assign/refine) when ``table`` is
-    unstat-able or at least ``_NP_PAIR_MIN_BYTES`` on disk, else "join"
-    (the equi-join / interpreted ``dot_fold`` shapes)."""
-    from final_project_big_data_spark.io import table_bytes
-
-    size = table_bytes(sf_dir, table)
-    return "np" if (size < 0 or size >= _NP_PAIR_MIN_BYTES) else "join"

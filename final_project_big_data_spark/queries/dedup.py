@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table
-from final_project_big_data_spark.operators.vector import dot_fold
 from final_project_big_data_spark.plans.parallelism import widen
 from final_project_big_data_spark.queries import query
 
@@ -501,47 +500,20 @@ def d06(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-cosine near-dup: label-blocked pairs above cosine 0.3.
 
     Dot products run element-sequential in both engines (identical fp
-    order), so results hash-match exactly after round(·, 4).
+    order), so results hash-match exactly after round(·, 4). The pair
+    stage is ``operators.vector.block_pairs``.
     """
+    from final_project_big_data_spark.io import table_path
     from final_project_big_data_spark.operators.vector import (
-        block_pair_cosine,
+        block_pairs,
+        normed,
         pair_kernel,
     )
 
-    dot = dot_fold  # shared sequential fold (see operators/vector.py)
-
-    # norms once per row, not per pair (HOFs are interpreted — 3× cheaper)
-    e = widen(load_table(spark, sf, "embeddings")).select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    e = normed(widen(load_table(spark, sf, "embeddings")), "vec_id", "label")
+    pairs = block_pairs(
+        e, "label", "lt", tau=0.3, kernel=pair_kernel(table_path(sf, "embeddings"))
     )
-    # zero-norm vectors never pair (engine contract — ANSI mode would
-    # abort the divide; same WHERE nv > 0 guard in the oracle)
-    e = e.withColumn("nv", F.sqrt(dot(F.col("v"), F.col("v")))).filter(
-        F.col("nv") > 0
-    )
-    if pair_kernel(sf) == "np":
-        # round-8 vectorized pair stage (operators/vector.py): identical
-        # floats/fold order to the join shape, bit parity by construction
-        pairs = block_pair_cosine(e, "label", mode="lt", tau=0.3)
-    else:
-        a = e.alias("a")
-        b = e.alias("b")
-        cos = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nv") * F.col("b.nv"))
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.label") == F.col("b.label"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .where(cos >= 0.3)
-            .select(
-                F.col("a.vec_id").alias("id_a"),
-                F.col("b.vec_id").alias("id_b"),
-                cos.alias("cs"),
-            )
-        )
     return pairs.select(
         F.col("id_a").alias("vec_a"),
         F.col("id_b").alias("vec_b"),

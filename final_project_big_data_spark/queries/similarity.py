@@ -27,7 +27,14 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table
-from final_project_big_data_spark.operators.vector import dot_fold as _dot
+from final_project_big_data_spark.operators.vector import (
+    assign_centroids,
+    block_pairs,
+    dot_fold as _dot,
+    normed,
+    probe_corpus_topk_scan,
+    probe_pairs,
+)
 from final_project_big_data_spark.plans.parallelism import widen
 from final_project_big_data_spark.queries import query
 
@@ -58,64 +65,34 @@ _N_QUERIES = 10  # probe set: vec_id < 10
     category="similarity",
 )
 def s01(spark: SparkSession, sf: str) -> DataFrame:
-    """Brute-force cosine top-k, two kernels picked by ``pair_kernel``.
-
-    Norms are computed once per side BEFORE the pair scoring — the pair
-    expression is a single dot product.
-
-    - **join** (tiny inputs): broadcast probes × corpus equi-join with the
-      interpreted HOF fold — zero Python-worker setup.
-    - **np**: ``operators.vector.probe_corpus_topk_scan`` scores parquet
-      row groups task-side in the exact ``dot_fold`` accumulation order
-      (bit parity pinned by
-      tests/test_similarity.py::test_s01_probe_kernels_bit_parity); no
-      corpus shuffle, only per-row-group top-k survivors come back.
-
-    Both kernels feed the same global window top-k tail, so the oracle
-    hash-matches either way (``sqrt(dot(x,x))`` per row == per pair).
-    See operators/vector.py for the benchmarked-and-rejected alternatives.
+    """Brute-force cosine top-k: the probe×corpus scorer of
+    ``operators.vector`` — a broadcast join with the interpreted fold
+    (``probe_pairs``) on small inputs, the task-side row-group NumPy scan
+    (``probe_corpus_topk_scan``) from ``pair_kernel``'s crossover up —
+    feeding one global window top-k tail (``_rank_top_k``). Norms are
+    computed once per vector, so the pair expression is one dot product.
     """
     from final_project_big_data_spark.io import table_path
-    from final_project_big_data_spark.operators.vector import (
-        pair_kernel,
-        probe_corpus_topk_scan,
-    )
+    from final_project_big_data_spark.operators.vector import pair_kernel
 
-    raw = widen(load_table(spark, sf, "embeddings")).select(
-        "vec_id", "embedding"
-    )
-    if pair_kernel(sf) == "np":
-        scored = probe_corpus_topk_scan(
-            spark, table_path(sf, "embeddings"), _N_QUERIES, _TOP_K
-        )
+    path = table_path(sf, "embeddings")
+    if pair_kernel(path) == "np":
+        scored = probe_corpus_topk_scan(spark, path, _N_QUERIES, _TOP_K)
     else:
-        e = raw.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-        en = e.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v"))))
-        q = en.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("nq"),
-        )
-        scored = (
-            en.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                (
-                    _dot(F.col("qv"), F.col("v"))
-                    / (F.col("nq") * F.col("nv"))
-                ).alias("cs"),
-            )
-        )
-    w = W.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
-    # tiny_sorted: the output is bounded at _N_QUERIES*_TOP_K rows; a
-    # plain orderBy would re-execute the window pipeline for range-bound
-    # sampling (plans/ordering.py, measured -32% on this query, round 6)
+        en = normed(widen(load_table(spark, sf, "embeddings")), "vec_id")
+        scored = probe_pairs(en, _N_QUERIES)
+    return _rank_top_k(scored)
+
+
+def _rank_top_k(scored: DataFrame) -> DataFrame:
+    """The s01/s05 tail: rank each probe's (query_id, neighbor_id, cs)
+    candidates by (cs DESC, neighbor_id) and keep ``_TOP_K``. The output
+    is bounded at _N_QUERIES*_TOP_K rows, so ``tiny_sorted`` orders it
+    without the range-bound sampling pass a plain orderBy would re-run
+    the window pipeline for (plans/ordering.py)."""
     from final_project_big_data_spark.plans.ordering import tiny_sorted
 
+    w = W.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
     return tiny_sorted(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _TOP_K)
@@ -311,145 +288,19 @@ _MAX_NPROBE = 64
 _DIM = 64
 
 
-def _centroid_argmax(cents: DataFrame):
-    """(1-row centroid-array frame, per-row argmax column) for IVF
-    assignment — the n×k affinity relation NEVER exists as rows.
-
-    Round-6 scale fix (found by the guarded 1000× sweep): the previous
-    shape joined every vector with every broadcast centroid and re-grouped
-    by ``vec_id`` to take ``max(struct(aff, centroid_id))``, carrying the
-    64-dim vector through the join via ``first(v)``. A struct-max buffer is
-    not fixed-width, so Spark planned a SortAggregate — i.e. a SORT of the
-    n×k×~550 B affinity relation (≈1.5 TB at the 1000× probe volume; the
-    sweep OOMed there). This is the exact hazard the DuckDB oracle
-    (`_ivf_assign_sql`) already documents and avoids. The fix goes further
-    than the oracle's skinny-argmax: ``collect_list`` the ≤k centroids into
-    ONE broadcast row, then compute each vector's argmax IN the row with
-    ``array_max`` over a ``transform`` — no join rows, no shuffle, no agg,
-    map-only. ``array_max`` on struct(aff, centroid_id) is the same
-    lexicographic max as the oracle's ``max(struct_pack(...))``; the dots
-    are the same sequential fold — bit parity holds (checksummed against
-    the join+agg shape at 200k×1415 before adoption). The single collected
-    row is ≤k×~550 B (35 MB at the _MAX_CENTROIDS cap) — broadcast-safe.
-    """
-    carr = cents.agg(
-        F.collect_list(F.struct("centroid_id", "cv", "nc")).alias("_carr")
-    )
-    affs = F.transform(
-        F.col("_carr"),
-        lambda c: F.struct(
-            (_dot(F.col("v"), c["cv"]) / (F.col("nv") * c["nc"])).alias("aff"),
-            c["centroid_id"].alias("centroid_id"),
-        ),
-    )
-    return carr, F.array_max(affs).getField("centroid_id")
-
-
-def _hof_assign(en: DataFrame, cents: DataFrame) -> DataFrame:
-    """The pre-round-7 interpreted shape: per-row ``array_max(transform)``
-    over the broadcast collected-centroid row (``_centroid_argmax``).
-    Kept as the small-input kernel — see ``operators.vector.pair_kernel``."""
-    carr, best_cid = _centroid_argmax(cents)
-    return en.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "v", "nv", best_cid.alias("centroid_id")
-    )
-
-
-def _numpy_assign(en: DataFrame, cents: DataFrame) -> DataFrame:
-    """Per-vector argmax-centroid assignment, Arrow-batched (round 7).
-
-    Same semantics as ``_centroid_argmax`` (per-row argmax, ties → larger
-    centroid_id, affinity = fold-dot/(nv·nc)), but the n×k×dim multiply-
-    adds run as NumPy column sweeps instead of the JVM higher-order-
-    function interpreter. Measured (SCALE.md "IVF argmax-assign
-    vectorization", 100× probe, 200k vectors × k=400): HOF 22.2 s →
-    2.0 s (11×) with ZERO assignment diffs — the kernel accumulates
-    dim-by-dim (``S += V[:,i:i+1] * C[None,:,i]``), which reproduces the
-    ``aggregate(zip_with(...))`` fold's left-to-right per-(row, centroid)
-    summation order exactly, so
-    DuckDB-oracle bit parity is preserved by construction (a BLAS GEMM
-    variant is another 2.5× faster but has a different summation order —
-    kept probe-only).
-
-    Laziness is preserved — no driver-side centroid collect. The ≤k
-    centroid rows are replicated to each of P hash buckets of the corpus
-    (a k×P-row broadcast cross join — bytes, not a scale term) and meet
-    their bucket's vectors in a cogrouped ``applyInPandas``: one extra
-    hash shuffle of the corpus (~550 B/row — trivial next to the
-    interpreted-dot constant it removes) plus the Arrow crossing the
-    pandas path pays anyway. At the 1000× sweep volume this turns the
-    ~25–40 min assign stages of s03/d10 into minutes.
-    """
-    spark = en.sparkSession
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    keyed = en.withColumn(
-        "_b", F.pmod(F.hash("vec_id"), F.lit(n_buckets)).cast("int")
-    )
-    crep = cents.crossJoin(
-        F.broadcast(
-            spark.range(n_buckets).select(F.col("id").cast("int").alias("_b"))
-        )
-    )
-
-    def assign(vdf, cdf):
-        import numpy as np
-        import pandas as pd
-
-        if vdf.empty:
-            # dtypes matter on the empty path: a bare [] column comes out
-            # float64 and Arrow refuses ndarray->list<double> for "v"
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype="int64"),
-                    "v": pd.Series([], dtype="object"),
-                    "nv": pd.Series([], dtype="float64"),
-                    "centroid_id": pd.Series([], dtype="int64"),
-                }
-            )
-        order = np.argsort(cdf["centroid_id"].to_numpy())
-        ids = cdf["centroid_id"].to_numpy()[order]
-        C = np.stack(cdf["cv"].to_numpy()[order])  # k × dim
-        nc = cdf["nc"].to_numpy()[order]
-        V = np.stack(vdf["v"].to_numpy())  # n × dim
-        S = np.zeros((V.shape[0], C.shape[0]))
-        for i in range(C.shape[1]):  # left fold over dims == HOF order
-            S += V[:, i : i + 1] * C[None, :, i]
-        aff = S / (vdf["nv"].to_numpy()[:, None] * nc[None, :])
-        # ties → larger centroid_id: ids ascend, take the LAST max index
-        idx = aff.shape[1] - 1 - np.argmax(aff[:, ::-1], axis=1)
-        return pd.DataFrame(
-            {
-                "vec_id": vdf["vec_id"],
-                "v": vdf["v"],
-                "nv": vdf["nv"],
-                "centroid_id": ids[idx],
-            }
-        )
-
-    return (
-        keyed.groupBy("_b")
-        .cogroup(crep.groupBy("_b"))
-        .applyInPandas(
-            assign,
-            schema="vec_id bigint, v array<double>, nv double, centroid_id bigint",
-        )
-    )
-
-
 def _lloyd_refine(
     en: DataFrame, cents: DataFrame, kernel: str
 ) -> DataFrame:
     """One Lloyd (k-means) pass, expressed lazily in DataFrame ops.
 
-    Assign every vector to its max-cosine centroid (per-row argmax over
-    the broadcast centroid array — see ``_centroid_argmax``), then
-    recompute each centroid as the element-wise mean of its members — 64
-    ``avg`` aggregates in ONE hash aggregate, no explode. Centroid ids are
-    the init rows' vec_ids (dense ids are never needed — it's only a join
-    key). A centroid that loses every member simply drops out.
+    Assign every vector to its max-cosine centroid
+    (``operators.vector.assign_centroids``), then recompute each centroid
+    as the element-wise mean of its members — 64 ``avg`` aggregates in
+    ONE hash aggregate, no explode. Centroid ids are the init rows'
+    vec_ids (dense ids are never needed — it's only a join key). A
+    centroid that loses every member simply drops out.
     """
-    assign = _numpy_assign if kernel == "np" else _hof_assign
-    assigned = assign(en, cents).select("vec_id", "v", "centroid_id")
+    assigned = assign_centroids(en, cents, kernel).select("vec_id", "v", "centroid_id")
     # means quantized to 8 decimals: the per-dim avg is the ONE floating
     # accumulation-order-dependent step, and quantizing it lets a second
     # engine (the DuckDB oracle) reproduce every downstream affinity,
@@ -465,7 +316,7 @@ def _lloyd_refine(
 
 def _row_argmax_sql(carr: str) -> str:
     """Per-row argmax centroid over a collected centroid list — the
-    DuckDB text twin of the Spark side's ``_centroid_argmax``:
+    DuckDB text twin of ``operators.vector._centroid_argmax``:
     ``list_aggregate(..., 'max')`` on struct(aff, centroid_id) is the
     same lexicographic max as the old ``max(struct_pack(...))`` group
     aggregate and Spark's ``array_max`` (ties → larger centroid_id);
@@ -502,7 +353,7 @@ def _ivf_assign_sql(train_pred: str | None = None) -> str:
     costs ~26·n·k bytes — ~100 GB at the 1000× probe; the kernel
     OOM-killed the sweep three times there, sailing past
     ``memory_limit``. The fix mirrors the Spark plan's
-    ``_centroid_argmax``: collect the ≤k centroids into ONE list row
+    ``vector._centroid_argmax``: collect the ≤k centroids into ONE list row
     and compute each vector's argmax INSIDE the row
     (``_row_argmax_sql``) — the n×k relation never exists, memory is
     O(k) per row, and no group-by ever sees more than n rows. The
@@ -620,13 +471,12 @@ def _ivf_assigned(spark: SparkSession, sf: str, where=None):
     s03 builds its probe-side affinity ranking from these (filtered to
     the ≤``_N_QUERIES`` probe vectors, so the exploded affinity shape is
     bounded there); ``assigned`` is the final (vec_id, v, nv,
-    centroid_id), computed by the Arrow-batched per-row argmax
-    (``_numpy_assign`` — the n×k affinity relation never exists as rows,
-    and the dots run vectorized instead of in the HOF interpreter);
-    ``kdf`` is the 1-row data-derived centroid-count frame (see
-    the sizing comment at ``_MIN_CENTROIDS``). Mirrors
-    ``_ivf_assign_sql`` bit-for-bit (8-decimal quantized centroid means,
-    identical k derivation).
+    centroid_id) from ``operators.vector.assign_centroids`` (the n×k
+    affinity relation never exists as rows, whichever kernel
+    ``pair_kernel`` picks); ``kdf`` is the 1-row data-derived
+    centroid-count frame (see the sizing comment at ``_MIN_CENTROIDS``).
+    Mirrors ``_ivf_assign_sql`` bit-for-bit (8-decimal quantized
+    centroid means, identical k derivation).
 
     The k derivation stays LAZY (no builder-time job, pinned by
     tests/test_similarity.py): k comes from a 1-row count aggregate that
@@ -634,16 +484,12 @@ def _ivf_assigned(spark: SparkSession, sf: str, where=None):
     row_number that ranks seeds runs over the ``limit(_MAX_CENTROIDS)``
     TakeOrdered candidate set — bounded rows on one task — never over
     the corpus."""
-    e = widen(load_table(spark, sf, "embeddings")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
+    en = normed(widen(load_table(spark, sf, "embeddings")), "vec_id")
     if where is not None:
         # train AND index only this slice — the incremental-index path
         # (s09) builds on a subset, then appends the rest against the
         # frozen quantizer
-        e = e.filter(where)
-    en = e.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v"))))
+        en = en.filter(where)
     kdf = en.agg(
         F.least(
             F.lit(_MAX_CENTROIDS),
@@ -667,16 +513,12 @@ def _ivf_assigned(spark: SparkSession, sf: str, where=None):
             F.col("nv").alias("nc"),
         )
     )
+    from final_project_big_data_spark.io import table_path
     from final_project_big_data_spark.operators.vector import pair_kernel
 
-    kernel = pair_kernel(sf)
+    kernel = pair_kernel(table_path(sf, "embeddings"))
     cents = _lloyd_refine(en, init, kernel)
-    # final per-vector argmax centroid: no n×k rows either way; the
-    # kernel (interpreted HOF vs Arrow/NumPy fold) is sized to the input
-    # — bit parity between the two measured at 200k×400 (0 diffs)
-    assign = _numpy_assign if kernel == "np" else _hof_assign
-    assigned = assign(en, cents)
-    return en, cents, assigned, kdf
+    return en, cents, assign_centroids(en, cents, kernel), kdf
 
 
 @query("s03_ivf_ann_topk", oracle=_s03_sql(), category="similarity")
@@ -691,9 +533,9 @@ def s03(spark: SparkSession, sf: str) -> DataFrame:
     MLlib ``KMeans.fit`` would be eager — it runs jobs at build time —
     so the training is expressed as lazy DataFrame ops instead; a
     cluster deployment would persist the trained centers once and reuse
-    them across queries. Assignment is a map-only per-row argmax over the
-    broadcast centroid array (``_centroid_argmax`` — zero shuffles, and
-    the n×k affinity relation never exists as rows). Candidates then come
+    them across queries. Assignment is a per-row argmax against the
+    centroids (``operators.vector.assign_centroids`` — the n×k affinity
+    relation never exists as rows). Candidates then come
     from an equi-join on ``centroid_id`` (nprobe = ⌈k/8⌉ on the query
     side, so the scanned fraction — and recall — holds as data grows up
     to the ``_MAX_NPROBE`` cap), and the corpus is never cross-joined:
@@ -818,57 +660,21 @@ def s04(spark: SparkSession, sf: str) -> DataFrame:
     dot product per pair, not three). The top-k window re-uses the
     ``vec_id`` side of the same shuffle. At 100 TB the block key becomes a
     trained partition (IVF centroid / LSH bucket — s02/s03); the plan is
-    unchanged.
+    unchanged. The pair stage is ``operators.vector.block_pairs``.
     """
-    from final_project_big_data_spark.operators.vector import (
-        block_pair_cosine,
-        pair_kernel,
-    )
+    from final_project_big_data_spark.io import table_path
+    from final_project_big_data_spark.operators.vector import pair_kernel
 
-    e = widen(load_table(spark, sf, "embeddings")).select(
-        "vec_id",
+    en = normed(widen(load_table(spark, sf, "embeddings")), "vec_id", "label")
+    scored = block_pairs(
+        en,
         "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        "topk",
+        k=_KNN_K,
+        kernel=pair_kernel(table_path(sf, "embeddings")),
+    ).select(
+        F.col("id_a").alias("vec_id"), F.col("id_b").alias("neighbor_id"), "cs"
     )
-    # zero-norm vectors never pair (engine contract — ANSI mode would
-    # abort the divide; same WHERE nv > 0 guard in the oracle)
-    en = e.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v")))).filter(
-        F.col("nv") > 0
-    )
-    if pair_kernel(sf) == "np":
-        # round-8 vectorized pair stage: the kernel already keeps only
-        # each row's top-k (same cs doubles, same (cs DESC, id ASC)
-        # order), so the JVM window below ranks ≤k rows per vector
-        # instead of the whole block² pair relation
-        scored = block_pair_cosine(
-            en, "label", mode="topk", k=_KNN_K
-        ).select(
-            F.col("id_a").alias("vec_id"),
-            F.col("id_b").alias("neighbor_id"),
-            "cs",
-        )
-    else:
-        a = en.select(
-            F.col("vec_id"), F.col("label"), F.col("v"), F.col("nv")
-        )
-        b = en.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("nb_label"),
-            F.col("v").alias("nb_v"),
-            F.col("nv").alias("nb_nv"),
-        )
-        scored = a.join(
-            b,
-            (F.col("label") == F.col("nb_label"))
-            & (F.col("vec_id") != F.col("neighbor_id")),
-        ).select(
-            "vec_id",
-            "neighbor_id",
-            (
-                _dot(F.col("v"), F.col("nb_v"))
-                / (F.col("nv") * F.col("nb_nv"))
-            ).alias("cs"),
-        )
     w = W.partitionBy("vec_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -918,48 +724,21 @@ def d10(spark: SparkSession, sf: str) -> DataFrame:
     shuffles on centroid_id; skewed clusters are the known failure mode
     and the cap strategy from d03 (bucket-size limit) applies unchanged. Keeper
     choice (min id) makes the pass deterministic and idempotent —
-    re-running on the deduped corpus drops nothing.
+    re-running on the deduped corpus drops nothing. The pair stage is
+    ``operators.vector.block_pairs``.
     """
-    from final_project_big_data_spark.operators.vector import (
-        block_pair_cosine,
-        pair_kernel,
-    )
+    from final_project_big_data_spark.io import table_path
+    from final_project_big_data_spark.operators.vector import pair_kernel
 
     _, _, assigned, _ = _ivf_assigned(spark, sf)
-    # zero-norm vectors never pair (engine contract — ANSI mode would
-    # abort the divide; same nv > 0 guard in the oracle's pairs CTE)
-    assigned = assigned.filter(F.col("nv") > 0)
-    if pair_kernel(sf) == "np":
-        # round-8 vectorized pair stage: same floats, same fold order as
-        # the join shape below (operators/vector.py), pairs filtered
-        # inside the kernel so only survivors cross Arrow back
-        pairs = block_pair_cosine(
-            assigned.select("vec_id", "v", "nv", "centroid_id"),
-            "centroid_id",
-            mode="lt",
-            tau=_SEMDEDUP_TAU,
-            strict=True,
-        ).select(F.col("id_a").alias("ka"), F.col("id_b").alias("kb"), "cs")
-    else:
-        a = assigned.select(
-            F.col("vec_id").alias("ka"),
-            F.col("v").alias("va"),
-            F.col("nv").alias("na"),
-            "centroid_id",
-        )
-        b = assigned.select(
-            F.col("vec_id").alias("kb"),
-            F.col("v").alias("vb"),
-            F.col("nv").alias("nb"),
-            "centroid_id",
-        )
-        cs = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        pairs = (
-            a.join(b, ["centroid_id"])
-            .filter(F.col("ka") < F.col("kb"))
-            .select("ka", "kb", cs.alias("cs"))
-            .filter(F.col("cs") > _SEMDEDUP_TAU)
-        )
+    pairs = block_pairs(
+        assigned,
+        "centroid_id",
+        "lt",
+        tau=_SEMDEDUP_TAU,
+        strict=True,
+        kernel=pair_kernel(table_path(sf, "embeddings")),
+    ).select(F.col("id_a").alias("ka"), F.col("id_b").alias("kb"), "cs")
     return (
         pairs.groupBy(F.col("kb").alias("vec_id"))
         .agg(
@@ -1044,30 +823,7 @@ def s05(spark: SparkSession, sf: str) -> DataFrame:
         .alias("v"),
     )
     n = dq.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v"))))
-    q = n.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("nq"),
-    )
-    scored = n.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv"))).alias(
-            "cs"
-        ),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
-    from final_project_big_data_spark.plans.ordering import tiny_sorted
-
-    return tiny_sorted(
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select(
-            "query_id", "neighbor_id", F.round("cs", 4).alias("cos_sim"), "rank"
-        ),
-        "query_id",
-        "rank",
-    )
+    return _rank_top_k(probe_pairs(n, _N_QUERIES))
 
 
 @query("s06_persisted_lsh_topk", oracle=_s02_sql(), category="similarity")

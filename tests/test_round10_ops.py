@@ -156,8 +156,7 @@ def test_ivf_append_equals_one_shot_assignment(spark, sf_dir, tmp_path):
         load_ivf_index,
         save_ivf_index,
     )
-    from final_project_big_data_spark.queries.similarity import _hof_assign
-    from final_project_big_data_spark.operators.vector import dot_fold
+    from final_project_big_data_spark.operators.vector import _hof_assign, dot_fold
     from pyspark.sql import functions as F2
 
     inc = str(tmp_path / "inc")
@@ -178,6 +177,45 @@ def test_ivf_append_equals_one_shot_assignment(spark, sf_dir, tmp_path):
     want = _hof_assign(en, cents.select("centroid_id", "cv", "nc"))
     cols = ["vec_id", "centroid_id"]
     assert _rows(assigned, cols) == _rows(want, cols)
+
+
+def test_ivf_append_follows_pair_kernel(spark, sf_dir, tmp_path, monkeypatch):
+    """Appends pick their assign kernel with ``pair_kernel`` on the
+    postings, as the index build does on the corpus: forced to "np", the
+    written batch's plan carries the cogrouped NumPy assign, and the
+    appended postings are row-identical to the interpreted-fold append."""
+    import shutil
+
+    from final_project_big_data_spark.operators import vector as V
+    from final_project_big_data_spark.operators.ivf_index import (
+        append_to_ivf_index,
+        save_ivf_index,
+    )
+
+    base = str(tmp_path / "base")
+    save_ivf_index(spark, sf_dir, base, where=F.expr("vec_id % 2 = 0"))
+    frame_cls = type(spark.range(1))
+    plain_write = frame_cls.write
+    written = []
+    monkeypatch.setattr(
+        frame_cls,
+        "write",
+        property(lambda df: written.append(df) or plain_write.fget(df)),
+    )
+    postings = {}
+    for kern in ("join", "np"):
+        monkeypatch.setattr(V, "pair_kernel", lambda path: kern)
+        idx = str(tmp_path / kern)
+        shutil.copytree(base, idx)
+        append_to_ivf_index(
+            spark, idx, _embeddings(spark, sf_dir).filter("vec_id % 2 = 1")
+        )
+        plan = written[-1]._jdf.queryExecution().logical().toString()
+        assert ("FlatMapCoGroupsInPandas" in plan) == (kern == "np"), kern
+        postings[kern] = _rows(
+            spark.read.parquet(f"{idx}/postings"), ["vec_id", "centroid_id", "nv", "v"]
+        )
+    assert postings["join"] and postings["join"] == postings["np"]
 
 
 def test_compact_postings_swap_preserves_rows(spark, sf_dir, tmp_path):

@@ -131,7 +131,7 @@ def _force_kernel(monkeypatch, kern: str) -> None:
     time, so the builders pick ``kern`` regardless of input size."""
     from final_project_big_data_spark.operators import vector as V
 
-    monkeypatch.setattr(V, "pair_kernel", lambda sf_dir, table="embeddings": kern)
+    monkeypatch.setattr(V, "pair_kernel", lambda path: kern)
 
 
 def test_assign_kernels_bit_parity(spark, sf_dir, monkeypatch):
@@ -254,9 +254,11 @@ def test_s01_scan_kernel_reads_any_data_file_name(spark, sf_dir, tmp_path, monke
 def test_pair_kernel_sized_to_input(sf_dir):
     """Kernel choice is metadata-only (lazy-safe): tiny fixtures take the
     join shape, at-scale (or unstat-able cluster) paths take NumPy."""
+    from final_project_big_data_spark.io import table_path
     from final_project_big_data_spark.operators import vector as V
 
-    assert V.pair_kernel(sf_dir) == "join"  # sf0.001 embeddings ≪ 4 MiB
+    # sf0.001 embeddings ≪ 4 MiB
+    assert V.pair_kernel(table_path(sf_dir, "embeddings")) == "join"
     assert V.pair_kernel("hdfs://nowhere/sf100") == "np"
 
 
@@ -286,7 +288,7 @@ def test_pair_kernel_chunked_path_and_edges(spark, sf_dir, monkeypatch):
 
     def run(mode, **kw):
         return sorted(
-            V.block_pair_cosine(df, "label", mode=mode, **kw).collect()
+            V.block_pairs(df, "label", mode, kernel="np", **kw).collect()
         )
 
     whole_lt = run("lt", tau=-2.0)  # keep every pair
@@ -408,8 +410,9 @@ def test_pair_kernel_null_and_nan_edges(spark, sf_dir):
     a raw pandas groupBy would form a NULL group), and a zero-norm
     vector must pair with nothing — the engine contract, because under
     ANSI mode the join shape's divide ABORTS on a zero norm. Both modes
-    of the NumPy kernel are compared against the live Spark join shape
-    (with the same documented nv > 0 guard the call sites apply)."""
+    of the NumPy kernel, and the lt mode of ``block_pairs``' join half,
+    are compared against a hand-written Spark join over pre-guarded
+    (nv > 0) rows."""
     from pyspark.sql import Row
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
@@ -428,7 +431,7 @@ def test_pair_kernel_null_and_nan_edges(spark, sf_dir):
     df = spark.createDataFrame(rows).withColumn(
         "nv", F.sqrt(V.dot_fold(F.col("v"), F.col("v")))
     )
-    guarded = df.filter(F.col("nv") > 0)  # the call-site engine guard
+    guarded = df.filter(F.col("nv") > 0)  # the engine's degenerate-vector guard
 
     def join_pairs(cond_extra, tau=None, strict=False):
         a = guarded.select(
@@ -456,18 +459,21 @@ def test_pair_kernel_null_and_nan_edges(spark, sf_dir):
     def norm(rows_):
         return sorted((r.id_a, r.id_b, r.cs) for r in rows_)
 
-    # mode='lt': the kernel takes the UNguarded df (it applies the guard
+    # mode='lt': block_pairs takes the UNguarded df (it applies the guard
     # itself) and must match the guarded join; vec 3 and 4 pair nowhere
     tau = 0.5
-    kern = V.block_pair_cosine(df, "label", mode="lt", tau=tau).collect()
+    kern = V.block_pairs(df, "label", "lt", tau=tau, kernel="np").collect()
     join = join_pairs(F.col("id_a") < F.col("id_b"), tau=tau).collect()
     assert norm(kern) == norm(join) and kern
+    # the join half applies the same guard to the unguarded df
+    jvm = V.block_pairs(df, "label", "lt", tau=tau, kernel="join").collect()
+    assert norm(jvm) == norm(join)
     ids = {i for r in kern for i in (r.id_a, r.id_b)}
     assert 3 not in ids and 4 not in ids
 
     # mode='topk': same exclusions, ranked output identical
     k = 1
-    kernt = V.block_pair_cosine(df, "label", mode="topk", k=k).collect()
+    kernt = V.block_pairs(df, "label", "topk", k=k, kernel="np").collect()
     w = W.partitionBy("id_a").orderBy(F.desc("cs"), F.asc("id_b"))
     joint = (
         join_pairs(F.col("id_a") != F.col("id_b"))
@@ -484,6 +490,6 @@ def test_pair_kernel_null_and_nan_edges(spark, sf_dir):
     import pytest
 
     with pytest.raises(AssertionError):
-        V.block_pair_cosine(df, "label", mode="lt")  # tau missing
+        V.block_pairs(df, "label", "lt", kernel="np")  # tau missing
     with pytest.raises(AssertionError):
-        V.block_pair_cosine(df, "label", mode="topk")  # k missing
+        V.block_pairs(df, "label", "topk", kernel="np")  # k missing

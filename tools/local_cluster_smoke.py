@@ -18,7 +18,7 @@ directly:
 Prints one JSON line {"ok": true, "queries": N, "rows": {...}} and
 exits 0 on success. Scope: the 11 headline builders (collected, not
 noop-sunk — row transport IS the boundary under test) plus one
-applyInPandas kernel (the round-8 pair kernel, forced on) and one
+applyInPandas kernel (the NumPy pair kernel, forced on) and one
 broadcast-knob query (d03's derived banding).
 """
 
@@ -58,7 +58,7 @@ def main() -> None:
     # grouped-map UDF actually runs on a remote executor python worker
     from final_project_big_data_spark.operators import vector
 
-    vector.pair_kernel = lambda sf_dir, table="embeddings": "np"
+    vector.pair_kernel = lambda path: "np"
     rows["s04_knn_self_join[np]"] = len(
         specs["s04_knn_self_join"].builder(spark, SF).collect()
     )

@@ -203,179 +203,18 @@ def run_probe(spark, specs, sf_dir: str) -> dict:
     }
 
 
-def materialize_partitioned(spark, copies: int) -> str:
-    """Hive-partition the x{copies} lineitem by ship year-month.
-
-    SCALE.md's round-4 explanation for q14's ~15x per-query gap (DuckDB's
-    late-materializing scan vs Spark decoding every projected column of
-    every surviving row group) claimed date-partitioned layouts remove it
-    at cluster scale — previously argued, never measured (VERDICT r4
-    item 2). This writes the layout a production table would use
-    (``io.write_parquet(partition_by=['l_shipym'])``) so
-    :func:`run_pruning_probe` can time q14's shape against it on BOTH
-    engines: DuckDB gets the same hive layout + pruning predicate, so the
-    comparison stays engine-fair.
-    """
-    from pyspark.sql import functions as F
-
-    from final_project_big_data_spark.io import load_table, write_parquet
-
-    src = f"/tmp/spark_graft_scale_probe_x{copies}"
-    out = f"{src}_part"
-    dst = os.path.join(out, "lineitem.parquet")
-    if os.path.exists(dst):
-        return out
-    os.makedirs(out, exist_ok=True)
-    li = load_table(spark, src, "lineitem").withColumn(
-        "l_shipym", F.date_format("l_shipdate", "yyyy-MM")
-    )
-    # cluster by the partition key BEFORE writing: without this every
-    # write task emits a fragment into every month directory
-    # (tasks x months tiny files — measured 11x slower to scan than the
-    # flat layout, burying the pruning win under file-open overhead).
-    # One shuffle at write time => one file per month partition; the
-    # same rule a production date-partitioned table applies.
-    write_parquet(
-        li.repartition(F.col("l_shipym")), f"{dst}.tmp",
-        partition_by=["l_shipym"],
-    )
-    os.rename(f"{dst}.tmp", dst)
-    return out
-
-
-def run_pruning_probe(spark, specs, copies: int) -> dict:
-    """q14's shape, flat vs ship-month-partitioned lineitem, both engines.
-
-    The partitioned variant adds the partition predicate a production
-    date-partitioned query carries (``l_shipym >= '1998-01'`` — the
-    month floor of q14's ``l_shipdate > 1998-01-01`` filter, pruning
-    ~43% of the 83 month partitions); the row predicate stays, so the
-    result set is IDENTICAL to flat q14 (asserted on row counts).
-    """
-    import duckdb
-
-    from pyspark.sql import functions as F
-
-    from final_project_big_data_spark.io import load_table
-
-    flat = f"/tmp/spark_graft_scale_probe_x{copies}"
-    part = materialize_partitioned(spark, copies)
-
-    def q14_shape(li):
-        c = load_table(spark, flat, "customer").filter(
-            F.col("c_mktsegment") == "BUILDING"
-        )
-        o = load_table(spark, flat, "orders").filter(
-            F.col("o_orderdate").cast("date")
-            < F.lit("1998-01-01").cast("date")
-        )
-        li = li.filter(
-            F.col("l_shipdate").cast("date")
-            > F.lit("1998-01-01").cast("date")
-        )
-        return (
-            c.join(o, c.c_custkey == o.o_custkey)
-            .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("l_orderkey", "o_orderdate")
-            .agg(
-                F.round(
-                    F.sum(
-                        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                    ),
-                    4,
-                ).alias("revenue")
-            )
-            .orderBy(F.desc("revenue"), "l_orderkey")
-            .limit(20)
-        )
-
-    li_flat = load_table(spark, flat, "lineitem")
-    li_part = spark.read.parquet(os.path.join(part, "lineitem.parquet")).filter(
-        F.col("l_shipym") >= "1998-01"
-    )
-    assert q14_shape(li_part).count() == q14_shape(li_flat).count()
-
-    def time_spark(df, runs=3):
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    duck_q14 = """
-    SELECT l_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-           CAST(o_orderdate AS DATE) AS orderdate
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN ({li}) l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-01-01'
-      AND l.l_shipdate  > TIMESTAMP '1998-01-01'
-    GROUP BY l_orderkey, o_orderdate
-    ORDER BY revenue DESC, l_orderkey LIMIT 20
-    """
-    con = duckdb.connect()
-    for t in ("customer", "orders"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{flat}/{t}.parquet'"
-        )
-    li_flat_sql = f"SELECT * FROM '{flat}/lineitem.parquet'"
-    li_part_sql = (
-        "SELECT * FROM read_parquet("
-        f"'{part}/lineitem.parquet/*/*.parquet', hive_partitioning=1) "
-        "WHERE l_shipym >= '1998-01'"
-    )
-
-    def time_duck(li_sql, runs=3):
-        # 20-row result: fetchall vs CTAS is indistinguishable here, but
-        # keep the compute-only convention uniform across the probe
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            con.execute(
-                "CREATE OR REPLACE TEMPORARY TABLE _prune_sink AS "
-                + duck_q14.format(li=li_sql)
-            )
-            best = min(best, time.perf_counter() - t0)
-        con.execute("DROP TABLE IF EXISTS _prune_sink")
-        return round(best, 3)
-
-    rows = {
-        "flat": {
-            "spark": time_spark(q14_shape(li_flat)),
-            "duckdb": time_duck(li_flat_sql),
-        },
-        "partitioned": {
-            "spark": time_spark(q14_shape(li_part)),
-            "duckdb": time_duck(li_part_sql),
-        },
-    }
-    for r in rows.values():
-        r["ratio"] = round(r["spark"] / r["duckdb"], 2)
-    return {"probe": "q14_partition_pruning", "copies": copies, **rows}
-
-
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    copies = int(args[0]) if args else 10
+    copies = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     scaled = materialize(copies)
 
     from final_project_big_data_spark.queries import all_specs
     from final_project_big_data_spark.session import get_spark, sized_conf
 
     specs = all_specs()
-    dirs = (scaled,) if "--pruning-only" in sys.argv else (SRC, scaled)
-    for sf_dir in dirs:
+    for sf_dir in (SRC, scaled):
         spark = get_spark(app_name="scale_probe", extra_conf=sized_conf(sf_dir))
         spark.range(1000).selectExpr("sum(id)").collect()
-        if "--pruning-only" not in sys.argv:
-            print(json.dumps(run_probe(spark, specs, sf_dir)))
-        if sf_dir == scaled and (
-            "--pruning" in sys.argv or "--pruning-only" in sys.argv
-        ):
-            print(json.dumps(run_pruning_probe(spark, specs, copies)))
+        print(json.dumps(run_probe(spark, specs, sf_dir)))
         spark.stop()
 
 
