@@ -8,8 +8,8 @@ families as one API over a shared SparkSession:
 - ``Engine.table(name)`` / ``Engine.query(name)`` — DataFrame composition
   over registered fixtures and the declared operator registry
 - ``Engine.pipeline(...)``    — prepare → train → score (ml.pipeline)
-- ``Engine.stream(...)``      — readStream → transform → writeStream
-  (streaming.pipeline)
+- ``Engine.stream(...)``      — streaming source → transform → checkpointed
+  parquet sink (streaming.pipeline)
 
 Everything is lazy DataFrames; nothing collects to the driver.
 """
@@ -67,17 +67,12 @@ class Engine:
         checkpoint: str,
     ):
         """Stateless/stateful stream: transform a streaming DataFrame and
-        write it with exactly-once file-sink semantics (reference O20–O27
-        generalized; Kafka in production config, file/rate in tests)."""
-        out = transform(source)
-        return (
-            out.writeStream.format("parquet")
-            .option("path", sink_path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        start it into the checkpointed parquet sink
+        (``streaming.pipeline.run_to_parquet``, exactly-once across
+        restarts). Returns the started query; the caller awaits it."""
+        from final_project_big_data_spark.streaming.pipeline import run_to_parquet
+
+        return run_to_parquet(transform(source), sink_path, checkpoint)
 
     # -- index / layout maintenance entry points (round 9) ---------------
     def build_index(

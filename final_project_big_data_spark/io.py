@@ -486,6 +486,18 @@ def _stats_path(sf_dir: str, table: str) -> str:
     return os.path.join(base, f"{h}_{table}.json")
 
 
+def _files_fingerprint(sf_dir: str, table: str) -> list[list] | None:
+    """(path, size, mtime_ns) of the table's ``data_files``: a snapshot
+    taken over other files (a fixture regenerated at the same path) must
+    not be restored. None when the files cannot be stat-ed (hdfs://,
+    s3://): such a snapshot is restored unchecked, as it always was."""
+    try:
+        stats = [(f, os.stat(f)) for f in data_files(table_path(sf_dir, table))]
+    except OSError:
+        return None
+    return [[f, st.st_size, st.st_mtime_ns] for f, st in stats]
+
+
 def _snapshot_table_stats(
     spark: SparkSession, db: str, table: str, sf_dir: str
 ) -> None:
@@ -519,6 +531,7 @@ def _snapshot_table_stats(
     while it.hasNext():
         cols.append(it.next()._1())
     out = {
+        "files": _files_fingerprint(sf_dir, table),
         "sizeInBytes": str(s.sizeInBytes()),
         "rowCount": str(s.rowCount().get()) if s.rowCount().isDefined() else None,
         "columns": sorted(cols),
@@ -535,10 +548,11 @@ def _restore_table_stats(
 ) -> bool:
     """Inject a snapshot back into the session catalog WITHOUT a scan
     (``alterTableStats`` — the call ANALYZE itself ends with). Returns
-    False when no snapshot exists or it fails to deserialize (e.g. a
-    Spark upgrade changed the class shape) — the caller then pays the
-    one-time ANALYZE and re-snapshots, so a stale cache degrades to the
-    old behavior, never to an error."""
+    False when no snapshot exists, it was taken over different data files
+    (``_files_fingerprint``), or it fails to deserialize (e.g. a Spark
+    upgrade changed the class shape) — the caller then pays the one-time
+    ANALYZE and re-snapshots, so a stale cache degrades to the old
+    behavior, never to an error or to another table's row counts."""
     import base64
     import json
 
@@ -548,6 +562,8 @@ def _restore_table_stats(
     try:
         with open(path) as f:
             snap = json.load(f)
+        if snap.get("files") != _files_fingerprint(sf_dir, table):
+            return False
         jvm = spark._jvm
         cat = spark._jsparkSession.sessionState().catalog()
         ti = jvm.org.apache.spark.sql.catalyst.TableIdentifier(

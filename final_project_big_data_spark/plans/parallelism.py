@@ -13,10 +13,9 @@ dominates — callers apply it only on compute-heavy pipelines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
+from final_project_big_data_spark.io import path_bytes
 from final_project_big_data_spark.session import is_local_master
 
 
@@ -44,30 +43,26 @@ def _estimated_scan_tasks(df: DataFrame) -> int:
 
     Spark splits a parquet scan into ⌈file bytes / maxPartitionBytes⌉
     tasks (modulo openCostInBytes packing); reproduce that arithmetic from
-    ``df.inputFiles()`` + a local ``stat`` instead of probing
+    ``df.inputFiles()`` sized by ``io.path_bytes`` instead of probing
     ``df.rdd.getNumPartitions()``, which forces the whole plan through
     physical planning at build time. ``inputFiles`` only walks the logical
     plan's file indices — no job, no physical plan. Non-file relations
-    (in-memory fixtures) report 0 files → treated as "narrow", which is
-    correct for the small createDataFrame inputs used in tests.
+    (in-memory fixtures) report 0 files, and a non-local or unstat-able
+    file reads as 0 tasks too: both are "narrow", which is correct for
+    the small inputs that reach this under a local master.
     """
     from urllib.parse import urlparse
 
     files = df.inputFiles()
     if not files:
         return 0
+    sizes = [
+        path_bytes(u.path) if u.scheme in ("file", "") else -1
+        for u in map(urlparse, files)
+    ]
+    if min(sizes) < 0:
+        return 0
     # SQLConf's typed getter parses unit strings ("8m", "64MB") as Spark does
     conf = df.sparkSession._jsparkSession.sessionState().conf()
-    max_pb = conf.filesMaxPartitionBytes()
-    total = 0
-    for uri in files:
-        p = urlparse(uri)
-        path = p.path if p.scheme in ("file", "") else None
-        if path is None:
-            # non-local filesystem (would not happen under local[*] gating)
-            return 0
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return 0
-    return max(1, -(-total // max_pb)) if total else 1
+    total = sum(sizes)
+    return max(1, -(-total // conf.filesMaxPartitionBytes())) if total else 1

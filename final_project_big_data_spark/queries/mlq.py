@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 
 from final_project_big_data_spark.ml import pipeline as M
 from final_project_big_data_spark.queries import query
+from final_project_big_data_spark.schemas import CREDIT_CARD
+from final_project_big_data_spark.streaming import pipeline as P
 
 
 @query(
@@ -93,9 +95,11 @@ def m02(spark: SparkSession, sf: str) -> DataFrame:
     (VERDICT r3 ask #5): score a throttled file-stream replay with a
     SAVED+RELOADED PipelineModel and assert the reference's exact output
     envelope ``{Time, Amount, actual_label, predicted_label}``
-    (``predict.py:18,30-44``: load → from_json parse → transform →
-    envelope projection), replacing Kafka with the file source (no broker
-    in this sandbox; ``streaming/kafka.py`` carries the Kafka wiring).
+    (``predict.py:18,30-44``: load → JSON parse → transform → envelope
+    projection) through the shared stream leg
+    (``streaming.pipeline.write_json_replay``/``json_stream``), replacing
+    Kafka with the file source (``streaming/kafka.py`` carries the Kafka
+    wiring).
 
     Facets: envelope_cols_ok (exact column set, reference byte-parity
     order), stream_nonempty, stream_equals_batch (the micro-batched
@@ -120,24 +124,8 @@ def m02(spark: SparkSession, sf: str) -> DataFrame:
 
         # JSON replay files: one file per micro-batch (reference topic
         # payload shape, producer.py:23-24), throttled 1 file/trigger.
-        replay = os.path.join(work, "replay")
-        n_files = 3
-        (
-            test_df.select(F.to_json(F.struct(*test_df.columns)).alias("value"))
-            .repartition(n_files)
-            .write.mode("overwrite")
-            .text(replay)
-        )
-
-        cc_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in cc.schema.fields)
-        stream = (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", 1)
-            .load(replay)
-            .select(F.from_json(F.col("value"), cc_ddl).alias("r"))
-            .select("r.*")
-        )
+        replay = P.write_json_replay(test_df, os.path.join(work, "replay"), 3)
+        stream = P.json_stream(spark, replay, CREDIT_CARD, files_per_trigger=1)
         scored_stream = M.prediction_envelope(M.score(loaded, stream))
 
         sink = f"m02_sink_{abs(hash(work)) % 10_000_000}"

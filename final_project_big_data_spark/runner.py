@@ -26,6 +26,7 @@ from pyspark.sql import SparkSession
 from final_project_big_data_spark.io import read_parquet
 from final_project_big_data_spark.ml import pipeline as ml
 from final_project_big_data_spark.schemas import CREDIT_CARD
+from final_project_big_data_spark.streaming import pipeline as P
 
 
 def run_reference_pipeline(
@@ -71,25 +72,14 @@ def run_reference_pipeline(
     }
 
     if streaming:
-        # replay leg (producer.py ∥ predict.py): test split as JSON files →
-        # file stream with the declared schema → score → parquet sink,
-        # exactly-once via checkpoint. availableNow drains in micro-batches.
-        read_parquet(spark, test_path).write.mode("overwrite").json(stream_in)
-        stream = (
-            spark.readStream.schema(CREDIT_CARD)
-            .option("maxFilesPerTrigger", 4)
-            .json(stream_in)
-        )
+        # replay leg (producer.py ∥ predict.py): test split as JSON
+        # envelopes → throttled stream parsed with the declared schema →
+        # score → checkpointed parquet sink. availableNow drains in
+        # micro-batches of 4 files.
+        P.write_json_replay(read_parquet(spark, test_path), stream_in, n_files=8)
+        stream = P.json_stream(spark, stream_in, CREDIT_CARD, files_per_trigger=4)
         scored_stream = ml.prediction_envelope(ml.score(model, stream))
-        q = (
-            scored_stream.writeStream.format("parquet")
-            .option("path", stream_out)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        P.run_to_parquet(scored_stream, stream_out, checkpoint).awaitTermination()
         out["n_streamed"] = read_parquet(spark, stream_out).count()
         out["stream_out"] = stream_out
     return out

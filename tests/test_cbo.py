@@ -115,3 +115,35 @@ def test_stats_snapshot_restores_without_reanalyze(spark, sf_dir, monkeypatch):
         spark.conf.set("spark.sql.cbo.enabled", "false")
         spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
     assert reordered.index("part") < reordered.index("orders"), reordered
+
+
+def test_stats_snapshot_of_rewritten_table_is_not_restored(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A fixture regenerated at the same path must not get the old
+    snapshot's row counts: the snapshot carries its data files'
+    (path, size, mtime) and a mismatch re-ANALYZEs."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    monkeypatch.setenv("SPARK_GRAFT_STATS_DIR", str(tmp_path / "stats"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = sf / "nation.parquet"
+    shutil.copyfile(os.path.join(sf_dir, "nation.parquet"), path)
+
+    def row_count(db: str) -> int:
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.nation").collect()
+        [stats] = [r.data_type for r in rows if r.col_name == "Statistics"]
+        return int(re.search(r"(\d+) rows", stats).group(1))
+
+    db = register_stats_tables(spark, str(sf), ["nation"])
+    try:
+        assert row_count(db) == 25
+        pq.write_table(pq.read_table(path).slice(0, 7), path)
+        spark.sql(f"DROP TABLE {db}.nation")
+        assert register_stats_tables(spark, str(sf), ["nation"]) == db
+        assert row_count(db) == 7
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

@@ -245,16 +245,18 @@ def test_index_pin_scope_releases_blocks(spark):
     assert len(sc.getRDDStorageInfo()) <= baseline
 
 
-def test_replay_dir_holds_no_storage(spark, sf_dir, tmp_path):
-    """The eager internal call sites (streaming replay builders) are
-    scoped: no NEW persisted RDDs after they return."""
+@pytest.mark.parametrize("table", ["events", "documents"])
+def test_replay_dir_holds_no_storage(spark, sf_dir, tmp_path, table):
+    """The eager internal call site (the streaming replay writer) is
+    scoped for every replayable table: no NEW persisted RDDs after it
+    returns."""
     import time
 
     from final_project_big_data_spark.streaming.pipeline import replay_dir
 
     sc = spark.sparkContext._jsc.sc()
     baseline = len(sc.getRDDStorageInfo())
-    replay_dir(spark, sf_dir, str(tmp_path / "replay"), n_batches=3)
+    replay_dir(spark, sf_dir, str(tmp_path / "replay"), n_batches=3, table=table)
     for _ in range(50):
         if len(sc.getRDDStorageInfo()) <= baseline:
             break

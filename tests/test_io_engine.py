@@ -129,6 +129,33 @@ def test_reference_pipeline_runner(spark, tmp_path):
     assert res["envelope"] == ["Time", "Amount", "actual_label", "predicted_label"]
     assert res["accuracy"] > 0.9  # model quality itself is gated in test_ml
     assert res["n_streamed"] == res["n_test"]
+    # the streamed sink is the batch-scored envelope, both directions
+    # (m02's parity rule: the JSON round trip and chunking change no row)
+    from final_project_big_data_spark.ml import pipeline as ml
+
+    streamed = eio.read_parquet(spark, res["stream_out"])
+    batch = ml.prediction_envelope(ml.score(
+        ml.load_model(res["model_path"]), eio.read_parquet(spark, res["test_path"])
+    ))
+    assert streamed.exceptAll(batch).count() == 0
+    assert batch.exceptAll(streamed).count() == 0
+
+
+def test_engine_stream_restart_adds_no_rows(spark, sf_dir, tmp_path):
+    """Engine.stream's checkpointed parquet sink is exactly-once: a
+    restart from the same checkpoint with no new input adds no row."""
+    from final_project_big_data_spark.streaming import pipeline as P
+
+    eng = Engine(spark, sf_dir)
+    replay = P.replay_dir(spark, sf_dir, str(tmp_path / "replay"), n_batches=3)
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    for _ in range(2):
+        eng.stream(P.file_stream(spark, replay), P.score_events, sink, ckpt
+                   ).awaitTermination()
+        got = spark.read.parquet(sink)
+        assert got.count() == got.select("event_id").distinct().count() == (
+            eng.table("events").count()
+        )
 
 
 def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):

@@ -89,13 +89,8 @@ def test_reference_parity_streaming_score(spark, model, splits, tmp_path):
     _, test = splits
     replay = str(tmp_path / "cc_replay")
     # producer side (producer.py:23-24): rows → JSON values, replayed as files
-    SP.encode_json(test).coalesce(2).write.mode("overwrite").text(replay)
-    stream = (
-        spark.readStream.schema("value string")
-        .option("maxFilesPerTrigger", 1)
-        .text(replay)
-    )
-    parsed = SP.parse_json_stream(stream, CREDIT_CARD)
+    SP.write_json_replay(test, replay, n_files=2)
+    parsed = SP.json_stream(spark, replay, CREDIT_CARD, files_per_trigger=1)
     out = M.prediction_envelope(M.score(model, parsed))
     SP.run_to_memory(out, "cc_scored")
     result = spark.table("cc_scored")
@@ -140,15 +135,9 @@ def test_stream_score_restart_is_exactly_once(spark, model, creditcard, tmp_path
             tmp.rename(tmp_path / "in" / f"part-{i:02d}.json")
 
     def drain() -> None:
-        stream = (spark.readStream.schema(CREDIT_CARD)
-                  .option("maxFilesPerTrigger", 4).json(in_dir))
-        q = (M.prediction_envelope(M.score(model, stream))
-             .writeStream.format("parquet")
-             .option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.processAllAvailable()
-        q.stop()
+        stream = SP.json_stream(spark, in_dir, CREDIT_CARD, files_per_trigger=4)
+        scored = M.prediction_envelope(M.score(model, stream))
+        SP.run_to_parquet(scored, sink, ckpt).awaitTermination()
 
     drop(0, 8)
     drain()

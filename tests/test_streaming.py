@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table
+from final_project_big_data_spark.schemas import DOCUMENTS
 from final_project_big_data_spark.streaming import pipeline as P
 
 
@@ -300,8 +301,8 @@ def test_streaming_corpus_curation_matches_batch(spark, sf_dir, tmp_path_factory
     from final_project_big_data_spark.queries.curation import p01
 
     base = str(tmp_path_factory.mktemp("docs_replay"))
-    P.replay_docs(spark, sf_dir, base)
-    stream = P.curate_docs(P.doc_file_stream(spark, base))
+    P.replay_dir(spark, sf_dir, base, table="documents")
+    stream = P.curate_docs(P.file_stream(spark, base, schema=DOCUMENTS))
     P.run_to_memory(stream, "curate_out")
     got = _rows(spark.table("curate_out"), "doc_id", "pred_lang", "quality", "n_tokens")
     want = _rows(p01(spark, sf_dir), "doc_id", "pred_lang", "quality", "n_tokens")
@@ -342,52 +343,6 @@ def test_kafka_envelope_reference_byte_parity(spark):
         schema=env_schema,
     )
     assert sorted(map(tuple, back.collect())) == sorted(rows)
-
-
-def test_transform_with_state_running_totals(spark, replay_path, events_batch):
-    """transformWithStateInPandas accumulator == batch groupBy totals ==
-    the applyInPandasWithState twin. Requires the RocksDB state store
-    (scoped to this test; the default HDFS-backed store rejects the new
-    API) and google.protobuf (the API's state-server wire protocol).
-    DUAL-PATH (round 9, no skip): without protobuf the builder's
-    documented fail-fast guard is the executed contract — an actionable
-    EnvironmentError at build time, never a mid-query executor crash;
-    with protobuf the full e2e runs (cluster images)."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError:
-        with pytest.raises(EnvironmentError, match="protobuf"):
-            P.user_running_totals_tws(P.file_stream(spark, replay_path))
-        return
-    saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = P.user_running_totals_tws(P.file_stream(spark, replay_path))
-        P.run_to_memory(stream, "tws_out", output_mode="update")
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", saved)
-    final = (
-        spark.table("tws_out")
-        .groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "sum_value")).alias("last"))
-    )
-    got = {
-        r.user_id: (r.last.n_events, round(r.last.sum_value, 3))
-        for r in final.collect()
-    }
-    want = {
-        r.user_id: (r.n, round(r.s, 3))
-        for r in events_batch.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert got == want
 
 
 def test_kafka_e2e_lane(spark, sf_dir):
