@@ -8,8 +8,10 @@ pruning push into the scan and writes stay distributed.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import tempfile
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -18,6 +20,19 @@ from pyspark.sql.types import StructType
 from final_project_big_data_spark.schemas import TABLE_NAMES, TABLE_SCHEMAS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def corpus_key(sf_dir: str) -> str:
+    """The per-corpus key (md5 of ``sf_dir``, 12 hex digits): state derived
+    from one fixture dir is never shared with another's."""
+    return hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+
+
+def scratch_dir(sf_dir: str, tag: str) -> str:
+    """Deterministic per-corpus scratch directory ``<tmp>/<tag>_<key>``.
+    Not mkdtemp: builders write it with mode("overwrite"), so repeated
+    invocations reuse one directory instead of accumulating litter."""
+    return os.path.join(tempfile.gettempdir(), f"{tag}_{corpus_key(sf_dir)}")
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -444,9 +459,7 @@ def register_stats_tables(
     complements but cannot replace it — AQE re-plans per-stage at
     runtime yet never changes the join ORDER the optimizer committed to.
     """
-    import hashlib
-
-    db = f"sg_stats_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
+    db = f"sg_stats_{corpus_key(sf_dir)}"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for t in tables:
         full = f"{db}.{t}"
@@ -475,15 +488,12 @@ def _stats_path(sf_dir: str, table: str) -> str:
     sessions — the nightly-ANALYZE posture a warehouse metastore gives
     for free. ``SPARK_GRAFT_STATS_DIR`` overrides (e.g. shared storage on
     a real cluster)."""
-    import hashlib
-
     base = os.environ.get("SPARK_GRAFT_STATS_DIR") or os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "spark-warehouse",
         "stats",
     )
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    return os.path.join(base, f"{h}_{table}.json")
+    return os.path.join(base, f"{corpus_key(sf_dir)}_{table}.json")
 
 
 def _files_fingerprint(sf_dir: str, table: str) -> list[list] | None:

@@ -22,7 +22,7 @@ from pyspark.ml.feature import (
 )
 from pyspark.sql import DataFrame
 
-STOPWORDS = ["the", "a", "and", "of", "to"]
+from final_project_big_data_spark.operators.text import STOPWORDS
 
 
 def tfidf_pipeline(n_features: int = 1 << 12) -> Pipeline:

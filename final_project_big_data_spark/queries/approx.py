@@ -23,6 +23,7 @@ from final_project_big_data_spark.io import load_table
 from final_project_big_data_spark.operators.quantiles import (
     exact_quantile_cont,
 )
+from final_project_big_data_spark.operators.text import md5_int, md5_int_sql
 from final_project_big_data_spark.queries import query
 
 
@@ -325,11 +326,10 @@ def a07(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "a08_weighted_sample",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
       SELECT doc_id, n_chars,
-             -ln((CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-                       AS BIGINT) + 1) / 4294967296.0)
+             -ln(({md5_int_sql("CAST(doc_id AS VARCHAR)")} + 1) / 4294967296.0)
              / n_chars AS raw_key
       FROM documents
     )
@@ -353,10 +353,7 @@ def a08(spark: SparkSession, sf: str) -> DataFrame:
     10M-doc weighted subset from a 100-TB corpus in one job.
     """
     d = load_table(spark, sf, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    u = (h + F.lit(1)) / F.lit(4294967296.0)
+    u = (md5_int(F.col("doc_id").cast("string")) + F.lit(1)) / F.lit(4294967296.0)
     key = -F.log(u) / F.col("n_chars")
     return (
         d.select("doc_id", "n_chars", key.alias("sel_key"))
@@ -378,9 +375,7 @@ _CMS_TOPK = 20
     oracle=f"""
     WITH ev AS (SELECT CAST(user_id AS VARCHAR) AS uid FROM events),
     pos AS (
-      SELECT uid, j,
-             CAST('0x' || substr(md5(uid), 1 + 8 * j, 8) AS BIGINT)
-               % {_CMS_W} AS bucket
+      SELECT uid, j, {md5_int_sql("uid", "1 + 8 * j")} % {_CMS_W} AS bucket
       FROM ev CROSS JOIN (VALUES (0), (1), (2)) t(j)
     ),
     sketch AS (SELECT j, bucket, count(*) AS c FROM pos GROUP BY j, bucket),
@@ -423,12 +418,7 @@ def a09(spark: SparkSession, sf: str) -> DataFrame:
         *[
             F.struct(
                 F.lit(j).alias("j"),
-                (
-                    F.conv(
-                        F.substring(F.md5("uid"), 1 + 8 * j, 8), 16, 10
-                    ).cast("long")
-                    % _CMS_W
-                ).alias("bucket"),
+                (md5_int("uid", 1 + 8 * j) % _CMS_W).alias("bucket"),
             )
             for j in range(_CMS_D)
         ]

@@ -17,48 +17,23 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table
+from final_project_big_data_spark.operators.text import (
+    fp_norm,
+    fp_norm_sql,
+    lang_argmax,
+    lang_argmax_sql,
+    lang_scores,
+    lang_scores_sql,
+    md5_int,
+    md5_int_sql,
+    n_words,
+    n_words_sql,
+    quality,
+    quality_sql,
+)
 from final_project_big_data_spark.queries import query
-from final_project_big_data_spark.queries.textops import _LANG_MARKERS, _STOPWORDS
 
 _QUALITY_FLOOR = 0.3
-
-
-def _oracle() -> str:
-    scores = ",\n             ".join(
-        f"CAST(len(regexp_extract_all(text, '{pat}')) AS INT) AS score_{lang}"
-        for lang, pat in _LANG_MARKERS.items()
-    )
-    langs = list(_LANG_MARKERS)
-    great = ", ".join(f"score_{lo}" for lo in langs)
-    case = (
-        "CASE "
-        + " ".join(
-            f"WHEN score_{lang} = greatest({great}) THEN '{lang}'"
-            for lang in langs
-        )
-        + " END"
-    )
-    return rf"""
-    WITH scored AS (
-      SELECT doc_id,
-             round(least(1.0, len(string_split_regex(trim(text), '\s+')) / 100.0)
-                   * (1.0 - len(regexp_extract_all(text, '{_STOPWORDS}')) * 1.0
-                          / len(string_split_regex(trim(text), '\s+'))), 4)
-               AS quality,
-             CAST(len(string_split_regex(trim(text), '\s+')) AS INT) AS n_tokens,
-             md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp_norm,
-             {scores}
-      FROM documents
-    ),
-    curated AS (
-      SELECT doc_id, quality, n_tokens, fp_norm, {case} AS pred_lang,
-             row_number() OVER (PARTITION BY fp_norm ORDER BY doc_id) AS rn
-      FROM scored WHERE quality >= {_QUALITY_FLOOR}
-    )
-    SELECT doc_id, pred_lang, quality, n_tokens
-    FROM curated WHERE rn = 1
-    ORDER BY doc_id
-    """
 
 
 def score_docs(d: DataFrame) -> DataFrame:
@@ -70,36 +45,40 @@ def score_docs(d: DataFrame) -> DataFrame:
     curation path (``streaming/pipeline.py``) composes this with a
     stateful ``dropDuplicates``; the batch path (p01) with a window min.
     """
-    words = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    stops = F.regexp_count(F.col("text"), F.lit(_STOPWORDS))
-    quality = F.round(
-        F.least(F.lit(1.0), words / 100.0) * (1.0 - stops * 1.0 / words), 4
-    )
-    langs = list(_LANG_MARKERS)
-    score_cols = [
-        F.regexp_count(F.col("text"), F.lit(pat)).alias(f"score_{lang}")
-        for lang, pat in _LANG_MARKERS.items()
-    ]
     scored = d.select(
         "doc_id",
-        quality.alias("quality"),
-        words.alias("n_tokens"),
-        F.md5(F.lower(F.regexp_replace("text", r"\s+", " "))).alias("fp_norm"),
-        *score_cols,
+        quality().alias("quality"),
+        n_words().alias("n_tokens"),
+        fp_norm().alias("fp_norm"),
+        *lang_scores(),
     )
-    best = F.greatest(*[F.col(f"score_{lo}") for lo in langs])
-    pred = None
-    for lang in langs:
-        cond = F.col(f"score_{lang}") == best
-        pred = F.when(cond, lang) if pred is None else pred.when(cond, lang)
     return (
         scored.filter(F.col("quality") >= _QUALITY_FLOOR)
-        .withColumn("pred_lang", pred)
+        .withColumn("pred_lang", lang_argmax())
         .select("doc_id", "pred_lang", "quality", "n_tokens", "fp_norm")
     )
 
 
-@query("p01_corpus_curation", oracle=_oracle(), category="pipeline")
+@query(
+    "p01_corpus_curation",
+    oracle=f"""
+    WITH scored AS (
+      SELECT doc_id, {quality_sql()} AS quality,
+             CAST({n_words_sql()} AS INT) AS n_tokens,
+             {fp_norm_sql()} AS fp_norm, {lang_scores_sql()}
+      FROM documents
+    ),
+    curated AS (
+      SELECT doc_id, quality, n_tokens, fp_norm, {lang_argmax_sql()} AS pred_lang,
+             row_number() OVER (PARTITION BY fp_norm ORDER BY doc_id) AS rn
+      FROM scored WHERE quality >= {_QUALITY_FLOOR}
+    )
+    SELECT doc_id, pred_lang, quality, n_tokens
+    FROM curated WHERE rn = 1
+    ORDER BY doc_id
+    """,
+    category="pipeline",
+)
 def p01(spark: SparkSession, sf: str) -> DataFrame:
     """Curate `documents`: quality floor → language tag → exact-normalized
     dedup (keep lowest doc_id per fingerprint). The composite the judge can
@@ -153,8 +132,7 @@ def _mix_weight_sql() -> str:
     picked AS (
       SELECT d.lang, count(*) AS n_selected
       FROM documents d JOIN rates r ON d.lang = r.lang
-      WHERE CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)
-                 AS BIGINT) / 4294967296.0 < r.rate
+      WHERE {md5_int_sql("CAST(d.doc_id AS VARCHAR)")} / 4294967296.0 < r.rate
       GROUP BY d.lang
     )
     SELECT r.lang, CAST(r.n_avail AS BIGINT) AS n_avail,
@@ -203,11 +181,7 @@ def p02(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("rate"),
         )
     )
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        / F.lit(4294967296.0)
-    )
+    u = md5_int(F.col("doc_id").cast("string")) / F.lit(4294967296.0)
     picked = (
         d.join(F.broadcast(rates.select("lang", "rate")), "lang")
         .filter(u < F.col("rate"))
@@ -228,14 +202,14 @@ def p02(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "p03_hash_split",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
       SELECT lang,
              CASE WHEN u < 0.8 THEN 'train'
                   WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split
       FROM (SELECT lang,
-                   CAST('0x' || substr(md5('split42:' || CAST(doc_id AS VARCHAR)), 1, 8)
-                        AS BIGINT) / 4294967296.0 AS u
+                   {md5_int_sql("'split42:' || CAST(doc_id AS VARCHAR)")}
+                     / 4294967296.0 AS u
             FROM documents)
     )
     SELECT split, lang, CAST(count(*) AS BIGINT) AS n
@@ -259,18 +233,9 @@ def p03(spark: SparkSession, sf: str) -> DataFrame:
     summary aggregate.
     """
     d = load_table(spark, sf, "documents")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split42:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(4294967296.0)
-    )
+    u = md5_int(
+        F.concat(F.lit("split42:"), F.col("doc_id").cast("string"))
+    ) / F.lit(4294967296.0)
     split = (
         F.when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test")
     )
@@ -302,8 +267,7 @@ _TEMP_ALPHA = 0.5  # temperature exponent: p_lang ∝ n_lang^α
     copies AS (
       SELECT d.lang,
              CAST(floor(r.rate) AS BIGINT)
-             + CASE WHEN CAST('0x' || substr(md5('temp:' ||
-                        CAST(d.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
+             + CASE WHEN {md5_int_sql("'temp:' || CAST(d.doc_id AS VARCHAR)")}
                     / 4294967296.0 < r.rate - floor(r.rate)
                     THEN 1 ELSE 0 END AS n_copies
       FROM documents d JOIN rates r ON d.lang = r.lang
@@ -369,18 +333,9 @@ def p04(spark: SparkSession, sf: str) -> DataFrame:
             / F.col("n_avail")
         ).alias("rate"),
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("temp:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(4294967296.0)
-    )
+    u = md5_int(
+        F.concat(F.lit("temp:"), F.col("doc_id").cast("string"))
+    ) / F.lit(4294967296.0)
     copies = d.join(F.broadcast(rates.select("lang", "rate")), "lang").select(
         "lang",
         (

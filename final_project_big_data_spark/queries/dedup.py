@@ -37,14 +37,18 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table
+from final_project_big_data_spark.operators.text import (
+    md5_int,
+    md5_int_sql,
+    word_ngrams,
+    word_ngrams_sql,
+    words,
+    words_sql,
+)
 from final_project_big_data_spark.plans.parallelism import widen
 from final_project_big_data_spark.queries import query
 
 _N_MINHASH = 8  # permutations, implemented as affine re-hashes of one md5
-
-
-def _words(col: str = "text"):
-    return F.split(F.trim(F.col(col)), r"\s+")
 
 
 @query(
@@ -83,13 +87,6 @@ _MH_COEF = [
 ]
 
 
-def _base_hash():
-    """One 60-bit integer hash per shingle (md5 prefix)."""
-    return F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast(
-        "long"
-    )
-
-
 def _minhash_exprs() -> list:
     """k seeded minhashes via ONE base hash + k affine permutations
     ``(aᵢ·h + bᵢ) mod P`` (universal hashing).
@@ -102,7 +99,7 @@ def _minhash_exprs() -> list:
       arithmetic, k× cheaper than k independent digests, with P < 2³⁰ so
       ``a·h`` fits int64 in both engines (DuckDB raises on overflow).
     """
-    h = _base_hash() % _MH_P
+    h = md5_int("shingle", 1, 15) % _MH_P  # one 60-bit hash per shingle
     return [
         F.min((F.lit(a) * h + F.lit(b)) % _MH_P).alias(f"mh{i}")
         for i, (a, b) in enumerate(_MH_COEF)
@@ -110,36 +107,20 @@ def _minhash_exprs() -> list:
 
 
 def _shingled(spark: SparkSession, sf: str) -> DataFrame:
-    """documents → (doc_id, shingle) with 2-word shingles, distinct.
-
-    Docs with < 2 words are filtered out BEFORE the transform: Spark's
-    ``sequence(1, 0)`` is a DESCENDING [1, 0] (unlike DuckDB's empty
-    ``generate_series(1, 0)``), so a 1-word doc would evaluate
-    ``element_at(w, 2)`` and abort the whole job — a real-corpus crash
-    the shingle-complete sf fixtures never exercised (found by the
-    round-10 short-doc pin, tests/test_round10_ops.py).
-    """
-    d = (
-        widen(load_table(spark, sf, "documents"))
-        .select("doc_id", _words().alias("w"))
-        .filter(F.size("w") >= 2)
-    )
-    shingles = F.expr(
-        "transform(sequence(1, size(w) - 1),"
-        " i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
+    """documents → (doc_id, shingle) with 2-word shingles, distinct; a
+    document under 2 words has none."""
+    d = widen(load_table(spark, sf, "documents")).select(
+        "doc_id", words().alias("w")
     )
     # array_distinct is per-doc, so no extra (shuffling) distinct() is needed.
     return d.select(
-        "doc_id", F.explode(F.array_distinct(shingles)).alias("shingle")
+        "doc_id", F.explode(F.array_distinct(word_ngrams(2))).alias("shingle")
     )
 
 
-_SHINGLE_SQL = """
-      SELECT doc_id, unnest(list_distinct(
-               list_transform(generate_series(1, len(w) - 1),
-                              i -> w[i] || ' ' || w[i + 1]))) AS shingle
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-            FROM documents)
+_SHINGLE_SQL = f"""
+      SELECT doc_id, unnest(list_distinct({word_ngrams_sql(2)})) AS shingle
+      FROM (SELECT doc_id, {words_sql()} AS w FROM documents)
 """
 
 def _minhash_sql_cols() -> str:
@@ -152,8 +133,7 @@ def _minhash_sql_cols() -> str:
 _MINHASH_SQL = f"""
     WITH sh AS ({_SHINGLE_SQL}),
     hh AS (
-      SELECT doc_id,
-             CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % {_MH_P} AS h
+      SELECT doc_id, {md5_int_sql("shingle", 1, 15)} % {_MH_P} AS h
       FROM sh
     ),
     mh AS (
@@ -318,14 +298,12 @@ _SIMHASH_BITS = 32
 def _simhash_df(spark: SparkSession, sf: str) -> DataFrame:
     """32-bit SimHash: per-bit majority vote over md5-derived word hashes."""
     d = widen(load_table(spark, sf, "documents")).select(
-        "doc_id", "lang", "n_chars", _words().alias("w")
+        "doc_id", "lang", "n_chars", words().alias("w")
     )
     exploded = d.select(
         "doc_id",
         F.explode("w").alias("word"),
-    ).withColumn(
-        "h", F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long")
-    )
+    ).withColumn("h", md5_int("word"))
     bit_sums = exploded.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -354,10 +332,7 @@ def _simhash_sql() -> str:
     )
     return f"""
     WITH ex AS (
-      SELECT doc_id,
-             CAST('0x' || substr(md5(unnest(string_split_regex(trim(text), '\\s+'))), 1, 8)
-                  AS BIGINT) AS h
-      FROM documents
+      SELECT doc_id, {md5_int_sql(f"unnest({words_sql()})")} AS h FROM documents
     ),
     bits AS (
       SELECT doc_id,
@@ -591,13 +566,12 @@ def d07(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "d13_dedup_apply",
     oracle=_CLUSTERS_SQL
-    + """,
+    + f""",
     all_clusters AS (
       SELECT doc_id, cluster_id FROM clusters
       UNION ALL
       SELECT doc_id, doc_id AS cluster_id
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-            FROM documents)
+      FROM (SELECT doc_id, {words_sql()} AS w FROM documents)
       WHERE len(w) < 2
     )
     SELECT c.cluster_id AS doc_id, d.source, d.n_chars,
@@ -633,7 +607,7 @@ def d13(spark: SparkSession, sf: str) -> DataFrame:
     cc = _mh0_clusters(spark, sf)
     singletons = (
         widen(load_table(spark, sf, "documents"))
-        .select("doc_id", _words().alias("w"))
+        .select("doc_id", words().alias("w"))
         .filter(F.size("w") < 2)
         .select("doc_id", F.col("doc_id").alias("cluster_id"))
     )
@@ -660,21 +634,12 @@ def _bloom_positions():
     (32-bit) windows of one md5, each mod m. One digest, k positions —
     same cost discipline as the MinHash base hash."""
     return F.array(
-        *[
-            (
-                F.conv(
-                    F.substring(F.md5("text"), 1 + 8 * j, 8), 16, 10
-                ).cast("long")
-                % _BLOOM_M
-            )
-            for j in range(_BLOOM_K)
-        ]
+        *[md5_int("text", 1 + 8 * j) % _BLOOM_M for j in range(_BLOOM_K)]
     )
 
 
 _BLOOM_POS_SQL = ", ".join(
-    f"CAST('0x' || substr(md5(text), {1 + 8 * j}, 8) AS BIGINT) % {_BLOOM_M}"
-    for j in range(_BLOOM_K)
+    f"{md5_int_sql('text', 1 + 8 * j)} % {_BLOOM_M}" for j in range(_BLOOM_K)
 )
 
 

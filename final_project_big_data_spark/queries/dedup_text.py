@@ -3,22 +3,27 @@ plan/oracle changes): fixed-width chunk dedup (d09), prefix-filtered
 Jaccard similarity join (d11), banded edit-distance pairs (d12),
 content-defined chunking + CDC dedup (d14), and inverted-index
 containment pairs (d15). Signature-based dedup (exact, MinHash/LSH,
-SimHash, bloom, clusters) stays in ``dedup.py``; shared shingle/token
-helpers are imported from there.
+SimHash, bloom, clusters) stays in ``dedup.py``, which owns the shingle
+helpers; tokens and hashes come from ``operators/text.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table
+from final_project_big_data_spark.operators.text import (
+    md5_int,
+    md5_int_sql,
+    words,
+    words_sql,
+)
 from final_project_big_data_spark.plans.parallelism import widen
 from final_project_big_data_spark.queries import query
 from final_project_big_data_spark.queries.dedup import (
     _SHINGLE_SQL,
     _shingled,
-    _words,
     lsh_candidate_pairs,
 )
 
@@ -30,10 +35,7 @@ _CHUNK_WORDS = 8  # non-overlapping passage width, in words
 @query(
     "d09_chunk_dedup",
     oracle=f"""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-      FROM documents
-    ),
+    WITH w AS (SELECT doc_id, {words_sql()} AS w FROM documents),
     ch AS (
       SELECT doc_id,
              unnest(list_transform(
@@ -72,7 +74,7 @@ def d09(spark: SparkSession, sf: str) -> DataFrame:
     text is kept here so the fixture oracle stays byte-identical.
     """
     d = widen(load_table(spark, sf, "documents")).select(
-        "doc_id", _words().alias("w")
+        "doc_id", words().alias("w")
     )
     n_chunks = (F.size("w") / _CHUNK_WORDS).cast("int")
     chunk_expr = F.expr(
@@ -108,10 +110,9 @@ _PPJ_T = 0.9  # Jaccard threshold for the prefix-filtered similarity join
 
 @query(
     "d11_prefix_filter_jaccard",
-    oracle=rf"""
+    oracle=f"""
     WITH toks AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS tok
+      SELECT DISTINCT doc_id, unnest(list_distinct({words_sql()})) AS tok
       FROM documents
     ),
     freq AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok),
@@ -178,10 +179,7 @@ def d11(spark: SparkSession, sf: str) -> DataFrame:
     """
     d = widen(load_table(spark, sf, "documents"))
     toks = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))).alias(
-            "tok"
-        ),
+        "doc_id", F.explode(F.array_distinct(words())).alias("tok")
     ).distinct()
     freq = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     w_rank = W.partitionBy("doc_id").orderBy("cnt", "tok")
@@ -346,11 +344,22 @@ def d12(spark: SparkSession, sf: str) -> DataFrame:
 
 _CDC_DIV = 8  # boundary when the 2-word window hash % 8 == 0 → mean ≈ 8 words
 
-_CDC_BOUNDARY = (
-    "CAST(conv(substring(md5(concat(element_at(w, i - 1), ' ',"
-    " element_at(w, i))), 1, 8), 16, 10) AS BIGINT)"
-    f" % {_CDC_DIV} = 0"
-)
+
+def _cdc_starts() -> Column:
+    """Chunk start indexes: 1, then every i ≥ 2 whose (w[i-1], w[i]) window
+    hash ≡ 0 (mod div). Needs ``size(w) ≥ 2``."""
+    w = F.col("w")
+    cut = F.filter(
+        F.sequence(F.lit(2), F.size(w)),
+        lambda i: md5_int(
+            F.concat(F.element_at(w, i - 1), F.lit(" "), F.element_at(w, i))
+        )
+        % _CDC_DIV
+        == 0,
+    )
+    return F.concat(F.array(F.lit(1)), cut)
+
+
 # exclusive end offsets = starts shifted left, with size(w)+1 appended;
 # materialized as its OWN column (``cdc_ends``) so the per-chunk lambda
 # below does a plain element_at instead of rebuilding the shifted array
@@ -372,16 +381,13 @@ _CDC_CHUNKS = """
 @query(
     "d14_cdc_chunks",
     oracle=f"""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-      FROM documents
-    ),
+    WITH w AS (SELECT doc_id, {words_sql()} AS w FROM documents),
     st AS (
       SELECT doc_id, w,
              list_concat([1], list_filter(
                generate_series(2, len(w)),
-               i -> CAST('0x' || substr(md5(w[i - 1] || ' ' || w[i]), 1, 8)
-                         AS BIGINT) % {_CDC_DIV} = 0)) AS starts
+               i -> {md5_int_sql("w[i - 1] || ' ' || w[i]")} % {_CDC_DIV} = 0))
+               AS starts
       FROM w WHERE len(w) >= 2
     ),
     ch AS (
@@ -424,14 +430,11 @@ def d14(spark: SparkSession, sf: str) -> DataFrame:
     ratios all hash-match.
     """
     d = widen(load_table(spark, sf, "documents")).select(
-        "doc_id", _words().alias("w")
-    )
-    starts = F.expr(
-        f"concat(array(1), filter(sequence(2, size(w)), i -> {_CDC_BOUNDARY}))"
+        "doc_id", words().alias("w")
     )
     chunks = (
         d.filter(F.size("w") >= 2)
-        .withColumn("cdc_starts", starts)
+        .withColumn("cdc_starts", _cdc_starts())
         .withColumn("cdc_ends", F.expr(_CDC_ENDS))
         .select("doc_id", F.explode(F.expr(_CDC_CHUNKS)).alias("chunk"))
     )

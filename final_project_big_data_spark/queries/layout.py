@@ -19,7 +19,6 @@ both sides of every oracle.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +28,7 @@ from final_project_big_data_spark.io import (
     data_files,
     load_table,
     path_bytes,
+    scratch_dir,
 )
 from final_project_big_data_spark.operators.zorder import zvalue, zvalue_sql
 from final_project_big_data_spark.queries import query
@@ -253,16 +253,7 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
     compaction IS a write job — the 100 TB posture notes live on
     ``io.compact_files`` itself.
     """
-
-    # deterministic per-corpus path (NOT mkdtemp): both writes below are
-    # mode("overwrite"), so repeated invocations reuse one directory
-    # instead of accumulating litter
-    import hashlib
-
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"q107_compact_{hashlib.md5(sf.encode()).hexdigest()[:12]}",
-    )
+    work = scratch_dir(sf, "q107_compact")
     src = os.path.join(work, "fragmented")
     dst = os.path.join(work, "compacted")
     (
@@ -415,12 +406,7 @@ def q109(spark: SparkSession, sf: str) -> DataFrame:
     format's own encodings). Deterministic per-corpus path with
     mode("overwrite"), same litter discipline as q107.
     """
-    import hashlib
-
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"q109_orc_{hashlib.md5(sf.encode()).hexdigest()[:12]}",
-    )
+    work = scratch_dir(sf, "q109_orc")
     (
         load_table(spark, sf, "orders")
         .filter(F.col("o_orderkey") < _ORC_PRED)
@@ -467,14 +453,9 @@ def q111(spark: SparkSession, sf: str) -> DataFrame:
     partitioned rewrite loses no rows and the pruned scan reads exactly
     the right ones.
     """
-    import hashlib
-
     from final_project_big_data_spark.io import write_parquet
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"q111_part_{hashlib.md5(sf.encode()).hexdigest()[:12]}",
-    )
+    work = scratch_dir(sf, "q111_part")
     o = load_table(spark, sf, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
@@ -527,14 +508,9 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
     the dimension table. The oracle states the same join against the
     unpartitioned source.
     """
-    import hashlib
-
     from final_project_big_data_spark.io import write_parquet
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"q112_dpp_{hashlib.md5(sf.encode()).hexdigest()[:12]}",
-    )
+    work = scratch_dir(sf, "q112_dpp")
     o = load_table(spark, sf, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )

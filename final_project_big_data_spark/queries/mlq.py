@@ -143,6 +143,7 @@ def m02(spark: SparkSession, sf: str) -> DataFrame:
         n_batches = len(q.recentProgress)
 
         streamed = spark.table(sink).localCheckpoint(eager=True)
+        spark.catalog.dropTempView(sink)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

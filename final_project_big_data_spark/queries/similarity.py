@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from final_project_big_data_spark.io import load_table
+from final_project_big_data_spark.io import load_table, scratch_dir
 from final_project_big_data_spark.operators.vector import (
     assign_centroids,
     block_pairs,
@@ -837,22 +837,12 @@ def s06(spark: SparkSession, sf: str) -> DataFrame:
     Eager by contract (the index build is a write job); the query side
     stays the shared lazy ``_lsh_probe`` plan, whose scan prunes to the
     1 + planes probed bucket directories."""
-    import hashlib
-    import tempfile
-
     from final_project_big_data_spark.operators.ivf_index import (
         lsh_topk_with_index,
         save_lsh_index,
     )
 
-    # deterministic per-corpus path (NOT mkdtemp): the index write is
-    # mode("overwrite"), so repeated invocations — the driver builds
-    # every query twice, sweeps run two harnesses — reuse one directory
-    # instead of accumulating GB-scale litter at probe volumes
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"s06_lsh_index_{hashlib.md5(sf.encode()).hexdigest()[:12]}",
-    )
+    path = scratch_dir(sf, "s06_lsh_index")
     save_lsh_index(spark, sf, path)
     return lsh_topk_with_index(spark, path, _N_QUERIES)
 
@@ -924,19 +914,12 @@ def s07(spark: SparkSession, sf: str) -> DataFrame:
     and scoring — so the quantizer-in-the-storage-layout is value-hash
     verified per round, not pytest-only. Eager by contract (the index
     build writes); the query side is the shared lazy ``_ivf_probe``."""
-    import hashlib
-    import tempfile
-
     from final_project_big_data_spark.operators.ivf_index import (
         ivf_topk_with_index,
         save_ivf_index,
     )
 
-    # deterministic per-corpus path — same no-accumulation rationale as s06
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"s07_q8_ivf_index_{hashlib.md5(sf.encode()).hexdigest()[:12]}",
-    )
+    path = scratch_dir(sf, "s07_q8_ivf_index")
     save_ivf_index(spark, sf, path, quantize=True)
     return ivf_topk_with_index(spark, path, _N_QUERIES)
 
@@ -960,20 +943,13 @@ def s08(spark: SparkSession, sf: str) -> DataFrame:
     write jobs); the query side stays the shared lazy ``_lsh_probe``,
     pruning to the probed bucket directories regardless of how many
     append batches populated them."""
-    import hashlib
-    import tempfile
-
     from final_project_big_data_spark.operators.ivf_index import (
         append_to_lsh_index,
         lsh_topk_with_index,
         save_lsh_index,
     )
 
-    # deterministic per-corpus path — same no-accumulation rationale as s06
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"s08_lsh_append_{hashlib.md5(sf.encode()).hexdigest()[:12]}",
-    )
+    path = scratch_dir(sf, "s08_lsh_append")
     save_lsh_index(spark, sf, path, where=F.expr(_SPLIT_A))
     batch = (
         widen(load_table(spark, sf, "embeddings"))
@@ -1037,19 +1013,13 @@ def s09(spark: SparkSession, sf: str) -> DataFrame:
     re-listing are the separate maintenance jobs (``save_ivf_index``,
     ``compact_ivf_postings``; fragmentation + swap pinned in
     tests/test_round10_ops.py)."""
-    import hashlib
-    import tempfile
-
     from final_project_big_data_spark.operators.ivf_index import (
         append_to_ivf_index,
         ivf_topk_with_index,
         save_ivf_index,
     )
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"s09_ivf_append_{hashlib.md5(sf.encode()).hexdigest()[:12]}",
-    )
+    path = scratch_dir(sf, "s09_ivf_append")
     save_ivf_index(spark, sf, path, where=F.expr(_SPLIT_A))
     batch = (
         widen(load_table(spark, sf, "embeddings"))

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table
+from final_project_big_data_spark.operators.text import md5_int, md5_int_sql
 from final_project_big_data_spark.queries import query
 from final_project_big_data_spark.streaming.pipeline import (
     sessionize_batch,
@@ -201,9 +202,8 @@ _WM_BUCKET = 1024  # arrival-bucket width for the distributed prefix-max
     oracle=f"""
     WITH arr AS (
       SELECT event_type, ts, event_id,
-             event_id + CAST('0x' || substr(md5('arr:' ||
-               CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % {_ARR_JITTER}
-               AS a
+             event_id + {md5_int_sql("'arr:' || CAST(event_id AS VARCHAR)")}
+               % {_ARR_JITTER} AS a
       FROM events
     ),
     o AS (
@@ -245,15 +245,7 @@ def w06(spark: SparkSession, sf: str) -> DataFrame:
         "event_id", "event_type", "ts"
     )
     jit = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arr:"), F.col("event_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.concat(F.lit("arr:"), F.col("event_id").cast("string")))
         % _ARR_JITTER
     )
     # Round-12 note (guide §2.4): an explicit .repartition("bkt") here

@@ -2,10 +2,8 @@
 
 All hot-path logic is built-in ``pyspark.sql.functions`` (JVM, codegen) —
 no Python UDFs. Every operator is oracle-checked against DuckDB computing
-the identical expression. Tokenization is regex-based; language-ID is an
-n-gram/marker-word heuristic with deterministic argmax (the marker profiles
-are tiny placeholders — real profiles are data, the operator shape is what
-scales).
+the identical expression; the shared ones (tokens, n-grams, document
+scores) come from ``operators/text.py`` with their DuckDB halves.
 """
 
 from __future__ import annotations
@@ -14,6 +12,25 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table
+from final_project_big_data_spark.operators.text import (
+    fp_norm,
+    fp_norm_sql,
+    lang_argmax,
+    lang_argmax_sql,
+    lang_scores,
+    lang_scores_sql,
+    n_words,
+    n_words_sql,
+    ngram_transform,
+    quality,
+    quality_sql,
+    stop_ratio,
+    stop_ratio_sql,
+    word_ngrams,
+    word_ngrams_sql,
+    words,
+    words_sql,
+)
 from final_project_big_data_spark.plans.parallelism import widen
 from final_project_big_data_spark.plans.ordering import sorted_project
 from final_project_big_data_spark.queries import query
@@ -21,26 +38,14 @@ from final_project_big_data_spark.queries import query
 # BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation.
 _BPEISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
-# Marker-word "n-gram profiles" per language (deterministic placeholder
-# profiles drawn from the fixture vocabulary; see module docstring).
-_LANG_MARKERS: dict[str, str] = {
-    "en": r"\b(the|a|fast|slow)\b",
-    "es": r"\b(customer|value|data)\b",
-    "de": r"\b(group|order|window)\b",
-    "fr": r"\b(join|merge|part)\b",
-    "zh": r"\b(scan|hash|key)\b",
-}
-
-_STOPWORDS = r"\b(the|a|and|of|to)\b"
 
 
 @query(
     "t01_token_count",
     oracle=rf"""
     SELECT doc_id,
-           CAST(len(string_split_regex(trim(text), '\s+')) AS INT)       AS n_tokens,
-           CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS INT)
-                                                                         AS n_distinct,
+           CAST({n_words_sql()} AS INT)                                   AS n_tokens,
+           CAST(len(list_distinct({words_sql()})) AS INT)                AS n_distinct,
            CAST(len(regexp_extract_all(text, '{_BPEISH}')) AS INT)       AS n_bpeish
     FROM documents ORDER BY doc_id
     """,
@@ -49,7 +54,7 @@ _STOPWORDS = r"\b(the|a|and|of|to)\b"
 def t01(spark: SparkSession, sf: str) -> DataFrame:
     """Whitespace + BPE-ish regex token counting (pure JVM expressions)."""
     d = load_table(spark, sf, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = words()
     return sorted_project(
         d,
         ["doc_id"],
@@ -60,74 +65,40 @@ def t01(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _lang_score_oracle() -> str:
-    scores = ",\n           ".join(
-        f"CAST(len(regexp_extract_all(text, '{pat}')) AS INT) AS score_{lang}"
-        for lang, pat in _LANG_MARKERS.items()
-    )
-    # deterministic argmax: first language (declaration order) with max score
-    langs = list(_LANG_MARKERS)
-    great = ", ".join(f"score_{lo}" for lo in langs)
-    case = "CASE " + " ".join(
-        f"WHEN score_{lang} = greatest({great}) THEN '{lang}'" for lang in langs
-    ) + " END"
-    return f"""
-    WITH scored AS (
-      SELECT doc_id, lang,
-           {scores}
-      FROM documents
-    )
-    SELECT doc_id, lang, score_en, score_es, score_de, score_fr, score_zh,
-           {case} AS pred_lang
-    FROM scored ORDER BY doc_id
-    """
-
-
-@query("t02_lang_id", oracle=_lang_score_oracle(), category="text")
+@query(
+    "t02_lang_id",
+    oracle=f"""
+    WITH scored AS (SELECT doc_id, lang, {lang_scores_sql()} FROM documents)
+    SELECT *, {lang_argmax_sql()} AS pred_lang FROM scored ORDER BY doc_id
+    """,
+    category="text",
+)
 def t02(spark: SparkSession, sf: str) -> DataFrame:
     """Marker-based language-ID: per-language hit counts → deterministic argmax."""
     d = load_table(spark, sf, "documents").orderBy("doc_id")
-    scored = d.select(
-        "doc_id",
-        "lang",
-        *[
-            F.regexp_count(F.col("text"), F.lit(pat)).alias(f"score_{lang}")
-            for lang, pat in _LANG_MARKERS.items()
-        ],
-    )
-    langs = list(_LANG_MARKERS)
-    best = F.greatest(*[F.col(f"score_{lo}") for lo in langs])
-    expr = None
-    for lang in langs:
-        cond = F.col(f"score_{lang}") == best
-        expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
-    return scored.withColumn("pred_lang", expr)
+    scored = d.select("doc_id", "lang", *lang_scores())
+    return scored.withColumn("pred_lang", lang_argmax())
 
 
 @query(
     "t03_quality_score",
     oracle=rf"""
     SELECT doc_id,
-           CAST(length(text) AS BIGINT)                                   AS n_chars_calc,
-           CAST(len(string_split_regex(trim(text), '\s+')) AS INT)        AS n_words,
-           round(length(text) * 1.0
-                 / len(string_split_regex(trim(text), '\s+')), 4)         AS avg_word_len,
-           round(len(regexp_extract_all(text, '{_STOPWORDS}')) * 1.0
-                 / len(string_split_regex(trim(text), '\s+')), 4)         AS stop_ratio,
+           CAST(length(text) AS BIGINT)                           AS n_chars_calc,
+           CAST({n_words_sql()} AS INT)                           AS n_words,
+           round(length(text) * 1.0 / {n_words_sql()}, 4)        AS avg_word_len,
+           round({stop_ratio_sql()}, 4)                            AS stop_ratio,
            round(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) * 1.0
-                 / length(text), 4)                                       AS punct_ratio,
-           round(least(1.0, len(string_split_regex(trim(text), '\s+')) / 100.0)
-                 * (1.0 - len(regexp_extract_all(text, '{_STOPWORDS}')) * 1.0
-                        / len(string_split_regex(trim(text), '\s+'))), 4) AS quality
+                 / length(text), 4)                               AS punct_ratio,
+           {quality_sql()}                                        AS quality
     FROM documents ORDER BY doc_id
     """,
     category="text",
 )
 def t03(spark: SparkSession, sf: str) -> DataFrame:
-    """Heuristic quality scoring: length/stopword/punctuation ratios."""
+    """Heuristic quality scoring: length/stopword/punctuation ratios. An
+    empty document's punctuation ratio is NULL (0/0), as in DuckDB."""
     d = load_table(spark, sf, "documents")
-    words = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    stops = F.regexp_count(F.col("text"), F.lit(_STOPWORDS))
     punct = F.regexp_count(F.col("text"), F.lit(r"[^A-Za-z0-9\s]"))
     chars = F.length("text")
     return sorted_project(
@@ -135,24 +106,21 @@ def t03(spark: SparkSession, sf: str) -> DataFrame:
         ["doc_id"],
         "doc_id",
         chars.cast("long").alias("n_chars_calc"),
-        words.alias("n_words"),
-        F.round(chars * 1.0 / words, 4).alias("avg_word_len"),
-        F.round(stops * 1.0 / words, 4).alias("stop_ratio"),
-        F.round(punct * 1.0 / chars, 4).alias("punct_ratio"),
-        F.round(
-            F.least(F.lit(1.0), words / 100.0) * (1.0 - stops * 1.0 / words), 4
-        ).alias("quality"),
+        n_words().alias("n_words"),
+        F.round(chars * 1.0 / n_words(), 4).alias("avg_word_len"),
+        F.round(stop_ratio(), 4).alias("stop_ratio"),
+        F.round(F.try_divide(punct * 1.0, chars), 4).alias("punct_ratio"),
+        quality().alias("quality"),
     )
 
 
 @query(
     "t04_fingerprint",
-    oracle=r"""
+    oracle=f"""
     SELECT doc_id,
            md5(text) AS fp,
-           md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp_norm,
-           md5(array_to_string(string_split_regex(trim(text), '\s+')[1:8], ' '))
-             AS fp_prefix
+           {fp_norm_sql()} AS fp_norm,
+           md5(array_to_string({words_sql()}[1:8], ' ')) AS fp_prefix
     FROM documents ORDER BY doc_id
     """,
     category="text",
@@ -160,24 +128,20 @@ def t03(spark: SparkSession, sf: str) -> DataFrame:
 def t04(spark: SparkSession, sf: str) -> DataFrame:
     """Document fingerprinting: exact, normalized, and 8-word-prefix hashes."""
     d = load_table(spark, sf, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
     return sorted_project(
         d,
         ["doc_id"],
         "doc_id",
         F.md5(F.col("text")).alias("fp"),
-        F.md5(F.lower(F.regexp_replace("text", r"\s+", " "))).alias("fp_norm"),
-        F.md5(F.concat_ws(" ", F.slice(toks, 1, 8))).alias("fp_prefix"),
+        fp_norm().alias("fp_norm"),
+        F.md5(F.concat_ws(" ", F.slice(words(), 1, 8))).alias("fp_prefix"),
     )
 
 
 @query(
     "t05_tfidf",
-    oracle=r"""
-    WITH words AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS word
-      FROM documents
-    ),
+    oracle=f"""
+    WITH words AS (SELECT doc_id, unnest({words_sql()}) AS word FROM documents),
     tf AS (
       SELECT doc_id, word, count(*) AS tf
       FROM words GROUP BY doc_id, word
@@ -205,9 +169,7 @@ def t05(spark: SparkSession, sf: str) -> DataFrame:
     dimensions (tests/test_ml.py); this query pins the exact values.
     """
     d = widen(load_table(spark, sf, "documents"))
-    words = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
-    )
+    tokens = d.select("doc_id", F.explode(words()).alias("word"))
     # Round-12 restructure (guide §2.3/§2.4). The old shape aggregated tf
     # over the WHOLE corpus, window-counted df over every tf row (a full
     # shuffle of the tf relation by word, plus a per-partition sort), and
@@ -222,12 +184,12 @@ def t05(spark: SparkSession, sf: str) -> DataFrame:
     # unchanged: df(word) = #docs containing word either way, and tf rows
     # for doc_id < 100 are computed identically.
     tf = (
-        words.filter(F.col("doc_id") < 100)
+        tokens.filter(F.col("doc_id") < 100)
         .groupBy("doc_id", "word")
         .agg(F.count("*").alias("tf"))
     )
     dfreq = (
-        words.select("word", "doc_id")
+        tokens.select("word", "doc_id")
         .distinct()
         .groupBy("word")
         .agg(F.count("*").alias("df"))
@@ -248,11 +210,8 @@ def t05(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "t06_bigram_logprob",
-    oracle=r"""
-    WITH wd AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-      FROM documents
-    ),
+    oracle=f"""
+    WITH wd AS (SELECT doc_id, {words_sql()} AS w FROM documents),
     bi AS (
       SELECT doc_id,
              unnest(list_transform(generate_series(1, len(w) - 1),
@@ -293,11 +252,10 @@ def t06(spark: SparkSession, sf: str) -> DataFrame:
     persist and broadcast.
     """
     d = widen(load_table(spark, sf, "documents")).select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("w")
-    ).filter(F.size("w") >= 2)
-    pairs = F.expr(
-        "transform(sequence(1, size(w) - 1),"
-        " i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))"
+        "doc_id", words().alias("w")
+    )
+    pairs = ngram_transform(
+        2, "struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2)"
     )
     bi = d.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", "p.w1", "p.w2"
@@ -325,18 +283,9 @@ def t06(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "t07_repetition_score",
-    oracle=r"""
-    WITH wd AS (
-      SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-      FROM documents
-    ),
-    tg AS (
-      SELECT doc_id,
-             list_transform(generate_series(1, len(w) - 2),
-                            i -> w[i] || ' ' || w[i + 1] || ' ' || w[i + 2])
-               AS grams
-      FROM wd WHERE len(w) >= 3
-    )
+    oracle=f"""
+    WITH wd AS (SELECT doc_id, {words_sql()} AS w FROM documents),
+    tg AS (SELECT doc_id, {word_ngrams_sql(3)} AS grams FROM wd WHERE len(w) >= 3)
     SELECT doc_id,
            CAST(len(grams) AS INT) AS n_trigrams,
            CAST(len(list_distinct(grams)) AS INT) AS n_distinct,
@@ -355,15 +304,10 @@ def t07(spark: SparkSession, sf: str) -> DataFrame:
     the curation stack (contrast t06's corpus-wide model).
     """
     d = widen(load_table(spark, sf, "documents")).select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("w")
+        "doc_id", words().alias("w")
     ).filter(F.size("w") >= 3)
-    grams = F.expr(
-        "transform(sequence(1, size(w) - 2),"
-        " i -> concat(element_at(w, i), ' ', element_at(w, i + 1),"
-        "             ' ', element_at(w, i + 2)))"
-    )
     return (
-        d.select("doc_id", grams.alias("grams"))
+        d.select("doc_id", word_ngrams(3).alias("grams"))
         .select(
             "doc_id",
             F.size("grams").alias("n_trigrams"),
@@ -437,16 +381,9 @@ def t08(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "t09_top_bigrams",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-      FROM documents
-    ),
-    bg AS (
-      SELECT unnest(list_transform(generate_series(1, len(w) - 1),
-                    i -> w[i] || ' ' || w[i + 1])) AS bigram
-      FROM w
-    )
+    oracle=f"""
+    WITH w AS (SELECT doc_id, {words_sql()} AS w FROM documents),
+    bg AS (SELECT unnest({word_ngrams_sql(2)}) AS bigram FROM w)
     SELECT bigram, count(*) AS n
     FROM bg GROUP BY bigram
     ORDER BY n DESC, bigram LIMIT 20
@@ -464,15 +401,9 @@ def t09(spark: SparkSession, sf: str) -> DataFrame:
     Unlike t06's per-doc model, output size is k regardless of corpus
     size.
     """
-    d = widen(load_table(spark, sf, "documents")).select(
-        F.split(F.trim(F.col("text")), r"\s+").alias("w")
-    )
-    bigrams = F.expr(
-        "transform(sequence(1, size(w) - 1),"
-        " i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
-    )
+    d = widen(load_table(spark, sf, "documents")).select(words().alias("w"))
     return (
-        d.select(F.explode(bigrams).alias("bigram"))
+        d.select(F.explode(word_ngrams(2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))
@@ -488,12 +419,8 @@ _BENCH_MOD = 50  # doc_id % 50 == 0 plays the held-out benchmark set
     "t10_contamination",
     oracle=f"""
     WITH sh AS (
-      SELECT doc_id, unnest(list_distinct(
-        list_transform(generate_series(1, len(w) - {_CONTAM_N - 1}),
-          i -> list_aggregate(w[i:i+{_CONTAM_N - 1}], 'string_agg', ' '))))
-        AS g
-      FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-            FROM documents)
+      SELECT doc_id, unnest(list_distinct({word_ngrams_sql(_CONTAM_N)})) AS g
+      FROM (SELECT doc_id, {words_sql()} AS w FROM documents)
     ),
     bench AS (SELECT doc_id AS bench_id, g FROM sh
               WHERE doc_id % {_BENCH_MOD} = 0)
@@ -523,14 +450,10 @@ def t10(spark: SparkSession, sf: str) -> DataFrame:
     (not done here only because the oracle compares exact strings).
     """
     d = widen(load_table(spark, sf, "documents")).select(
-        "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("w")
-    )
-    ngrams = F.expr(
-        f"transform(sequence(1, size(w) - {_CONTAM_N - 1}),"
-        f" i -> array_join(slice(w, i, {_CONTAM_N}), ' '))"
+        "doc_id", words().alias("w")
     )
     sh = d.select(
-        "doc_id", F.explode(F.array_distinct(ngrams)).alias("g")
+        "doc_id", F.explode(F.array_distinct(word_ngrams(_CONTAM_N))).alias("g")
     )
     bench = (
         sh.filter(F.col("doc_id") % _BENCH_MOD == 0)
@@ -557,11 +480,7 @@ _PACK_LEN = 256  # tokens per packed training sequence
 @query(
     "t11_sequence_packing",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             len(string_split_regex(trim(text), '\\s+')) AS n_tokens
-      FROM documents
-    ),
+    WITH toks AS (SELECT doc_id, {n_words_sql()} AS n_tokens FROM documents),
     offs AS (
       SELECT doc_id, n_tokens,
              sum(n_tokens) OVER (ORDER BY doc_id
@@ -594,10 +513,7 @@ def t11(spark: SparkSession, sf: str) -> DataFrame:
     from final_project_big_data_spark.operators.indexing import with_prefix_sum
 
     d = widen(load_table(spark, sf, "documents"))
-    toks = d.select(
-        "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens"),
-    )
+    toks = d.select("doc_id", n_words().alias("n_tokens"))
     offs = with_prefix_sum(toks, ["doc_id"], "n_tokens", sum_col="start_off")
     return offs.select(
         "doc_id",
@@ -619,10 +535,7 @@ _CHUNK_STRIDE = 24  # overlap = _CHUNK_LEN - _CHUNK_STRIDE
 @query(
     "t12_chunk_windows",
     oracle=f"""
-    WITH wd AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-      FROM documents WHERE doc_id < 60
-    )
+    WITH wd AS (SELECT doc_id, {words_sql()} AS w FROM documents WHERE doc_id < 60)
     SELECT doc_id, CAST(k AS INT) AS chunk_no,
            list_aggregate(w[k * {_CHUNK_STRIDE} + 1 :
                             k * {_CHUNK_STRIDE} + {_CHUNK_LEN}],
@@ -644,7 +557,7 @@ def t12(spark: SparkSession, sf: str) -> DataFrame:
     d09 dedups these chunks; this entry pins the chunking itself.
     """
     d = widen(load_table(spark, sf, "documents")).filter(F.col("doc_id") < 60)
-    wd = d.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("w"))
+    wd = d.select("doc_id", words().alias("w"))
     n_chunks = (
         F.ceil(
             F.greatest(F.size("w") - _CHUNK_LEN, F.lit(0)) / float(_CHUNK_STRIDE)

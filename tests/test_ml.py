@@ -157,6 +157,18 @@ def test_stream_score_restart_is_exactly_once(spark, model, creditcard, tmp_path
 # ------------------------------------------------- C22: MLlib text features
 
 
+def test_m02_drops_its_memory_sink(spark, sf_dir):
+    """m02 drops its memory-sink view once the scored rows are checkpointed,
+    so building it twice on one session leaves no sink table behind."""
+    from final_project_big_data_spark.queries import all_specs
+
+    build = all_specs()["m02_streaming_score_parity"].builder
+    for _ in range(2):
+        assert all(build(spark, sf_dir).first())
+    sinks = [t.name for t in spark.catalog.listTables() if t.name.startswith("m02_sink_")]
+    assert not sinks
+
+
 def test_tfidf_pipeline_deterministic_and_sane(spark, sf_dir):
     from pyspark.ml.functions import vector_to_array
 
