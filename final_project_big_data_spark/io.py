@@ -444,10 +444,11 @@ def register_stats_tables(
     fixture (no data copy — the table is a catalog pointer at the same
     files every other builder scans) inside a per-corpus database
     (md5 of ``sf_dir``, so two fixture dirs never share stats), then
-    runs ``ANALYZE TABLE ... COMPUTE STATISTICS FOR ALL COLUMNS`` — one
+    runs ``ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS`` — one
     distributed scan per table collecting rowCount + per-column
     NDV/min/max/null-count (HLL-approximate NDV, never a driver
-    materialization).
+    materialization) for every column but the TIMESTAMP_NTZ ones
+    (``_ntz_columns``).
 
     Idempotent per session AND cheap on re-entry: an already-registered
     table is not re-analyzed (the driver invokes builders twice).
@@ -475,10 +476,29 @@ def register_stats_tables(
     return db
 
 
+def _ntz_columns(spark: SparkSession, full: str) -> set[str]:
+    """The table's TIMESTAMP_NTZ columns. Spark 4.1's CBO filter
+    estimator has no case for their column stats: any filter on one
+    (``CAST(o_orderdate AS DATE) < DATE '1998-01-01'``) aborts
+    optimization with ``MatchError: TimestampNTZType``. The fixtures'
+    parquet ``timestamp[us]`` dates read as NTZ, so they get table
+    stats only."""
+    from pyspark.sql.types import TimestampNTZType
+
+    return {
+        f.name
+        for f in spark.table(full).schema.fields
+        if isinstance(f.dataType, TimestampNTZType)
+    }
+
+
 def _analyze(spark: SparkSession, full: str) -> None:
     """One distributed stats-collection scan (separable so tests can prove
-    the restore path never re-runs it)."""
-    spark.sql(f"ANALYZE TABLE {full} COMPUTE STATISTICS FOR ALL COLUMNS")
+    the restore path never re-runs it): row count plus column stats for
+    every non-NTZ column (``_ntz_columns``)."""
+    ntz = _ntz_columns(spark, full)
+    cols = ", ".join(f"`{c}`" for c in spark.table(full).columns if c not in ntz)
+    spark.sql(f"ANALYZE TABLE {full} COMPUTE STATISTICS FOR COLUMNS {cols}")
 
 
 def _stats_path(sf_dir: str, table: str) -> str:
@@ -559,10 +579,12 @@ def _restore_table_stats(
     """Inject a snapshot back into the session catalog WITHOUT a scan
     (``alterTableStats`` — the call ANALYZE itself ends with). Returns
     False when no snapshot exists, it was taken over different data files
-    (``_files_fingerprint``), or it fails to deserialize (e.g. a Spark
-    upgrade changed the class shape) — the caller then pays the one-time
-    ANALYZE and re-snapshots, so a stale cache degrades to the old
-    behavior, never to an error or to another table's row counts."""
+    (``_files_fingerprint``), it holds stats of a TIMESTAMP_NTZ column
+    (``_ntz_columns``: restoring them would bring back the CBO crash),
+    or it fails to deserialize (e.g. a Spark upgrade changed the class
+    shape) — the caller then pays the one-time ANALYZE and re-snapshots,
+    so a stale cache degrades to the old behavior, never to an error or
+    to another table's row counts."""
     import base64
     import json
 
@@ -573,6 +595,8 @@ def _restore_table_stats(
         with open(path) as f:
             snap = json.load(f)
         if snap.get("files") != _files_fingerprint(sf_dir, table):
+            return False
+        if _ntz_columns(spark, f"{db}.{table}") & set(snap.get("columns", ())):
             return False
         jvm = spark._jvm
         cat = spark._jsparkSession.sessionState().catalog()

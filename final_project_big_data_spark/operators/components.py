@@ -18,8 +18,23 @@ Oracle: DuckDB ``WITH RECURSIVE`` reachability (queries/dedup.py d07).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def sorted_pairs() -> Column:
+    """Every ``(a, b)`` pair with ``a < b`` of an ascending ``ids`` array,
+    as array<struct<a, b>>: element i pairs with each later element, so a
+    bucket of size s yields s·(s-1)/2 structs and no self-pairs. The
+    candidate-edge expansion of every blocked pair generator (LSH bands,
+    mh0 buckets, d15's shingle postings, x08's per-part suppliers); the
+    output is quadratic in the bucket, which ``lsh_candidate_pairs``
+    caps before exploding it."""
+    return F.expr(
+        "flatten(transform(ids, (x, i) ->"
+        " transform(slice(ids, i + 2, size(ids) - i - 1),"
+        " y -> struct(x AS a, y AS b))))"
+    )
 
 
 def connected_components(

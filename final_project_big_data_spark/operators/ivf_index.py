@@ -28,24 +28,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import data_files, read_parquet
+from final_project_big_data_spark.operators.vector import dot_fold
 
 
-def _quantized_postings(assigned: DataFrame) -> DataFrame:
-    """The s05 int8 scalar-quantization codec as a STORAGE layout:
-    (vec_id, mn, sc, q, centroid_id) with the per-dim level array
-    shifted to tinyint — 1 byte per dimension in the persisted postings
-    instead of 8 (the serving-layout payoff; measured on-disk ratio
-    pinned by tests/test_indexing.py). The grid is IDENTICAL to s05's
-    (``floor((x-mn)/sc + 0.5)``), so the dequantized floats reproduce
-    s05-style scoring bit-for-bit. sc == 0 (constant vector) stores
-    level 0 for every dim — dequant ``mn + (q+128)·sc`` then reproduces
-    mn exactly without the ANSI divide-by-zero the unguarded grid would
-    hit."""
+def _quantized_postings(df: DataFrame) -> DataFrame:
+    """The int8 scalar-quantization codec (s05, and the quantized IVF
+    postings): (vec_id, v, ...) → (vec_id, mn, sc, q, ...) with the
+    per-vector 256-level grid ``floor((x-mn)/sc + 0.5)`` shifted to
+    tinyint — 1 byte per dimension in the persisted postings instead of
+    8 (the serving-layout payoff; measured on-disk ratio pinned by
+    tests/test_indexing.py). ``nv`` is dropped; other columns are kept.
+    sc == 0 (constant vector) stores level 0 for every dim — dequant
+    ``mn + (q+128)·sc`` then reproduces mn exactly without the ANSI
+    divide-by-zero the unguarded grid would hit. ``dequantized_sql`` is
+    the DuckDB half."""
+    keep = [c for c in df.columns if c not in ("vec_id", "v", "nv")]
     mn, mx = F.array_min("v"), F.array_max("v")
-    base = assigned.select(
+    base = df.select(
         "vec_id",
         "v",
-        "centroid_id",
+        *keep,
         mn.alias("mn"),
         ((mx - mn) / 255.0).alias("sc"),
     )
@@ -60,17 +62,43 @@ def _quantized_postings(assigned: DataFrame) -> DataFrame:
             ).cast("byte"),
         )
     )
-    return base.select("vec_id", "mn", "sc", q.alias("q"), "centroid_id")
+    return base.select("vec_id", "mn", "sc", q.alias("q"), *keep)
 
 
 def dequantize_expr():
     """array<double> reconstruction from (q, mn, sc): the float sequence
-    ``mn + level·sc`` is the exact grid s05 scores on (levels round-trip
-    int8 storage losslessly, so the doubles are bit-identical)."""
+    ``mn + level·sc`` (levels round-trip int8 storage losslessly)."""
     return F.transform(
         "q",
         lambda c: F.col("mn") + (c.cast("double") + 128.0) * F.col("sc"),
     )
+
+
+def dequantized(df: DataFrame) -> DataFrame:
+    """(vec_id, mn, sc, q, ...) → (vec_id, v, ..., nv): the scoring
+    vectors of the int8 codec, with their norm."""
+    keep = [c for c in df.columns if c not in ("vec_id", "mn", "sc", "q")]
+    return df.select("vec_id", dequantize_expr().alias("v"), *keep).withColumn(
+        "nv", F.sqrt(dot_fold(F.col("v"), F.col("v")))
+    )
+
+
+def dequantized_sql(src: str, *keep: str) -> str:
+    """DuckDB half of the int8 codec: the subquery of ``src``'s (vec_id,
+    *keep) with ``v`` replaced by its grid reconstruction, plus ``nv`` —
+    the same ``mn + level·sc`` doubles ``dequantized`` scores on."""
+    cols = ", ".join(("vec_id",) + keep)
+    return f"""(
+      SELECT {cols}, v, sqrt(list_dot_product(v, v)) AS nv
+      FROM (SELECT {cols},
+                   CASE WHEN sc = 0 THEN list_transform(v, x -> mn)
+                        ELSE list_transform(
+                               v, x -> mn + floor((x - mn) / sc + 0.5) * sc)
+                   END AS v
+            FROM (SELECT {cols}, v, list_aggregate(v, 'min') AS mn,
+                         (list_aggregate(v, 'max') - list_aggregate(v, 'min'))
+                           / 255.0 AS sc
+                  FROM {src})))"""
 
 
 def save_ivf_index(
@@ -118,11 +146,7 @@ def load_ivf_index(
     cents = read_parquet(spark, os.path.join(path, "centroids"))
     assigned = read_parquet(spark, os.path.join(path, "postings"))
     if "q" in assigned.columns:
-        from final_project_big_data_spark.operators.vector import dot_fold
-
-        assigned = assigned.select(
-            "vec_id", dequantize_expr().alias("v"), "centroid_id"
-        ).withColumn("nv", F.sqrt(dot_fold(F.col("v"), F.col("v"))))
+        assigned = dequantized(assigned)
     kdf = read_parquet(spark, os.path.join(path, "meta"))
     return cents, assigned, kdf
 
@@ -206,8 +230,8 @@ def append_to_lsh_index(
     corpus-independent, ``append(A, B)`` is row-identical to
     ``fresh(A ∪ B)`` — not just same-query-results but same index bytes
     modulo file layout; s08 pins that equality against the fresh-build
-    oracle every round. Small-file accumulation across appends is
-    handled by ``compact_ivf_postings(path, subdir="tables")``."""
+    oracle. Small-file accumulation across appends is handled by
+    ``compact_ivf_postings(path, subdir="tables")``."""
     from final_project_big_data_spark.queries.similarity import _sign_vectors
 
     en = new_vectors.select(

@@ -99,7 +99,7 @@ def x05(spark: SparkSession, sf: str) -> DataFrame:
     ``bounded_graph=True``: the edge set is ≤2000 rows at ANY scale
     factor (``o_orderkey < 2000`` + modulo-classed endpoints), so the
     iteration broadcasts it instead of shuffling the rank frame three
-    times per round (round-12 optimization, see pagerank's docstring).
+    times per round (see pagerank's docstring).
     """
     from final_project_big_data_spark.io import load_table
     from final_project_big_data_spark.operators.pagerank import pagerank
@@ -161,6 +161,7 @@ def x08(spark: SparkSession, sf: str) -> DataFrame:
     agree on every per-node count.
     """
     from final_project_big_data_spark.io import load_table
+    from final_project_big_data_spark.operators.components import sorted_pairs
 
     ps = (
         load_table(spark, sf, "lineitem")
@@ -172,15 +173,7 @@ def x08(spark: SparkSession, sf: str) -> DataFrame:
         ps.groupBy("l_partkey")
         .agg(F.sort_array(F.collect_set("l_suppkey")).alias("ids"))
         .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) ->"
-                    " transform(slice(ids, i + 2, size(ids) - i - 1),"
-                    " y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("p")
-        )
+        .select(F.explode(sorted_pairs()).alias("p"))
         .select("p.a", "p.b")
         .distinct()
     )
@@ -274,23 +267,23 @@ def x09(spark: SparkSession, sf: str) -> DataFrame:
     Like x05 the loop is UNROLLED into one lazy plan (no build-time
     jobs): at 100 TB each round is one shuffle on dst, and a real
     cluster run would localCheckpoint every few rounds to truncate
-    lineage exactly as operators/components.py does. (A round-12
-    interim added ``localCheckpoint(eager=False)`` per round here —
-    reverted: under AQE a lazy local checkpoint still materializes all
-    upstream query stages at BUILD time, breaking the zero-jobs
-    contract and moving compute outside the caller's timed action.)
+    lineage exactly as operators/components.py does. (No
+    ``localCheckpoint(eager=False)`` per round here: under AQE a lazy
+    local checkpoint still materializes all upstream query stages at
+    BUILD time, breaking the zero-jobs contract and moving compute
+    outside the caller's timed action.)
 
-    Round-12 optimization (guide §2.4 "remove shuffles outright"): the
-    edge set is BOUNDED BY CONSTRUCTION (``o_orderkey < 2000`` ⇒ ≤2000
-    edges over ≤97+89 modulo-classed nodes at ANY scale factor), so the
-    per-round relaxation joins a BROADCAST step relation (real edges at
-    weight 1 + a weight-0 self-loop per node — see the inline comment)
-    and the iterating ``dist`` frame only crosses the one tiny min-agg
-    exchange per round (previously three exchanges; min-plus over
-    integers, so join strategy cannot change any value). The self-loop
-    makes each round reference the previous round ONCE, collapsing the
-    2^k logical-plan growth of the old dist⟕relax(dist) merge to
-    linear. A frontier that GREW with the data would instead keep the
+    Shuffles removed outright (SCALE.md, "Same-day sf0.1 A/B": x09
+    1.206 → 0.551 s): the edge set is BOUNDED BY CONSTRUCTION
+    (``o_orderkey < 2000`` ⇒ ≤2000 edges over ≤97+89 modulo-classed
+    nodes at ANY scale factor), so the per-round relaxation joins a
+    BROADCAST step relation (real edges at weight 1 + a weight-0
+    self-loop per node — see the inline comment) and the iterating
+    ``dist`` frame only crosses the one tiny min-agg exchange per round
+    (previously three exchanges; min-plus over integers, so join
+    strategy cannot change any value). The self-loop makes each round
+    reference the previous round ONCE, collapsing the 2^k logical-plan
+    growth of the old dist⟕relax(dist) merge to linear. A frontier that GREW with the data would instead keep the
     shuffle and checkpoint per round.
     """
     from final_project_big_data_spark.io import load_table
@@ -308,7 +301,7 @@ def x09(spark: SparkSession, sf: str) -> DataFrame:
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    # Min-plus STEP relation (round-12): the real edges at weight 1 plus
+    # Min-plus STEP relation: the real edges at weight 1 plus
     # a weight-0 self-loop per node, so one join + one min-aggregation
     # computes d' (v) = min(d(v)+0, min_{u→v} d(u)+1) — identical to the
     # old least(dist, relax) merge (min and least both skip NULLs; a

@@ -20,8 +20,8 @@ even MinHash/SimHash hash-match DuckDB.
 
 Scale posture (100 TB): no O(n²) anywhere global — pair generation is
 always blocked (LSH band key, (lang, size-bucket), label, centroid),
-i.e. an equi-join that shuffles on the block key — and since round 9
-the block KNOBS are data-derived, identically in the oracles: d03's
+i.e. an equi-join that shuffles on the block key — and the block
+KNOBS are data-derived, identically in the oracles: d03's
 bands/rows come from corpus count (r=1 <1k docs, 2 <1M, 4 beyond —
 bucket load ≈ n·j_bg^r needs r growing with n), and d05/d12's length
 bucket width w = max(1, ceil(32·range/n)) keeps expected blocks ~32
@@ -33,10 +33,15 @@ tests/test_dedup.py; the r=4 regime is oracle-checked at 1.25M docs
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table
+from final_project_big_data_spark.operators.components import (
+    connected_components,
+    connected_components_star,
+    sorted_pairs,
+)
 from final_project_big_data_spark.operators.text import (
     md5_int,
     md5_int_sql,
@@ -182,8 +187,6 @@ def lsh_candidate_pairs(
     is a degenerate band, not a dup cluster — dropping it loses no real
     candidates (those pairs recur in other bands; add bands for recall).
     """
-    from pyspark.sql import Window as W
-
     wb = W.partitionBy(band_col)
     kept = mh.withColumn("_bsz", F.count(F.lit(1)).over(wb)).filter(
         (F.col("_bsz") >= 2) & (F.col("_bsz") <= max_bucket)
@@ -191,17 +194,9 @@ def lsh_candidate_pairs(
     buckets = kept.groupBy(band_col).agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) ->"
-        " transform(slice(ids, i + 2, size(ids) - i - 1),"
-        " y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-    return (
-        buckets.select(
-            F.col(band_col).alias("band_key"), F.explode(pair_expr).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b", "band_key")
-    )
+    return buckets.select(
+        F.col(band_col).alias("band_key"), F.explode(sorted_pairs()).alias("p")
+    ).select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"), "band_key")
 
 
 def _lsh_r_case_sql() -> str:
@@ -241,11 +236,11 @@ _SIG_COLS = ", ".join(f"mh{i}" for i in range(_N_MINHASH))
     category="dedup",
 )
 def d03(spark: SparkSession, sf: str) -> DataFrame:
-    """LSH banding with DATA-DERIVED band structure (round 9, VERDICT r8
-    #2): the signature's 8 minhashes split into b = 8/r bands
-    of r rows, where r comes from the corpus row count via a broadcast
-    1-row knob join (the same derived-knob posture as the IVF family's
-    k = ⌈√n⌉): r=1 under 1k docs, r=2 under 1M, r=4 beyond. Rationale:
+    """LSH banding with DATA-DERIVED band structure (SCALE.md,
+    "Data-derived LSH banding"): the signature's 8 minhashes split into
+    b = 8/r bands of r rows, where r comes from the corpus row count via
+    a broadcast 1-row knob join (the same derived-knob posture as the IVF
+    family's k = ⌈√n⌉): r=1 under 1k docs, r=2 under 1M, r=4 beyond. Rationale:
     two UNRELATED docs collide on an r-row band with probability
     ≈ j_bg^r (j_bg = background shingle-set Jaccard), so expected bucket
     load per doc is n·j_bg^r — a FIXED r that is fine at 60k docs is
@@ -348,103 +343,118 @@ def d04(spark: SparkSession, sf: str) -> DataFrame:
     return _simhash_df(spark, sf).orderBy("doc_id")
 
 
+def _block_width(div: str) -> str:
+    """The length-bucket width ``w = max(1, ceil(32 · rng / n))`` in exact
+    integer arithmetic over the 1-row (n, rng) aggregate; ``div`` is the
+    engine's integer division (Spark ``div``, DuckDB ``//``)."""
+    return f"greatest(1, (32 * rng + n - 1) {div} n)"
+
+
+def length_block_pairs(
+    docs: DataFrame, rows: DataFrame, cond: Column | None = None
+) -> DataFrame:
+    """Candidate pairs ``a``/``b`` of ``rows`` (doc_id, lang, n_chars, ...)
+    blocked on (lang, length bucket) — d05's and d12's one blocking rule.
+
+    - Width: ``_block_width`` from a broadcast 1-row knob over ``docs``
+      (the whole corpus), so the expected block stays ~32 docs at any
+      corpus size. A FIXED width grows blocks ∝ n and within-block pair
+      work ∝ n² (SURVEY §7.4).
+    - Boundary recall: each row is emitted into its bucket AND the next,
+      so near-dups one bucket apart still meet on an equi-key, and
+      ``block = greatest(bucket_a, bucket_b)`` keeps each pair once.
+    - The pair work runs inside the join stage, so both sides are
+      pre-partitioned on the join keys at core count (one shared
+      partitioning, no extra exchange): a data-sized count starves these
+      compute-bound joins (d12 65 s → 10 s, d05 3.7 s → 2.1 s at 5k docs).
+
+    ``cond`` adds to the join condition. ``length_blocks_sql`` is the
+    DuckDB half.
+    """
+    knob = docs.agg(
+        F.count(F.lit(1)).alias("n"),
+        (F.max("n_chars") - F.min("n_chars") + 1).alias("rng"),
+    ).select(F.expr(_block_width("div")).alias("w"))
+    cand = (
+        rows.crossJoin(F.broadcast(knob))  # 1-row knob: lazy, no count()
+        .select(*rows.columns, F.expr("n_chars div w").alias("bucket"))
+        .withColumn("block", F.explode(F.array("bucket", F.col("bucket") + 1)))
+        .repartition(
+            rows.sparkSession.sparkContext.defaultParallelism, "lang", "block"
+        )
+    )
+    a, b = cand.alias("a"), cand.alias("b")
+    on = (
+        (F.col("a.lang") == F.col("b.lang"))
+        & (F.col("a.block") == F.col("b.block"))
+        & (F.col("a.doc_id") < F.col("b.doc_id"))
+        & (F.col("a.block") == F.greatest(F.col("a.bucket"), F.col("b.bucket")))
+    )
+    return a.join(b, on if cond is None else on & cond)
+
+
+def length_blocks_sql(rows: str, *cols: str, cond: str = "") -> str:
+    """DuckDB half of ``length_block_pairs``: CTEs ending in ``blocked``
+    (doc_a, doc_b, and ``<col>_a``/``<col>_b`` per ``cols``), the
+    candidate pairs of the relation ``rows`` (doc_id, lang, n_chars,
+    ...). ``cond`` is appended to the join condition."""
+    sides = "".join(f", a.{c} AS {c}_a, b.{c} AS {c}_b" for c in cols)
+    return f"""knob AS (
+      SELECT {_block_width("//")} AS w
+      FROM (SELECT count(*) AS n, max(n_chars) - min(n_chars) + 1 AS rng
+            FROM documents)
+    ),
+    bucketed AS (SELECT r.*, r.n_chars // k.w AS bucket FROM {rows} r, knob k),
+    cand AS (SELECT *, unnest([bucket, bucket + 1]) AS block FROM bucketed),
+    blocked AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b{sides}
+      FROM cand a JOIN cand b
+        ON a.lang = b.lang AND a.block = b.block AND a.doc_id < b.doc_id
+           AND a.block = GREATEST(a.bucket, b.bucket) {cond}
+    )"""
+
+
 @query(
     "d05_ngram_jaccard_pairs",
     oracle=f"""
     WITH sh AS ({_SHINGLE_SQL}),
-    knob AS (
-      SELECT GREATEST(1, (32 * (max(n_chars) - min(n_chars) + 1)
-                          + count(*) - 1) // count(*)) AS w
-      FROM documents
-    ),
     docsets AS (
-      SELECT s.doc_id, d.lang, d.n_chars // k.w AS bucket,
-             list_sort(list(s.shingle)) AS shset
-      FROM sh s JOIN documents d ON s.doc_id = d.doc_id, knob k
-      GROUP BY s.doc_id, d.lang, d.n_chars // k.w
+      SELECT s.doc_id, d.lang, d.n_chars, list_sort(list(s.shingle)) AS shset
+      FROM sh s JOIN documents d ON s.doc_id = d.doc_id
+      GROUP BY s.doc_id, d.lang, d.n_chars
     ),
-    cand AS (
-      SELECT doc_id, lang, bucket, shset,
-             unnest([bucket, bucket + 1]) AS block
-      FROM docsets
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           round(len(list_intersect(a.shset, b.shset)) * 1.0
-                 / len(list_distinct(list_concat(a.shset, b.shset))), 4) AS jaccard
-    FROM cand a JOIN cand b
-      ON a.lang = b.lang AND a.block = b.block AND a.doc_id < b.doc_id
-         AND a.block = GREATEST(a.bucket, b.bucket)
-    WHERE len(list_intersect(a.shset, b.shset)) * 1.0
-          / len(list_distinct(list_concat(a.shset, b.shset))) >= 0.01
+    {length_blocks_sql("docsets", "shset")}
+    SELECT doc_a, doc_b,
+           round(len(list_intersect(shset_a, shset_b)) * 1.0
+                 / len(list_distinct(list_concat(shset_a, shset_b))), 4) AS jaccard
+    FROM blocked
+    WHERE len(list_intersect(shset_a, shset_b)) * 1.0
+          / len(list_distinct(list_concat(shset_a, shset_b))) >= 0.01
     ORDER BY doc_a, doc_b
     """,
     category="dedup",
 )
 def d05(spark: SparkSession, sf: str) -> DataFrame:
-    """n-gram Jaccard near-dup: blocked pairs → shingle-set overlap.
-
-    Round 9 (VERDICT r8 #2): the length-bucket width is DATA-DERIVED —
-    ``w = max(1, ceil(32 · length_range / n))`` from a broadcast 1-row
-    knob (pure int64 arithmetic, identical in the oracle), so the
-    expected block size stays ~32 docs at ANY corpus size: a FIXED
-    width means blocks grow ∝ n and within-block pair work ∝ n² — the
-    fixed-knob quadratic lesson (SURVEY §7.4) applied to blocking.
-    Boundary recall: each doc is emitted into its own bucket AND the
-    next (still an equi-join), with ``block = greatest(bucket_a,
-    bucket_b)`` collapsing the double-match, so two near-dups straddling
-    a bucket edge are no longer silently missed — pinned by
+    """n-gram Jaccard near-dup: length-blocked pairs
+    (``length_block_pairs``) → shingle-set overlap. Planted near-dup
+    recall across bucket edges is pinned by
     tests/test_dedup.py::test_jaccard_planted_duplicate_recall.
 
     The 0.01 threshold marks "shares ≥ 2 shingles" on this synthetic
     corpus.
     """
-    sh = _shingled(spark, sf)
     docs = load_table(spark, sf, "documents")
-    knob = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.max("n_chars") - F.min("n_chars") + 1).alias("rng"),
-    ).select(
-        F.greatest(
-            F.lit(1).cast("long"), F.expr("(32 * rng + n - 1) div n")
-        ).alias("w")
-    )
-    d = (
-        docs.crossJoin(F.broadcast(knob))  # 1-row knob: lazy, no count()
-        .select("doc_id", "lang", F.expr("n_chars div w").alias("bucket"))
-    )
     docsets = (
-        sh.join(d, "doc_id")
-        .groupBy("doc_id", "lang", "bucket")
+        _shingled(spark, sf)
+        .join(docs.select("doc_id", "lang", "n_chars"), "doc_id")
+        .groupBy("doc_id", "lang", "n_chars")
         .agg(F.sort_array(F.collect_list("shingle")).alias("shset"))
     )
-    # two-key emission: a doc lands in its bucket and the next, so pairs
-    # one apart still meet on an EQUI key; greatest() dedupes same-bucket
-    # pairs that would otherwise match twice
-    cand = docsets.withColumn(
-        "block", F.explode(F.array(F.col("bucket"), F.col("bucket") + 1))
-    )
-    # same compute-bound widening as d12 (the set intersections run in
-    # the join stage): pre-partition on the join keys at core count —
-    # shared partitioning, no extra exchange (3.7 s → 2.1 s at 5k docs)
-    cand = cand.repartition(
-        spark.sparkContext.defaultParallelism, "lang", "block"
-    )
-    a = cand.alias("a")
-    b = cand.alias("b")
     inter = F.size(F.array_intersect(F.col("a.shset"), F.col("b.shset")))
     union = F.size(F.array_union(F.col("a.shset"), F.col("b.shset")))
     jac = inter * 1.0 / union
     return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                F.col("a.block")
-                == F.greatest(F.col("a.bucket"), F.col("b.bucket"))
-            ),
-        )
+        length_block_pairs(docs, docsets)
         .where(jac >= 0.01)
         .select(
             F.col("a.doc_id").alias("doc_a"),
@@ -518,31 +528,20 @@ _CLUSTERS_SQL = (
 )
 
 
-def _mh0_clusters(spark: SparkSession, sf: str) -> DataFrame:
+def _mh0_clusters(spark: SparkSession, sf: str, star: bool = False) -> DataFrame:
     """(doc_id, cluster_id) via mh0-blocked pairs + connected components —
-    the Spark twin of ``_CLUSTERS_SQL``, shared by d07 and d13."""
-    from final_project_big_data_spark.operators.components import (
-        connected_components,
-    )
-
+    the Spark twin of ``_CLUSTERS_SQL``, shared by d07, d13 and x07
+    (``star=True``: the large-star/small-star algorithm)."""
     mh = _shingled(spark, sf).groupBy("doc_id").agg(*_minhash_exprs())
     pairs = (
         mh.groupBy("mh0")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) ->"
-                    " transform(slice(ids, i + 2, size(ids) - i - 1),"
-                    " y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("p")
-        )
+        .select(F.explode(sorted_pairs()).alias("p"))
         .select("p.a", "p.b")
     )
-    nodes = mh.select("doc_id")
-    cc = connected_components(nodes, pairs, id_col="doc_id")
+    components = connected_components_star if star else connected_components
+    cc = components(mh.select("doc_id"), pairs, id_col="doc_id")
     return cc.select(F.col("id").alias("doc_id"), "cluster_id")
 
 
@@ -601,8 +600,8 @@ def d13(spark: SparkSession, sf: str) -> DataFrame:
     enter the minhash/cluster graph — they are unioned back as singleton
     survivors (cluster_id = own doc_id) in BOTH builder and oracle, so
     the conservation property sum(n_merged) == corpus rows holds for ANY
-    corpus, not just shingle-complete fixtures (ADVICE r9; pinned in
-    tests/test_round10_ops.py with a short-doc corpus).
+    corpus, not just shingle-complete fixtures (pinned in
+    tests/test_dedup.py with a short-doc corpus).
     """
     cc = _mh0_clusters(spark, sf)
     singletons = (
@@ -703,21 +702,8 @@ d08.__doc__ = d08.__doc__.format(m=_BLOOM_M)
 
 @query(
     "x07_components_star",
-    oracle=_MINHASH_SQL.replace("WITH ", "WITH RECURSIVE ", 1)
-    + """,
-    pairs AS (
-      SELECT a.doc_id AS pa, b.doc_id AS pb
-      FROM mh a JOIN mh b ON a.mh0 = b.mh0 AND a.doc_id < b.doc_id
-    ),
-    edges AS (SELECT pa, pb FROM pairs UNION SELECT pb, pa FROM pairs),
-    reach(doc_id, r) AS (
-      SELECT doc_id, doc_id FROM mh
-      UNION
-      SELECT e.pb, reach.r FROM reach JOIN edges e ON e.pa = reach.doc_id
-    )
-    SELECT doc_id, min(r) AS cluster_id FROM reach GROUP BY doc_id
-    ORDER BY doc_id
-    """,
+    oracle=_CLUSTERS_SQL
+    + "SELECT doc_id, cluster_id FROM clusters ORDER BY doc_id",
     category="dedup",
 )
 def x07(spark: SparkSession, sf: str) -> DataFrame:
@@ -727,30 +713,4 @@ def x07(spark: SparkSession, sf: str) -> DataFrame:
     deep. Same LSH pairs, same recursive-CTE oracle as d07: the two
     implementations are cross-validated against the identical exact answer.
     """
-    from final_project_big_data_spark.operators.components import (
-        connected_components_star,
-    )
-
-    mh = _shingled(spark, sf).groupBy("doc_id").agg(*_minhash_exprs())
-    pairs = (
-        mh.groupBy("mh0")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) ->"
-                    " transform(slice(ids, i + 2, size(ids) - i - 1),"
-                    " y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-    )
-    nodes = mh.select("doc_id")
-    cc = connected_components_star(nodes, pairs, id_col="doc_id")
-    return cc.select(F.col("id").alias("doc_id"), "cluster_id").orderBy(
-        "doc_id"
-    )
-
-
+    return _mh0_clusters(spark, sf, star=True).orderBy("doc_id")

@@ -1,6 +1,5 @@
-"""Passage/chunk-level text dedup (split from dedup.py, round 11 — zero
-plan/oracle changes): fixed-width chunk dedup (d09), prefix-filtered
-Jaccard similarity join (d11), banded edit-distance pairs (d12),
+"""Passage/chunk-level text dedup: fixed-width chunk dedup (d09),
+prefix-filtered Jaccard similarity join (d11), banded edit-distance pairs (d12),
 content-defined chunking + CDC dedup (d14), and inverted-index
 containment pairs (d15). Signature-based dedup (exact, MinHash/LSH,
 SimHash, bloom, clusters) stays in ``dedup.py``, which owns the shingle
@@ -24,6 +23,8 @@ from final_project_big_data_spark.queries import query
 from final_project_big_data_spark.queries.dedup import (
     _SHINGLE_SQL,
     _shingled,
+    length_block_pairs,
+    length_blocks_sql,
     lsh_candidate_pairs,
 )
 
@@ -234,42 +235,26 @@ _EDIT_T = 80  # absolute edit-distance threshold (~5th pct of blocked pairs)
 @query(
     "d12_edit_distance_pairs",
     oracle=f"""
-    WITH knob AS (
-      SELECT GREATEST(1, (32 * (max(n_chars) - min(n_chars) + 1)
-                          + count(*) - 1) // count(*)) AS w
-      FROM documents
-    ),
-    d AS (
-      SELECT doc_id, lang, n_chars, text, n_chars // k.w AS bucket
-      FROM documents, knob k
-    ),
-    cand AS (
-      SELECT doc_id, lang, n_chars, text, bucket,
-             unnest([bucket, bucket + 1]) AS block
-      FROM d
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(levenshtein(a.text, b.text) AS INT) AS edit_dist
-    FROM cand a JOIN cand b
-      ON a.lang = b.lang AND a.block = b.block AND a.doc_id < b.doc_id
-         AND a.block = GREATEST(a.bucket, b.bucket)
-         AND abs(a.n_chars - b.n_chars) <= {_EDIT_T}
-    WHERE levenshtein(a.text, b.text) <= {_EDIT_T}
+    WITH {length_blocks_sql(
+        "documents", "text", cond=f"AND abs(a.n_chars - b.n_chars) <= {_EDIT_T}"
+    )}
+    SELECT doc_a, doc_b, CAST(levenshtein(text_a, text_b) AS INT) AS edit_dist
+    FROM blocked
+    WHERE levenshtein(text_a, text_b) <= {_EDIT_T}
     ORDER BY doc_a, doc_b
     """,
     category="dedup",
 )
 def d12(spark: SparkSession, sf: str) -> DataFrame:
     """Edit-distance near-dup pairs: blocked candidates → BANDED
-    levenshtein (round 9) — the character-level complement to d05's
+    levenshtein — the character-level complement to d05's
     token-set Jaccard (catches shuffled-word or heavy-punctuation
     near-copies that shingles miss, and vice versa).
 
     Scale shape, three nested prunes so the O(len²) DP only ever runs
-    on plausible pairs: (1) the d05 blocking scheme verbatim —
-    data-derived bucket width ``w = max(1, ceil(32·range/n))`` keeps
-    expected blocks ~32 docs at any corpus size, adjacent-bucket
-    emission keeps boundary recall, the join stays an equi-join;
+    on plausible pairs: (1) d05's blocking rule, ``length_block_pairs``
+    (expected blocks ~32 docs at any corpus size, boundary recall
+    kept, the join stays an equi-join);
     (2) the length filter ``|len_a − len_b| ≤ T`` (a NECESSARY condition
     for distance ≤ T) cuts pairs before any text comparison;
     (3) Spark's threshold form ``levenshtein(a, b, T)`` runs the BANDED
@@ -278,10 +263,10 @@ def d12(spark: SparkSession, sf: str) -> DataFrame:
     the same predicates: identical surviving pairs, identical distances
     (values ≤ T are exact in both forms).
 
-    Measured cost profile (round 9): ~24 s at 500 docs → ~65 s Spark /
-    ~24 s DuckDB at 5,000 — LINEAR in corpus size at fixed block size
-    (pairs ≈ 16·n), and the per-pair DP is identical work in both
-    engines, so the 2.7× ratio is string-kernel constant, not a plan
+    Measured cost profile (SCALE.md, d05/d12 volume proof): ~24 s at
+    500 docs → ~65 s Spark / ~24 s DuckDB at 5,000 — LINEAR in corpus
+    size at fixed block size (pairs ≈ 16·n), and the per-pair DP is
+    identical work in both engines, so the 2.7× ratio is string-kernel constant, not a plan
     defect. This is the expensive member of the dedup family BY NATURE
     (character-level DP vs d03/d05's hash/set arithmetic); at 100 TB it
     runs as the final verification pass on LSH/Jaccard CANDIDATES, not
@@ -289,45 +274,12 @@ def d12(spark: SparkSession, sf: str) -> DataFrame:
     blocking scheme enables.
     """
     docs = load_table(spark, sf, "documents")
-    knob = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.max("n_chars") - F.min("n_chars") + 1).alias("rng"),
-    ).select(
-        F.greatest(
-            F.lit(1).cast("long"), F.expr("(32 * rng + n - 1) div n")
-        ).alias("w")
-    )
-    d = docs.crossJoin(F.broadcast(knob)).select(
-        "doc_id", "lang", "n_chars", "text",
-        F.expr("n_chars div w").alias("bucket"),
-    )
-    cand = d.withColumn(
-        "block", F.explode(F.array(F.col("bucket"), F.col("bucket") + 1))
-    )
-    # pre-partition on the JOIN KEYS at core count: the DP runs inside
-    # the join stage, and a data-sized shuffle count (10 partitions for a
-    # ~10 MB corpus) starves this COMPUTE-bound operator — both join
-    # sides share the partitioning so no extra exchange is planned
-    # (measured 65 s → 10 s at 5k docs on local[32])
-    cand = cand.repartition(
-        spark.sparkContext.defaultParallelism, "lang", "block"
-    )
-    a = cand.alias("a")
-    b = cand.alias("b")
     dist = F.levenshtein(F.col("a.text"), F.col("b.text"), _EDIT_T)
     return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                F.col("a.block")
-                == F.greatest(F.col("a.bucket"), F.col("b.bucket"))
-            )
-            & (
-                F.abs(F.col("a.n_chars") - F.col("b.n_chars")) <= _EDIT_T
-            ),
+        length_block_pairs(
+            docs,
+            docs.select("doc_id", "lang", "n_chars", "text"),
+            F.abs(F.col("a.n_chars") - F.col("b.n_chars")) <= _EDIT_T,
         )
         .select(
             F.col("a.doc_id").alias("doc_a"),
@@ -337,7 +289,6 @@ def d12(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("edit_dist") != -1)
         .orderBy("doc_a", "doc_b")
     )
-
 
 
 # ----------------------------------------- content-defined chunking (CDC)
@@ -363,7 +314,7 @@ def _cdc_starts() -> Column:
 # exclusive end offsets = starts shifted left, with size(w)+1 appended;
 # materialized as its OWN column (``cdc_ends``) so the per-chunk lambda
 # below does a plain element_at instead of rebuilding the shifted array
-# per chunk — keeps extraction O(chunks), not O(chunks^2) (ADVICE r9)
+# per chunk — keeps extraction O(chunks), not O(chunks^2)
 _CDC_ENDS = (
     "concat(slice(cdc_starts, 2, size(cdc_starts) - 1),"
     " array(size(w) + 1))"

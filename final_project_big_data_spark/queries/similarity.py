@@ -5,9 +5,10 @@
 - ``s03``: trained-IVF ANN (seeded init + one Lloyd pass, k = ⌈√n⌉).
 - ``s04``: blocked kNN self-join (corpus×corpus within label blocks).
 - ``s05``: int8 scalar-quantized top-k (the memory-side ANN trade).
-- ``s06``/``s07`` (round 9): the SERVING paths — persisted LSH hash
+- ``s06``/``s07``: the SERVING paths — persisted LSH hash
   tables and the int8-quantized persisted IVF index, answered entirely
   from ``operators.ivf_index`` layouts.
+- ``s08``/``s09``: incremental maintenance of the persisted indexes.
 
 Every entry is value-hash oracle-checked: the hyperplanes/init seeds are
 deterministic constants, dot products fold in the same sequential order
@@ -21,12 +22,21 @@ s02/s03's bucketed joins or the MinHash/LSH machinery in ``dedup``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from final_project_big_data_spark.io import load_table, scratch_dir
+from final_project_big_data_spark.operators.ivf_index import (
+    _quantized_postings,
+    append_to_ivf_index,
+    append_to_lsh_index,
+    dequantized,
+    dequantized_sql,
+    ivf_topk_with_index,
+    lsh_topk_with_index,
+    save_ivf_index,
+    save_lsh_index,
+)
 from final_project_big_data_spark.operators.vector import (
     assign_centroids,
     block_pairs,
@@ -42,6 +52,20 @@ _TOP_K = 5
 _N_QUERIES = 10  # probe set: vec_id < 10
 
 
+def _top_k_sql() -> str:
+    """The DuckDB half of ``_rank_top_k``: every ANN oracle ends in a CTE
+    ``scored`` (query_id, neighbor_id, cs) followed by this tail."""
+    return f"""
+    SELECT query_id, neighbor_id, round(cs, 4) AS cos_sim,
+           CAST(rnk AS INT) AS rank
+    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                                       ORDER BY cs DESC, neighbor_id) AS rnk
+          FROM scored)
+    WHERE rnk <= {_TOP_K}
+    ORDER BY query_id, rank
+    """
+
+
 @query(
     "s01_cosine_topk",
     oracle=f"""
@@ -53,15 +77,8 @@ _N_QUERIES = 10  # probe set: vec_id < 10
                / (sqrt(list_dot_product(q.qv, q.qv))
                   * sqrt(list_dot_product(e.v, e.v))) AS cs
       FROM q JOIN e ON e.vec_id != q.query_id
-    )
-    SELECT query_id, neighbor_id, round(cs, 4) AS cos_sim,
-           CAST(rnk AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cs DESC, neighbor_id) AS rnk
-          FROM scored)
-    WHERE rnk <= {_TOP_K}
-    ORDER BY query_id, rank
-    """,
+    )"""
+    + _top_k_sql(),
     category="similarity",
 )
 def s01(spark: SparkSession, sf: str) -> DataFrame:
@@ -85,11 +102,12 @@ def s01(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _rank_top_k(scored: DataFrame) -> DataFrame:
-    """The s01/s05 tail: rank each probe's (query_id, neighbor_id, cs)
-    candidates by (cs DESC, neighbor_id) and keep ``_TOP_K``. The output
-    is bounded at _N_QUERIES*_TOP_K rows, so ``tiny_sorted`` orders it
-    without the range-bound sampling pass a plain orderBy would re-run
-    the window pipeline for (plans/ordering.py)."""
+    """The one ANN tail (s01–s03, s05–s09; ``_top_k_sql`` in DuckDB):
+    rank each probe's (query_id, neighbor_id, cs) candidates by
+    (cs DESC, neighbor_id) and keep ``_TOP_K``. The output is bounded at
+    |probes|·_TOP_K rows, so ``tiny_sorted`` orders it without the
+    range-bound sampling pass a plain orderBy would re-run the window
+    pipeline for (plans/ordering.py)."""
     from final_project_big_data_spark.plans.ordering import tiny_sorted
 
     w = W.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
@@ -154,15 +172,7 @@ def _s02_sql() -> str:
       SELECT p.query_id, b.vec_id AS neighbor_id,
              list_dot_product(p.qv, b.v) / (p.nq * b.nv) AS cs
       FROM probes p JOIN sig b ON p.probe = b.bucket AND p.query_id != b.vec_id
-    )
-    SELECT query_id, neighbor_id, round(cs, 4) AS cos_sim,
-           CAST(rnk AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cs DESC, neighbor_id) AS rnk
-          FROM scored)
-    WHERE rnk <= {_TOP_K}
-    ORDER BY query_id, rank
-    """
+    )""" + _top_k_sql()
 
 
 def _lsh_signed(spark: SparkSession, sf: str) -> DataFrame:
@@ -222,7 +232,6 @@ def _lsh_probe(probes_signed: DataFrame, signed: DataFrame) -> DataFrame:
         "probe",
     )
     cos = _dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
     # NO broadcast hint here, unlike _ivf_probe — measured both ways at
     # the 100× serving probe (SCALE.md, "Persisted-index serving"):
     # with only 2^n_planes = 16 buckets, multiprobe covers essentially
@@ -231,21 +240,12 @@ def _lsh_probe(probes_signed: DataFrame, signed: DataFrame) -> DataFrame:
     # made the bulk 200-probe query 2.8× SLOWER (29 → 87 s — the BHJ
     # inner loop re-evaluates the fat array-typed build rows per match,
     # where the shuffle join streams the 16 dense groups once).
-    return (
+    return _rank_top_k(
         probed.join(
             signed,
             (F.col("probe") == F.col("bucket"))
             & (F.col("query_id") != F.col("vec_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cos.alias("cs"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "neighbor_id", F.round("cs", 4).alias("cos_sim"), "rank")
-        .orderBy("query_id", "rank")
+        ).select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cs"))
     )
 
 
@@ -267,12 +267,12 @@ def s02(spark: SparkSession, sf: str) -> DataFrame:
     return _lsh_probe(signed.filter(F.col("vec_id") < _N_QUERIES), signed)
 
 
-# IVF sizing (round 5, found by the guarded 100× sweep): a FIXED centroid
-# count is a scale defect — d10's within-cluster pair join costs Σ|cluster|²
-# ≈ n²/k, so pinning k=16 made the pair stage grow quadratically with the
-# corpus (the 100× sweep hung there). k = ⌈√n⌉ balances the n·k assignment
-# work against the n²/k pair work (both are d-dim dot products, so √n is
-# the exact minimizer: total 2·n^1.5). nprobe then scales as ⌈k/8⌉ so the
+# IVF sizing (SCALE.md, "IVF centroid count is now data-derived"): a
+# FIXED centroid count is a scale defect — d10's within-cluster pair join
+# costs Σ|cluster|² ≈ n²/k, so pinning k=16 made the pair stage grow
+# quadratically with the corpus (the 100× sweep hung there). k = ⌈√n⌉
+# balances the n·k assignment work against the n²/k pair work (both are
+# d-dim dot products, so √n is the exact minimizer: total 2·n^1.5). nprobe then scales as ⌈k/8⌉ so the
 # scanned corpus fraction (nprobe/k) — and therefore recall — stays put as
 # data grows, until the _MAX_NPROBE cap lets the fraction shrink at
 # cluster scale (the honest ANN recall/cost trade, documented here rather
@@ -343,11 +343,10 @@ def _ivf_assign_sql(train_pred: str | None = None) -> str:
     posture). Default None keeps the SQL byte-identical to the
     all-corpus form the s03/s07/d10 oracles replay.
 
-    Memory shape, round-6 revision (found at the 1000× sweep, third
-    iteration of this lesson): the round-5 shape streamed the n×k
-    affinity relation as 3 scalars into a ``max(struct_pack(...))``
-    GROUP BY vec_id — but DuckDB's parallel grouped aggregation BUFFERS
-    ITS INPUT ROWS into radix partitions before aggregating (measured:
+    Memory shape (SCALE.md, "Guarded 1000× registry sweep"): streaming
+    the n×k affinity relation as 3 scalars into a
+    ``max(struct_pack(...))`` GROUP BY vec_id fails — DuckDB's parallel
+    grouped aggregation BUFFERS ITS INPUT ROWS into radix partitions before aggregating (measured:
     ~26 B/input-row regardless of the aggregate function, scalar max
     identical to struct max), so ANY group-by over the n×k relation
     costs ~26·n·k bytes — ~100 GB at the 1000× probe; the kernel
@@ -415,28 +414,23 @@ def _ivf_assign_sql(train_pred: str | None = None) -> str:
     )"""
 
 
-def _s03_sql() -> str:
-    """Full DuckDB mirror of the IVF plan, Lloyd pass included. The seeded
-    md5 init, the 8-decimal quantized per-dim means, and bit-exact dot
-    products make every stage replayable; argmax tie-breaks mirror the
-    Spark plan exactly (struct-max → aff DESC, centroid_id DESC; probe
-    ranking → aff DESC, centroid_id ASC).
+def _ivf_probe_sql(probes: str, postings: str) -> str:
+    """DuckDB half of ``_ivf_probe``, appended to ``_ivf_assign_sql``:
+    rank the centroids per probe vector of ``probes`` (aff DESC,
+    centroid_id ASC), take nprobe = ⌈k/8⌉ lists, exact re-rank over
+    ``postings`` (vec_id, v, nv, centroid_id), ``_top_k_sql`` tail.
 
     The probe ranking reads its OWN probe-only affinity CTE (``aff_q``,
-    ≤ _N_QUERIES×k rows) instead of filtering ``aff2`` — round-6 scale
-    fix (found by the guarded 1000× sweep): a CTE referenced twice is
-    MATERIALIZED by DuckDB, and aff2 is the n×k affinity relation
-    (~2.8e9 rows ≈ 100 GB at the 1000× probe; the kernel OOM-killed the
-    sweep's python at 107 GB anon RSS). Referenced once, aff2 streams
-    through best2's hash argmax in fixed memory. Same affinity values on
-    the probe subset — same dots, same ranking — so the result is
-    unchanged. This mirrors the Spark side, where the probe ranking is
-    likewise built from the ≤_N_QUERIES filtered corpus."""
-    return _ivf_assign_sql() + f""",
+    ≤ _N_QUERIES×k rows) instead of the corpus affinity relation:
+    DuckDB MATERIALIZES a CTE referenced twice, and the n×k relation is
+    ~100 GB at the 1000× probe. This mirrors the Spark side, where the
+    probe ranking is likewise built from the ≤_N_QUERIES filtered
+    corpus."""
+    return f""",
     aff_q AS (
       SELECT e.vec_id, e.v AS qv, e.nv AS nq, c.centroid_id,
              list_dot_product(e.v, c.cv) / (e.nv * c.nc) AS aff
-      FROM en e CROSS JOIN cents c
+      FROM {probes} e CROSS JOIN cents c
       WHERE e.vec_id < {_N_QUERIES}
     ),
     probes AS (
@@ -451,16 +445,9 @@ def _s03_sql() -> str:
     scored AS (
       SELECT p.query_id, b.vec_id AS neighbor_id,
              list_dot_product(p.qv, b.v) / (p.nq * b.nv) AS cs
-      FROM probes p JOIN assigned2 b
+      FROM probes p JOIN {postings} b
         ON p.probe_centroid = b.centroid_id AND p.query_id != b.vec_id
-    )
-    SELECT query_id, neighbor_id, round(cs, 4) AS cos_sim,
-           CAST(rnk AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cs DESC, neighbor_id) AS rnk FROM scored)
-    WHERE rnk <= {_TOP_K}
-    ORDER BY query_id, rank
-    """
+    )""" + _top_k_sql()
 
 
 def _ivf_assigned(spark: SparkSession, sf: str, where=None):
@@ -521,7 +508,11 @@ def _ivf_assigned(spark: SparkSession, sf: str, where=None):
     return en, cents, assign_centroids(en, cents, kernel), kdf
 
 
-@query("s03_ivf_ann_topk", oracle=_s03_sql(), category="similarity")
+@query(
+    "s03_ivf_ann_topk",
+    oracle=_ivf_assign_sql() + _ivf_probe_sql("en", "assigned2"),
+    category="similarity",
+)
 def s03(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-bucketed ANN: coarse quantize → inverted-list equi-join → exact
     cosine re-rank. The second scale path next to s02's LSH.
@@ -589,33 +580,23 @@ def _ivf_probe(
         )
     )
     cos = _dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
     # broadcast the probe side — bounded by |probes| × nprobe rows at any
     # corpus size, but its planner ESTIMATE flows from the corpus scan it
     # derives from, so without the hint the join goes shuffle — and the
     # persisted-index postings scan's dynamicpruningexpression silently
     # NO-OPS at runtime (DPP default reuseBroadcastOnly: nothing to
-    # reuse → the filter degenerates to true). Found and verified by the
-    # round-11 serving probe's FS bytes-read metric (SCALE.md,
-    # "Persisted-index serving"): with the hint, a 5-probe query
+    # reuse → the filter degenerates to true). Verified by the serving
+    # probe's FS bytes-read metric (SCALE.md, "Persisted-index
+    # serving"): with the hint, a 5-probe query
     # reads 1.3 MB of the 1.9 MB postings — factor 1.46, exactly the
     # 400/280 probed-list arithmetic — and runs 1.6× faster; the bulk
     # 200-probe shape is unchanged-to-better (6.8 → 6.4 s).
-    return (
+    return _rank_top_k(
         F.broadcast(probes).join(
             assigned,
             (F.col("probe_centroid") == F.col("centroid_id"))
             & (F.col("query_id") != F.col("vec_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cos.alias("cs"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "neighbor_id", F.round("cs", 4).alias("cos_sim"), "rank")
-        .orderBy("query_id", "rank")
+        ).select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cs"))
     )
 
 
@@ -718,8 +699,8 @@ def d10(spark: SparkSession, sf: str) -> DataFrame:
     This is the scale-defining trick of semantic dedup: the O(n²) cosine
     matrix is never built — pairs exist only inside a cluster (equi-join
     on ``centroid_id``), so cost is Σ|cluster|², tuned by the centroid
-    count. k = ⌈√n⌉ (data-derived since round 5 — a FIXED k made the
-    pair stage quadratic again and the guarded 100× sweep hung on it;
+    count. k = ⌈√n⌉ (data-derived — a FIXED k made the pair stage
+    quadratic again and the guarded 100× sweep hung on it;
     see ``_MIN_CENTROIDS``) keeps total pair work ~n^1.5. The pair join
     shuffles on centroid_id; skewed clusters are the known failure mode
     and the cap strategy from d03 (bucket-size limit) applies unchanged. Keeper
@@ -754,36 +735,15 @@ def d10(spark: SparkSession, sf: str) -> DataFrame:
     "s05_quantized_ann",
     oracle=f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q8 AS (
-      SELECT vec_id, v, list_aggregate(v, 'min') AS mn,
-             (list_aggregate(v, 'max') - list_aggregate(v, 'min')) / 255.0
-               AS sc
-      FROM e
-    ),
-    dq AS (
-      SELECT vec_id,
-             CASE WHEN sc = 0 THEN v
-                  ELSE list_transform(
-                         v, x -> mn + floor((x - mn) / sc + 0.5) * sc)
-             END AS v
-      FROM q8
-    ),
-    n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nv FROM dq),
+    n AS {dequantized_sql("e")},
     q AS (SELECT vec_id AS query_id, v AS qv, nv AS nq
           FROM n WHERE vec_id < {_N_QUERIES}),
     scored AS (
       SELECT q.query_id, n.vec_id AS neighbor_id,
              list_dot_product(q.qv, n.v) / (q.nq * n.nv) AS cs
       FROM q JOIN n ON n.vec_id != q.query_id
-    )
-    SELECT query_id, neighbor_id, round(cs, 4) AS cos_sim,
-           CAST(rnk AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cs DESC, neighbor_id) AS rnk
-          FROM scored)
-    WHERE rnk <= {_TOP_K}
-    ORDER BY query_id, rank
-    """,
+    )"""
+    + _top_k_sql(),
     category="similarity",
 )
 def s05(spark: SparkSession, sf: str) -> DataFrame:
@@ -791,120 +751,56 @@ def s05(spark: SparkSession, sf: str) -> DataFrame:
     the embedding to 256 levels, then cosine top-k over the DEQUANTIZED
     vectors — the standard memory-side ANN trade (4× smaller vectors in
     the index/serving tier, reconstruction error ≤ scale/2 per
-    dimension). The whole codec is JVM expression work (array_min/max +
-    one ``transform``); no UDF, no shuffle beyond s01's broadcast
-    probe×corpus shape. The oracle replays the identical codec in
-    DuckDB (same ``floor(·+0.5)`` grid, same sequential dot order), so
-    correctness covers the quantizer itself, not just the top-k;
-    ``tests/test_similarity.py`` additionally pins recall@{_TOP_K}
-    against the exact s01 ranking. At 100 TB the quantized corpus is
-    what ships to the ANN tier; s02/s03's bucketing composes on top
-    unchanged.
+    dimension). The codec is the quantized IVF index's own
+    (``ivf_index._quantized_postings`` → ``dequantized``), JVM expression
+    work only (array_min/max + ``transform``); no UDF, no shuffle beyond
+    s01's broadcast probe×corpus shape. The oracle replays the identical
+    codec in DuckDB (``dequantized_sql``: same ``floor(·+0.5)`` grid, same
+    sequential dot order), so correctness covers the quantizer itself,
+    not just the top-k; ``tests/test_similarity.py`` additionally pins
+    recall@{_TOP_K} against the exact s01 ranking. At 100 TB the
+    quantized corpus is what ships to the ANN tier; s02/s03's bucketing
+    composes on top unchanged.
     """
-    e = widen(load_table(spark, sf, "embeddings")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    mn, mx = F.array_min("v"), F.array_max("v")
-    q8 = e.select(
-        "vec_id", "v", mn.alias("mn"), ((mx - mn) / 255.0).alias("sc")
-    )
-    dq = q8.select(
-        "vec_id",
-        F.when(F.col("sc") == 0, F.col("v"))
-        .otherwise(
-            F.transform(
-                "v",
-                lambda x: F.col("mn")
-                + F.floor((x - F.col("mn")) / F.col("sc") + 0.5)
-                * F.col("sc"),
-            )
-        )
-        .alias("v"),
-    )
-    n = dq.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    e = normed(widen(load_table(spark, sf, "embeddings")), "vec_id")
+    n = dequantized(_quantized_postings(e))
     return _rank_top_k(probe_pairs(n, _N_QUERIES))
 
 
 @query("s06_persisted_lsh_topk", oracle=_s02_sql(), category="similarity")
 def s06(spark: SparkSession, sf: str) -> DataFrame:
     """The persisted-LSH SERVING path as a driver-checked entry
-    (round 9, VERDICT r8 #5): build the hash-table index
+    (SCALE.md, "Persisted-index serving"): build the hash-table index
     (``operators.ivf_index.save_lsh_index`` — signed corpus partitioned
     by bucket), then answer the s02 query exclusively FROM the index.
     The oracle is s02's own SQL verbatim: "persisted equals fresh" is
-    not a pytest claim here but a per-round cross-engine hash check.
+    not a pytest claim here but a cross-engine hash check.
     Eager by contract (the index build is a write job); the query side
     stays the shared lazy ``_lsh_probe`` plan, whose scan prunes to the
     1 + planes probed bucket directories."""
-    from final_project_big_data_spark.operators.ivf_index import (
-        lsh_topk_with_index,
-        save_lsh_index,
-    )
-
     path = scratch_dir(sf, "s06_lsh_index")
     save_lsh_index(spark, sf, path)
     return lsh_topk_with_index(spark, path, _N_QUERIES)
 
 
 def _s07_sql() -> str:
-    """s03's full IVF mirror with the s05 int8 grid applied to the
-    SCORING vectors: assignment (init → Lloyd → argmax) runs on the
-    original floats exactly as ``save_ivf_index`` does, then probes and
-    postings are replaced by their dequantized reconstructions — the
-    precise semantics of querying the int8-persisted index."""
-    return _ivf_assign_sql() + f""",
-    dq0 AS (
-      SELECT vec_id, centroid_id, v,
-             list_aggregate(v, 'min') AS mn,
-             (list_aggregate(v, 'max') - list_aggregate(v, 'min')) / 255.0
-               AS sc
-      FROM assigned2
-    ),
-    dqn AS (
-      SELECT vec_id, centroid_id, v2 AS v,
-             sqrt(list_dot_product(v2, v2)) AS nv
-      FROM (SELECT vec_id, centroid_id,
-                   CASE WHEN sc = 0 THEN list_transform(v, x -> mn)
-                        ELSE list_transform(
-                               v, x -> mn + floor((x - mn) / sc + 0.5) * sc)
-                   END AS v2
-            FROM dq0)
-    ),
-    aff_q AS (
-      SELECT e.vec_id, e.v AS qv, e.nv AS nq, c.centroid_id,
-             list_dot_product(e.v, c.cv) / (e.nv * c.nc) AS aff
-      FROM dqn e CROSS JOIN cents c
-      WHERE e.vec_id < {_N_QUERIES}
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, qv, nq, centroid_id AS probe_centroid
-      FROM (SELECT vec_id, qv, nq, centroid_id,
-                   row_number() OVER (PARTITION BY vec_id
-                       ORDER BY aff DESC, centroid_id ASC) AS rn
-            FROM aff_q)
-      WHERE rn <= (SELECT greatest({_MIN_NPROBE}, least({_MAX_NPROBE},
-                       CAST(ceil(k / 8.0) AS BIGINT))) FROM knob)
-    ),
-    scored AS (
-      SELECT p.query_id, b.vec_id AS neighbor_id,
-             list_dot_product(p.qv, b.v) / (p.nq * b.nv) AS cs
-      FROM probes p JOIN dqn b
-        ON p.probe_centroid = b.centroid_id AND p.query_id != b.vec_id
+    """s03's full IVF mirror with the int8 grid applied to the SCORING
+    vectors: assignment (init → Lloyd → argmax) runs on the original
+    floats exactly as ``save_ivf_index`` does, then probes and postings
+    are replaced by their dequantized reconstructions — the precise
+    semantics of querying the int8-persisted index."""
+    return (
+        _ivf_assign_sql()
+        + f""",
+    dqn AS {dequantized_sql("assigned2", "centroid_id")}"""
+        + _ivf_probe_sql("dqn", "dqn")
     )
-    SELECT query_id, neighbor_id, round(cs, 4) AS cos_sim,
-           CAST(rnk AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cs DESC, neighbor_id) AS rnk FROM scored)
-    WHERE rnk <= {_TOP_K}
-    ORDER BY query_id, rank
-    """
 
 
 @query("s07_persisted_quantized_ivf", oracle=_s07_sql(), category="similarity")
 def s07(spark: SparkSession, sf: str) -> DataFrame:
     """The int8-quantized persisted-IVF SERVING path as a driver-checked
-    entry (round 9, VERDICT r8 #5): train + quantize + write the index
+    entry (SCALE.md, "Persisted-index serving"): train + quantize + write the index
     (``save_ivf_index(quantize=True)`` — 1 byte/dim inverted lists),
     then answer the s03 query exclusively FROM the index, with probes
     and postings both reconstructed through the s05 grid. The oracle
@@ -912,13 +808,8 @@ def s07(spark: SparkSession, sf: str) -> DataFrame:
     assignment on original floats, then the identical
     ``mn + floor((x-mn)/sc + 0.5)·sc`` reconstruction for probe ranking
     and scoring — so the quantizer-in-the-storage-layout is value-hash
-    verified per round, not pytest-only. Eager by contract (the index
+    verified by the driver, not pytest-only. Eager by contract (the index
     build writes); the query side is the shared lazy ``_ivf_probe``."""
-    from final_project_big_data_spark.operators.ivf_index import (
-        ivf_topk_with_index,
-        save_ivf_index,
-    )
-
     path = scratch_dir(sf, "s07_q8_ivf_index")
     save_ivf_index(spark, sf, path, quantize=True)
     return ivf_topk_with_index(spark, path, _N_QUERIES)
@@ -932,23 +823,17 @@ _SPLIT_A = "vec_id % 2 = 0"  # base-index slice for the append entries
 @query("s08_incremental_lsh_append", oracle=_s02_sql(), category="similarity")
 def s08(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental LSH index maintenance as a driver-checked entry
-    (round 10, VERDICT r9 #6): build the persisted hash tables from HALF
+    (SCALE.md, "Incremental-index economics"): build the persisted hash tables from HALF
     the corpus (vec_id even), ``append_to_lsh_index`` the other half as
     a later batch, then answer the s02 query exclusively FROM the
     appended index. The oracle is s02's fresh-build SQL over the FULL
     corpus verbatim — so "append(A, B) == fresh(A ∪ B)" is not a pytest
-    claim but a per-round cross-engine value-hash check; it holds
+    claim but a cross-engine value-hash check; it holds
     EXACTLY because the hyperplane hash depends only on
     (dim, planes, seed), never on the corpus. Eager by contract (two
     write jobs); the query side stays the shared lazy ``_lsh_probe``,
     pruning to the probed bucket directories regardless of how many
     append batches populated them."""
-    from final_project_big_data_spark.operators.ivf_index import (
-        append_to_lsh_index,
-        lsh_topk_with_index,
-        save_lsh_index,
-    )
-
     path = scratch_dir(sf, "s08_lsh_append")
     save_lsh_index(spark, sf, path, where=F.expr(_SPLIT_A))
     batch = (
@@ -967,41 +852,13 @@ def _s09_sql() -> str:
     postings — covers the full corpus. That is the exact relational
     semantics of save(A) + append(B): the appended batch is assigned
     against the frozen A-trained centroids."""
-    return _ivf_assign_sql(train_pred=_SPLIT_A) + f""",
-    aff_q AS (
-      SELECT e.vec_id, e.v AS qv, e.nv AS nq, c.centroid_id,
-             list_dot_product(e.v, c.cv) / (e.nv * c.nc) AS aff
-      FROM en e CROSS JOIN cents c
-      WHERE e.vec_id < {_N_QUERIES}
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, qv, nq, centroid_id AS probe_centroid
-      FROM (SELECT vec_id, qv, nq, centroid_id,
-                   row_number() OVER (PARTITION BY vec_id
-                       ORDER BY aff DESC, centroid_id ASC) AS rn
-            FROM aff_q)
-      WHERE rn <= (SELECT greatest({_MIN_NPROBE}, least({_MAX_NPROBE},
-                       CAST(ceil(k / 8.0) AS BIGINT))) FROM knob)
-    ),
-    scored AS (
-      SELECT p.query_id, b.vec_id AS neighbor_id,
-             list_dot_product(p.qv, b.v) / (p.nq * b.nv) AS cs
-      FROM probes p JOIN assigned2 b
-        ON p.probe_centroid = b.centroid_id AND p.query_id != b.vec_id
-    )
-    SELECT query_id, neighbor_id, round(cs, 4) AS cos_sim,
-           CAST(rnk AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cs DESC, neighbor_id) AS rnk FROM scored)
-    WHERE rnk <= {_TOP_K}
-    ORDER BY query_id, rank
-    """
+    return _ivf_assign_sql(train_pred=_SPLIT_A) + _ivf_probe_sql("en", "assigned2")
 
 
 @query("s09_incremental_ivf_append", oracle=_s09_sql(), category="similarity")
 def s09(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental IVF index maintenance as a driver-checked entry
-    (round 10, VERDICT r9 #6): train + persist the index on HALF the
+    (SCALE.md, "Incremental-index economics"): train + persist the index on HALF the
     corpus (vec_id even — ``save_ivf_index(where=...)``), add the other
     half with ``append_to_ivf_index`` (assigned against the FROZEN
     centroids, appended into the existing inverted-list partitions),
@@ -1009,16 +866,10 @@ def s09(spark: SparkSession, sf: str) -> DataFrame:
     oracle replays the whole lifecycle relationally — half-corpus knob
     + seeded init + Lloyd, full-corpus assignment, probe ranking and
     scoring — so append-equals-index-in-one-shot is value-hash checked
-    cross-engine per round. Centroid-drift rebuilds and small-file
+    cross-engine. Centroid-drift rebuilds and small-file
     re-listing are the separate maintenance jobs (``save_ivf_index``,
     ``compact_ivf_postings``; fragmentation + swap pinned in
     tests/test_round10_ops.py)."""
-    from final_project_big_data_spark.operators.ivf_index import (
-        append_to_ivf_index,
-        ivf_topk_with_index,
-        save_ivf_index,
-    )
-
     path = scratch_dir(sf, "s09_ivf_append")
     save_ivf_index(spark, sf, path, where=F.expr(_SPLIT_A))
     batch = (

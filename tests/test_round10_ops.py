@@ -1,9 +1,8 @@
-"""Round-10 pins: ADVICE-r9 fixes (d13 short-doc singletons, p04
-deterministic rates, d14 linear chunk extraction) stay fixed."""
+"""Round-10 pins: ADVICE-r9 fixes (p04 deterministic rates, d14 linear
+chunk extraction) stay fixed."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,65 +12,6 @@ from final_project_big_data_spark.queries import all_specs
 @pytest.fixture(scope="module")
 def specs():
     return all_specs()
-
-
-# ------------------------------------------------------------------- d13
-# Docs with < 2 words produce no shingles, so they never enter the
-# minhash/cluster graph; d13 must union them back as singleton survivors
-# or the "surviving corpus" silently loses rows (ADVICE r9). Pinned with
-# a corpus that actually CONTAINS such docs — the sf fixtures don't.
-
-
-def _write_short_doc_corpus(spark, tmp_path) -> str:
-    rows = [
-        (1, "alpha beta gamma delta", "en", "web", 22),
-        (2, "alpha beta gamma delta", "en", "books", 22),  # dup of 1
-        (3, "solo", "en", "web", 4),  # 1 word -> no shingles
-        (4, "", "en", "web", 0),  # empty -> no shingles
-        (5, "epsilon zeta eta theta iota", "de", "web", 27),
-        (6, "  padded  ", "de", "web", 10),  # 1 word after trim
-    ]
-    (
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{tmp_path}/documents.parquet")
-    )
-    return str(tmp_path)
-
-
-def test_d13_short_docs_survive_as_singletons(spark, tmp_path, specs):
-    from tests.oracle import compare
-
-    sf = _write_short_doc_corpus(spark, tmp_path)
-    spec = specs["d13_dedup_apply"]
-    out = spec.builder(spark, sf)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    # conservation: every document is accounted for in exactly one survivor
-    assert sum(r["n_merged"] for r in rows.values()) == 6
-    # the shingle-less docs ARE survivors, each absorbing only itself
-    for did in (3, 4, 6):
-        assert rows[did]["n_merged"] == 1
-    # the exact-dup pair merged under the min id
-    assert rows[1]["n_merged"] == 2 and 2 not in rows
-    # and the oracle replays the same corpus
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{sf}/documents.parquet/*.parquet'"
-    )
-    report = compare(spec.builder(spark, sf), con, spec.oracle)
-    assert report["ok"], report
-    con.close()
-
-
-def test_d13_fixture_conservation(spark, sf_dir, specs):
-    out = specs["d13_dedup_apply"].builder(spark, sf_dir)
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    total = out.agg(F.sum("n_merged")).collect()[0][0]
-    assert total == n_docs
 
 
 # ------------------------------------------------------------------- p04

@@ -186,16 +186,20 @@ def test_quantized_ann_deterministic(spark, sf_dir):
 
 
 def test_pair_kernels_bit_parity(spark, sf_dir, monkeypatch):
-    """The round-8 vectorized pair stage (operators/vector.
-    block_pair_cosine) must be BIT-IDENTICAL to the equi-join +
-    interpreted dot_fold shape on every query that switches on it —
-    same floats, same fold order, same survivors, same ranks. Collected
-    rows compare exactly (no rounding slack beyond each query's own
-    round(·,4) output column)."""
+    """The NumPy halves of ``operators/vector`` must be BIT-IDENTICAL to
+    the join + interpreted dot_fold halves on every query that switches
+    on ``pair_kernel`` — ``block_pairs`` (d06, d10, s04) and the IVF
+    ``assign_centroids`` of the fresh, persisted int8 and appended
+    indexes (s03, s07, s09): same floats, same fold order, same
+    survivors, same ranks. Collected rows compare exactly (no rounding
+    slack beyond each query's own round(·,4) output column)."""
     for name in (
         "d06_embedding_near_dup",
         "d10_semdedup",
+        "s03_ivf_ann_topk",
         "s04_knn_self_join",
+        "s07_persisted_quantized_ivf",
+        "s09_incremental_ivf_append",
     ):
         outs = []
         for kern in ("join", "np"):

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Dump ``explain("formatted")`` for registry queries to plans/<round>/.
+"""Dump ``explain("formatted")`` for registry queries (default out dir:
+the git-ignored ``.plans_out/``).
 
 Usage::
 
-    python tools/plan_dump.py --out=plans/r12 --suffix=_before [names...]
+    python tools/plan_dump.py --out=.plans_out --suffix=_before [names...]
 
 With no names, dumps every registry entry. Uses the bench session confs
 (``session.sized_conf``) so the captured plan is the one the bench executes.
@@ -24,7 +25,7 @@ def main() -> None:
     opts = dict(
         a.lstrip("-").split("=", 1) for a in sys.argv[1:] if a.startswith("--") and "=" in a
     )
-    out_dir = opts.get("out", "plans/r12")
+    out_dir = opts.get("out", ".plans_out")
     suffix = opts.get("suffix", "_before")
     sf_dir = opts.get("sf", os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     os.makedirs(out_dir, exist_ok=True)
