@@ -19,8 +19,13 @@ no driver-side detour:
 from __future__ import annotations
 
 from pyspark.ml import Pipeline, PipelineModel
-from pyspark.ml.classification import RandomForestClassifier
+from pyspark.ml.classification import (
+    RandomForestClassificationModel,
+    RandomForestClassifier,
+)
 from pyspark.ml.feature import VectorAssembler
+from pyspark.ml.util import _jvm
+from pyspark.ml.wrapper import JavaParams
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -90,6 +95,27 @@ def stratified_split(
     return train, test
 
 
+class _ForestModel(RandomForestClassificationModel):
+    """A forest wrapper that wraps its trees only when ``trees`` is read.
+
+    PySpark declares ``RandomForestClassificationModel.trees`` a
+    ``cached_property``, and ``Params.params`` calls ``getattr`` on every
+    attribute that is not a ``property``. So each stock wrapper of a forest
+    eagerly wraps all of its trees, about 64 py4j round trips a tree plus
+    one detach each when the wrapper is dropped, although nothing here
+    reads them. As a plain property, the trees are wrapped on each read.
+    """
+
+    trees = property(RandomForestClassificationModel.trees.func)
+
+
+class _ForestClassifier(RandomForestClassifier):
+    """``RandomForestClassifier`` whose fitted model is a ``_ForestModel``."""
+
+    def _create_model(self, java_model) -> _ForestModel:
+        return _ForestModel(java_model)
+
+
 def build_pipeline(
     num_trees: int = 100, max_depth: int = 10, seed: int = 42
 ) -> Pipeline:
@@ -101,7 +127,7 @@ def build_pipeline(
     assembler = VectorAssembler(
         inputCols=FEATURE_COLS, outputCol="features", handleInvalid="skip"
     )
-    rf = RandomForestClassifier(
+    rf = _ForestClassifier(
         labelCol=LABEL_COL,
         featuresCol="features",
         numTrees=num_trees,
@@ -134,8 +160,25 @@ def save_model(model: PipelineModel, path: str) -> None:
 
 
 def load_model(path: str) -> PipelineModel:
-    """Load (reference ``predict.py:18``)."""
-    return PipelineModel.load(path)
+    """Load (reference ``predict.py:18``).
+
+    The JVM reads the model; its stages are wrapped here, the forest as a
+    ``_ForestModel``. ``PipelineModel.load`` would wrap it as a stock
+    ``RandomForestClassificationModel`` and so wrap every tree.
+    """
+    java_model = _jvm().org.apache.spark.ml.PipelineModel.load(path)
+    stages = [_wrap_stage(s) for s in java_model.stages()]
+    return PipelineModel(stages)._resetUid(java_model.uid())
+
+
+def _wrap_stage(java_stage) -> JavaParams:
+    """Python wrapper of one loaded stage, as ``JavaParams._from_java``
+    builds it."""
+    if not java_stage.getClass().getName().endswith(".RandomForestClassificationModel"):
+        return JavaParams._from_java(java_stage)
+    forest = _ForestModel(java_stage)
+    forest._transfer_params_from_java()
+    return forest
 
 
 def score(model: PipelineModel, df: DataFrame) -> DataFrame:

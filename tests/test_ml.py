@@ -83,6 +83,62 @@ def test_c18_save_load_roundtrip(model, splits, tmp_path):
     assert got == want
 
 
+@pytest.fixture(scope="module")
+def model_path(model, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("rf") / "rf_model")
+    M.save_model(model, path)
+    return path
+
+
+def test_forest_wraps_trees_only_when_read(model, model_path):
+    """Neither M.train nor M.load_model wraps the forest's trees: PySpark's
+    stock forest wrapper caches one py4j wrapper per tree the moment it is
+    built, and nothing in the scoring path reads them."""
+    forests = [model.stages[-1], M.load_model(model_path).stages[-1]]
+    for forest in forests:
+        assert "trees" not in vars(forest)
+    for forest in forests:
+        assert len(forest.trees) == forest.getNumTrees == 25
+
+
+def test_load_model_round_trip_budget(model_path, monkeypatch):
+    """Loading and wrapping the 25-tree pipeline makes under 1,000 py4j
+    round trips; wrapping every tree costs about 64 each. Only this
+    thread's commands count: py4j's finalizer thread sends the deletes of
+    earlier garbage on its own schedule."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+    calls = []
+
+    def counting(self, command):
+        if threading.get_ident() == caller:
+            calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    M.load_model(model_path)
+    monkeypatch.undo()
+    assert len(calls) < 1000
+
+
+def test_load_model_scores_like_pipeline_model_load(model_path, splits):
+    """M.load_model's own stage wrapping scores bit-identically to
+    PySpark's PipelineModel.load of the same files."""
+    from pyspark.ml import PipelineModel
+
+    _, test = splits
+    cols = ["Time", "prediction", "rawPrediction", "probability"]
+
+    def scored(model):
+        return M.score(model, test).select(*cols).orderBy("Time").collect()
+
+    assert scored(M.load_model(model_path)) == scored(PipelineModel.load(model_path))
+
+
 def test_reference_parity_streaming_score(spark, model, splits, tmp_path):
     """predict.py end-to-end shape: JSON envelope stream → parse with the
     declared schema → model.transform → output projection (O20–O26)."""

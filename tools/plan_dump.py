@@ -6,7 +6,8 @@ Usage::
 
     python tools/plan_dump.py --out=.plans_out --suffix=_before [names...]
 
-With no names, dumps every registry entry. Uses the bench session confs
+With no names, dumps every registry entry. ``FIRST`` entries are always
+dumped first. Uses the bench session confs
 (``session.sized_conf``) so the captured plan is the one the bench executes.
 Plans are captured WITHOUT executing the query (analysis only), so this
 is cheap enough to run for all ~196 entries.
@@ -18,6 +19,14 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# Entries with two distinct aggregates over different columns: their Expand
+# and the exchange above it list columns in the hash order of expression
+# sets, and those hashes include exprIds, which shift with what was built
+# before (q113 numbers ~30k more when it runs ANALYZE than when it restores
+# a stats snapshot). Built first, in this order, q95 dumps as it does alone
+# and both dump the same in every full dump.
+FIRST = ("q95_tpch_q21_waiting", "t10_contamination")
 
 
 def main() -> None:
@@ -35,6 +44,7 @@ def main() -> None:
 
     specs = all_specs()
     names = args or list(specs)
+    names = [n for n in FIRST if n in names] + [n for n in names if n not in FIRST]
     spark = get_spark(app_name="plan_dump", extra_conf=sized_conf(sf_dir))
     failures = {}
     for name in names:
